@@ -285,6 +285,11 @@ def _network_pred(col: Column, value: str) -> Column:
 # -- SQL renderer (DuckDB dialect, for correctness oracles) -------------------
 
 
+def sql_str(s: str) -> str:
+    """A SQL string literal."""
+    return "'" + s.replace("'", "''") + "'"
+
+
 def condition_sql(cfg: dict[str, Any], fields: set[str] | None = None) -> str:
     """Render the condition config to DuckDB SQL with identical semantics.
 
@@ -295,9 +300,6 @@ def condition_sql(cfg: dict[str, Any], fields: set[str] | None = None) -> str:
 
     def have(f: str) -> bool:
         return fields is None or f in fields
-
-    def q(s: str) -> str:
-        return "'" + s.replace("'", "''") + "'"
 
     if kind == "and":
         return "(" + " AND ".join(condition_sql(c, fields) for c in body) + ")"
@@ -317,7 +319,7 @@ def condition_sql(cfg: dict[str, Any], fields: set[str] | None = None) -> str:
             elif isinstance(value, bool):
                 parts.append(leaf(f"{field} = {'TRUE' if value else 'FALSE'}"))
             elif isinstance(value, str):
-                parts.append(leaf(f"{field} = {q(value)}"))
+                parts.append(leaf(f"{field} = {sql_str(value)}"))
             else:
                 parts.append(leaf(f"{field} = {value}"))
     elif kind == "contains":
@@ -326,14 +328,14 @@ def condition_sql(cfg: dict[str, Any], fields: set[str] | None = None) -> str:
             if not have(field):
                 parts.append("FALSE")
             else:
-                ors = " OR ".join(f"contains({field}, {q(v)})" for v in values)
+                ors = " OR ".join(f"contains({field}, {sql_str(v)})" for v in values)
                 parts.append(leaf(f"({ors})"))
     elif kind == "regexp":
         for field, pat in body.items():
             if not have(field):
                 parts.append("FALSE")
             else:
-                parts.append(leaf(f"regexp_matches({field}, {q(pat)})"))
+                parts.append(leaf(f"regexp_matches({field}, {sql_str(pat)})"))
     elif kind == "range":
         sym = {"gte": ">=", "gt": ">", "lte": "<=", "lt": "<"}
         for field, ops in _normalize_range(body).items():

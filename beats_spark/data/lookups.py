@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from beats_spark.conditions import sql_str
+
 # (role, role_group, priority) — covers the full role domain + one key
 # ("moderator") that never appears in the data, exercising unused-entry paths.
 ROLE_LOOKUP_ROWS = [
@@ -49,7 +51,7 @@ def _values_sql(rows: list[tuple], alias: str, cols: str) -> str:
         if isinstance(v, bool):
             return "TRUE" if v else "FALSE"
         if isinstance(v, str):
-            return "'" + v.replace("'", "''") + "'"
+            return sql_str(v)
         return str(v)
 
     vals = ", ".join("(" + ", ".join(lit(v) for v in row) + ")" for row in rows)

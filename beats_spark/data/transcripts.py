@@ -133,5 +133,4 @@ def load_transcripts(
             .withColumn("event_id", F.col("event_id") + F.col("_rep") * 1_000_000_000)
             .drop("_rep")
         )
-    events.createOrReplaceTempView("events")
-    return spark.sql(transcripts_select("spark"))
+    return spark.sql(transcripts_select("spark", "{events}"), events=events)

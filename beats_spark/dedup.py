@@ -123,24 +123,6 @@ def minhash_signature(shingle_col: Column, num_hashes: int = 64) -> Column:
     )
 
 
-def minhash_signature_from_hashes(hash_col: Column, num_hashes: int = 64) -> Column:
-    """Signature from a MATERIALIZED array of pre-modded shingle hashes:
-    K array_min passes of pure multiply-add — no per-shingle accumulator
-    allocation, no re-hash. Only valid when `hash_col` is a real column
-    (e.g. behind a localCheckpoint); as a live expression Catalyst's
-    projection collapse would inline the hashing into all K branches."""
-    m = F.lit(_MERSENNE_31)
-
-    def _affine(i: int):
-        a, b = _affine_params(i)
-        return lambda h: F.pmod(h * F.lit(a) + F.lit(b), m)
-
-    return F.array(*[
-        F.array_min(F.transform(hash_col, _affine(i)))
-        for i in range(num_hashes)
-    ])
-
-
 def jaccard(a: Column, b: Column) -> Column:
     """Exact Jaccard over two string arrays (assumed distinct elements)."""
     inter = F.size(F.array_intersect(a, b))

@@ -10,7 +10,6 @@ WholeStageCodegen span around a single Arrow UDF exchange.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from beats_spark.data.lookups import role_lookup_df, tool_lookup_df
@@ -71,82 +70,81 @@ def full_pipeline(spark: SparkSession, sf_dir: str, replicate: int = 1) -> DataF
     )
 
 
-def sink_aggregates(routed: DataFrame) -> DataFrame:
-    """Per-sink per-role aggregate counts — the per-sink turn/tool-call counts
-    from the north rule (≅ pipeline monitoring counters,
-    publisher/pipeline/monitoring.go:24-179).
-
-    Exact-distinct via the mid-grain two-stage shape (same plan as
-    combined_aggregates): aggregate once at (_sink, role, conv_id), then
-    count mid-grain rows per (_sink, role). No Expand node — the
-    countDistinct rewrite's expand measured 1.5× slower at 16 cores, and
-    test_plans.py asserts its absence."""
-    mid = routed.groupBy("_sink", "role", "conv_id").agg(
-        F.count("*").alias("_tc"),
-        F.sum(
-            F.when(
-                F.col("tool").isNotNull() & (F.col("tool") != "") & (F.col("tool") != "none"),
-                1,
-            ).otherwise(0)
-        ).alias("_tcc"),
-    )
-    return mid.groupBy("_sink", "role").agg(
-        F.sum("_tc").alias("turn_count"),
-        F.sum("_tcc").alias("tool_call_count"),
-        F.count("*").alias("n_convs"),
-    )
+# The tool-call predicate, defined once: a turn calls a tool when `tool`
+# names one (NULL, '' and 'none' do not). The string is valid in Spark SQL
+# and DuckDB alike, so the engine parses it with F.expr and the oracles
+# embed it verbatim.
+IS_TOOL_CALL = "tool IS NOT NULL AND tool <> '' AND tool <> 'none'"
+TOOL_CALL_FLAG = f"CASE WHEN {IS_TOOL_CALL} THEN 1 ELSE 0 END"
 
 
-def combined_aggregates(written: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Per-sink aggregates AND conversation rollups from ONE scan: the big
-    input is aggregated once at the mid-grain (_sink, role, conv_id), and
-    both outputs re-aggregate that tiny intermediate. count(DISTINCT
-    conv_id) becomes a plain count over mid-grain rows — exact, with no
-    distinct-expand (a GROUPING SETS + countDistinct variant measured 1.5×
-    slower at 16 cores from the expand blowup). The mid-grain intermediate
-    (~|sinks|×|roles|×|convs| rows — tiny next to the input) is persisted
-    so the two branch aggregations run one input scan between them; callers
-    running repeatedly should clearCache()/unpersist when done."""
-    mid = written.groupBy("_sink", "role", "conv_id").agg(
+def _turn_measures(df: DataFrame, *grain: str) -> DataFrame:
+    """The per-turn measures at `grain`: turn count, tool calls, first and
+    last ts (≅ the pipeline monitoring counters,
+    publisher/pipeline/monitoring.go:24-179)."""
+    return df.groupBy(*grain).agg(
         F.count("*").alias("turn_count"),
-        F.sum(
-            F.when(
-                F.col("tool").isNotNull() & (F.col("tool") != "") & (F.col("tool") != "none"),
-                1,
-            ).otherwise(0)
-        ).alias("tool_call_count"),
+        F.sum(F.expr(TOOL_CALL_FLAG)).alias("tool_call_count"),
         F.min("ts").alias("first_ts"),
         F.max("ts").alias("last_ts"),
-    ).persist()
-    sink_aggs = mid.groupBy("_sink", "role").agg(
+    )
+
+
+def _rollup(mid: DataFrame, *grain: str) -> DataFrame:
+    """Re-aggregate finer-grain measures at `grain`. `n_convs` counts the
+    finer rows, so over a (…, conv_id) intermediate it is an exact
+    count(DISTINCT conv_id) with no distinct Expand."""
+    return mid.groupBy(*grain).agg(
         F.sum("turn_count").alias("turn_count"),
         F.sum("tool_call_count").alias("tool_call_count"),
-        F.count("*").alias("n_convs"),
-    )
-    rollups = mid.groupBy("conv_id").agg(
-        F.sum("turn_count").alias("n_turns"),
         F.min("first_ts").alias("first_ts"),
         F.max("last_ts").alias("last_ts"),
-        F.sum("tool_call_count").alias("total_tool_calls"),
+        F.count("*").alias("n_convs"),
     )
-    return sink_aggs, rollups
+
+
+def _sink_view(agg: DataFrame) -> DataFrame:
+    return agg.select("_sink", "role", "turn_count", "tool_call_count", "n_convs")
+
+
+def _conv_view(agg: DataFrame) -> DataFrame:
+    return agg.select(
+        "conv_id",
+        F.col("turn_count").alias("n_turns"),
+        "first_ts",
+        "last_ts",
+        F.col("tool_call_count").alias("total_tool_calls"),
+    )
+
+
+_MID_GRAIN = ("_sink", "role", "conv_id")
+
+
+def sink_aggregates(routed: DataFrame) -> DataFrame:
+    """Per-(sink, role) turn and tool-call counts plus distinct
+    conversations — the per-sink counters of the north rule.
+
+    Mid-grain two-stage shape: aggregate once at (_sink, role, conv_id),
+    then count mid-grain rows per (_sink, role). No Expand node — the
+    countDistinct rewrite's expand measured 1.5× slower at 16 cores, and
+    test_plans.py asserts its absence."""
+    return _sink_view(_rollup(_turn_measures(routed, *_MID_GRAIN), "_sink", "role"))
 
 
 def conv_rollups(df: DataFrame) -> DataFrame:
-    """Conversation-level rollups via window over (conv_id, turn_idx)."""
-    w = W.partitionBy("conv_id").orderBy("turn_idx")
-    cum = df.withColumn(
-        "cum_tool_calls",
-        F.sum(
-            F.when(
-                F.col("tool").isNotNull() & (F.col("tool") != "") & (F.col("tool") != "none"),
-                1,
-            ).otherwise(0)
-        ).over(w.rowsBetween(W.unboundedPreceding, 0)),
-    )
-    return cum.groupBy("conv_id").agg(
-        F.count("*").alias("n_turns"),
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
-        F.max("cum_tool_calls").alias("total_tool_calls"),
+    """Per-conversation turn count, first/last ts and tool-call total."""
+    return _conv_view(_turn_measures(df, "conv_id"))
+
+
+def combined_aggregates(written: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """sink_aggregates AND conv_rollups from ONE scan: the input is
+    aggregated once at the mid-grain (_sink, role, conv_id) and both
+    outputs re-aggregate that intermediate (~|sinks|×|roles|×|convs| rows,
+    tiny next to the input). The intermediate is persisted so the two
+    branches share one input scan; callers running repeatedly should
+    clearCache()/unpersist when done."""
+    mid = _turn_measures(written, *_MID_GRAIN).persist()
+    return (
+        _sink_view(_rollup(mid, "_sink", "role")),
+        _conv_view(_rollup(mid, "conv_id")),
     )

@@ -20,13 +20,16 @@ every computed column aliased identically on both sides.
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from beats_spark.conditions import condition_sql
+from beats_spark.conditions import condition_sql, sql_str
 from beats_spark.data.lookups import (
     role_lookup_df,
     role_lookup_sql,
@@ -38,13 +41,16 @@ from beats_spark.grok import Grok
 from beats_spark.operators import enrich as E
 from beats_spark.operators import filter as FL
 from beats_spark.pipeline import (
+    IS_TOOL_CALL,
     ROUTING_RULES,
+    TOOL_CALL_FLAG,
     TRANSCRIPT_PATTERNS,
     conv_rollups,
     full_pipeline,
     parse_stage,
     sink_aggregates,
 )
+from beats_spark.routing import selector_sql
 from beats_spark.scale import widen_scan
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -68,10 +74,6 @@ def register(name: str, oracle: str | None = None):
 ISO = "strftime({col}, '%Y-%m-%dT%H:%M:%S')"  # DuckDB ISO-second render
 
 
-def _q(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
-
-
 def grok_extract_sql(expr: str, text_col: str = "text") -> dict[str, str]:
     """Compile a grok expression and render each output field as a DuckDB
     regexp_extract fragment using the IDENTICAL compiled regex the Spark
@@ -83,8 +85,8 @@ def grok_extract_sql(expr: str, text_col: str = "text") -> dict[str, str]:
     casts = {"integer": "INTEGER", "long": "BIGINT", "float": "REAL",
              "double": "DOUBLE", "boolean": "BOOLEAN"}
     for (name, dtype), gname in zip(g.fields, g._group_names):
-        frag = (f"CASE WHEN regexp_matches({text_col}, {_q(pat)}) "
-                f"THEN regexp_extract({text_col}, {_q(pat)}, {idx[gname]}) END")
+        frag = (f"CASE WHEN regexp_matches({text_col}, {sql_str(pat)}) "
+                f"THEN regexp_extract({text_col}, {sql_str(pat)}, {idx[gname]}) END")
         if dtype in casts:
             frag = f"CAST({frag} AS {casts[dtype]})"
         out[name] = frag
@@ -92,26 +94,8 @@ def grok_extract_sql(expr: str, text_col: str = "text") -> dict[str, str]:
 
 
 def _sink_case_sql() -> str:
-    """The ROUTING_RULES selector as first-match-wins SQL CASE — must stay in
-    sync with beats_spark.pipeline.ROUTING_RULES."""
-    return (
-        "CASE WHEN contains(text, '!!corrupt') THEN 'deadletter' "
-        "WHEN role = 'tool' THEN 'sink-tools' "
-        "WHEN regexp_matches(text, '(level=ERROR|\" 500 )') THEN 'sink-errors' "
-        "ELSE 'events-' || role END"
-    )
-
-
-_TOOL_CALL_SQL = (
-    "CASE WHEN tool IS NOT NULL AND tool <> '' AND tool <> 'none' "
-    "THEN 1 ELSE 0 END"
-)
-
-
-def _tool_call_col():
-    return F.when(
-        F.col("tool").isNotNull() & (F.col("tool") != "") & (F.col("tool") != "none"), 1
-    ).otherwise(0)
+    """The ROUTING_RULES selector rendered to DuckDB SQL."""
+    return selector_sql(ROUTING_RULES)
 
 
 # --------------------------------------------------------------------------
@@ -146,7 +130,7 @@ def _grok_bank_oracle() -> str:
     """First-match-wins across the three transcript patterns, field-by-field."""
     banks = [grok_extract_sql(p) for p in TRANSCRIPT_PATTERNS]
     pats = [Grok(p).pattern.pattern for p in TRANSCRIPT_PATTERNS]
-    match = [f"regexp_matches(text, {_q(p)})" for p in pats]
+    match = [f"regexp_matches(text, {sql_str(p)})" for p in pats]
     # a field belongs to exactly one pattern in our bank except event_time
     # (patterns 0 and 1) — first match wins
     all_fields: list[str] = []
@@ -199,29 +183,13 @@ def q_grok_parse(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-def q_route_counts(spark, sf_dir):
-    # UNREGISTERED since round 4 (registry consolidation, VERDICT r3 item
-    # 1): per-sink counts are strictly subsumed by routed_rows' full
-    # row-equality oracle + sink_aggregates' per-(sink,role) counts. Kept
-    # as a function because test_plans pins its no-Expand mid-grain shape
-    # ((sink, conv_id) two-stage agg — see pipeline.sink_aggregates).
-    routed = full_pipeline(spark, sf_dir)
-    mid = routed.groupBy(F.col("_sink").alias("sink"), "conv_id").agg(
-        F.count("*").alias("_n")
-    )
-    return mid.groupBy("sink").agg(
-        F.sum("_n").alias("n_rows"),
-        F.count("*").alias("n_convs"),
-    )
-
-
 @register(
     "sink_aggregates",
     oracle_cte()
     + f"""
 SELECT {_sink_case_sql()} AS _sink, role,
        count(*) AS turn_count,
-       CAST(sum({_TOOL_CALL_SQL}) AS BIGINT) AS tool_call_count,
+       CAST(sum({TOOL_CALL_FLAG}) AS BIGINT) AS tool_call_count,
        count(DISTINCT conv_id) AS n_convs
 FROM transcripts GROUP BY 1, 2
 """,
@@ -231,7 +199,7 @@ def q_sink_aggregates(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# 4. conversation rollups (window over conv_id ordered by turn_idx)
+# 4. conversation rollups (per-conv turn count, first/last ts, tool calls)
 # --------------------------------------------------------------------------
 
 
@@ -242,19 +210,14 @@ def q_sink_aggregates(spark, sf_dir):
 SELECT conv_id, count(*) AS n_turns,
        {ISO.format(col='min(ts)')} AS first_ts,
        {ISO.format(col='max(ts)')} AS last_ts,
-       CAST(sum({_TOOL_CALL_SQL}) AS BIGINT) AS total_tool_calls
+       CAST(sum({TOOL_CALL_FLAG}) AS BIGINT) AS total_tool_calls
 FROM transcripts GROUP BY conv_id
 """,
 )
 def q_conv_rollups(spark, sf_dir):
     r = conv_rollups(load_transcripts(spark, sf_dir))
-    return r.select(
-        "conv_id",
-        "n_turns",
-        F.date_format("first_ts", "yyyy-MM-dd'T'HH:mm:ss").alias("first_ts"),
-        F.date_format("last_ts", "yyyy-MM-dd'T'HH:mm:ss").alias("last_ts"),
-        "total_tool_calls",
-    )
+    return r.withColumns({c: F.date_format(c, "yyyy-MM-dd'T'HH:mm:ss")
+                          for c in ("first_ts", "last_ts")})
 
 
 # --------------------------------------------------------------------------
@@ -427,7 +390,7 @@ def q_ratelimit(spark, sf_dir):
     + f"""
 SELECT {ISO.format(col="time_bucket(INTERVAL '1 hour', ts)")} AS window_start,
        role, count(*) AS n_events, count(DISTINCT conv_id) AS n_convs,
-       CAST(sum({_TOOL_CALL_SQL}) AS BIGINT) AS tool_calls,
+       CAST(sum({TOOL_CALL_FLAG}) AS BIGINT) AS tool_calls,
        CAST(sum(length(text)) AS BIGINT) AS sum_bytes,
        max(length(text)) AS max_bytes
 FROM transcripts GROUP BY 1, 2
@@ -441,7 +404,7 @@ def q_flows_window(spark, sf_dir):
     t = load_transcripts(spark, sf_dir)
     mid = t.groupBy(F.window("ts", "1 hour").alias("w"), "role", "conv_id").agg(
         F.count("*").alias("_n"),
-        F.sum(_tool_call_col()).alias("_tcc"),
+        F.sum(F.expr(TOOL_CALL_FLAG)).alias("_tcc"),
         F.sum(F.length("text")).alias("_sb"),
         F.max(F.length("text")).alias("_mb"),
     )
@@ -516,7 +479,7 @@ def _dissect_oracle() -> str:
     from beats_spark.dissect import Dissector
 
     d = Dissector(_DISSECT_TOK)
-    pat = _q(d.pattern.pattern)
+    pat = sql_str(d.pattern.pattern)
     casts = {"integer": "INTEGER", "long": "BIGINT", "float": "REAL",
              "double": "DOUBLE", "boolean": "BOOLEAN"}
     frags = []
@@ -1487,7 +1450,7 @@ def q_semdedup(spark, sf_dir):
     oracle_cte()
     + f"""
 SELECT conv_id, tool_calls, n_turns FROM (
-  SELECT conv_id, CAST(sum({_TOOL_CALL_SQL}) AS BIGINT) AS tool_calls,
+  SELECT conv_id, CAST(sum({TOOL_CALL_FLAG}) AS BIGINT) AS tool_calls,
          count(*) AS n_turns
   FROM transcripts GROUP BY conv_id
 )
@@ -1495,16 +1458,10 @@ ORDER BY tool_calls DESC, conv_id LIMIT 10
 """,
 )
 def q_topk_convs(spark, sf_dir):
-    t = load_transcripts(spark, sf_dir)
-    return (
-        t.groupBy("conv_id")
-        .agg(
-            F.sum(_tool_call_col()).alias("tool_calls"),
-            F.count("*").alias("n_turns"),
-        )
-        .orderBy(F.col("tool_calls").desc(), "conv_id")
-        .limit(10)
-    )
+    r = conv_rollups(load_transcripts(spark, sf_dir))
+    return r.select(
+        "conv_id", F.col("total_tool_calls").alias("tool_calls"), "n_turns"
+    ).orderBy(F.col("tool_calls").desc(), "conv_id").limit(10)
 
 
 @register(
@@ -3306,10 +3263,10 @@ def q_script_chain(spark, sf_dir):
 @register(
     "tool_transitions",
     oracle_cte()
-    + """
+    + f"""
 , tool_turns AS (
   SELECT conv_id, turn_idx, tool FROM transcripts
-  WHERE tool IS NOT NULL AND tool <> '' AND tool <> 'none'
+  WHERE {IS_TOOL_CALL}
 ),
 chain AS (
   SELECT conv_id, tool,
@@ -3331,13 +3288,9 @@ def q_tool_transitions(spark, sf_dir):
     and a tiny groupBy rolls up the matrix. Oracle mirrors the filter +
     lag + rollup in DuckDB."""
     t = load_transcripts(spark, sf_dir)
-    tool_ok = (
-        F.col("tool").isNotNull() & (F.col("tool") != "")
-        & (F.col("tool") != "none")
-    )
     w = W.partitionBy("conv_id").orderBy("turn_idx")
     chain = (
-        t.where(tool_ok)
+        t.where(IS_TOOL_CALL)
         .select("conv_id", "turn_idx", "tool")
         .withColumn("prev_tool", F.lag("tool").over(w))
         .where(F.col("prev_tool").isNotNull())
@@ -3364,7 +3317,7 @@ SELECT conv_id, count(*) AS n_turns,
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_role_changes,
        count(DISTINCT role) AS n_roles,
        CAST(sum({{tok}}) AS BIGINT) AS total_tokens,
-       CAST(sum({_TOOL_CALL_SQL}) AS BIGINT) AS n_tool_calls,
+       CAST(sum({TOOL_CALL_FLAG}) AS BIGINT) AS n_tool_calls,
        (count(*) >= 4 AND
         CAST(sum(CASE WHEN prev_role IS NOT NULL AND prev_role <> role
                       THEN 1 ELSE 0 END) AS BIGINT) * 10
@@ -3394,7 +3347,7 @@ def q_conv_quality(spark, sf_dir):
         F.sum(changed).alias("n_role_changes"),
         F.countDistinct("role").alias("n_roles"),
         F.sum("_tok").alias("total_tokens"),
-        F.sum(_tool_call_col()).alias("n_tool_calls"),
+        F.sum(F.expr(TOOL_CALL_FLAG)).alias("n_tool_calls"),
     )
     return per_conv.withColumn(
         "keep",
@@ -3751,19 +3704,6 @@ def q_cohort_retention(spark, sf_dir):
         F.countDistinct("user_id").alias("n_users")
     )
 
-
-# --------------------------------------------------------------------------
-# Driver correctness-window ordering (VERDICT r3 items 1 & 10)
-#
-# The driver records CORRECTNESS rows for the FIRST 50 `queries()` entries
-# only. This list IS the window: the newest / least-proven queries — the
-# whole round-3 curation/temporal/OLAP tail plus everything added or
-# changed in round 4 — come first, followed by enough flagship §2 queries
-# to fill 50. The 27 entries outside the window all have 2-3 rounds of
-# driver-green history (or are rows-only by design with pytest pins) and
-# remain fully runnable via tools/check_oracle.py, which round 4's
-# BASELINE.md section reports over the COMPLETE registry.
-# --------------------------------------------------------------------------
 
 @register(
     "dsir_select",
@@ -5088,211 +5028,51 @@ FROM ({_bloom}) f GROUP BY 1
 _late_r5_oracles()
 
 
-# Window-policy note (r5 second session): every query whose RESULTS are
-# new or changed this session is in-window. Two queries changed in
-# PLAN ONLY — curation_funnel and rrf_search picked up lineage cuts
-# (localCheckpoint materialization of an interior frame; output
-# bit-identical, re-verified against their oracles at sf0.001 AND
-# sf0.01 in-session) — and stay outside on their r4 driver-green +
-# judge-sweep evidence, because every window slot holds a zero-history
-# row this round; the judge's own full-registry sweep still covers
-# them.
-_DRIVER_WINDOW = [
-    # flagship first — the end-to-end routed pipeline rows
-    "transcripts",
-    "routed_rows",
-    # new or behavior-changed in round 4
-    "simhash_pairs",
-    "media_decode",
-    "ann_lsh_recall",
-    "ann_ivf_recall",
-    "flows_window",       # absorbed flows_bytes' byte stats in r4
-    "chunk_documents",    # empty-text guard change in r4
-    # new or behavior-changed in round 5
-    "kafka_partition",    # new: FNV-32a partitioner parity (scale.py)
-    "script_chain",       # new: script-program composition surface
-    "multiline",          # assembler gained count/while/flush/timeout modes
-    # stratified_sample / pack_sequences / url_blocklist rotated out for
-    # the three round-5 entries above: each is r4 driver-green AND
-    # judge-re-verified at sf0.001 in r4; their families stay in-window
-    # (sampling: stratified_topn + temperature_mix + dsir_select;
-    # packing: transcript_pack + chunk_documents; url: url_canonical).
-    # new in round 5: oracles for previously pytest-only operators
-    # (decode_csv_fields/extract_*, decode_duration — incl. the seconds-
-    # regex regression fixed this round —, kv, detect_mime_type,
-    # urldecode/url_encode, format keys + add_formatted_index, cache
-    # put/get + TTL). These displace seven r3-tail rows that now carry TWO
-    # rounds of evidence each (r4 driver-green + judge sf0.001 sweeps in
-    # BOTH r3 and r4): tool_transitions, conv_quality, interval_overlap,
-    # cohort_retention, curation_funnel, token_vocab, normalize_unicode.
-    # Family coverage retained in-window: conv windows by conv_pattern +
-    # latency_quantiles; intervals by state_intervals; funnels/rollups by
-    # transcript_curation + sink_cube; token stats by bpe_pairs +
-    # transcript_pack; text normalization by c4_clean (+ gopher_filter /
-    # repetition_quality for the quality family).
-    "csv_extract",
-    "duration_parse",
-    "kv_parse",
-    "mime_detect",
-    "url_codec",
-    "formatted_index",
-    "cache_enrich",
-    # also new in round 5: the lineage/metrics manifest (north-rule item)
-    # through the driver gate — displaces module_redis_slowlog (r4
-    # driver-green + judge r3/r4; grok-bank family keeps THREE in-window
-    # representatives: module_pensando_dfw, module_system_auth,
-    # module_iis_error, plus apache/kafka right behind the window)
-    "stage_metrics",
-    # final round-5 batch: four more pytest-only rows promoted to driver
-    # oracles — decode_xml_wineventlog (winlog_parse), decompress_gzip_field
-    # (gzip_roundtrip — compress twin added for the inverse construction),
-    # drop/include/move_fields (field_projection), and add_locale +
-    # add_data_stream + timeseries instance (metadata_stamp). These have
-    # ZERO driver history, so they displace four r4-single-green rows whose
-    # families keep in-window representatives: pii_redact (cleaning family:
-    # c4_clean + gopher_filter + repetition_quality), span_dedup (dedup
-    # family: substr_dedup + minhash_dedup(+_cc) + ngram_jaccard_pairs +
-    # dedup_components), rrf_search (retrieval family: bm25_search),
-    # temperature_mix (sampling family: stratified_topn + dsir_select +
-    # perplexity_filter). Each displaced row is r4 driver-green + judge
-    # r4 sf0.001 sweep, the same pass* evidence class the other rotated
-    # rows carry.
-    "winlog_parse",
-    "gzip_roundtrip",
-    "field_projection",
-    "metadata_stamp",
-    # …and the last two: container log parser (docker json-file + CRI-O
-    # through fmt='auto') and the constant-stamp enrich family
-    # (add_fields DeepUpdate / add_labels flatten / add_tags dedup /
-    # append). Displaced: url_canonical (url family in-window via
-    # url_codec; url_blocklist outside, judge-swept) and
-    # latency_quantiles (conv-window family in-window via conv_pattern +
-    # state_intervals + sink_cube; turn_latency outside is triple-green).
-    # Both displaced rows are r4 driver-green + judge r4 sweep.
-    "container_parse",
-    "event_stamp",
-    # round-5 late additions, zero driver history:
-    # cdc_chunks — content-defined chunking (LBFS/FastCDC boundaries), the
-    # chunk-granular dedup complement to substr_dedup/span_dedup. Displaces
-    # transcript_pack (r4 driver-green + judge r3/r4 sf0.001 sweeps;
-    # packing family keeps chunk_documents in-window and pack_sequences
-    # judge-swept right behind it).
-    "cdc_chunks",
-    # round-5 second-session additions, zero driver history — each displaces
-    # a row holding r4 driver-green + judge r3/r4 sf0.001 sweeps (two-plus
-    # rounds of evidence), with family coverage retained in-window:
-    # hash_split (sampling family: stratified_topn + dsir_select +
-    # perplexity_filter stay) displaces asof_enrich (enrich family keeps
-    # cache_enrich + dns_enrich + module banks);
-    # ngram_topk + tfidf_keywords (corpus-stats/retrieval: bm25_search +
-    # bpe_pairs stay) displace gopher_filter + transcript_curation
-    # (quality family keeps repetition_quality + c4_clean; funnel/rollup
-    # family keeps sink_cube);
-    # bloom_decontaminate displaces decontaminate DIRECTLY — same 13-gram
-    # construction, same probe slice, so the family's semantics stay
-    # window-covered by the new scale-path twin while the exact semi-join
-    # variant rests on its r4 green + judge sweeps.
-    "hash_split",
-    "ngram_topk",
-    "tfidf_keywords",
-    "bloom_decontaminate",
-    # strip_boilerplate (corpus-level frequent-line removal) displaces
-    # c4_clean (r4 driver-green + judge r3/r4 sweeps) — the cleaning
-    # family keeps repetition_quality in-window plus this new
-    # corpus-statistic member; c4_clean's per-doc line rules are its
-    # direct ancestor and stay judge-swept right behind the window.
-    "strip_boilerplate",
-    # containment_pairs (directed |A∩B|/|A| join, the asymmetric sibling
-    # of prefix_jaccard_pairs) displaces state_intervals (r4 driver-green
-    # + judge r3/r4 sweeps; the interval family keeps sink_cube's
-    # constituent interval logic judge-swept right behind the window and
-    # intervals are pytest-pinned in test_intervals).
-    "containment_pairs",
-    # sample_gate (has_fields + the sample processor, newly md5-decided
-    # and therefore newly ORACLE-ABLE — a behavior change that must be
-    # driver-verified) displaces module_pensando_dfw (r4 driver-green +
-    # judge r3/r4 sweeps; the grok-bank family keeps module_system_auth +
-    # module_iis_error in-window, apache/kafka right behind).
-    "sample_gate",
-    # hash_embed (feature-hashing embeddings, the dense twin of the
-    # in-window simhash_pairs kernel) displaces repetition_quality (r4
-    # driver-green + judge r3/r4 sweeps; the quality family keeps
-    # strip_boilerplate in-window with text_quality / gopher_filter /
-    # conv_quality judge-swept right behind).
-    "hash_embed",
-    # hash_embed_topk (the composed text→embedding→cosine-rank stack, the
-    # first fully-oracled ANN LISTING — learned-embedding listings are
-    # rows-only with oracled recall twins) displaces sink_cube (r4
-    # driver-green + judge r3/r4 sweeps; the rollup family keeps
-    # stage_metrics in-window and the triple-green sink_aggregates /
-    # conv_rollups flagships right behind it).
-    "hash_embed_topk",
-    # the dns processor lands as a REAL operator
-    # (resolver-snapshot broadcast join, enrich.dns_enrich) instead of the
-    # shape-only row it was through r4 — zero driver history, so it enters
-    # the window displacing conv_pattern (r4 driver-green + judge r3/r4
-    # sf0.001 sweeps; conv-window family keeps state_intervals + sink_cube
-    # + latency_quantiles' constituent queries in-window).
-    "dns_enrich",
-    # round-3 tail: driver-unverified until r4 (judge-green only).
-    # decontaminate / gopher_filter / transcript_curation / asof_enrich
-    # rotated out this session for the four second-session additions above
-    # (each now carries r4 driver-green + judge r3/r4 sweeps).
-    # new in round 4 (late): DSIR selection, SemDeDup, BM25, quota
-    # sampling, CCNet perplexity head
-    "dsir_select",
-    "semdedup",
-    "bm25_search",
-    "stratified_topn",
-    "perplexity_filter",
-    # newest in round 4: ExactSubstr token-window dedup, RRF hybrid
-    # retrieval, BPE merge-selection stats
-    "substr_dedup",
-    "bpe_pairs",
-    "winnow_fingerprint",
-    # round-5 rotation (VERDICT r4 task 2): the five queries with only ONE
-    # round of driver-green history (r3) come back through the window —
-    # minhash_dedup / minhash_dedup_cc / ngram_jaccard_pairs /
-    # module_system_auth / module_iis_error — displacing the triple-green
-    # flagship filler slice (grok_parse, sink_aggregates, conv_rollups,
-    # dissect_parse, condition_filter: each green in r1+r2+r3 windows and
-    # judge-re-verified at sf0.001 in r4). Their semantics stay window-
-    # covered: grok banks by module_system_auth / module_iis_error /
-    # module_pensando_dfw / module_redis_slowlog; dissect + condition
-    # chains inside transcripts / routed_rows; per-sink aggregates and
-    # conv rollups inside sink_cube / transcript_curation / curation_funnel.
-    "minhash_dedup",
-    "minhash_dedup_cc",
-    "ngram_jaccard_pairs",
-    "module_system_auth",
-    "module_iis_error",
-    # earlier rotations (r4): ann_cosine_topk / timestamp_parse /
-    # dedup_exact / sessionize / embedding_dedup / enrich_translate /
-    # doc_fingerprint rotated out with 3 rounds of green history each;
-    # coverage rationale preserved in git history (queries.py @ r4).
-    # dedup_components stays: first driver-green only in r4.
-    "dedup_components",
-]
+# --------------------------------------------------------------------------
+# registry order: the correctness harness verifies only the first entries
+# of queries(), so the least recently verified oracled queries lead, as the
+# CORRECTNESS_r<N>.json records kept next to the package show
+# --------------------------------------------------------------------------
 
 
-def _window_ordered(names: list[str]) -> list[str]:
-    missing = [n for n in _DRIVER_WINDOW if n not in QUERIES]
-    extra_window = len(_DRIVER_WINDOW) - len(set(_DRIVER_WINDOW))
-    if missing or extra_window:
-        raise RuntimeError(
-            f"driver window drifted: missing={missing} dups={extra_window}"
-        )
-    rest = [n for n in names if n not in set(_DRIVER_WINDOW)]
-    return [*_DRIVER_WINDOW, *rest]
+def _correctness_records() -> dict[int, dict]:
+    """{round: {query: record}} from every CORRECTNESS_r<N>.json beside the
+    package."""
+    out: dict[int, dict] = {}
+    for path in Path(__file__).resolve().parent.parent.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m:
+            out[int(m.group(1))] = json.loads(path.read_text())
+    return out
+
+
+def last_green_round(records: dict[int, dict]) -> dict[str, int]:
+    """Each query's last round with hash_match true."""
+    out: dict[str, int] = {}
+    for rnd, recs in records.items():
+        for name, rec in recs.items():
+            if rec.get("hash_match") is True:
+                out[name] = max(out.get(name, 0), rnd)
+    return out
+
+
+def registry_order(
+    names: list[str], oracled: set[str], records: dict[int, dict]
+) -> list[str]:
+    """Oracled queries first, oldest last-green round first (never green
+    sorts before round 1); rows-only queries last. The sort is stable, so
+    ties keep registration order, and no records means registration order."""
+    last = last_green_round(records)
+    return sorted(names, key=lambda n: (n not in oracled, last.get(n, 0)))
+
+
+def _ordered() -> list[str]:
+    return registry_order(list(QUERIES), set(ORACLES), _correctness_records())
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {n: QUERIES[n] for n in _window_ordered(list(QUERIES))}
+    return {n: QUERIES[n] for n in _ordered()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        n: ORACLES[n]
-        for n in _window_ordered(list(QUERIES))
-        if n in ORACLES
-    }
+    return {n: ORACLES[n] for n in _ordered() if n in ORACLES}

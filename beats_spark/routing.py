@@ -32,7 +32,7 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from beats_spark.conditions import compile_condition
+from beats_spark.conditions import compile_condition, condition_sql, sql_str
 
 SINK_COL = "_sink"
 DEAD_LETTER = "deadletter"
@@ -45,6 +45,22 @@ _TIME_TOKENS = [("yyyy", "yyyy"), ("YYYY", "yyyy"), ("MM", "MM"),
                 ("dd", "dd"), ("HH", "HH"), ("mm", "mm"), ("ss", "ss")]
 
 
+def _format_parts(fmt: str):
+    """Split a format string into ("lit", text), ("field", dotted path) and
+    ("ts", time layout) parts — the one parse both renderers share."""
+    pos = 0
+    for m in _FMT_REF.finditer(fmt):
+        if m.start() > pos:
+            yield "lit", fmt[pos : m.start()]
+        if m.group(1):  # %{+FORMAT} — event-timestamp render
+            yield "ts", m.group(2)
+        else:
+            yield "field", m.group(2).replace("][", ".").strip("[]")
+        pos = m.end()
+    if pos < len(fmt):
+        yield "lit", fmt[pos:]
+
+
 def compile_format(fmt: str, ts_col: str = "ts") -> Column:
     """`"idx-%{[role]}-%{+yyyy.MM.dd}"` → concat of lits, string-cast
     columns, and date_format(ts) for `%{+FORMAT}` keys
@@ -55,21 +71,13 @@ def compile_format(fmt: str, ts_col: str = "ts") -> Column:
     reference where a missing field fails the format string render.
     """
     parts: list[Column] = []
-    pos = 0
-    for m in _FMT_REF.finditer(fmt):
-        if m.start() > pos:
-            parts.append(F.lit(fmt[pos : m.start()]))
-        if m.group(1):  # %{+FORMAT} — event-timestamp render
-            java = m.group(2)
+    for kind, v in _format_parts(fmt):
+        if kind == "ts":
             for src, dst in _TIME_TOKENS:
-                java = java.replace(src, dst)
-            parts.append(F.date_format(F.col(ts_col), java))
+                v = v.replace(src, dst)
+            parts.append(F.date_format(F.col(ts_col), v))
         else:
-            field = m.group(2).replace("][", ".").strip("[]")
-            parts.append(F.col(field).cast("string"))
-        pos = m.end()
-    if pos < len(fmt):
-        parts.append(F.lit(fmt[pos:]))
+            parts.append(F.lit(v) if kind == "lit" else F.col(v).cast("string"))
     if not parts:
         return F.lit("")
     return parts[0] if len(parts) == 1 else F.concat(*parts)
@@ -99,6 +107,32 @@ def compile_selector(
     if default is not None:
         attempts.append(F.lit(default))
     return F.coalesce(*attempts) if len(attempts) > 1 else attempts[0]
+
+
+def format_sql(fmt: str) -> str:
+    """compile_format's DuckDB twin: `||` of quoted literals and
+    VARCHAR-cast fields, NULL when any field is NULL. Timestamp keys
+    (`%{+FORMAT}`) have no SQL rendering."""
+    parts: list[str] = []
+    for kind, v in _format_parts(fmt):
+        if kind == "ts":
+            raise ValueError(f"format_sql: timestamp key in {fmt!r}")
+        parts.append(sql_str(v) if kind == "lit" else f"CAST({v} AS VARCHAR)")
+    return " || ".join(parts) or "''"
+
+
+def selector_sql(rules: list[dict]) -> str:
+    """compile_selector's DuckDB twin, with the same first-non-empty
+    semantics: COALESCE(NULLIF(CASE WHEN cond THEN key END, ''), …)."""
+    attempts: list[str] = []
+    for rule in rules:
+        if "mappings" in rule:
+            raise ValueError("selector_sql: mappings are not rendered")
+        expr = format_sql(rule["key"])
+        if "when" in rule:
+            expr = f"CASE WHEN {condition_sql(rule['when'])} THEN {expr} END"
+        attempts.append(f"NULLIF({expr}, '')")
+    return f"COALESCE({', '.join(attempts)})" if len(attempts) > 1 else attempts[0]
 
 
 def route(
@@ -156,10 +190,6 @@ def fan_out(
         .mode(mode)
         .save(base_path)
     )
-
-
-def sink_names(df: DataFrame, target: str = SINK_COL) -> list[str]:
-    return [r[0] for r in df.select(target).distinct().collect()]
 
 
 def iceberg_available(spark) -> bool:

@@ -13,6 +13,8 @@ Everything is pure Column expressions — map-only, no shuffle, no UDF.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -666,6 +668,11 @@ def _split_thresholds(weights: dict[str, float]) -> list[tuple[str, str]]:
     arithmetic — the last split's threshold is forced to the space top so
     the partition is total regardless of float weight normalization."""
     names = list(weights)
+    bad = {n: w for n, w in weights.items() if not (math.isfinite(w) and w >= 0)}
+    if bad:
+        # a negative weight would render a '-'-prefixed threshold and
+        # silently empty its split
+        raise ValueError(f"hash_split weights must be finite and >= 0: {bad}")
     total = float(sum(weights.values()))
     if total <= 0 or int(round(total * 10**9)) == 0:
         # the second clause rejects positive-but-sub-nano totals that

@@ -153,13 +153,6 @@ def widen_scan(df: DataFrame, parts: int | None = None) -> DataFrame:
     return df
 
 
-def stable_order(df: DataFrame, *cols: str) -> DataFrame:
-    """sortWithinPartitions on the natural key — the cheap (no global shuffle)
-    way to give every partition the stable (conv_id, turn_idx) order the
-    per-turn-equality invariant requires."""
-    return df.sortWithinPartitions(*cols)
-
-
 # --- Kafka hash-partitioner parity (broker-free) --------------------------
 #
 # The reference's kafka output assigns partitions with FNV-32a over the key

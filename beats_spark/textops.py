@@ -1536,7 +1536,8 @@ def strip_boilerplate(
     (surviving lines re-joined with newlines, original spelling kept —
     matching is on the trimmed form; `trim` strips ASCII spaces in BOTH
     engines, tabs count as content). Blank lines are never candidates
-    and always survive.
+    and always survive. NULL text yields NULL ``n_lines``, ``n_removed``
+    and ``cleaned`` in both this operator and its SQL twin.
 
     Scale shape — text never shuffles (span_dedup's property):
       1. per-doc DISTINCT line hashes explode as bare (id, xxhash64) pairs;
@@ -1610,7 +1611,7 @@ def strip_boilerplate_sql(
     min_docs: int = 10,
 ) -> str:
     """DuckDB twin on line STRINGS (independent of xxhash64): per-doc
-    md5 of the cleaned text plus removal counts."""
+    md5 of the cleaned text plus removal counts, all NULL for NULL text."""
     return f"""
 WITH base AS (
   SELECT {id_col} AS _id, string_split({text_col}, chr(10)) AS ls
@@ -1635,6 +1636,7 @@ rebuilt AS (
 )
 SELECT _id AS {id_col}, n_lines,
        n_lines - len(kept) AS n_removed,
-       md5(coalesce(array_to_string(kept, chr(10)), '')) AS cleaned_md5
+       CASE WHEN kept IS NOT NULL
+            THEN md5(coalesce(array_to_string(kept, chr(10)), '')) END AS cleaned_md5
 FROM rebuilt
 """.strip()

@@ -37,11 +37,10 @@ def main(argv: list[str] | None = None) -> int:
     from beats_spark.data.transcripts import load_transcripts
     from beats_spark.metrics import PipelineMetrics, with_standard_metrics
     from beats_spark.pipeline import (
-        conv_rollups,
+        combined_aggregates,
         enrich_stage,
         parse_stage,
         route_stage,
-        sink_aggregates,
     )
     from beats_spark.scale import repartition_salted
     from beats_spark.session import get_spark
@@ -64,9 +63,9 @@ def main(argv: list[str] | None = None) -> int:
         routed, args.output, job_id=args.job_id, fail_after=args.fail_after
     )
 
-    written = spark.read.parquet(args.output)
-    aggs = [r.asDict() for r in sink_aggregates(written).collect()]
-    n_convs = conv_rollups(written).count()
+    sink_aggs, rollups = combined_aggregates(spark.read.parquet(args.output))
+    aggs = [r.asDict() for r in sink_aggs.collect()]
+    n_convs = rollups.count()
 
     print(json.dumps({
         "job_id": args.job_id,

@@ -31,6 +31,9 @@ from beats_spark.modules import (
 )
 
 REF = "/root/reference/filebeat/module"
+needs_reference = pytest.mark.skipif(
+    not os.path.exists(REF), reason=f"reference tree unavailable: {REF}"
+)
 
 
 def _load_golden(module: str, fileset: str, log: str):
@@ -142,6 +145,7 @@ APACHE_ACCESS_FIELDS = [
 @pytest.mark.parametrize("log", [
     "test.log", "darwin-2.4.23.log", "ubuntu-2.2.22.log", "ssl-request.log",
 ])
+@needs_reference
 def test_apache_access_golden(spark, log):
     lines, golden = _load_golden("apache", "access", log)
     rows = _run(spark, apache_access, lines)
@@ -157,6 +161,7 @@ APACHE_ERROR_FIELDS = [
 @pytest.mark.parametrize("log", [
     "test.log", "darwin-2.4.23.log", "ubuntu-2.2.22.log", "sublevel.log",
 ])
+@needs_reference
 def test_apache_error_golden(spark, log):
     lines, golden = _load_golden("apache", "error", log)
     tz = golden[0].get("event.timezone") if golden else None
@@ -170,6 +175,7 @@ SYSLOG_FIELDS = ["host.hostname", "process.name", "process.pid"]
 @pytest.mark.parametrize("log", [
     "darwin-syslog.log", "darwin-syslog-sample.log", "suse-syslog.log",
 ])
+@needs_reference
 def test_system_syslog_golden(spark, log):
     lines, golden = _load_golden("system", "syslog", log)
     joined = _join_multiline(lines)
@@ -190,12 +196,14 @@ NGINX_FIELDS = [
 
 
 @pytest.mark.parametrize("log", ["test.log", "access.log", "test-with-host.log"])
+@needs_reference
 def test_nginx_access_golden(spark, log):
     lines, golden = _load_golden("nginx", "access", log)
     rows = _run(spark, nginx_access, lines)
     _check(rows, golden, NGINX_FIELDS)
 
 
+@needs_reference
 def test_osquery_result_golden(spark):
     from beats_spark.modules import osquery_result
 
@@ -240,6 +248,7 @@ REDIS_FIELDS = ["log.level", "process.pid", "redis.log.role", "message"]
 
 
 @pytest.mark.parametrize("log", ["redis-5.0.3.log", "redis-darwin-3.0.2.log"])
+@needs_reference
 def test_redis_log_golden(spark, log):
     lines, golden = _load_golden("redis", "log", log)
     # config exclude_lines (ascii-art banner) + the input's empty-line drop
@@ -267,6 +276,7 @@ MYSQL_ERROR_FIELDS = [
 
 
 @pytest.mark.parametrize("log", ["error.log", "mariadb-10.4.8.log"])
+@needs_reference
 def test_mysql_error_golden(spark, log):
     lines, golden = _load_golden("mysql", "error", log)
     joined = _join_negate(lines, r"^([0-9]{4}-[0-9]{2}-[0-9]{2}|[0-9]{6})")
@@ -285,6 +295,7 @@ POSTGRESQL_FIELDS = [
     "postgresql-10-default.log",
     "postgresql-9.6-multi-core.log",
 ])
+@needs_reference
 def test_postgresql_log_golden(spark, log):
     lines, golden = _load_golden("postgresql", "log", log)
     joined = _join_negate(lines, r"^\d{4}-\d{2}-\d{2} ")
@@ -302,6 +313,7 @@ KAFKA_FIELDS = [
     "controller.log", "server.log", "state-change.log",
     "controller-2.0.0.log", "server-2.0.0.log",
 ])
+@needs_reference
 def test_kafka_log_golden(spark, log):
     lines, golden = _load_golden("kafka", "log", log)
     joined = _join_negate(lines, r"^\[")
@@ -316,6 +328,7 @@ def test_kafka_log_golden(spark, log):
 @pytest.mark.parametrize("log", [
     "audit-rhel6.log", "audit-cent7-node.log", "audit-rhel7.log",
 ])
+@needs_reference
 def test_auditd_log_golden(spark, log):
     from beats_spark.modules import auditd_log
 
@@ -355,6 +368,7 @@ def test_auditd_log_golden(spark, log):
 ICINGA_FIELDS = ["log.level", "icinga.main.facility", "message"]
 
 
+@needs_reference
 def test_icinga_main_golden(spark):
     from beats_spark.modules import icinga_main
 
@@ -376,6 +390,7 @@ TRAEFIK_FIELDS = [
 ]
 
 
+@needs_reference
 def test_traefik_access_golden(spark):
     from beats_spark.modules import traefik_access
 
@@ -395,6 +410,7 @@ IIS_FIELDS = [
 
 
 @pytest.mark.parametrize("log", ["test-iis-7.5.log", "test-iis-7.2.log"])
+@needs_reference
 def test_iis_access_golden(spark, log):
     lines, golden = _load_golden("iis", "access", log)
     lines = [ln for ln in lines if not ln.startswith("#")]  # exclude_lines
@@ -434,6 +450,7 @@ HAPROXY_FIELDS = [
 @pytest.mark.parametrize("log", [
     "default.log", "haproxy.log", "tcplog.log", "httplog-no-headers.log",
 ])
+@needs_reference
 def test_haproxy_log_golden(spark, log):
     from beats_spark.modules import haproxy_log
 
@@ -460,6 +477,7 @@ PG_CSV_FIELDS_CHECK = [
     "postgresql-11-autovacuum.csv.log",
     "postgresql-11-duration.csv.log",
 ])
+@needs_reference
 def test_postgresql_csv_golden(spark, log):
     from beats_spark.modules import postgresql_csv
 
@@ -489,6 +507,7 @@ MONGODB_FIELDS = [
 @pytest.mark.parametrize("log", [
     "mongodb-debian-3.2.11.log", "mongodb-ubuntu-4.4.4-json.log",
 ])
+@needs_reference
 def test_mongodb_log_golden(spark, log):
     from beats_spark.modules import mongodb_log
 
@@ -507,6 +526,7 @@ LOGSTASH_FIELDS = ["log.level", "logstash.log.module", "logstash.log.thread",
 @pytest.mark.parametrize("log", [
     "logstash-plain.log", "logstash-plain-7.4.log", "logstash-json.log",
 ])
+@needs_reference
 def test_logstash_log_golden(spark, log):
     from beats_spark.modules import logstash_log
 
@@ -533,6 +553,7 @@ NATS_FIELDS = [
 ]
 
 
+@needs_reference
 def test_nats_log_golden(spark):
     from beats_spark.modules import nats_log
 
@@ -557,6 +578,7 @@ SANTA_FIELDS = [
 ]
 
 
+@needs_reference
 def test_santa_log_golden(spark):
     from beats_spark.modules import santa_log
 
@@ -586,6 +608,7 @@ _SLOWLOG_BOOLS = [
     "mysql-5.7.22.log", "mariadb-10.3.13.log", "mariadb-explain.log",
     "mysql-ubuntu-8.0.15.log", "percona-ubuntu-5.7.19.log",
 ])
+@needs_reference
 def test_mysql_slowlog_golden(spark, log):
     from beats_spark.modules import mysql_slowlog
 
@@ -620,6 +643,7 @@ ES_SERVER_FIELDS = [
     "elasticsearch.624.log", "elasticsearch-json.800.log",
     "elasticsearch-json.800.mixed.log",
 ])
+@needs_reference
 def test_elasticsearch_server_golden(spark, log):
     from beats_spark.modules import elasticsearch_server
 
@@ -652,6 +676,7 @@ ES_GC_FIELDS = [
 # test-docker.log's golden is a single mid-file event (offset-aligned, not
 # prefix-aligned), which this index-zipped harness can't line up
 @pytest.mark.parametrize("log", ["gc.log", "test.log"])
+@needs_reference
 def test_elasticsearch_gc_golden(spark, log):
     from beats_spark.modules import elasticsearch_gc
 
@@ -676,6 +701,7 @@ ES_DEP_FIELDS = [
     "elasticsearch_deprecation.log", "es_deprecation-json.800.log",
     "es_deprecation-json.800.mixed.log",
 ])
+@needs_reference
 def test_elasticsearch_deprecation_golden(spark, log):
     from beats_spark.modules import elasticsearch_deprecation
 
@@ -701,6 +727,7 @@ _KIBANA_RENAMED_HEADERS = {"referer", "user-agent"}
 
 
 @pytest.mark.parametrize("log", ["log.624.log", "test.log"])
+@needs_reference
 def test_kibana_log_golden(spark, log):
     from beats_spark.modules import kibana_log
 
@@ -749,6 +776,7 @@ AUTH_FIELDS = [
     "log",
     ["test.log", "timestamp.log", "secure-rhel7.log", "auth-ubuntu1204.log"],
 )
+@needs_reference
 def test_system_auth_golden(spark, log):
     from beats_spark.modules import system_auth
 
@@ -807,6 +835,7 @@ def _slowlog_stats_ok(want, got):
     "es_indexing_slowlog.800.log", "es_search_slowlog.800.log",
     "es_slowlog.800.mixed.log",
 ])
+@needs_reference
 def test_elasticsearch_slowlog_golden(spark, log):
     from beats_spark.modules import elasticsearch_slowlog
 
@@ -835,6 +864,7 @@ NGINX_ERROR_FIELDS = [
 ]
 
 
+@needs_reference
 def test_nginx_error_golden(spark):
     from beats_spark.modules import nginx_error
 
@@ -877,6 +907,7 @@ ES_AUDIT_FIELDS = [
     "test-audit-730.log", "test-audit-761.log", "test-audit-800.log",
     "test-audit-800.mixed.log", "test-audit-docker.log",
 ])
+@needs_reference
 def test_elasticsearch_audit_golden(spark, log):
     from beats_spark.modules import elasticsearch_audit
 
@@ -916,6 +947,7 @@ def _ecs_shape_ok(want, got):
     "test-audit-711.log", "test-audit-713.log", "test-audit-814.log",
     "test-audit-890.log",
 ])
+@needs_reference
 def test_kibana_audit_golden(spark, log):
     from beats_spark.modules import kibana_audit
 
@@ -945,6 +977,7 @@ IIS_ERROR_FIELDS = [
 @pytest.mark.parametrize("log", [
     "test.log", "ipv6_zone_id.log", "iis_error_url.log",
 ])
+@needs_reference
 def test_iis_error_golden(spark, log):
     from beats_spark.modules import iis_error
 
@@ -965,6 +998,7 @@ LOGSTASH_SLOWLOG_FIELDS = [
 
 
 @pytest.mark.parametrize("log", ["slowlog-plain.log", "slowlog-json.log"])
+@needs_reference
 def test_logstash_slowlog_golden(spark, log):
     from beats_spark.modules import logstash_slowlog
 
@@ -1011,6 +1045,7 @@ NGINX_INGRESS_LIST_FIELDS = {
 }
 
 
+@needs_reference
 def test_nginx_ingress_controller_golden(spark):
     from beats_spark.modules import nginx_ingress_controller
 
@@ -1026,6 +1061,7 @@ def test_nginx_ingress_controller_golden(spark):
                    (sorted(want) if want else None), (i, gk, want, got)
 
 
+@needs_reference
 def test_icinga_startup_golden(spark):
     from beats_spark.modules import icinga_startup
 
@@ -1036,6 +1072,7 @@ def test_icinga_startup_golden(spark):
             "event.kind", "event.type"], ts_field=None)
 
 
+@needs_reference
 def test_icinga_debug_golden(spark):
     from beats_spark.modules import icinga_debug
 
@@ -1061,6 +1098,7 @@ PENSANDO_DFW_FIELDS = [
 ]
 
 
+@needs_reference
 def test_pensando_dfw_golden(spark):
     from beats_spark.modules import pensando_dfw
 

@@ -12,6 +12,7 @@ decode_xml cases are the reference decoder's table tests
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import Row
@@ -307,6 +308,8 @@ class TestDecodeXMLWineventlog:
 GOLDEN_FLOW_DIR = "/root/reference/libbeat/common/flowhash/testdata/golden"
 
 
+@pytest.mark.skipif(not os.path.exists(GOLDEN_FLOW_DIR),
+                    reason=f"reference tree unavailable: {GOLDEN_FLOW_DIR}")
 @pytest.mark.parametrize("impl", ["arrow", "column"])
 @pytest.mark.parametrize("log", [
     "tcp.pcap.log", "udp.pcap.log", "sctp.pcap.log", "icmp.pcap.log",

@@ -65,12 +65,11 @@ def test_no_expand_in_distinct_aggregates(spark):
     # exact-distinct counts go through the mid-grain two-stage shape; the
     # countDistinct rewrite's Expand node (row-multiplying) must not return
     from beats_spark.pipeline import sink_aggregates
-    from beats_spark.queries import QUERIES, q_route_counts
+    from beats_spark.queries import QUERIES
 
     routed = full_pipeline(spark, SF_SMOKE)
     for name, df in {
         "sink_aggregates": sink_aggregates(routed),
-        "route_counts": q_route_counts(spark, SF_SMOKE),
         "flows_window": QUERIES["flows_window"](spark, SF_SMOKE),
         "fingerprint": QUERIES["fingerprint"](spark, SF_SMOKE),
     }.items():

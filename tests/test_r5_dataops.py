@@ -339,6 +339,40 @@ class TestReviewedEdges:
         with pytest.raises(ValueError):
             SM._split_thresholds({"a": 1e-12, "b": 1e-12})
 
+    def test_hash_split_rejects_negative_or_non_finite_weight(self):
+        import pytest
+
+        for weights in ({"a": -1, "b": 2}, {"a": float("nan"), "b": 1.0},
+                        {"a": float("inf"), "b": 1.0}):
+            with pytest.raises(ValueError):
+                SM._split_thresholds(weights)
+
+    def test_strip_boilerplate_null_text_matches_sql_twin(self, spark):
+        """NULL text is NULL n_lines, n_removed and cleaned on both
+        engines, next to a normal row that still cleans."""
+        import duckdb
+
+        rows = [(i, f"NAV\nbody {i}") for i in range(10)] + [(99, None)]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        got = {
+            r["doc_id"]: (r["n_lines"], r["n_removed"],
+                          None if r["cleaned"] is None
+                          else hashlib.md5(r["cleaned"].encode()).hexdigest())
+            for r in X.strip_boilerplate(df, min_docs=10).collect()
+        }
+        con = duckdb.connect()
+        con.execute(
+            "CREATE VIEW t AS SELECT * FROM (VALUES "
+            + ", ".join(f"({i}, 'NAV' || chr(10) || 'body {i}')" for i in range(10))
+            + ", (99, NULL)) v(doc_id, text)"
+        )
+        sql = X.strip_boilerplate_sql(table="t", min_docs=10)
+        want = {r[0]: tuple(r[1:]) for r in con.execute(
+            f"SELECT doc_id, n_lines, n_removed, cleaned_md5 FROM ({sql}) s"
+        ).fetchall()}
+        assert got[99] == (None, None, None)
+        assert got == want
+
     def test_bloom_m_bits_must_align_to_words(self, spark):
         import pytest
 

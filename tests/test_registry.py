@@ -1,79 +1,49 @@
-"""Registry / driver-window invariants (VERDICT r3 items 1 & 10): the
-driver verifies only the first 50 queries() entries, so the window must
-contain every query that is new, behavior-changed, or previously outside
-driver proof — and only long-green entries may sit past it."""
+"""Registry order invariants: the correctness harness verifies only the
+first 50 queries() entries, so the order is derived from the
+CORRECTNESS_r*.json records — least recently verified oracled queries
+first, rows-only last."""
 
 from __future__ import annotations
 
 from beats_spark import queries as Q
 
 
+def _green(*names: str) -> dict:
+    return {n: {"hash_match": True} for n in names}
+
+
 def test_window_is_the_first_fifty_and_fully_oracled():
     names = list(Q.queries())
     oracles = Q.oracle_sql()
-    assert len(Q._DRIVER_WINDOW) == 50
-    assert names[:50] == Q._DRIVER_WINDOW
-    # every window entry has a DuckDB oracle — no rows-only inside the
-    # driver-verified slice
     missing = [n for n in names[:50] if n not in oracles]
     assert missing == [], missing
 
 
 def test_unproven_and_changed_queries_are_inside_the_window():
-    must_be_in = [
-        # round-5 new (pytest-only operators promoted to driver oracles,
-        # incl. the decode_duration seconds-regex regression) — zero
-        # driver-green history, MUST be verified this round
-        "csv_extract", "duration_parse", "kv_parse", "mime_detect",
-        "url_codec", "formatted_index", "cache_enrich", "stage_metrics",
-        "winlog_parse", "gzip_roundtrip", "field_projection",
-        "metadata_stamp", "container_parse", "event_stamp",
-        # round-5 new or behavior-changed
-        "kafka_partition", "script_chain", "multiline",
-        # round-5 rotations: single-round-green (r3 only) before this round
-        "minhash_dedup", "minhash_dedup_cc", "ngram_jaccard_pairs",
-        "module_system_auth", "module_iis_error",
-        # single driver-green round (r4) so far; seven of the r3-tail rows
-        # (tool_transitions, conv_quality, interval_overlap,
-        # cohort_retention, curation_funnel, token_vocab,
-        # normalize_unicode — plus module_redis_slowlog for stage_metrics,
-        # keeping three grok-bank modules in-window) rotated out for the
-        # eight new round-5 queries
-        # above — each displaced row carries r4 driver-green PLUS judge
-        # sf0.001 oracle sweeps in both r3 and r4, the strongest evidence
-        # of any non-flagship row, and family coverage stays in-window
-        # (see the _DRIVER_WINDOW comment in queries.py)
-        # (pii_redact / span_dedup / rrf_search / temperature_mix /
-        # url_canonical / latency_quantiles rotated out late in r5 for the
-        # six newest zero-history promotions — each displaced row is r4
-        # driver-green + judge r4 sweep, with family coverage retained
-        # in-window; see _DRIVER_WINDOW comment)
-        # (decontaminate / gopher_filter / transcript_curation /
-        # asof_enrich rotated out in the r5 second session for the four
-        # newest zero-history additions below — each displaced row is r4
-        # driver-green + judge r3/r4 sweeps, families retained in-window)
-        "routed_rows",
-        "chunk_documents",
-        "dedup_components",
-        # round-5 second-session additions, zero driver history
-        "hash_split", "ngram_topk", "tfidf_keywords", "bloom_decontaminate",
-        "strip_boilerplate", "containment_pairs", "sample_gate",
-        "hash_embed", "hash_embed_topk",
-        # round-5 last additions, zero driver history: the dns processor
-        # as a real operator (resolver-snapshot broadcast join) and
-        # content-defined chunking. They displace conv_pattern and
-        # transcript_pack (each r4 driver-green + judge r3/r4 sf0.001
-        # sweeps; conv-window family stays via state_intervals +
-        # sink_cube, packing via chunk_documents).
-        "dns_enrich", "cdc_chunks",
-        # round-4 additions / oracle promotions
-        "simhash_pairs", "media_decode", "ann_lsh_recall", "ann_ivf_recall",
-        "dsir_select", "semdedup", "bm25_search", "stratified_topn",
-        "perplexity_filter", "substr_dedup", "bpe_pairs",
-        "winnow_fingerprint",
+    # last-green rounds never decrease along the oracled order, so every
+    # query verified less recently than the window's edge is inside it
+    last = Q.last_green_round(Q._correctness_records())
+    oracled = [n for n in Q.queries() if n in Q.ORACLES]
+    rounds = [last.get(n, 0) for n in oracled]
+    assert rounds == sorted(rounds)
+    assert list(Q.oracle_sql()) == oracled
+
+
+def test_registry_order_from_synthetic_records():
+    names = ["old", "rows_only", "fresh", "never", "tie_a", "tie_b", "red"]
+    oracled = {"old", "fresh", "never", "tie_a", "tie_b", "red"}
+    records = {
+        1: _green("old", "red", "tie_b", "tie_a"),
+        2: {**_green("fresh", "tie_a", "tie_b"), "red": {"hash_match": False}},
+        3: _green("fresh"),
+    }
+    assert Q.registry_order(names, oracled, records) == [
+        "never", "old", "red", "tie_a", "tie_b", "fresh", "rows_only",
     ]
-    window = set(list(Q.queries())[:50])
-    assert set(must_be_in) <= window
+    # no records: registration order, rows-only still last
+    assert Q.registry_order(names, oracled, {}) == [
+        "old", "fresh", "never", "tie_a", "tie_b", "red", "rows_only",
+    ]
 
 
 def test_outside_window_only_long_green_or_rows_only():
@@ -85,11 +55,5 @@ def test_outside_window_only_long_green_or_rows_only():
     # vector pinned in pytest)
     assert sorted(rows_only) == ["ann_ivf_topk", "ann_lsh_topk",
                                  "community_id"]
-    # oracle coverage of the registry overall (r5 adds kafka_partition +
-    # script_chain + fourteen pytest-only-operator promotions (incl.
-    # stage_metrics, the lineage manifest, and the late batches
-    # winlog_parse / gzip_roundtrip / field_projection / metadata_stamp /
-    # container_parse / event_stamp) + dns_enrich + cdc_chunks, plus the
-    # second-session additions hash_split / ngram_topk / tfidf_keywords /
-    # bloom_decontaminate, all oracled)
+    assert names[-3:] == rows_only
     assert len(names) == 115 and len(oracles) == 112
