@@ -1,4 +1,4 @@
-"""Enrich operators — constant merges, field surgery, hashes, lookup joins.
+"""Enrich operators — constant merges, field surgery, hashes, lookups.
 
 Everything here is built-in Column expressions or a broadcast hash join; no
 Python executes per row. Reference processors cited per function.
@@ -6,8 +6,11 @@ Python executes per row. Reference processors cited per function.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 
 # -- constant enrichers ---------------------------------------------------------
@@ -201,44 +204,48 @@ def timeseries_instance(df: DataFrame, dimensions: list[str], target: str = "tim
 
 def translate(
     df: DataFrame,
-    lookup: DataFrame,
     key: str,
-    lookup_key: str | None = None,
+    schema: str,
+    rows: list[tuple],
     defaults: dict | None = None,
 ) -> DataFrame:
-    """Generic lookup enrich: broadcast hash join against a small dimension
-    table — the Spark shape of translate_sid (translate_sid/config.go:23-28),
-    translate_ldap_attribute, cache get (cache/config.go:62-108), dns, and
-    the add_*_metadata family.
+    """Lookup enrich against a small static table, compiled on the driver
+    to one literal map lookup — the shape of translate_sid
+    (translate_sid/config.go:23-28) and cache get (cache/config.go:62-108),
+    which look each event up in an in-memory map.
 
-    At 100 TB the fact side never shuffles: the lookup is broadcast to every
-    executor and the join is map-side. `defaults` fills unmatched rows.
+    `schema` is a DDL string whose first field is the table key; `rows`
+    are tuples in that order. The other fields are appended to `df` in
+    schema order, typed as declared. A missing or NULL `df[key]` gets NULL
+    values, then `defaults` (left-join semantics). The map runs inside the
+    fact-side projection: no scan, shuffle or join is planned for it.
+    Large dimension tables go through a broadcast join instead
+    (`dns_enrich`, `misc.cache_get`).
 
-    Duplicate lookup keys would silently MULTIPLY fact rows through the
-    join; the reference's map-backed lookups can't do that, so we keep one
-    deterministic row per key (lowest by the remaining columns' order).
+    A map literal holds each key once and no NULL key, so a duplicate or
+    NULL key in `rows` raises ValueError rather than picking a row.
     """
-    lk = lookup_key or key
-    from pyspark.sql import Window as W
+    key_field, *fields = DataType.fromDDL(schema).fields
+    counts = Counter(row[0] for row in rows)
+    if None in counts:
+        raise ValueError(f"translate on {key!r}: NULL key in the lookup table")
+    dups = sorted(k for k, n in counts.items() if n > 1)
+    if dups:
+        raise ValueError(f"translate on {key!r}: duplicate lookup keys {dups}")
 
-    others = [c for c in lookup.columns if c != lk]
-    lookup = (
-        lookup.withColumn(
-            "_lk_rn",
-            F.row_number().over(W.partitionBy(lk).orderBy(*[F.col(c) for c in others])),
-        )
-        .filter(F.col("_lk_rn") == 1)
-        .drop("_lk_rn")
-    )
-    joined = df.join(
-        F.broadcast(lookup.withColumnRenamed(lk, f"__lk_{key}")),
-        df[key] == F.col(f"__lk_{key}"),
-        "left",
-    ).drop(f"__lk_{key}")
-    if defaults:
-        for col, dv in defaults.items():
-            joined = joined.withColumn(col, F.coalesce(F.col(col), F.lit(dv)))
-    return joined
+    entries = []
+    for k, *values in rows:
+        entries.append(F.lit(k).cast(key_field.dataType))
+        entries.append(F.struct(*[
+            F.lit(v).cast(f.dataType).alias(f.name) for f, v in zip(fields, values)
+        ]))
+    hit = F.create_map(*entries)[F.col(key).cast(key_field.dataType)]
+    defaults = defaults or {}
+    return df.withColumns({
+        f.name: F.coalesce(hit[f.name], F.lit(defaults[f.name]))
+        if f.name in defaults else hit[f.name]
+        for f in fields
+    })
 
 
 _DNS_QUERY_TYPES = {"a": "A", "aaaa": "AAAA", "ptr": "PTR", "reverse": "PTR", "txt": "TXT"}

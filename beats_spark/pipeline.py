@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from beats_spark.data.lookups import role_lookup_df, tool_lookup_df
+from beats_spark.data import lookups as L
 from beats_spark.data.transcripts import load_transcripts
 from beats_spark.operators import enrich as E
 from beats_spark.operators import parse as P
@@ -49,12 +49,11 @@ def parse_stage(tdf: DataFrame) -> DataFrame:
 
 
 def enrich_stage(df: DataFrame) -> DataFrame:
-    """Broadcast-join lookups + deterministic id — no shuffle of the fact side."""
-    spark = df.sparkSession
-    df = E.translate(df, role_lookup_df(spark), "role",
-                     defaults={"role_group": "unknown", "priority": 0})
-    df = E.translate(df, tool_lookup_df(spark), "tool",
-                     defaults={"tool_kind": "none", "billable": False})
+    """Map-literal lookups + deterministic id — one projection, no join."""
+    df = E.translate(df, "role", L.ROLE_LOOKUP_SCHEMA, L.ROLE_LOOKUP_ROWS,
+                     defaults=L.ROLE_LOOKUP_DEFAULTS)
+    df = E.translate(df, "tool", L.TOOL_LOOKUP_SCHEMA, L.TOOL_LOOKUP_ROWS,
+                     defaults=L.TOOL_LOOKUP_DEFAULTS)
     df = E.add_id(df)
     return df
 

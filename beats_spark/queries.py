@@ -30,12 +30,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from beats_spark.conditions import condition_sql, sql_str
-from beats_spark.data.lookups import (
-    role_lookup_df,
-    role_lookup_sql,
-    tool_lookup_df,
-    tool_lookup_sql,
-)
+from beats_spark.data import lookups as L
 from beats_spark.data.transcripts import load_transcripts, oracle_cte
 from beats_spark.grok import Grok
 from beats_spark.operators import enrich as E
@@ -46,6 +41,7 @@ from beats_spark.pipeline import (
     TOOL_CALL_FLAG,
     TRANSCRIPT_PATTERNS,
     conv_rollups,
+    enrich_stage,
     full_pipeline,
     parse_stage,
     sink_aggregates,
@@ -221,7 +217,7 @@ def q_conv_rollups(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# 5. enrich: broadcast lookup joins (translate / cache-get shape)
+# 5. enrich: map-literal lookups (translate / cache-get shape)
 # --------------------------------------------------------------------------
 
 
@@ -237,18 +233,15 @@ FROM (
          coalesce(tool_lookup.tool_kind, 'none') AS tool_kind,
          coalesce(tool_lookup.billable, FALSE) AS billable
   FROM transcripts t
-  LEFT JOIN {role_lookup_sql()} ON t.role = role_lookup.role
-  LEFT JOIN {tool_lookup_sql()} ON t.tool = tool_lookup.tool
+  LEFT JOIN {L.role_lookup_sql()} ON t.role = role_lookup.role
+  LEFT JOIN {L.tool_lookup_sql()} ON t.tool = tool_lookup.tool
 )
 GROUP BY 1, 2, 3
 """,
 )
 def q_enrich_translate(spark, sf_dir):
-    t = load_transcripts(spark, sf_dir)
-    t = E.translate(t, role_lookup_df(spark), "role",
-                    defaults={"role_group": "unknown", "priority": 0})
-    t = E.translate(t, tool_lookup_df(spark), "tool",
-                    defaults={"tool_kind": "none", "billable": False})
+    # the pipeline's own lookups; the unused _id column is pruned
+    t = enrich_stage(load_transcripts(spark, sf_dir))
     return t.groupBy("role_group", "tool_kind", "billable").agg(
         F.count("*").alias("n"),
         F.sum("priority").alias("priority_sum"),

@@ -2,10 +2,11 @@
 
 Default mode: runs the headline end-to-end pipeline (parse → enrich → route →
 fan-out write → aggregate) plus every registry query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line:
-    {"metric": ..., "value": <headline sec>, "unit": "sec",
-     "queries": {...}, "sf": ..., "turns_per_sec": ...}
+(default: the sf0.1 test data) on local[$SPARK_GRAFT_CPUS] and prints two
+JSON lines (see `records`): the per-query timings, then the headline record
+    {"metric": ..., "value": <headline sec>, "unit": "sec", "loadavg": ...,
+     "sf": ..., "turns_per_sec": ..., "n_queries": ..., "queries_sec": ...}
+which is always the last line and stays under 1 KB.
 
 Scaling mode (`python bench.py --scaling`): re-executes the headline pipeline
 in two fresh subprocesses at local[8] and local[32] over the SAME input and
@@ -133,6 +134,29 @@ def run_queries(spark, sf_dir: str) -> dict[str, float]:
     return timings
 
 
+def records(load: dict, elapsed: float, turns: int, qtimes: dict[str, float],
+            sf_dir: str) -> list[str]:
+    """The JSON lines of a default run. Per-query timings come first, on
+    their own line (none with --headline-only); the last line holds the
+    headline, host quality and throughput only, so its size does not grow
+    with the registry and a reader of the output's tail can always parse
+    it."""
+    headline = {
+        "loadavg": load,
+        "metric": "end-to-end pipeline (parse→enrich→route→fanout→aggregate) wall sec",
+        "value": round(elapsed, 3),
+        "unit": "sec",
+        "sf": _sf(sf_dir),
+        "turns": turns,
+        "turns_per_sec": round(turns / elapsed, 1),
+        "cores": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "n_queries": len(qtimes),
+        "queries_sec": round(sum(qtimes.values()), 3),
+    }
+    lines = [json.dumps({"queries": qtimes})] if qtimes else []
+    return lines + [json.dumps(headline)]
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -255,17 +279,7 @@ def main() -> None:
     # loadavg after the run counts our OWN task threads (a full 32-core run
     # reads ~32); only probes_before measures co-tenant contention
     load["after_own_run"] = _loadavg()
-    print(json.dumps({
-        "loadavg": load,
-        "metric": "end-to-end pipeline (parse→enrich→route→fanout→aggregate) wall sec",
-        "value": round(elapsed, 3),
-        "unit": "sec",
-        "queries": qtimes,
-        "sf": _sf(sf_dir),
-        "turns": turns,
-        "turns_per_sec": round(turns / elapsed, 1),
-        "cores": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-    }))
+    print("\n".join(records(load, elapsed, turns, qtimes, sf_dir)))
 
 
 if __name__ == "__main__":

@@ -6,7 +6,8 @@
 - vectorized == scalar: the pandas frame path and the per-string reference
   path agree on arbitrary inputs;
 - condition compiler: Spark evaluation of random and/or/not trees over
-  equals/range matches a pure-Python evaluator (missing ⇒ False).
+  equals/range matches a pure-Python evaluator (missing ⇒ False), and so
+  does the DuckDB twin `condition_sql`.
 """
 
 from __future__ import annotations
@@ -137,12 +138,15 @@ def _eval_py(cfg, row: dict) -> bool:
 @settings(max_examples=25, deadline=None)
 @given(st.lists(condition_tree(), min_size=1, max_size=3))
 def test_condition_compiler_matches_python(spark, trees):
-    from pyspark.sql import functions as F
+    import duckdb
 
-    from beats_spark.conditions import compile_condition
+    from beats_spark.conditions import compile_condition, condition_sql
 
     rows = [(a, b) for a in [None, 0, 1, 2, 5] for b in [None, 0, 3]]
     df = spark.createDataFrame(rows, "a int, b int")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (a INTEGER, b INTEGER)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
     for cfg in trees:
         got = [
             r.m
@@ -155,6 +159,13 @@ def test_condition_compiler_matches_python(spark, trees):
                                                     t[1] is not None, t[1] or 0))
         ]
         assert got == want, cfg
+        # the DuckDB twin, with `missing` absent from the known fields
+        sql = condition_sql(cfg, set(_FIELDS))
+        twin = [m for (m,) in con.execute(
+            f"SELECT {sql} FROM t ORDER BY a NULLS FIRST, b NULLS FIRST"
+        ).fetchall()]
+        assert twin == want, (cfg, sql)
+    con.close()
 
 
 _doc_text = st.text(
