@@ -6,9 +6,24 @@ a multi-executor cluster via spark-submit --py-files (minus master).
 
 from __future__ import annotations
 
+import atexit
 import os
 
 from pyspark.sql import SparkSession
+
+# Driver JVM flags: C2 (tier-4) promotion thresholds at 10x the JDK 17
+# defaults (5000 / 600 / 15000). On small batches most driver CPU went to C2
+# compiling planner, scheduler and commit code that runs only a few thousand
+# times per pass; at 10x that code stays at C1, per-row methods still cross
+# the bar early, and hot loops reach C2 through OSR (Tier4BackEdgeThreshold
+# keeps its default). Set through spark.driver.defaultJavaOptions so that a
+# caller's spark.driver.extraJavaOptions adds to them instead of replacing
+# them; under spark-submit pass them with --conf (jobs/run_pipeline.py).
+DRIVER_JAVA_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000 "
+    "-XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000"
+)
 
 
 def get_spark(
@@ -46,6 +61,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.defaultJavaOptions", DRIVER_JAVA_OPTIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # keep plan strings complete for the plan-regression gates
@@ -81,6 +97,9 @@ def _ship_package(spark: SparkSession) -> None:
         return  # properly installed — workers resolve it themselves
     fd, zip_path = tempfile.mkstemp(suffix="_beats_spark.zip")
     os.close(fd)
+    # removed at exit, not after addPyFile: the file server keeps serving
+    # this path to executors that start later
+    atexit.register(_remove, zip_path)
     with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as z:
         for dirpath, _, files in os.walk(pkg_dir):
             if "__pycache__" in dirpath:
@@ -94,3 +113,10 @@ def _ship_package(spark: SparkSession) -> None:
                     z.write(full, rel)
     spark.sparkContext.addPyFile(zip_path)
     _ship_package._app_id = app_id
+
+
+def _remove(path: str) -> None:
+    try:
+        os.remove(path)
+    except FileNotFoundError:
+        pass

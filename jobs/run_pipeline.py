@@ -2,8 +2,12 @@
 
     spark-submit --master <cluster> \
         --py-files dist/beats_spark.zip \
+        --conf spark.driver.defaultJavaOptions="-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 -XX:Tier4CompileThreshold=150000" \
         jobs/run_pipeline.py \
         --input /root/testdata/sf0.01 --output /tmp/out --job-id run-42
+
+The driver JVM is already running when this script calls get_spark, so the
+JIT flags of `session.DRIVER_JAVA_OPTIONS` reach it only through --conf.
 
 Runs the full parse → enrich → route DAG with per-stage observe() metrics,
 writes every sink through the checkpoint manifest (resumable: re-running
