@@ -5,7 +5,7 @@ Five flavors, all DataFrame-native:
 - exact: hash-groupBy on normalized text (one shuffle on the hash key);
 - MinHash + LSH: char-shingles → K minhashes → B bands → band-bucket
   self-join → exact Jaccard verify. Shingling/minhashing run entirely in
-  JVM whole-stage codegen (transform/aggregate over arrays — no Python);
+  the JVM (one hash per shingle, then K min() aggregates — no Python);
 - SimHash: 64-bit signature via Arrow-vectorized numpy (bit-parallel),
   near-dup = Hamming distance ≤ t within LSH-style chunk buckets;
 - n-gram Jaccard: exact pairwise verify used standalone on small candidate
@@ -24,7 +24,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -81,52 +81,59 @@ def _affine_params(i: int) -> tuple[int, int]:
     return a, b
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 64) -> Column:
-    """K independent minhashes via universal hashing, computed in a SINGLE
-    fold over the shingles: per shingle one xxhash64 (bound to a lambda
-    variable, so it is evaluated once — K separate transform expressions
-    would each re-evaluate it), then the K family members are cheap 31-bit
-    affine transforms min((h·a_i + b_i) mod (2^31-1)) merged into the
-    running minima with zip_with/least. h, a, b < 2^31 keeps every product
-    below 2^62, so ANSI mode can't overflow. Pure Column expressions →
-    whole-stage codegen; K×|shingles| multiply-adds + |shingles| hashes.
-
-    (History note: the one-hash-per-seed formulation must NOT use a
-    two-parameter lambda (`lambda s, i=i`) with F.transform — that is the
-    (element, index) form and silently binds `i` to the array INDEX,
-    collapsing all K hash functions into one and gutting LSH recall.)
-    """
-    m = F.lit(_MERSENNE_31)
-    consts = F.array(*[
-        F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-        for a, b in (_affine_params(i) for i in range(num_hashes))
-    ])
-    init = F.expr(
-        f"transform(sequence(1, {num_hashes}), x -> cast({_MERSENNE_31} as bigint))"
-    )
-    return F.aggregate(
-        shingle_col,
-        init,
-        lambda acc, s: F.element_at(
-            F.transform(
-                F.array(F.pmod(F.xxhash64(s), m)),
-                lambda h: F.zip_with(
-                    acc,
-                    consts,
-                    lambda mn, ab: F.least(
-                        mn, F.pmod(h * ab["a"] + ab["b"], m)
-                    ),
-                ),
-            ),
-            1,
-        ),
-    )
-
-
 def jaccard(a: Column, b: Column) -> Column:
     """Exact Jaccard over two string arrays (assumed distinct elements)."""
     inter = F.size(F.array_intersect(a, b))
     return (inter / (F.size(a) + F.size(b) - inter)).cast("double")
+
+
+def _minhash_signature(hashed: DataFrame, num_hashes: int) -> DataFrame:
+    """(_id, _m0 … _m{K-1}) from exploded (_id, _h) rows, _h < 2^31-1: the
+    K family members min((h·a_i + b_i) mod (2^31-1)) as K codegen'd min()
+    aggregates in one hash aggregate (map-side partials shrink the shuffle
+    to |docs|×K). h, a, b < 2^31 keeps every product below 2^62, so ANSI
+    mode can't overflow."""
+    m = F.lit(_MERSENNE_31)
+    return hashed.groupBy("_id").agg(*[
+        F.min(F.pmod(F.col("_h") * F.lit(a) + F.lit(b), m)).alias(f"_m{i}")
+        for i, (a, b) in enumerate(map(_affine_params, range(num_hashes)))
+    ])
+
+
+def _band_candidates(
+    hashed: DataFrame, num_hashes: int, bands: int, max_bucket: int
+) -> DataFrame:
+    """Candidate pairs (id_a < id_b) of docs that share a MinHash band:
+    signature → band hashes as plain columns → explode(bands) → self-join
+    per (band, bhash) bucket → bare id pairs, deduplicated. `hashed` holds
+    one (_id, _h) row per shingle hash. A degenerate bucket (spam shingles,
+    empty docs) is capped at `max_bucket` members."""
+    rows_per_band = num_hashes // bands
+    banded = _minhash_signature(hashed, num_hashes).select(
+        "_id",
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.xxhash64(*[F.col(f"_m{b * rows_per_band + r}")
+                                 for r in range(rows_per_band)]).alias("bhash"),
+                )
+                for b in range(bands)
+            ])
+        ).alias("_b"),
+    ).select("_id", "_b.band", "_b.bhash")
+    w = Window.partitionBy("band", "bhash").orderBy("_id")
+    banded = banded.withColumn("_rn", F.row_number().over(w)).filter(
+        F.col("_rn") <= max_bucket
+    )
+    left = banded.select("band", "bhash", F.col("_id").alias("id_a"))
+    right = banded.select("band", "bhash", F.col("_id").alias("id_b"))
+    return (
+        left.join(right, ["band", "bhash"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .dropDuplicates(["id_a", "id_b"])
+    )
 
 
 def minhash_lsh_pairs(
@@ -154,7 +161,6 @@ def minhash_lsh_pairs(
     K×|shingles| interpreted lambda evaluations dominated the profile
     (measured 7s vs <1s for the aggregate shape on 1M shingles × 64).
     """
-    rows_per_band = num_hashes // bands
     # one 64-bit hash per shingle; the string shingles are never carried
     # further — banding AND the exact verify both run on the longs (verify
     # exact up to 64-bit hash collisions: P ≈ |sh|²/2⁶⁴ per pair). The
@@ -179,48 +185,7 @@ def minhash_lsh_pairs(
             F.expr(f"transform(_hv, h -> pmod(h, {_MERSENNE_31}))")
         ).alias("_h"),
     )
-    m = F.lit(_MERSENNE_31)
-    mins = []
-    for i in range(num_hashes):
-        a, b = _affine_params(i)
-        mins.append(
-            F.min(F.pmod(F.col("_h") * F.lit(a) + F.lit(b), m)).alias(f"_m{i}")
-        )
-    sig = hashed.groupBy("_id").agg(*mins)
-    banded = sig.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col(f"_m{b * rows_per_band + r}")
-                              for r in range(rows_per_band)]
-                        ).alias("bhash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_b"),
-    ).select("_id", "_b.band", "_b.bhash")
-
-    # degenerate-bucket guard: cap bucket size (spam shingles / empty docs)
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("band", "bhash").orderBy("_id")
-    banded = banded.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= max_bucket
-    )
-
-    left = banded.select("band", "bhash", F.col("_id").alias("id_a"))
-    right = banded.select("band", "bhash", F.col("_id").alias("id_b"))
-    cand = (
-        left.join(right, ["band", "bhash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = _band_candidates(hashed, num_hashes, bands, max_bucket)
     ga = base.select(F.col("_id").alias("id_a"), F.col("_hv").alias("hv_a"))
     gb = base.select(F.col("_id").alias("id_b"), F.col("_hv").alias("hv_b"))
     return (
@@ -537,42 +502,7 @@ def ngram_jaccard_pairs(
             F.expr(f"transform(_g, s -> pmod(xxhash64(s), {_MERSENNE_31}))")
         ).alias("_h"),
     )
-    m = F.lit(_MERSENNE_31)
-    mins = []
-    for i in range(num_hashes):
-        a_, b_ = _affine_params(i)
-        mins.append(
-            F.min(F.pmod(F.col("_h") * F.lit(a_) + F.lit(b_), m)).alias(f"_m{i}")
-        )
-    sig = hashed.groupBy("_id").agg(*mins)
-    rows_per_band = num_hashes // bands
-    banded = sig.select(
-        "_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.xxhash64(*[F.col(f"_m{b * rows_per_band + r}")
-                                 for r in range(rows_per_band)]).alias("bhash"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("_b"),
-    ).select("_id", "_b.band", "_b.bhash")
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("band", "bhash").orderBy("_id")
-    banded = banded.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= max_bucket
-    )
-    a = banded.select("band", "bhash", F.col("_id").alias("id_a"))
-    b = banded.select("band", "bhash", F.col("_id").alias("id_b"))
-    cand = (
-        a.join(b, ["band", "bhash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = _band_candidates(hashed, num_hashes, bands, max_bucket)
     ga = base.select(F.col("_id").alias("id_a"), F.col("_g").alias("g_a"))
     gb = base.select(F.col("_id").alias("id_b"), F.col("_g").alias("g_b"))
     inter = F.size(F.array_intersect(F.col("g_a"), F.col("g_b")))

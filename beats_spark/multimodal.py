@@ -3,12 +3,12 @@ with typed metadata, processed via Arrow-batched mapInPandas.
 
 The Spark-side plumbing — schema, partitioning, UDF signatures, batch
 shapes, row-explosion for frame sampling — is real and tested. The actual
-codec work (JPEG decode, audio resample, video frame extraction) requires
-libraries not present in this container; those calls are STUBBED: with
-`fake=True` (default) a deterministic fake decoder derived from the bytes
-runs instead, with `fake=False` the operator raises NotImplementedError at
-the point where Pillow/ffmpeg/torchaudio would be invoked. Swapping the stub
-for the real codec changes no Spark plumbing.
+codec work (JPEG decode, audio resample, video frame extraction) needs
+codec libraries. `decode_media(mode="header")` (the default) parses
+dimensions straight from the container bytes with stdlib struct;
+`mode="pillow"` decodes with Pillow and raises NotImplementedError where it
+is absent; `mode="fake"` derives deterministic dims from the bytes. Swapping
+in a real codec changes no Spark plumbing.
 
 (Beats has no media processing; the closest reference shapes are
 detect_mime_type — /root/reference/libbeat/processors/actions/
@@ -149,33 +149,24 @@ def parse_media_header(buf: bytes):
     return None, None, None, None, False
 
 
-def decode_media(
-    df: DataFrame, fake: bool | None = None, mode: str | None = None
-) -> DataFrame:
+def decode_media(df: DataFrame, mode: str = "header") -> DataFrame:
     """Decode/feature-extract media via mapInPandas (Arrow batch iterator —
     constant memory per task regardless of partition size; binary payloads
     never materialize on the driver).
 
-    `mode` (or the legacy `fake` flag):
+    `mode`:
     - "header" (default): REAL stdlib header parse — width/height/channels
       straight from PNG/GIF/JPEG/WAV container bytes (parse_media_header),
       no codec library needed, environment-independent and oracle-able;
-    - "pillow" (fake=False): full image decode via Pillow; raises
+    - "pillow": full image decode via Pillow; raises
       NotImplementedError when Pillow is absent (this container ships no
       codecs) — the only remaining codec-gated branch;
-    - "fake"  (fake=True): deterministic digest-derived dims (kept for
+    - "fake": deterministic digest-derived dims (kept for
       plumbing tests that want dims on EVERY kind);
-    - "auto"  (fake=None with legacy callers): Pillow when it imports,
+    - "auto": Pillow when it imports,
       header parse otherwise.
     Rows the decoder cannot parse come back ok=False, never a task failure.
     """
-    if mode is None:
-        if fake is True:
-            mode = "fake"
-        elif fake is False:
-            mode = "pillow"
-        else:
-            mode = "header"
     if mode not in ("header", "pillow", "fake", "auto"):
         raise ValueError(f"unknown decode mode: {mode!r}")
 

@@ -1,18 +1,16 @@
 """Network-identity enrichers: community_id and registered_domain.
 
-Both are pure Column programs — no UDFs, no joins, no shuffles; they fuse
-into the surrounding WholeStageCodegen span like any other enrich step.
-
 - community_id restates the Community ID v1 flow hash (reference:
-  /root/reference/libbeat/processors/communityid/communityid.go:89-105 and
-  /root/reference/libbeat/common/flowhash/communityid.go:43-84). The byte
-  layout (seed_be16 . saddr . daddr . proto . 0x00 . sport_be16 . dport_be16)
-  is built as a hex string and hashed with the builtin sha1/unhex/base64 —
-  verified against the reference's published test vectors
-  (flowhash/communityid_test.go: 1:LQU9qZlK+B5F3KDmev6m5PMibrg=).
+  libbeat/processors/communityid/communityid.go:89-105 and
+  libbeat/common/flowhash/communityid.go:43-84) as one Arrow-batched
+  kernel: the byte layout (seed_be16 . saddr . daddr . proto . 0x00 .
+  sport_be16 . dport_be16) is packed with struct and hashed with hashlib's
+  sha1. tests/golden/community_id_vectors.json pins it to the published
+  spec vectors (flowhash/communityid_test.go: 1:LQU9qZlK+B5F3KDmev6m5PMibrg=)
+  and to IPv4/IPv6/ICMP/malformed-input cases.
 
 - registered_domain restates eTLD+1 splitting (reference:
-  /root/reference/libbeat/processors/registered_domain/registered_domain.go:93
+  libbeat/processors/registered_domain/registered_domain.go:93
   via golang.org/x/net/publicsuffix). The bundled public-suffix snapshot is
   compiled into `isin` predicates — Catalyst converts the >10-element lists
   to InSet (one hash-set probe per row, whole-stage codegen), so the lookup
@@ -45,131 +43,14 @@ _ICMP6_EQUIV = {128: 129, 129: 128, 133: 134, 134: 133, 135: 136, 136: 135,
                 130: 131, 139: 140, 140: 139, 144: 145, 145: 144}
 
 
-def _ipv4_hex(col: Column) -> Column:
-    """Dotted-quad string → 8-char uppercase hex of the 4 bytes; null when
-    the value is not a valid IPv4 address."""
-    octets = F.split(col, r"\.")
-    valid = col.rlike(r"^\d{1,3}(\.\d{1,3}){3}$") & (
-        F.size(F.filter(octets, lambda o: o.cast("int") > 255)) == 0
-    )
-    hexed = F.array_join(
-        F.transform(octets, lambda o: F.lpad(F.hex(o.cast("int")), 2, "0")), ""
-    )
-    return F.when(valid, hexed)
-
-
-def _with_addr_hex(df: DataFrame, col: str, out: str) -> DataFrame:
-    """Stage `out` = byte-hex (8 chars for IPv4, 32 for IPv6) of the IP
-    text in column `col`; null when invalid. The v6 path re-inflates the
-    '::' gap with zero groups and rewrites an embedded dotted-quad tail
-    ('::ffff:192.0.2.1') to its two hex groups — net.ParseIP+To16 as used
-    by the reference (flowhash/communityid.go is address-width-agnostic).
-    Hex preserves byte order, so comparing these strings lexicographically
-    equals Go's bytes.Compare on the raw addresses.
-
-    Implementation note: this intentionally STAGES intermediates as real
-    columns instead of one nested Column expression. Each intermediate is
-    referenced several times downstream, so CollapseProject keeps them as
-    single-evaluation projections — a fully inlined tree multiplies the
-    whole v6 parser ~10× through the canonical-flip branches, which blew
-    both Python-side Column construction and JVM analysis/codegen into
-    tens of seconds (measured)."""
-    p = f"__{out}"
-    c = F.col(col)
-    df = df.withColumn(p + "_s0", F.lower(F.trim(c)))
-    s0 = F.col(p + "_s0")
-    df = df.withColumn(
-        p + "_v4t",
-        F.regexp_extract(s0, r":((?:\d{1,3}\.){3}\d{1,3})$", 1),
-    )
-    v4t = F.col(p + "_v4t")
-    df = df.withColumn(p + "_v4h", _ipv4_hex(v4t))
-    v4h = F.col(p + "_v4h")
-    # v4-mapped/compatible tail → two 16-bit hex groups
-    df = df.withColumn(
-        p + "_s",
-        F.when(
-            v4t != "",
-            F.concat(
-                s0.substr(F.lit(1), F.length(s0) - F.length(v4t)),
-                F.lower(F.concat(F.substring(v4h, 1, 4), F.lit(":"),
-                                 F.substring(v4h, 5, 4))),
-            ),
-        ).otherwise(s0),
-    )
-    s = F.col(p + "_s")
-    has_dc = s.contains("::")
-    df = df.withColumn(p + "_halves", F.split(s, "::", -1))
-    halves = F.col(p + "_halves")
-    df = df.withColumn(
-        p + "_lp",
-        F.filter(
-            F.split(F.when(has_dc, halves.getItem(0)).otherwise(s), ":", -1),
-            lambda x: x != "",
-        ),
-    )
-    df = df.withColumn(
-        p + "_rp",
-        F.filter(
-            F.split(F.when(has_dc, F.element_at(halves, 2)).otherwise(F.lit("")),
-                    ":", -1),
-            lambda x: x != "",
-        ),
-    )
-    lp, rp = F.col(p + "_lp"), F.col(p + "_rp")
-    missing = F.lit(8) - F.size(lp) - F.size(rp)
-    df = df.withColumn(
-        p + "_groups",
-        F.when(has_dc,
-               F.concat(lp, F.array_repeat(F.lit("0"), missing), rp))
-        .otherwise(lp),
-    )
-    groups = F.col(p + "_groups")
-    shape_ok = (
-        s.rlike(r"^[0-9a-f:]+$") & ~s.rlike(":::") & (F.size(halves) <= 2)
-    )
-    groups_ok = (F.size(groups) == 8) & (
-        F.size(F.filter(groups, lambda g: ~g.rlike(r"^[0-9a-f]{1,4}$"))) == 0
-    ) & (~has_dc | (F.size(groups) > F.size(lp) + F.size(rp)))
-    v6 = F.when(
-        shape_ok & groups_ok,
-        F.upper(F.array_join(F.transform(groups, lambda g: F.lpad(g, 4, "0")),
-                             "")),
-    )
-    df = df.withColumn(
-        out, F.when(c.contains(":"), v6).otherwise(_ipv4_hex(c))
-    )
-    return df.drop(*[p + sfx for sfx in
-                     ("_s0", "_v4t", "_v4h", "_s", "_halves", "_lp", "_rp",
-                      "_groups")])
-
-
-def _hex16(col: Column) -> Column:
-    return F.lpad(F.hex(col.cast("int")), 4, "0")
-
-
-def _proto_number(col: Column) -> Column:
-    name = F.lower(F.trim(col.cast("string")))
-    expr = name.try_cast("int")  # numeric IANA value passes through
-    for k, v in _PROTO_NUMBERS.items():
-        expr = F.when(name == k, F.lit(v)).otherwise(expr)
-    return expr
-
-
-def _icmp_equiv(type_col: Column, table: dict[int, int]) -> Column:
-    """Equivalent (reply) type for a request type, null when one-way."""
-    m = F.create_map(*[F.lit(x) for kv in table.items() for x in kv])
-    return F.element_at(m, type_col.cast("int"))
-
-
 def _community_id_kernel(seed: int):
     """Arrow-batched kernel for the Community ID v1 hash.
 
     inet_pton / struct.pack / hashlib.sha1 are all C implementations, so a
-    plain row loop inside the Arrow batch beats the pure-Column sha1 chain
-    (measured 0.9 s vs 2.1 s warm at 1M flows on local[32]) — and, unlike
-    the Column program, an opaque kernel cannot be substituted into
-    predicates by the optimizer (see community_id docstring).
+    plain row loop inside the Arrow batch beats a Column sha1/unhex/base64
+    program (measured 0.9 s vs 2.1 s warm at 1M flows on local[32]), and an
+    opaque kernel cannot be substituted into predicates by the optimizer, so
+    filtering on the computed column is safe.
     """
     import base64
     import hashlib
@@ -260,7 +141,6 @@ def community_id(
     icmp_code: str | None = None,
     seed: int = 0,
     target: str = "community_id",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Community ID v1 flow hash as '1:<base64(sha1)>', null when the flow
     tuple is invalid (bad IP, missing proto, out-of-range port) — exactly
@@ -269,109 +149,26 @@ def community_id(
 
     Handles IPv4 (dotted-quad) and IPv6 (any textual form incl. '::'
     compression and v4-mapped tails) — the reference's byte layout is
-    address-width-agnostic (flowhash/communityid.go:43-84); parity with the
-    reference's golden pcap flows (testdata/golden/*.pcap.log) is pinned in
-    tests/test_network_xml.py for BOTH impls.
-
-    impl='arrow' (default): Arrow-batched kernel — faster (C-speed
-    inet_pton/sha1; 0.9 s vs 2.1 s warm at 1M flows) and safe to filter on.
-    impl='column': the pure Column/codegen program. CAUTION: a filter on
-    the computed column invites predicate pushdown to substitute the full
-    hash expression through every staged projection — exponential optimizer
-    blowup (measured minutes on 100-row frames). Aggregating or projecting
-    the column is fine.
+    address-width-agnostic (flowhash/communityid.go:43-84).
 
     If `target` already exists, existing non-null values win (the reference
     bails out when the target field is already set, communityid.go:92-95).
     """
-    if impl == "arrow":
-        it_col = F.col(icmp_type).cast("int") if icmp_type else F.lit(None)
-        ic_col = F.col(icmp_code).cast("int") if icmp_code else F.lit(None)
-        udf = F.pandas_udf(_community_id_kernel(seed), "string")
-        computed = udf(
-            F.col(source_ip).cast("string"),
-            F.col(destination_ip).cast("string"),
-            F.col(transport).cast("string"),
-            F.col(source_port).cast("int"),
-            F.col(destination_port).cast("int"),
-            it_col,
-            ic_col,
-        )
-        if target in df.columns:
-            computed = F.coalesce(F.col(target), computed)
-        return df.withColumn(target, computed)
-
-    # every multiply-referenced intermediate is staged as a real column —
-    # see _with_addr_hex's note on why inlining these blows up plan build
-    out_df = _with_addr_hex(df, source_ip, "_cid_sip")
-    out_df = _with_addr_hex(out_df, destination_ip, "_cid_dip")
-    out_df = out_df.withColumn("_cid_proto", _proto_number(F.col(transport)))
-    sip, dip = F.col("_cid_sip"), F.col("_cid_dip")
-    proto = F.col("_cid_proto")
-
-    # missing ICMP type/code hash as zeros (communityid.go buildFlow:
-    # "Return a flow even if the ICMP type/code is unavailable"); type 0
-    # (echo reply) has equivalent 8, so the typeless flow is bidirectional
-    it = (F.coalesce(F.col(icmp_type).cast("int"), F.lit(0))
-          if icmp_type is not None else F.lit(0))
-    ic = (F.coalesce(F.col(icmp_code).cast("int"), F.lit(0))
-          if icmp_code is not None else F.lit(0))
-    out_df = out_df.withColumn(
-        "_cid_equiv",
-        F.when(proto == _ICMP4, _icmp_equiv(it, _ICMP4_EQUIV)).when(
-            proto == _ICMP6, _icmp_equiv(it, _ICMP6_EQUIV)
-        ),
+    it_col = F.col(icmp_type).cast("int") if icmp_type else F.lit(None)
+    ic_col = F.col(icmp_code).cast("int") if icmp_code else F.lit(None)
+    udf = F.pandas_udf(_community_id_kernel(seed), "string")
+    computed = udf(
+        F.col(source_ip).cast("string"),
+        F.col(destination_ip).cast("string"),
+        F.col(transport).cast("string"),
+        F.col(source_port).cast("int"),
+        F.col(destination_port).cast("int"),
+        it_col,
+        ic_col,
     )
-    equiv = F.col("_cid_equiv")
-    icmp_one_way = equiv.isNull()
-
-    is_icmp = proto.isin(_ICMP4, _ICMP6)
-    sp_raw = F.col(source_port).cast("int")
-    dp_raw = F.col(destination_port).cast("int")
-    out_df = out_df.withColumn(
-        "_cid_sp", F.when(is_icmp, it).otherwise(F.coalesce(sp_raw, F.lit(0)))
-    )
-    out_df = out_df.withColumn(
-        "_cid_dp",
-        F.when(is_icmp, F.coalesce(equiv, ic)).otherwise(
-            F.coalesce(dp_raw, F.lit(0))
-        ),
-    )
-    sp, dp = F.col("_cid_sp"), F.col("_cid_dp")
-
-    has_ports = proto.isin(*_PORTED_PROTOS) | is_icmp
-    port_ok = (
-        ~proto.isin(*_PORTED_PROTOS)
-        | (sp_raw.between(0, 65535) & dp_raw.between(0, 65535))
-    )
-    valid = sip.isNotNull() & dip.isNotNull() & proto.isNotNull() & port_ok
-
-    # canonical endpoint order: (saddr, sport) <= (daddr, dport); one-way
-    # ICMP flows are never flipped (flowhash/communityid.go:52-56)
-    is_sorted = (sip < dip) | ((sip == dip) & (sp <= dp))
-    may_flip = F.when(is_icmp, ~icmp_one_way).otherwise(F.lit(True))
-    out_df = out_df.withColumn("_cid_flip", may_flip & ~is_sorted)
-    flip = F.col("_cid_flip")
-    a_ip = F.when(flip, dip).otherwise(sip)
-    b_ip = F.when(flip, sip).otherwise(dip)
-    a_p = F.when(flip, dp).otherwise(sp)
-    b_p = F.when(flip, sp).otherwise(dp)
-
-    data_hex = F.concat(
-        F.lit("%04X" % (seed & 0xFFFF)),
-        a_ip, b_ip,
-        F.lpad(F.hex(proto), 2, "0"),
-        F.lit("00"),
-        F.when(has_ports, F.concat(_hex16(a_p), _hex16(b_p))).otherwise(F.lit("")),
-    )
-    cid = F.concat(F.lit("1:"), F.base64(F.unhex(F.sha1(F.unhex(data_hex)))))
-    computed = F.when(valid, cid)
     if target in df.columns:
         computed = F.coalesce(F.col(target), computed)
-    return out_df.withColumn(target, computed).drop(
-        "_cid_sip", "_cid_dip", "_cid_proto", "_cid_equiv", "_cid_sp",
-        "_cid_dp", "_cid_flip"
-    )
+    return df.withColumn(target, computed)
 
 
 # -- registered_domain -------------------------------------------------------

@@ -157,37 +157,14 @@ def grok(
     pattern_definitions: dict[str, str] | None = None,
     flag_failures: bool = True,
 ) -> DataFrame:
-    """Apply an ordered grok pattern bank (first match wins) to `field`."""
-    bank = GrokBank(
-        [patterns] if isinstance(patterns, str) else list(patterns),
-        pattern_definitions,
-    )
-    fields = [
-        T.StructField(_safe(k), _SPARK_TYPES[bank.key_types[k]], True)
-        for k in bank.output_keys
-    ] + [T.StructField("_matched", T.BooleanType(), False)]
-    schema = T.StructType(fields)
-    rename = {k: _safe(k) for k in bank.output_keys}
-    rename["_grok_matched"] = "_matched"
-
-    @F.pandas_udf(schema)
-    def run(s):
-        return bank.grok_frame(s).rename(columns=rename)
-
-    out = df.withColumn(target_prefix, run(F.col(field)))
-    out = out.withColumn(
-        "_grok_failed",
-        ~F.coalesce(F.col(f"{target_prefix}._matched"), F.lit(False)),
-    )
-    out = out.withColumn(
-        target_prefix,
-        F.when(~F.col("_grok_failed"), F.col(target_prefix).dropFields("_matched")),
-    )
-    if flag_failures:
-        out = add_flag(out, F.col("_grok_failed"), GROK_FAIL_FLAG)
-        out = set_error(out, F.col("_grok_failed"),
-                        f"grok: no pattern in bank matched {field}")
-    return out.drop("_grok_failed")
+    """Apply an ordered grok pattern bank (first match wins) to `field`: a
+    one-stage chain (see ``grok_chain``), struct column `target_prefix`."""
+    return _grok_stages(df, [{
+        "patterns": patterns,
+        "pattern_definitions": pattern_definitions,
+        "target": target_prefix,
+        "flag_failures": flag_failures,
+    }], field)
 
 
 def grok_chain(
@@ -207,7 +184,8 @@ def grok_chain(
     Project, so downstream column logic is unchanged).
 
     Each stage dict:
-      - ``patterns`` / ``pattern_definitions``: as ``grok()``.
+      - ``patterns`` / ``pattern_definitions``: as ``grok()``; the bank
+        must capture at least one field.
       - ``target``: name of the struct column this stage produces; NULL on
         rows the bank did not match (same contract as ``grok()``).
       - ``input``: ``None`` (default) = the chain's ``field``; or a
@@ -219,6 +197,11 @@ def grok_chain(
       - ``flag_failures``: default True for the first stage, False after
         (later banks are enrichment attempts, not parse failures).
     """
+    return _grok_stages(df, stages, field)
+
+
+def _grok_stages(df: DataFrame, stages: list[dict], field: str) -> DataFrame:
+    """The one grok implementation behind ``grok`` and ``grok_chain``."""
     banks = [
         GrokBank(
             [st["patterns"]] if isinstance(st["patterns"], str)
@@ -231,10 +214,7 @@ def grok_chain(
         if not b.output_keys:
             # a capture-less stage would rebuild as an empty struct (an
             # analysis error); it also can't feed a later stage's input
-            raise ValueError(
-                f"grok_chain stage {st['target']!r} captures nothing — "
-                "use grok() for match-flag-only banks"
-            )
+            raise ValueError(f"grok stage {st['target']!r} captures nothing")
     idx_of = {st["target"]: i for i, st in enumerate(stages)}
     # capture refs accept the original grok name (`_temp.message`) or its
     # struct-safe spelling (`_temp_message`)

@@ -1944,7 +1944,7 @@ def q_module_kafka(spark, sf_dir):
 
 
 @register("community_id")  # rows-only: DuckDB has no sha1; the exact hash is
-# pinned to the reference's published vectors in tests/test_network_xml.py
+# pinned to tests/golden/community_id_vectors.json (spec vectors included)
 def q_community_id(spark, sf_dir):
     """Community ID v1 over flow tuples synthesized from events
     (reference communityid.go:89-105)."""

@@ -43,6 +43,22 @@ def _norm(a):
     )
 
 
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """Cosine-score (query_id, _qvec) × (neighbor_id, _vvec) candidate pairs
+    and keep each query's k best, ties broken by the lower neighbor_id."""
+    scored = pairs.withColumn(
+        "score",
+        _dot(F.col("_qvec"), F.col("_vvec"))
+        / (_norm(F.col("_qvec")) * _norm(F.col("_vvec"))),
+    )
+    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "score", "rank")
+    )
+
+
 def cosine_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -66,22 +82,10 @@ def cosine_topk(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("_vvec"),
     )
-    scored = (
+    return _top_k(
         v.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "score",
-            _dot(F.col("_qvec"), F.col("_vvec"))
-            / (_norm(F.col("_qvec")) * _norm(F.col("_vvec"))),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+        .filter(F.col("neighbor_id") != F.col("query_id")),
+        k,
     )
 
 
@@ -253,20 +257,10 @@ def lsh_topk(
         .dropDuplicates(["query_id", "neighbor_id"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
     )
-    scored = (
+    return _top_k(
         cands.join(v, "neighbor_id")
-        .join(q, "query_id")
-        .withColumn(
-            "score",
-            _dot(F.col("_qvec"), F.col("_vvec"))
-            / (_norm(F.col("_qvec")) * _norm(F.col("_vvec"))),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+        .join(q, "query_id"),
+        k,
     )
 
 
@@ -362,20 +356,10 @@ def lsh_topk_data_planes(
         .dropDuplicates(["query_id", "neighbor_id"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
     )
-    scored = (
+    return _top_k(
         cands.join(v, "neighbor_id")
-        .join(q, "query_id")
-        .withColumn(
-            "score",
-            _dot(F.col("_qvec"), F.col("_vvec"))
-            / (_norm(F.col("_qvec")) * _norm(F.col("_vvec"))),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+        .join(q, "query_id"),
+        k,
     )
 
 
@@ -561,18 +545,8 @@ def ivf_topk(
         F.col("_rn") <= n_probe
     ).select("query_id", "_qvec", "cell_id")
 
-    scored = (
+    return _top_k(
         va.join(qa, "cell_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "score",
-            _dot(F.col("_qvec"), F.col("_vvec"))
-            / (_norm(F.col("_qvec")) * _norm(F.col("_vvec"))),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+        .filter(F.col("neighbor_id") != F.col("query_id")),
+        k,
     )

@@ -75,11 +75,17 @@ def test_assign_components_singletons(spark):
 
 
 def test_minhash_seeds_are_independent(spark):
-    # regression: a two-param lambda in F.transform binds the second param
-    # to the array INDEX, collapsing every seed to the same hash function —
-    # signature entries must differ and band-matches must track jaccard
-    df = spark.createDataFrame([(1, ["ab", "cd", "ef", "gh"])], "id long, sh array<string>")
-    sig = df.select(D.minhash_signature(F.col("sh"), 16).alias("sig")).collect()[0]["sig"]
+    # regression: a hash family that collapses to one member guts LSH
+    # recall — the K (a, b) parameters must differ, and so must the K
+    # minima the signature aggregate (the one _band_candidates bands) gives
+    assert len({D._affine_params(i) for i in range(64)}) == 64
+    hashed = spark.createDataFrame(
+        [(1, ["ab", "cd", "ef", "gh"])], "_id long, sh array<string>"
+    ).select("_id", F.explode(F.transform(
+        "sh", lambda s: F.pmod(F.xxhash64(s), F.lit(D._MERSENNE_31))
+    )).alias("_h"))
+    row = D._minhash_signature(hashed, 16).first()
+    sig = [row[f"_m{i}"] for i in range(16)]
     assert len(set(sig)) > 8, f"degenerate signature: {sig}"
 
 

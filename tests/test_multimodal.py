@@ -67,7 +67,7 @@ def test_parse_media_header_corrupt_and_truncated():
 
 def test_decode_media_fake_deterministic(media):
     a = M.decode_media(media, mode="fake").collect()
-    b = M.decode_media(media, fake=True).collect()  # legacy flag alias
+    b = M.decode_media(media, mode="fake").collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     for r in a:
         assert r.ok and 16 <= r.width < 256 and r.channels in (1, 3)
@@ -75,7 +75,7 @@ def test_decode_media_fake_deterministic(media):
 
 def test_decode_media_real_raises(media):
     with pytest.raises(Exception) as ei:
-        M.decode_media(media, fake=False).collect()
+        M.decode_media(media, mode="pillow").collect()
     assert "NotImplementedError" in str(ei.value) or isinstance(
         ei.value, NotImplementedError
     )
@@ -114,7 +114,7 @@ def test_real_decode_with_pillow(spark):
         "media_id long, kind string, content binary, "
         "meta struct<source:string,content_type:string>",
     )
-    row = decode_media(df, fake=False).first()
+    row = decode_media(df, mode="pillow").first()
     assert (row.width, row.height, row.channels, row.ok) == (20, 10, 3, True)
 
 
@@ -133,7 +133,7 @@ def test_real_decode_without_pillow_raises(spark):
         "meta struct<source:string,content_type:string>",
     )
     with pytest.raises(Exception, match="(?i)pillow|notimplemented"):
-        decode_media(df, fake=False).collect()
+        decode_media(df, mode="pillow").collect()
 
 
 def test_auto_decode_works_without_pillow(spark):

@@ -310,15 +310,13 @@ GOLDEN_FLOW_DIR = "/root/reference/libbeat/common/flowhash/testdata/golden"
 
 @pytest.mark.skipif(not os.path.exists(GOLDEN_FLOW_DIR),
                     reason=f"reference tree unavailable: {GOLDEN_FLOW_DIR}")
-@pytest.mark.parametrize("impl", ["arrow", "column"])
 @pytest.mark.parametrize("log", [
     "tcp.pcap.log", "udp.pcap.log", "sctp.pcap.log", "icmp.pcap.log",
     "icmp6.pcap.log", "ipv6.pcap.log",
 ])
-def test_community_id_golden_pcap_flows(spark, log, impl):
+def test_community_id_golden_pcap_flows(spark, log):
     """Every flow in the reference's own golden pcap logs (v4 AND v6,
-    tcp/udp/sctp/icmp/icmpv6) hashes to the reference's community id —
-    under both the Arrow kernel and the pure-Column program."""
+    tcp/udp/sctp/icmp/icmpv6) hashes to the reference's community id."""
     rows = []
     with open(f"{GOLDEN_FLOW_DIR}/{log}") as f:
         for ln in f:
@@ -341,35 +339,34 @@ def test_community_id_golden_pcap_flows(spark, log, impl):
         "source_port int, destination_port int, it int, ic int, "
         "expected string",
     )
-    out = community_id(df, icmp_type="it", icmp_code="ic", impl=impl)
-    # compare driver-side: filtering ON the derived column would invite
-    # predicate pushdown to substitute the full hash expression through
-    # every staged projection (exponential optimizer blowup — measured
-    # minutes vs seconds on these <100-row frames)
+    out = community_id(df, icmp_type="it", icmp_code="ic")
     got = out.select("community_id", "expected").collect()
     bad = [r for r in got if r["community_id"] != r["expected"]]
     assert not bad, bad[:5]
 
 
-def test_ipv6_hex_forms(spark):
-    from beats_spark.operators.network import _with_addr_hex
-
-    cases = [
-        ("::1", "0" * 31 + "1"),
-        ("::", "0" * 32),
-        ("2001:db8::1", "20010DB8" + "0" * 23 + "1"),
-        ("fe80::200:86ff:fe05:80da",
-         "FE80" + "0" * 12 + "020086FFFE0580DA"),
-        ("::ffff:192.0.2.128", "0" * 20 + "FFFF" + "C0000280"),
-        ("1:2:3:4:5:6:7:8", "00010002000300040005000600070008"),
-        ("2001:db8:::1", None),   # malformed double gap
-        ("12345::1", None),       # oversized group
-        ("1:2:3", None),          # too few groups
-        ("1:2:3:4:5:6:7:8:9", None),
-        ("1::2:3:4:5:6:7:8", None),  # '::' with no missing groups
-        ("not-an-ip", None),
-    ]
-    df = spark.createDataFrame(cases, "addr string, want string")
-    got = _with_addr_hex(df, "addr", "got").collect()
-    for r in got:
-        assert r["got"] == r["want"], (r["addr"], r["got"], r["want"])
+def test_community_id_vectors(spark):
+    """The in-repo vector file: the published spec vectors plus IPv4, IPv6
+    (every textual form, malformed ones NULL), mixed-width pairs, named and
+    numeric protocols, bidirectional and one-way ICMP/ICMPv6 with missing
+    type or code, both endpoint orders, seeds 0 and 123, bad ports and IPs."""
+    with open(os.path.join(os.path.dirname(__file__), "golden",
+                           "community_id_vectors.json")) as f:
+        vectors = json.load(f)["vectors"]
+    assert len(vectors) >= 40
+    cols = ["source_ip", "destination_ip", "transport", "source_port",
+            "destination_port", "icmp_type", "icmp_code"]
+    bad = []
+    for seed in sorted({v["seed"] for v in vectors}):
+        rows = [v for v in vectors if v["seed"] == seed]
+        df = spark.createDataFrame(
+            [tuple(v[c] for c in cols) for v in rows],
+            "source_ip string, destination_ip string, transport string, "
+            "source_port int, destination_port int, icmp_type int, "
+            "icmp_code int",
+        )
+        got = community_id(df, icmp_type="icmp_type", icmp_code="icmp_code",
+                           seed=seed).select("community_id").collect()
+        bad += [(v, r[0]) for v, r in zip(rows, got)
+                if r[0] != v["community_id"]]
+    assert not bad, bad[:5]
