@@ -30,7 +30,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from beats_spark.routing import SINK_COL
+from beats_spark.routing import SINK_COL, fan_out
 
 MANIFEST = "_beats_manifest.json"
 
@@ -72,8 +72,8 @@ def checkpointed_fan_out(
     `fail_after` (tests only): simulate a crash after N sink commits.
 
     Scale shape (single-pass): sinks not yet committed are written in ONE
-    partitionBy job into a staging directory — the same writer split
-    routing.fan_out uses, so the upstream parse→enrich→route DAG executes
+    partitionBy job into a staging directory by routing.fan_out — the
+    batch writer, `_meta_*` drop included — so the upstream parse→enrich→route DAG executes
     exactly once and nothing is persisted/cached — then each staged sink
     directory is COMMITTED individually: an atomic directory rename into
     `base` (metadata-only; FileSystem.rename on HDFS/S3A) followed by a
@@ -110,12 +110,7 @@ def checkpointed_fan_out(
     staging = os.path.join(base, f"_staging_{job_id}")
     shutil.rmtree(staging, ignore_errors=True)  # stale staging from a crash
     # THE single write job: partitionBy splits one writer per sink value
-    (
-        pending.write.partitionBy(target)
-        .format(file_format)
-        .mode("overwrite")
-        .save(staging)
-    )
+    fan_out(pending, staging, target=target, file_format=file_format)
 
     from urllib.parse import unquote
 

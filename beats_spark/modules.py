@@ -14,7 +14,17 @@ top-level convenience columns.
 
 Parity is pinned by tests/test_modules.py against the reference's own golden
 files (filebeat/module/*/test/*.log-expected.json) for every field this
-restatement emits.
+restatement emits, and, without the reference tree, by
+tests/test_module_corpus.py: the frozen output of all 36 filesets over an
+in-repo corpus (tests/golden/module_corpus.json).
+
+Steps several pipelines share have one definition each, below under
+"shared post-steps": `_plain_or_json` (the first-character branch between
+the plaintext grok and the JSON decode), `_ip_or_domain` (the source/
+destination address split), `_is_private` and `_http_outcome`. Every
+date parse by layout goes through `operators.parse.parse_timestamp`, the
+function the `timestamp` processor compiles to; pensando.dfw's format-less
+ISO cast is the one `try_to_timestamp` left here.
 
 Scale shape: the grok bank is one vectorized pandas UDF (the module regexes
 are unanchored, so the bank runs the sequential first-match-wins path);
@@ -30,6 +40,67 @@ from pyspark.sql import functions as F
 
 from beats_spark.grok import BUILTIN_PATTERNS
 from beats_spark.operators import parse as P
+
+# -- shared post-steps --------------------------------------------------------
+
+# Go layouts several filesets parse with (see P.parse_timestamp)
+_PG_TS_LAYOUTS = ["2006-01-02 15:04:05.999 MST", "2006-01-02 15:04:05 MST"]
+_COMMA_MS = "2006-01-02T15:04:05,999"           # log4j: 2018-05-17T08:19:35,939
+_MS_OFFSET = "2006-01-02T15:04:05.999Z07:00"     # ...T13:49:45.606+00:00 / Z
+_MS_OFFSET_NOCOLON = "2006-01-02T15:04:05.999Z0700"  # ...T13:49:45.606+0000
+
+_IP_RE = f"^(?:{BUILTIN_PATTERNS['IPV6']}|{BUILTIN_PATTERNS['IPV4']})$"
+
+
+def _ip_or_domain(addr: Column) -> tuple[Column, Column]:
+    """The pipelines' `convert type: ip` with an on_failure rename: an
+    address is (ip, NULL) when it is an IP literal, else (NULL, domain)."""
+    is_ip = addr.rlike(_IP_RE)
+    return F.when(is_ip, addr), F.when(~is_ip, addr)
+
+
+def _is_private(x: Column) -> Column:
+    """RFC-1918 or loopback IPv4 (the nginx pipelines' painless check)."""
+    o = F.split(x, r"\.")
+    f1 = F.get(o, 0).try_cast("int")
+    f2 = F.get(o, 1).try_cast("int")
+    return F.coalesce(
+        (f1 == 10) | (f1 == 127) | ((f1 == 192) & (f2 == 168))
+        | ((f1 == 172) & f2.between(16, 31)),
+        F.lit(False),
+    )
+
+
+def _http_outcome(status: Column) -> Column:
+    """event.outcome by HTTP status class; NULL without a status."""
+    return (F.when(status.isNotNull() & (status < 400), "success")
+            .when(status.isNotNull(), "failure"))
+
+
+def _plain_or_json(df: DataFrame, field: str, patterns: list[str],
+                   definitions: dict[str, str] | None = None,
+                   schema: str | None = None):
+    """The first-character branch of the dual-format pipelines: a line
+    starting with '{' takes the JSON pipeline, any other line the plaintext
+    grok. Adds `parsed` (the grok struct, NULL on JSON lines) and, given a
+    from_json `schema`, `js` (the decoded line, NULL on plaintext lines;
+    the caller drops it). Returns the frame, the is-JSON predicate and
+    `pick(json_value, plain_value=None)`, the value of the line's branch."""
+    is_json = F.col(field).startswith("{")
+    out = P.grok(df, patterns, field=field, target_prefix="parsed",
+                 flag_failures=False, pattern_definitions=definitions)
+    # the unanchored grok would otherwise match inside the JSON text
+    out = out.withColumn("parsed", F.when(~is_json, F.col("parsed")))
+    if schema:
+        out = out.withColumn(
+            "js", F.when(is_json, F.from_json(F.col(field), schema)))
+
+    def pick(json_value: Column, plain_value: Column | None = None) -> Column:
+        on_json = F.when(is_json, json_value)
+        return on_json if plain_value is None else on_json.otherwise(plain_value)
+
+    return out, is_json, pick
+
 
 # -- apache.access (pipeline.yml:10-28) --------------------------------------
 
@@ -54,8 +125,6 @@ APACHE_ACCESS_PATTERNS = [
     r'"%{WORD:http.request.method} %{DATA:url.original} '
     r'HTTP/%{NUMBER:http.version}" (?:-|%{NUMBER:http.response.body.bytes:long})',
 ]
-
-_IP_RE = f"^(?:{BUILTIN_PATTERNS['IPV6']}|{BUILTIN_PATTERNS['IPV4']})$"
 
 
 def apache_access(df: DataFrame, field: str = "message",
@@ -85,14 +154,13 @@ def apache_access(df: DataFrame, field: str = "message",
     )
     # source.address → source.ip | source.domain (the second grok stage)
     addr = F.coalesce(p["source_address"], p["source_ip"])
+    ip, domain = _ip_or_domain(addr)
     out = out.withColumn("source_address", addr)
-    out = out.withColumn("source_ip", F.when(addr.rlike(_IP_RE), addr))
-    out = out.withColumn("source_domain", F.when(~addr.rlike(_IP_RE), addr))
+    out = out.withColumn("source_ip", ip)
+    out = out.withColumn("source_domain", domain)
     # date: HTTPDATE carries its own zone (dd/MMM/yyyy:HH:mm:ss Z)
-    out = out.withColumn("_t", p["apache_access_time"])
-    out = P.timestamp(out, "_t", ["02/Jan/2006:15:04:05 -0700"],
-                      target="timestamp", timezone=timezone)
-    return out.drop("_t")
+    return out.withColumn("timestamp", P.parse_timestamp(
+        p["apache_access_time"], ["02/Jan/2006:15:04:05 -0700"], timezone))
 
 
 # -- apache.error (pipeline.yml:9-27) ----------------------------------------
@@ -131,19 +199,12 @@ def apache_error(df: DataFrame, field: str = "message",
     out = out.withColumn(
         "file_path", F.when(F.col("file_path") != "", F.col("file_path"))
     )
-    addr = p["source_address"]
-    out = out.withColumn("source_ip", F.when(addr.rlike(_IP_RE), addr))
+    out = out.withColumn("source_ip", _ip_or_domain(p["source_address"])[0])
     # Spark's parser rejects day-of-week fields (EEE), so strip the leading
     # day name the reference's `EEE MMM dd H:m:s yyyy` format consumes
-    out = out.withColumn(
-        "_t", F.regexp_replace(p["apache_error_timestamp"], r"^[A-Za-z]+ ", "")
-    )
-    out = P.timestamp(
-        out, "_t",
-        ["Jan _2 15:04:05 2006", "Jan _2 15:04:05.999999 2006"],
-        target="timestamp", timezone=timezone,
-    )
-    return out.drop("_t")
+    return out.withColumn("timestamp", P.parse_timestamp(
+        F.regexp_replace(p["apache_error_timestamp"], r"^[A-Za-z]+ ", ""),
+        ["Jan _2 15:04:05 2006", "Jan _2 15:04:05.999999 2006"], timezone))
 
 
 # -- system.syslog (files.yml:6-23) ------------------------------------------
@@ -231,35 +292,14 @@ def nginx_access(df: DataFrame, field: str = "message",
         "remote_ip_list",
         F.when(p["nginx_access_remote_ip_list"].isNotNull(), ip_list),
     )
-
-    def _is_private(x):
-        o = F.split(x, r"\.")
-        f1 = F.get(o, 0).try_cast("int")
-        f2 = F.get(o, 1).try_cast("int")
-        return F.coalesce(
-            (f1 == 10) | (f1 == 127) | ((f1 == 192) & (f2 == 168))
-            | ((f1 == 172) & f2.between(16, 31)),
-            F.lit(False),
-        )
-
     public_ips = F.filter(ip_list, lambda x: ~_is_private(x))
     addr = F.coalesce(
         F.get(public_ips, 0), F.get(ip_list, 0), p["source_address"]
     )
     out = out.withColumn("source_address", addr)
-    out = out.withColumn("source_ip", F.when(addr.rlike(_IP_RE), addr))
-    out = out.withColumn("_t", p["nginx_access_time"])
-    out = P.timestamp(out, "_t", ["02/Jan/2006:15:04:05 -0700"],
-                      target="timestamp", timezone=timezone)
-    return out.drop("_t")
-
-
-MODULES = {
-    "apache.access": apache_access,
-    "apache.error": apache_error,
-    "system.syslog": system_syslog,
-    "nginx.access": nginx_access,
-}
+    out = out.withColumn("source_ip", _ip_or_domain(addr)[0])
+    return out.withColumn("timestamp", P.parse_timestamp(
+        p["nginx_access_time"], ["02/Jan/2006:15:04:05 -0700"], timezone))
 
 
 # -- osquery.result (ingest/pipeline.json) -----------------------------------
@@ -290,9 +330,6 @@ def osquery_result(df: DataFrame, field: str = "message") -> DataFrame:
         .withColumn("host_id", F.element_at(r["decorations"], "host_uuid"))
     )
     return out
-
-
-MODULES["osquery.result"] = osquery_result
 
 
 # -- redis.log (redis/log/ingest/pipeline.yml) -------------------------------
@@ -349,9 +386,6 @@ def redis_log(df: DataFrame, field: str = "message") -> DataFrame:
     out = out.withColumn("event_category", F.array(F.lit("database")))
     out = out.withColumn("event_type", F.array(F.lit("info")))
     return out
-
-
-MODULES["redis.log"] = redis_log
 
 
 # -- mysql.error (mysql/error/ingest/pipeline.yml) ---------------------------
@@ -411,18 +445,11 @@ def mysql_error(df: DataFrame, field: str = "message",
         F.regexp_replace(p["_tmp_local_timestamp"], r"\s+", " "),
         r" (\d):", " 0$1:",
     )
-    local_ts = F.coalesce(
-        F.try_to_timestamp(local_norm, F.lit("yyMMdd HH:mm:ss")),
-        F.try_to_timestamp(local_norm, F.lit("yyyy-MM-dd HH:mm:ss")),
-    )
-    if timezone:
-        local_ts = F.to_utc_timestamp(local_ts, timezone)
-    iso_ts = F.coalesce(
-        F.try_to_timestamp(p["_tmp_timestamp"],
-                           F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")),
-        F.try_to_timestamp(p["_tmp_timestamp"],
-                           F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
-    )
+    local_ts = P.parse_timestamp(
+        local_norm, ["060102 15:04:05", "2006-01-02 15:04:05"], timezone)
+    iso_ts = P.parse_timestamp(
+        p["_tmp_timestamp"],
+        ["2006-01-02T15:04:05.999999Z07:00", "2006-01-02T15:04:05Z07:00"])
     out = out.withColumn("timestamp", F.coalesce(local_ts, iso_ts))
     out = out.withColumn("mysql_thread_id", p["mysql_thread_id"])
     out = out.withColumn("log_level", p["log_level"])
@@ -456,9 +483,6 @@ def mysql_error(df: DataFrame, field: str = "message",
                                F.array(p2["user_name"]))
     )
     return out
-
-
-MODULES["mysql.error"] = mysql_error
 
 
 # -- postgresql.log (postgresql/log/ingest/pipeline.yml + pipeline-log.yml) --
@@ -512,13 +536,7 @@ def postgresql_log(df: DataFrame, field: str = "message") -> DataFrame:
     ts = e["postgresql_log_timestamp"]
     out = out.withColumn("postgresql_log_timestamp", ts)
     out = out.withColumn("event_timezone", e["event_timezone"])
-    out = out.withColumn(
-        "timestamp",
-        F.coalesce(
-            F.try_to_timestamp(ts, F.lit("yyyy-MM-dd HH:mm:ss.SSS zzz")),
-            F.try_to_timestamp(ts, F.lit("yyyy-MM-dd HH:mm:ss zzz")),
-        ),
-    )
+    out = out.withColumn("timestamp", P.parse_timestamp(ts, _PG_TS_LAYOUTS))
     out = out.withColumn("process_pid", p["process_pid"])
     out = out.withColumn("log_level", p["log_level"])
     out = out.withColumn("user_name", p["user_name"])
@@ -541,9 +559,6 @@ def postgresql_log(df: DataFrame, field: str = "message") -> DataFrame:
         F.when(p["user_name"].isNotNull(), F.array(p["user_name"])),
     )
     return out
-
-
-MODULES["postgresql.log"] = postgresql_log
 
 
 # -- kafka.log (kafka/log/ingest/pipeline.yml) -------------------------------
@@ -601,9 +616,6 @@ def kafka_log(df: DataFrame, field: str = "message",
                .isin("ERROR", "FATAL"), "error").otherwise("info"),
     )
     return out
-
-
-MODULES["kafka.log"] = kafka_log
 
 
 # -- auditd.log (auditd/log/ingest/pipeline.yml:7-33 + cleanup script) -------
@@ -692,13 +704,10 @@ def auditd_log(df: DataFrame, field: str = "message") -> DataFrame:
     out = out.withColumn("auditd_log_node", p["auditd_log_node"])
     out = out.withColumn("event_original", F.col(field))
     out = out.withColumn(
-        "timestamp", F.timestamp_seconds(p["auditd_log_epoch"].try_cast("double"))
+        "timestamp", P.parse_timestamp(p["auditd_log_epoch"], ["UNIX"])
     )
     out = out.withColumn("event_kind", F.lit("event"))
     return out
-
-
-MODULES["auditd.log"] = auditd_log
 
 
 # -- icinga.main (icinga/main/ingest/pipeline.yml) ---------------------------
@@ -731,9 +740,6 @@ def icinga_main(df: DataFrame, field: str = "message") -> DataFrame:
         .otherwise("info"),
     )
     return out
-
-
-MODULES["icinga.main"] = icinga_main
 
 
 # -- traefik.access (traefik/access/ingest/pipeline.yml) ---------------------
@@ -783,10 +789,10 @@ def traefik_access(df: DataFrame, field: str = "message") -> DataFrame:
     out = out.withColumn("user_name", d["user_name"])
     out = out.withColumn("traefik_access_user_identifier",
                          d["traefik_access_user_identifier"])
-    addr = d["source_address"]
-    out = out.withColumn("source_address", addr)
-    out = out.withColumn("source_ip", F.when(addr.rlike(_IP_RE), addr))
-    out = out.withColumn("source_domain", F.when(~addr.rlike(_IP_RE), addr))
+    ip, domain = _ip_or_domain(d["source_address"])
+    out = out.withColumn("source_address", d["source_address"])
+    out = out.withColumn("source_ip", ip)
+    out = out.withColumn("source_domain", domain)
     out = P.timestamp(out, "dis.traefik_access_time",
                       ["02/Jan/2006:15:04:05 -0700"], target="timestamp")
     out = out.withColumn(
@@ -797,11 +803,7 @@ def traefik_access(df: DataFrame, field: str = "message") -> DataFrame:
     has_method = d["http_request_method"].isNotNull() & (d["http_request_method"] != "-")
     out = out.withColumn("event_category", F.when(has_method, F.array(F.lit("web"))))
     out = out.withColumn("event_type", F.when(has_method, F.array(F.lit("access"))))
-    out = out.withColumn(
-        "event_outcome",
-        F.when(status.isNotNull() & (status < 400), "success")
-        .when(status.isNotNull(), "failure"),
-    )
+    out = out.withColumn("event_outcome", _http_outcome(status))
     out = out.withColumn(
         "related_ip", F.when(F.col("source_ip").isNotNull(),
                              F.array(F.col("source_ip")))
@@ -812,9 +814,6 @@ def traefik_access(df: DataFrame, field: str = "message") -> DataFrame:
                F.array(d["user_name"])),
     )
     return out.drop("_tmsg")
-
-
-MODULES["traefik.access"] = traefik_access
 
 
 # -- iis.access (iis/access/ingest/pipeline.yml) -----------------------------
@@ -910,11 +909,7 @@ def iis_access(df: DataFrame, field: str = "message") -> DataFrame:
         .otherwise(F.array(F.lit("web"))),
     )
     out = out.withColumn("event_type", F.when(both, F.array(F.lit("connection"))))
-    out = out.withColumn(
-        "event_outcome",
-        F.when(status.isNotNull() & (status < 400), "success")
-        .when(status.isNotNull(), "failure"),
-    )
+    out = out.withColumn("event_outcome", _http_outcome(status))
     out = out.withColumn(
         "related_ip",
         F.filter(F.array(F.col("source_ip"), F.col("destination_ip")),
@@ -925,9 +920,6 @@ def iis_access(df: DataFrame, field: str = "message") -> DataFrame:
         F.when(F.size("related_ip") > 0, F.col("related_ip")),
     )
     return out
-
-
-MODULES["iis.access"] = iis_access
 
 
 # -- haproxy.log (haproxy/log/ingest/pipeline.yml) ---------------------------
@@ -979,16 +971,12 @@ def haproxy_log(df: DataFrame, field: str = "message",
     out = out.withColumn("url_original", F.when(u != "", u))
     v = F.regexp_extract(raw, r"^(\S+)\s+(\S+)\s+HTTP/(\S+)$", 3)
     out = out.withColumn("http_version", F.when(v != "", v))
-    addr = p["source_address"]
-    out = out.withColumn("source_ip", F.when(addr.rlike(_IP_RE), addr))
-    dst = p["destination_address"]
+    out = out.withColumn("source_ip", _ip_or_domain(p["source_address"])[0])
+    dst_ip, dst_domain = _ip_or_domain(p["destination_address"])
     out = out.withColumn(
-        "destination_ip",
-        F.coalesce(p["destination_ip"], F.when(dst.rlike(_IP_RE), dst)),
+        "destination_ip", F.coalesce(p["destination_ip"], dst_ip)
     )
-    out = out.withColumn(
-        "destination_domain", F.when(dst.isNotNull() & ~dst.rlike(_IP_RE), dst)
-    )
+    out = out.withColumn("destination_domain", dst_domain)
     for side in ("request", "response"):
         cap = p[f"haproxy_http_{side}_captured_headers"]
         # ES split = Java String.split: trailing empty strings are dropped
@@ -1030,11 +1018,7 @@ def haproxy_log(df: DataFrame, field: str = "message",
         .when(both, F.array(F.lit("network"))),
     )
     out = out.withColumn("event_type", F.when(both, F.array(F.lit("connection"))))
-    out = out.withColumn(
-        "event_outcome",
-        F.when(status.isNotNull() & (status < 400), "success")
-        .when(status.isNotNull(), "failure"),
-    )
+    out = out.withColumn("event_outcome", _http_outcome(status))
     out = out.withColumn(
         "related_ip",
         F.filter(F.array(F.col("source_ip"), F.col("destination_ip")),
@@ -1049,9 +1033,6 @@ def haproxy_log(df: DataFrame, field: str = "message",
                F.array(F.col("destination_domain"))),
     )
     return out
-
-
-MODULES["haproxy.log"] = haproxy_log
 
 
 # -- postgresql.log CSV path (postgresql/log/ingest/pipeline-csv.yml) --------
@@ -1112,13 +1093,9 @@ def postgresql_csv(df: DataFrame, field: str = "message") -> DataFrame:
         "postgresql_log_transaction_id",
         F.col("postgresql_log_transaction_id").try_cast("long"),
     )
-    sst = F.col("tempcsv_session_start_time")
     out = out.withColumn(
         "postgresql_log_session_start_time",
-        F.coalesce(
-            F.try_to_timestamp(sst, F.lit("yyyy-MM-dd HH:mm:ss.SSS zzz")),
-            F.try_to_timestamp(sst, F.lit("yyyy-MM-dd HH:mm:ss zzz")),
-        ),
+        P.parse_timestamp(F.col("tempcsv_session_start_time"), _PG_TS_LAYOUTS),
     )
     # tempcsv.message grok: duration / query-step variants
     msg = F.col("tempcsv_message")
@@ -1159,13 +1136,7 @@ def postgresql_csv(df: DataFrame, field: str = "message") -> DataFrame:
     ts = e["postgresql_log_timestamp"]
     out = out.withColumn("postgresql_log_timestamp", ts)
     out = out.withColumn("event_timezone", e["event_timezone"])
-    out = out.withColumn(
-        "timestamp",
-        F.coalesce(
-            F.try_to_timestamp(ts, F.lit("yyyy-MM-dd HH:mm:ss.SSS zzz")),
-            F.try_to_timestamp(ts, F.lit("yyyy-MM-dd HH:mm:ss zzz")),
-        ),
-    )
+    out = out.withColumn("timestamp", P.parse_timestamp(ts, _PG_TS_LAYOUTS))
     out = out.withColumn(
         "event_duration",
         F.round(F.col("temp_duration") * 1e6).try_cast("long"),
@@ -1187,9 +1158,6 @@ def postgresql_csv(df: DataFrame, field: str = "message") -> DataFrame:
     return out
 
 
-MODULES["postgresql.csv"] = postgresql_csv
-
-
 # -- mongodb.log (mongodb/log/ingest/pipeline{,-plaintext,-json}.yml) --------
 
 MONGODB_LOG_PATTERNS = [
@@ -1209,45 +1177,23 @@ def mongodb_log(df: DataFrame, field: str = "message") -> DataFrame:
     """mongodb/log/ingest/pipeline.yml: branch on first char — plaintext
     3.x grok vs 4.4 structured JSON (from_json, no UDF) — then the shared
     component/severity → event.type classification."""
-    is_json = F.col(field).startswith("{")
-    out = P.grok(df, MONGODB_LOG_PATTERNS, field=field, target_prefix="parsed",
-                 flag_failures=False)
-    # the plaintext pipeline never runs on JSON lines (first-char branch);
-    # the unanchored grok would otherwise match inside the JSON text
-    out = out.withColumn(
-        "parsed", F.when(~is_json, F.col("parsed"))
-    )
-    p = F.col("parsed")
-    out = out.withColumn("js", F.from_json(F.col(field), _MONGODB_JSON_SCHEMA))
-    j = F.col("js")
-    lvl = F.when(is_json, j["s"]).otherwise(p["log_level"])
-    comp = F.when(is_json, j["c"]).otherwise(p["mongodb_log_component"])
+    out, _, pick = _plain_or_json(df, field, MONGODB_LOG_PATTERNS,
+                                  schema=_MONGODB_JSON_SCHEMA)
+    p, j = F.col("parsed"), F.col("js")
+    lvl = pick(j["s"], p["log_level"])
+    comp = pick(j["c"], p["mongodb_log_component"])
     out = out.withColumn("log_level", lvl)
     out = out.withColumn("mongodb_log_component", comp)
-    out = out.withColumn(
-        "mongodb_log_context",
-        F.when(is_json, j["ctx"]).otherwise(p["mongodb_log_context"]),
-    )
-    out = out.withColumn("mongodb_log_id", F.when(is_json, j["id"]))
-    out = out.withColumn("event_original", F.when(is_json, F.col(field)))
-    out = out.withColumn(
-        "message_out", F.when(is_json, j["msg"]).otherwise(p["message"])
-    )
-    jd = F.expr("js.t.`$date`")
-    out = out.withColumn(
-        "timestamp",
-        F.when(
-            is_json,
-            F.try_to_timestamp(jd, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")),
-        ).otherwise(
-            F.coalesce(
-                F.try_to_timestamp(p["mongodb_log_timestamp"],
-                                   F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXX")),
-                F.try_to_timestamp(p["mongodb_log_timestamp"],
-                                   F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")),
-            )
-        ),
-    )
+    out = out.withColumn("mongodb_log_context",
+                         pick(j["ctx"], p["mongodb_log_context"]))
+    out = out.withColumn("mongodb_log_id", j["id"])
+    out = out.withColumn("event_original", pick(F.col(field)))
+    out = out.withColumn("message_out", pick(j["msg"], p["message"]))
+    out = out.withColumn("timestamp", pick(
+        P.parse_timestamp(j["t"]["$date"], [_MS_OFFSET]),
+        P.parse_timestamp(p["mongodb_log_timestamp"],
+                          [_MS_OFFSET_NOCOLON, _MS_OFFSET]),
+    ))
     base_type = (
         F.when(comp == "ACCESS", F.array(F.lit("access")))
         .when(comp == "WRITE", F.array(F.lit("change")))
@@ -1261,9 +1207,6 @@ def mongodb_log(df: DataFrame, field: str = "message") -> DataFrame:
     out = out.withColumn("event_kind", F.lit("event"))
     out = out.withColumn("event_category", F.array(F.lit("database")))
     return out.drop("js")
-
-
-MODULES["mongodb.log"] = mongodb_log
 
 
 # -- logstash.log (logstash/log/ingest/pipeline{,-plaintext,-json}.yml) ------
@@ -1297,44 +1240,28 @@ def logstash_log(df: DataFrame, field: str = "message",
     """logstash/log/ingest/pipeline.yml: first-char branch — plain-format
     grok bank vs log4j2 JSON (from_json; logEvent's deep dynamic keys
     beyond the declared scalars are out of scope)."""
-    is_json = F.col(field).startswith("{")
-    out = P.grok(df, LOGSTASH_LOG_PATTERNS, field=field,
-                 target_prefix="parsed", flag_failures=False,
-                 pattern_definitions=LOGSTASH_LOG_DEFINITIONS)
-    out = out.withColumn("parsed", F.when(~is_json, F.col("parsed")))
-    p = F.col("parsed")
-    out = out.withColumn("js", F.from_json(F.col(field), _LOGSTASH_JSON_SCHEMA))
-    j = F.col("js")
-    lvl = F.when(is_json, j["level"]).otherwise(p["log_level"])
+    out, _, pick = _plain_or_json(df, field, LOGSTASH_LOG_PATTERNS,
+                                  LOGSTASH_LOG_DEFINITIONS,
+                                  _LOGSTASH_JSON_SCHEMA)
+    p, j = F.col("parsed"), F.col("js")
+    lvl = pick(j["level"], p["log_level"])
     out = out.withColumn("log_level", lvl)
-    out = out.withColumn(
-        "logstash_log_module",
-        F.when(is_json, j["loggerName"]).otherwise(p["logstash_log_module"]),
-    )
-    out = out.withColumn("logstash_log_thread", F.when(is_json, j["thread"]))
-    out = out.withColumn("logstash_log_log_event", F.when(is_json, j["logEvent"]))
-    out = out.withColumn(
-        "message_out",
-        F.when(is_json, j["logEvent"]["message"]).otherwise(p["message"]),
-    )
-    plain_ts = F.try_to_timestamp(
-        p["logstash_log_timestamp"], F.lit("yyyy-MM-dd'T'HH:mm:ss,SSS")
-    )
-    if timezone:
-        plain_ts = F.to_utc_timestamp(plain_ts, timezone)
-    out = out.withColumn(
-        "timestamp",
-        F.when(is_json, F.timestamp_millis(j["timeMillis"])).otherwise(plain_ts),
-    )
+    out = out.withColumn("logstash_log_module",
+                         pick(j["loggerName"], p["logstash_log_module"]))
+    out = out.withColumn("logstash_log_thread", j["thread"])
+    out = out.withColumn("logstash_log_log_event", j["logEvent"])
+    out = out.withColumn("message_out",
+                         pick(j["logEvent"]["message"], p["message"]))
+    out = out.withColumn("timestamp", pick(
+        F.timestamp_millis(j["timeMillis"]),
+        P.parse_timestamp(p["logstash_log_timestamp"], [_COMMA_MS], timezone),
+    ))
     out = out.withColumn("event_kind", F.lit("event"))
     out = out.withColumn(
         "event_type",
         F.when(lvl.isin("ERROR", "FATAL"), "error").otherwise("info"),
     )
     return out.drop("js")
-
-
-MODULES["logstash.log"] = logstash_log
 
 
 # -- nats.log (nats/log/ingest/pipeline.yml) ---------------------------------
@@ -1439,11 +1366,8 @@ def nats_log(df: DataFrame, field: str = "message") -> DataFrame:
         "message_out",
         F.coalesce(p3["nats_log_msg_data"], p2["nats_log_msg_data"]),
     )
-    out = out.withColumn(
-        "timestamp",
-        F.try_to_timestamp(p["nats_log_timestamp"],
-                           F.lit("yyyy/MM/dd HH:mm:ss.SSSSSS")),
-    )
+    out = P.timestamp(out, "parsed.nats_log_timestamp",
+                      ["2006/01/02 15:04:05.999999"], target="timestamp")
     lvl = F.col("parsed")["log_level"]
     out = out.withColumn("event_kind", F.lit("event"))
     out = out.withColumn(
@@ -1457,9 +1381,6 @@ def nats_log(df: DataFrame, field: str = "message") -> DataFrame:
         F.when(p2["client_ip"].isNotNull(), F.array(p2["client_ip"])),
     )
     return out.drop("_info", "_msg_info")
-
-
-MODULES["nats.log"] = nats_log
 
 
 # -- santa.log (santa/log/ingest/pipeline.yml) -------------------------------
@@ -1495,10 +1416,7 @@ def santa_log(df: DataFrame, field: str = "message") -> DataFrame:
     p = F.col("parsed")
     out = out.withColumn("event_original", F.col(field))
     ts = F.coalesce(p["process_start"], p["timestamp"])
-    parsed_ts = F.coalesce(
-        F.try_to_timestamp(ts, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")),
-        F.try_to_timestamp(ts, F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
-    )
+    parsed_ts = P.parse_timestamp(ts, [_MS_OFFSET, "2006-01-02T15:04:05Z07:00"])
     out = out.withColumn("timestamp", parsed_ts)
     out = out.withColumn(
         "process_start", F.when(p["process_start"].isNotNull(), parsed_ts)
@@ -1540,9 +1458,6 @@ def santa_log(df: DataFrame, field: str = "message") -> DataFrame:
         "file_x509_issuer_common_name", p["santa_certificate_common_name"]
     )
     return out
-
-
-MODULES["santa.log"] = santa_log
 
 
 # -- mysql.slowlog (mysql/slowlog/ingest/pipeline.json) ----------------------
@@ -1606,9 +1521,6 @@ def mysql_slowlog(df: DataFrame, field: str = "message") -> DataFrame:
     return out
 
 
-MODULES["mysql.slowlog"] = mysql_slowlog
-
-
 # -- elasticsearch.server (elasticsearch/server/ingest/pipeline*.yml) --------
 
 ES_SERVER_PT_DEFINITIONS = {
@@ -1650,54 +1562,35 @@ def elasticsearch_server(df: DataFrame, field: str = "message",
     (from_json over the flat dotted keys; rows whose event.dataset is not
     elasticsearch.server are dropped, exactly like the reference's drop
     processor); FATAL/ERROR → event.type=error, node name/id → host."""
-    is_json = F.col(field).startswith("{")
-    out = P.grok(df, ES_SERVER_PT_PATTERNS, field=field,
-                 target_prefix="parsed", flag_failures=False,
-                 pattern_definitions=ES_SERVER_PT_DEFINITIONS)
-    out = out.withColumn("parsed", F.when(~is_json, F.col("parsed")))
-    p = F.col("parsed")
-    out = out.withColumn("js", F.from_json(F.col(field), _ES8_JSON_SCHEMA))
-    j = F.col("js")
+    out, is_json, pick = _plain_or_json(df, field, ES_SERVER_PT_PATTERNS,
+                                        ES_SERVER_PT_DEFINITIONS,
+                                        _ES8_JSON_SCHEMA)
+    p, j = F.col("parsed"), F.col("js")
     out = out.filter(
         ~is_json | (j["event.dataset"] == "elasticsearch.server")
     )
-    lvl = F.when(is_json, j["log.level"]).otherwise(p["log_level"])
+    lvl = pick(j["log.level"], p["log_level"])
     out = out.withColumn("log_level", lvl)
     out = out.withColumn(
         "elasticsearch_node_name",
-        F.when(is_json, j["elasticsearch.node.name"])
-        .otherwise(p["elasticsearch_node_name"]),
+        pick(j["elasticsearch.node.name"], p["elasticsearch_node_name"]),
     )
     out = out.withColumn("elasticsearch_component", p["elasticsearch_component"])
     out = out.withColumn("elasticsearch_index_name", p["elasticsearch_index_name"])
     out = out.withColumn("elasticsearch_index_id", p["elasticsearch_index_id"])
     for leaf in ("cluster.name", "cluster.uuid", "node.id"):
-        out = out.withColumn(
-            "elasticsearch_" + leaf.replace(".", "_"),
-            F.when(is_json, j[f"elasticsearch.{leaf}"]),
-        )
-    out = out.withColumn("log_logger", F.when(is_json, j["log.logger"]))
-    out = out.withColumn("process_thread_name",
-                         F.when(is_json, j["process.thread.name"]))
-    out = out.withColumn("service_name", F.when(is_json, j["service.name"]))
+        out = out.withColumn("elasticsearch_" + leaf.replace(".", "_"),
+                             j[f"elasticsearch.{leaf}"])
+    out = out.withColumn("log_logger", j["log.logger"])
+    out = out.withColumn("process_thread_name", j["process.thread.name"])
+    out = out.withColumn("service_name", j["service.name"])
     out = out.withColumn("event_dataset", F.lit("elasticsearch.server"))
-    out = out.withColumn(
-        "message_out", F.when(is_json, j["message"]).otherwise(p["message"])
-    )
-    pt_ts = F.try_to_timestamp(
-        p["elasticsearch_server_timestamp"],
-        F.lit("yyyy-MM-dd'T'HH:mm:ss,SSS"),
-    )
-    if timezone:
-        pt_ts = F.to_utc_timestamp(pt_ts, timezone)
-    out = out.withColumn(
-        "timestamp",
-        F.when(
-            is_json,
-            F.try_to_timestamp(j["@timestamp"],
-                               F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")),
-        ).otherwise(pt_ts),
-    )
+    out = out.withColumn("message_out", pick(j["message"], p["message"]))
+    out = out.withColumn("timestamp", pick(
+        P.parse_timestamp(j["@timestamp"], [_MS_OFFSET]),
+        P.parse_timestamp(p["elasticsearch_server_timestamp"], [_COMMA_MS],
+                          timezone),
+    ))
     out = out.withColumn("event_kind", F.lit("event"))
     # scalar (not array<string>) on purpose: the elasticsearch pipelines use
     # `set` processors, not `append` — every golden under
@@ -1711,9 +1604,6 @@ def elasticsearch_server(df: DataFrame, field: str = "message",
     out = out.withColumn("host_name", F.col("elasticsearch_node_name"))
     out = out.withColumn("host_id", F.col("elasticsearch_node_id"))
     return out.drop("js")
-
-
-MODULES["elasticsearch.server"] = elasticsearch_server
 
 
 # -- elasticsearch.gc (elasticsearch/gc/ingest/pipeline.yml) -----------------
@@ -1775,23 +1665,13 @@ def elasticsearch_gc(df: DataFrame, field: str = "message") -> DataFrame:
             ),
         ),
     )
-    out = out.withColumn(
-        "timestamp",
-        F.coalesce(
-            F.try_to_timestamp(p["timestamp"],
-                               F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXX")),
-            F.try_to_timestamp(p["timestamp"],
-                               F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")),
-        ),
-    )
+    out = P.timestamp(out, "parsed.timestamp", [_MS_OFFSET_NOCOLON, _MS_OFFSET],
+                      target="timestamp")
     out = out.withColumn("event_kind", F.lit("metric"))
     # scalar on purpose — the gc pipeline `set`s these; goldens are scalar
     out = out.withColumn("event_category", F.lit("database"))
     out = out.withColumn("event_type", F.lit("info"))
     return out
-
-
-MODULES["elasticsearch.gc"] = elasticsearch_gc
 
 
 # -- elasticsearch.deprecation (elasticsearch/deprecation/ingest/*) ----------
@@ -1826,25 +1706,19 @@ def elasticsearch_deprecation(df: DataFrame, field: str = "message",
     """elasticsearch/deprecation: plaintext LOG_HEADER variant (DEPRECATION
     level) vs 8.0 ECS-JSON; json rows with a foreign event.dataset are
     dropped; event.dataset normalized to elasticsearch.deprecation."""
-    is_json = F.col(field).startswith("{")
-    out = P.grok(df, ES_DEPRECATION_PT_PATTERNS, field=field,
-                 target_prefix="parsed", flag_failures=False,
-                 pattern_definitions=ES_DEPRECATION_PT_DEFINITIONS)
-    out = out.withColumn("parsed", F.when(~is_json, F.col("parsed")))
-    p = F.col("parsed")
-    out = out.withColumn("js", F.from_json(F.col(field), _ES_DEP_JSON_SCHEMA))
-    j = F.col("js")
+    out, is_json, pick = _plain_or_json(df, field, ES_DEPRECATION_PT_PATTERNS,
+                                        ES_DEPRECATION_PT_DEFINITIONS,
+                                        _ES_DEP_JSON_SCHEMA)
+    p, j = F.col("parsed"), F.col("js")
     out = out.filter(
         ~is_json
         | j["event.dataset"].isin("deprecation", "deprecation.elasticsearch")
     )
-    lvl = F.when(is_json, j["log.level"]).otherwise(p["log_level"])
-    out = out.withColumn("log_level", lvl)
+    out = out.withColumn("log_level", pick(j["log.level"], p["log_level"]))
     out = out.withColumn("elasticsearch_component", p["elasticsearch_component"])
     out = out.withColumn(
         "elasticsearch_node_name",
-        F.when(is_json, j["elasticsearch.node.name"])
-        .otherwise(p["elasticsearch_node_name"]),
+        pick(j["elasticsearch.node.name"], p["elasticsearch_node_name"]),
     )
     for flat in ("data_stream.dataset", "data_stream.namespace",
                  "data_stream.type", "elasticsearch.elastic_product_origin",
@@ -1853,27 +1727,14 @@ def elasticsearch_deprecation(df: DataFrame, field: str = "message",
                  "service.name", "process.thread.name", "log.logger",
                  "trace.id", "elasticsearch.cluster.uuid",
                  "elasticsearch.node.id", "elasticsearch.cluster.name"):
-        out = out.withColumn(
-            flat.replace(".", "_"), F.when(is_json, j[flat])
-        )
+        out = out.withColumn(flat.replace(".", "_"), j[flat])
     out = out.withColumn("event_dataset", F.lit("elasticsearch.deprecation"))
-    out = out.withColumn(
-        "message_out", F.when(is_json, j["message"]).otherwise(p["message"])
-    )
-    pt_ts = F.try_to_timestamp(
-        p["elasticsearch_deprecation_timestamp"],
-        F.lit("yyyy-MM-dd'T'HH:mm:ss,SSS"),
-    )
-    if timezone:
-        pt_ts = F.to_utc_timestamp(pt_ts, timezone)
-    out = out.withColumn(
-        "timestamp",
-        F.when(
-            is_json,
-            F.try_to_timestamp(j["@timestamp"],
-                               F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")),
-        ).otherwise(pt_ts),
-    )
+    out = out.withColumn("message_out", pick(j["message"], p["message"]))
+    out = out.withColumn("timestamp", pick(
+        P.parse_timestamp(j["@timestamp"], [_MS_OFFSET]),
+        P.parse_timestamp(p["elasticsearch_deprecation_timestamp"],
+                          [_COMMA_MS], timezone),
+    ))
     out = out.withColumn("event_kind", F.lit("event"))
     # scalar on purpose — the deprecation pipeline `set`s these; goldens
     # are scalar
@@ -1882,9 +1743,6 @@ def elasticsearch_deprecation(df: DataFrame, field: str = "message",
     out = out.withColumn("host_id", F.col("elasticsearch_node_id"))
     out = out.withColumn("host_name", F.col("elasticsearch_node_name"))
     return out.drop("js")
-
-
-MODULES["elasticsearch.deprecation"] = elasticsearch_deprecation
 
 
 # -- kibana.log (kibana/log/ingest/pipeline-7.yml, the 6.x/7.x json format) --
@@ -1905,15 +1763,8 @@ def kibana_log(df: DataFrame, field: str = "message") -> DataFrame:
     outcome. The 8.x ECS format (pipeline-ecs) is out of scope."""
     out = df.withColumn("meta", F.from_json(F.col(field), _KIBANA7_JSON_SCHEMA))
     m = F.col("meta")
-    out = out.withColumn(
-        "timestamp",
-        F.coalesce(
-            F.try_to_timestamp(m["@timestamp"],
-                               F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
-            F.try_to_timestamp(m["@timestamp"],
-                               F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")),
-        ),
-    )
+    out = out.withColumn("timestamp", P.parse_timestamp(
+        m["@timestamp"], ["2006-01-02T15:04:05Z07:00", _MS_OFFSET]))
     out = out.withColumn("message_out", m["message"])
     out = out.withColumn("kibana_log_state", m["state"])
     out = out.withColumn("kibana_log_tags", m["tags"])
@@ -1942,15 +1793,8 @@ def kibana_log(df: DataFrame, field: str = "message") -> DataFrame:
         F.when(m["state"].isNotNull(),
                F.when(m["state"] == "red", "error").otherwise("info")),
     )
-    out = out.withColumn(
-        "event_outcome",
-        F.when(status.isNotNull() & (status < 400), "success")
-        .when(status.isNotNull(), "failure"),
-    )
+    out = out.withColumn("event_outcome", _http_outcome(status))
     return out
-
-
-MODULES["kibana.log"] = kibana_log
 
 
 # -- system.auth (system/auth/ingest/{files,grok-auth-messages}.yml) ---------
@@ -2069,19 +1913,12 @@ def system_auth(df: DataFrame, field: str = "message",
 
     # convert source.address → source.ip (type ip; on_failure → domain);
     # convert ssh.dropped_ip → source.ip (on_failure removes dropped_ip)
-    addr = m["source_address"]
-    dropped = m["system_auth_ssh_dropped_ip"]
-    ip_ok = addr.rlike(_IP_RE)
-    drop_ok = dropped.rlike(_IP_RE)
-    out = out.withColumn("source_address", addr)
-    out = out.withColumn("source_domain",
-                         F.when(addr.isNotNull() & ~ip_ok, addr))
-    out = out.withColumn("system_auth_ssh_dropped_ip",
-                         F.when(drop_ok, dropped))
-    out = out.withColumn(
-        "source_ip",
-        F.coalesce(F.when(ip_ok, addr), F.when(drop_ok, dropped)),
-    )
+    src_ip, src_domain = _ip_or_domain(m["source_address"])
+    dropped_ip = _ip_or_domain(m["system_auth_ssh_dropped_ip"])[0]
+    out = out.withColumn("source_address", m["source_address"])
+    out = out.withColumn("source_domain", src_domain)
+    out = out.withColumn("system_auth_ssh_dropped_ip", dropped_ip)
+    out = out.withColumn("source_ip", F.coalesce(src_ip, dropped_ip))
     out = out.withColumn("source_port", m["source_port"])
     for fld in ["system_auth_ssh_event", "system_auth_ssh_method",
                 "system_auth_ssh_signature", "system_auth_sudo_error",
@@ -2148,21 +1985,10 @@ def system_auth(df: DataFrame, field: str = "message",
     # date: offset-carrying ISO parses absolute; zoneless forms are local
     # to the configured event.timezone
     raw_ts = p["system_auth_timestamp"]
-    offset_ts = F.coalesce(*[
-        F.try_to_timestamp(raw_ts, F.lit(P.go_layout_to_java(l)))
-        for l in _AUTH_TS_OFFSET_LAYOUTS
-    ])
-    local_ts = F.coalesce(*[
-        F.try_to_timestamp(raw_ts, F.lit(P.go_layout_to_java(l)))
-        for l in _AUTH_TS_LOCAL_LAYOUTS
-    ])
-    if timezone:
-        local_ts = F.to_utc_timestamp(local_ts, timezone)
-    out = out.withColumn("timestamp", F.coalesce(offset_ts, local_ts))
+    out = out.withColumn("timestamp", F.coalesce(
+        P.parse_timestamp(raw_ts, _AUTH_TS_OFFSET_LAYOUTS),
+        P.parse_timestamp(raw_ts, _AUTH_TS_LOCAL_LAYOUTS, timezone)))
     return out.drop("_tmpmsg")
-
-
-MODULES["system.auth"] = system_auth
 
 
 # -- elasticsearch.slowlog (elasticsearch/slowlog/ingest/pipeline*.yml) ------
@@ -2231,10 +2057,8 @@ _ES_SL8_SCHEMA = (
 _ES_SL_DATASETS = ["elasticsearch.slowlog", "elasticsearch.index_indexing_slowlog",
                    "elasticsearch.index_search_slowlog"]
 
-_ES_SL_TS_LAYOUTS = [
-    "yyyy-MM-dd'T'HH:mm:ss,SSSXXX", "yyyy-MM-dd'T'HH:mm:ss,SSSXX",
-    "yyyy-MM-dd'T'HH:mm:ss.SSSXXX", "yyyy-MM-dd'T'HH:mm:ss.SSSXX",
-]
+_ES_SL_TS_LAYOUTS = [_COMMA_MS + "Z07:00", _COMMA_MS + "Z0700",
+                     _MS_OFFSET, _MS_OFFSET_NOCOLON]
 
 
 def elasticsearch_slowlog(df: DataFrame, field: str = "message",
@@ -2254,14 +2078,10 @@ def elasticsearch_slowlog(df: DataFrame, field: str = "message",
     pipeline-json,pipeline-json-7,pipeline-json-8}.yml; goldens
     elasticsearch/slowlog/test/*-expected.json."""
     raw = F.col(field)
-    is_json = raw.startswith("{")
+    out, is_json, pick = _plain_or_json(df, field, ES_SLOWLOG_PT_PATTERNS,
+                                        ES_SLOWLOG_DEFINITIONS)
     is_json8 = is_json & raw.contains("ecs.version")
     is_json7 = is_json & ~raw.contains("ecs.version")
-
-    out = P.grok(df, ES_SLOWLOG_PT_PATTERNS, field=field,
-                 target_prefix="parsed", flag_failures=False,
-                 pattern_definitions=ES_SLOWLOG_DEFINITIONS)
-    out = out.withColumn("parsed", F.when(~is_json, F.col("parsed")))
     p = F.col("parsed")
     out = out.withColumn("j7", F.when(is_json7, F.from_json(raw, _ES_SL7_SCHEMA)))
     out = out.withColumn("j8", F.when(is_json8, F.from_json(raw, _ES_SL8_SCHEMA)))
@@ -2427,22 +2247,14 @@ def elasticsearch_slowlog(df: DataFrame, field: str = "message",
 
     # dates: plaintext is zoneless (event.timezone applies); json stamps
     # carry their own offset (comma or dot millis, Z / ±HH:mm / ±HHmm)
-    pt_ts = F.try_to_timestamp(
-        p["elasticsearch_slowlog_timestamp"],
-        F.lit("yyyy-MM-dd'T'HH:mm:ss,SSS"),
-    )
-    if timezone:
-        pt_ts = F.to_utc_timestamp(pt_ts, timezone)
     json_raw_ts = F.when(is_json8, j8["@timestamp"]).when(
         is_json7, j7["timestamp"]
     )
-    json_ts = F.coalesce(*[
-        F.try_to_timestamp(json_raw_ts, F.lit(fmt))
-        for fmt in _ES_SL_TS_LAYOUTS
-    ])
-    out = out.withColumn(
-        "timestamp", F.when(is_json, json_ts).otherwise(pt_ts)
-    )
+    out = out.withColumn("timestamp", pick(
+        P.parse_timestamp(json_raw_ts, _ES_SL_TS_LAYOUTS),
+        P.parse_timestamp(p["elasticsearch_slowlog_timestamp"], [_COMMA_MS],
+                          timezone),
+    ))
 
     out = out.withColumn(
         "event_dataset",
@@ -2460,9 +2272,6 @@ def elasticsearch_slowlog(df: DataFrame, field: str = "message",
     out = out.withColumn("host_name", F.col("elasticsearch_node_name"))
     out = out.withColumn("host_id", F.col("elasticsearch_node_id"))
     return out.drop("j7", "j8", "_slmsg")
-
-
-MODULES["elasticsearch.slowlog"] = elasticsearch_slowlog
 
 
 # -- nginx.error (nginx/error/ingest/pipeline.yml) ---------------------------
@@ -2494,19 +2303,13 @@ def nginx_error(df: DataFrame, field: str = "message",
     out = out.withColumn("process_thread_id", p["process_thread_id"])
     out = out.withColumn("nginx_error_connection_id",
                          p["nginx_error_connection_id"])
-    ts = F.try_to_timestamp(p["nginx_error_time"],
-                            F.lit("yyyy/MM/dd HH:mm:ss"))
-    if timezone:
-        ts = F.to_utc_timestamp(ts, timezone)
-    out = out.withColumn("timestamp", ts)
+    out = P.timestamp(out, "parsed.nginx_error_time", ["2006/01/02 15:04:05"],
+                      target="timestamp", timezone=timezone)
     out = out.withColumn("event_kind", F.lit("event"))
     # append processors onto absent fields → single-element arrays
     out = out.withColumn("event_category", F.array(F.lit("web")))
     out = out.withColumn("event_type", F.array(F.lit("error")))
     return out
-
-
-MODULES["nginx.error"] = nginx_error
 
 
 # -- elasticsearch.audit (elasticsearch/audit/ingest/pipeline*.yml) ----------
@@ -2591,16 +2394,9 @@ def elasticsearch_audit(df: DataFrame, field: str = "message",
 
     Reference: elasticsearch/audit/ingest/{pipeline,pipeline-plaintext,
     pipeline-json}.yml; goldens elasticsearch/audit/test/*-expected.json."""
-    raw = F.col(field)
-    is_json = raw.startswith("{")
-
-    out = P.grok(df, ES_AUDIT_PT_PATTERNS, field=field,
-                 target_prefix="parsed", flag_failures=False,
-                 pattern_definitions=ES_AUDIT_PT_DEFINITIONS)
-    out = out.withColumn("parsed", F.when(~is_json, F.col("parsed")))
-    p = F.col("parsed")
-    out = out.withColumn("j", F.when(is_json, F.from_json(raw, _ES_AUDIT_SCHEMA)))
-    j = F.col("j")
+    out, is_json, _ = _plain_or_json(df, field, ES_AUDIT_PT_PATTERNS,
+                                     ES_AUDIT_PT_DEFINITIONS, _ES_AUDIT_SCHEMA)
+    p, j = F.col("parsed"), F.col("js")
 
     # pipeline-json drop processors: explicit type must be 'audit'; typeless
     # json must carry a known audit layer in event.type
@@ -2764,25 +2560,17 @@ def elasticsearch_audit(df: DataFrame, field: str = "message",
     # explicit offset in the string wins (ES date semantics)
     json_raw_ts = F.coalesce(j["@timestamp"], j["timestamp"])
     ts_str = F.coalesce(p["elasticsearch_audit_timestamp"], json_raw_ts)
-    no_zone = F.try_to_timestamp(ts_str, F.lit("yyyy-MM-dd'T'HH:mm:ss,SSS"))
-    if timezone:
-        no_zone = F.to_utc_timestamp(no_zone, timezone)
-    zoned = F.coalesce(*[
-        F.try_to_timestamp(ts_str, F.lit(fmt))
-        for fmt in ("yyyy-MM-dd'T'HH:mm:ss,SSSXX",
-                    "yyyy-MM-dd'T'HH:mm:ss,SSSXXX",
-                    "yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
-    ])
-    out = out.withColumn("timestamp", F.coalesce(no_zone, zoned))
+    out = out.withColumn("timestamp", F.coalesce(
+        P.parse_timestamp(ts_str, [_COMMA_MS], timezone),
+        P.parse_timestamp(ts_str, [_COMMA_MS + "Z0700", _COMMA_MS + "Z07:00",
+                                   _MS_OFFSET]),
+    ))
 
-    out = out.withColumn("message_out", raw)
+    out = out.withColumn("message_out", F.col(field))
     out = out.withColumn("event_kind", F.lit("event"))
     out = out.withColumn("event_category", F.lit("database"))
     out = out.withColumn("event_dataset", F.lit("elasticsearch.audit"))
-    return out.drop("j")
-
-
-MODULES["elasticsearch.audit"] = elasticsearch_audit
+    return out.drop("js")
 
 
 # -- kibana.audit (kibana/audit/ingest/pipeline-json.yml) --------------------
@@ -2872,21 +2660,11 @@ def kibana_audit(df: DataFrame, field: str = "message",
         "related_user",
         F.when(j["user"]["name"].isNotNull(), F.array(j["user"]["name"])),
     )
-    out = out.withColumn(
-        "timestamp",
-        F.coalesce(*[
-            F.try_to_timestamp(j["@timestamp"], F.lit(fmt))
-            for fmt in ("yyyy-MM-dd'T'HH:mm:ss.SSSXXX",
-                        "yyyy-MM-dd'T'HH:mm:ss.SSSXX")
-        ]),
-    )
+    out = out.withColumn("timestamp", P.parse_timestamp(
+        j["@timestamp"], [_MS_OFFSET, _MS_OFFSET_NOCOLON]))
     out = out.withColumn("event_kind", F.lit("event"))
     out = out.withColumn("event_dataset", F.lit("kibana.audit"))
     return out.drop("j")
-
-
-MODULES["kibana.audit"] = kibana_audit
-
 
 
 # -- iis.error (iis/error/ingest/pipeline.yml) -------------------------------
@@ -2943,14 +2721,9 @@ def iis_error(df: DataFrame, field: str = "message",
         "url_extension",
         F.nullif(F.regexp_extract(path, r"/[^/]*\.([^./]+)$", 1), F.lit("")),
     )
-    out = out.withColumn(
-        "timestamp",
-        F.to_utc_timestamp(
-            F.try_to_timestamp(p["iis_error_time"],
-                               F.lit("yyyy-MM-dd HH:mm:ss")),
-            F.lit(timezone or "UTC"),
-        ),
-    )
+    # the pipeline always applies a zone, UTC by default
+    out = P.timestamp(out, "parsed.iis_error_time", ["2006-01-02 15:04:05"],
+                      target="timestamp", timezone=timezone or "UTC")
     src = p["source_address"]
     dst = p["destination_address"]
     s_ip = F.when(src.isNotNull(), F.split(src, "%", 2)[0])
@@ -2972,15 +2745,8 @@ def iis_error(df: DataFrame, field: str = "message",
                                 F.col("destination_ip"))),
     )
     status = p["http_response_status_code"]
-    out = out.withColumn(
-        "event_outcome",
-        F.when(status.isNotNull() & (status < 400), "success")
-        .when(status.isNotNull(), "failure"),
-    )
+    out = out.withColumn("event_outcome", _http_outcome(status))
     return out
-
-
-MODULES["iis.error"] = iis_error
 
 
 # -- logstash.slowlog (logstash/slowlog/ingest/pipeline*.yml) ----------------
@@ -3028,21 +2794,14 @@ def logstash_slowlog(df: DataFrame, field: str = "message",
 
     Reference: logstash/slowlog/ingest/{pipeline,pipeline-plaintext,
     pipeline-json}.yml; goldens logstash/slowlog/test/*-expected.json."""
-    raw = F.col(field)
-    is_json = raw.startswith("{")
-
-    out = P.grok(df, LOGSTASH_SLOWLOG_PT_PATTERNS, field=field,
-                 target_prefix="parsed", flag_failures=False,
-                 pattern_definitions=LOGSTASH_SLOWLOG_DEFINITIONS)
-    out = out.withColumn("parsed", F.when(~is_json, F.col("parsed")))
+    out, is_json, _ = _plain_or_json(df, field, LOGSTASH_SLOWLOG_PT_PATTERNS,
+                                     LOGSTASH_SLOWLOG_DEFINITIONS,
+                                     _LOGSTASH_SL_JSON_SCHEMA)
     out = P.grok(out, LOGSTASH_SLOWLOG_EVENT_PATTERNS,
                  field="parsed.message", target_prefix="ev",
                  flag_failures=False)
     out = out.withColumn("ev", F.when(~is_json, F.col("ev")))
-    p, ev = F.col("parsed"), F.col("ev")
-    out = out.withColumn(
-        "j", F.when(is_json, F.from_json(raw, _LOGSTASH_SL_JSON_SCHEMA)))
-    j = F.col("j")
+    p, ev, j = F.col("parsed"), F.col("ev"), F.col("js")
 
     module = F.coalesce(p["logstash_slowlog_module"], j["loggerName"])
     out = out.withColumn("logstash_slowlog_module", module)
@@ -3070,12 +2829,11 @@ def logstash_slowlog(df: DataFrame, field: str = "message",
         "logstash_slowlog_event",
         F.coalesce(ev["logstash_slowlog_event"], j["logEvent"]["event"]))
     out = out.withColumn("logstash_slowlog_thread", j["thread"])
-    pt_ts = F.try_to_timestamp(p["logstash_slowlog_timestamp"],
-                               F.lit("yyyy-MM-dd'T'HH:mm:ss,SSS"))
-    if timezone:
-        pt_ts = F.to_utc_timestamp(pt_ts, timezone)
-    out = out.withColumn(
-        "timestamp", F.coalesce(pt_ts, F.timestamp_millis(j["timeMillis"])))
+    out = out.withColumn("timestamp", F.coalesce(
+        P.parse_timestamp(p["logstash_slowlog_timestamp"], [_COMMA_MS],
+                          timezone),
+        F.timestamp_millis(j["timeMillis"]),
+    ))
     out = out.withColumn("event_kind", F.lit("event"))
     out = out.withColumn(
         "event_type",
@@ -3083,10 +2841,7 @@ def logstash_slowlog(df: DataFrame, field: str = "message",
         .when(F.col("log_level").isNotNull(), "info"),
     )
     out = out.withColumn("event_dataset", F.lit("logstash.slowlog"))
-    return out.drop("j")
-
-
-MODULES["logstash.slowlog"] = logstash_slowlog
+    return out.drop("js")
 
 
 # -- nginx.ingress_controller (nginx/ingress_controller/ingest/pipeline.yml) -
@@ -3263,24 +3018,13 @@ def nginx_ingress_controller(df: DataFrame, field: str = "message",
     # source = first public ip in remote_ip_list, else its head, else the
     # bare source.address capture (pipeline.yml:185-229 painless)
     ip_list = F.col("remote_ip_list")
-
-    def _is_private(x):
-        o = F.split(x, r"\.")
-        f1 = F.get(o, 0).try_cast("int")
-        f2 = F.get(o, 1).try_cast("int")
-        return F.coalesce(
-            (f1 == 10) | (f1 == 127) | ((f1 == 192) & (f2 == 168))
-            | ((f1 == 172) & f2.between(16, 31)),
-            F.lit(False),
-        )
-
     addr = F.coalesce(
         F.get(F.filter(ip_list, lambda x: ~_is_private(x)), 0),
         F.get(ip_list, 0),
         p["source_address"],
     )
     out = out.withColumn("source_address", addr)
-    out = out.withColumn("source_ip", F.when(addr.rlike(_IP_RE), addr))
+    out = out.withColumn("source_ip", _ip_or_domain(addr)[0])
     out = out.withColumn("destination_ip", p["destination_ip"])
     out = out.withColumn("destination_domain", p["destination_domain"])
     out = out.withColumn("user_name", p["user_name"])
@@ -3292,19 +3036,13 @@ def nginx_ingress_controller(df: DataFrame, field: str = "message",
                          p["http_response_body_bytes"])
     out = out.withColumn("http_request_id", p[pre + "http_request_id"])
 
-    out = out.withColumn("_t", p[pre + "time"])
-    out = P.timestamp(out, "_t", ["02/Jan/2006:15:04:05 -0700"],
-                      target="timestamp", timezone=timezone)
-    out = out.drop("_t")
+    out = out.withColumn("timestamp", P.parse_timestamp(
+        p[pre + "time"], ["02/Jan/2006:15:04:05 -0700"], timezone))
     status = p["http_response_status_code"]
     out = out.withColumn("event_kind", F.lit("event"))
     out = out.withColumn("event_category", F.array(F.lit("web")))
     out = out.withColumn("event_type", F.array(F.lit("info")))
-    out = out.withColumn(
-        "event_outcome",
-        F.when(status.isNotNull() & (status < 400), "success")
-        .when(status.isNotNull(), "failure"),
-    )
+    out = out.withColumn("event_outcome", _http_outcome(status))
     out = out.withColumn(
         "related_ip",
         F.array_distinct(F.array_compact(F.array(
@@ -3318,9 +3056,6 @@ def nginx_ingress_controller(df: DataFrame, field: str = "message",
                F.array(F.col("user_name"))),
     )
     return out.drop("ua")
-
-
-MODULES["nginx.ingress_controller"] = nginx_ingress_controller
 
 
 # -- icinga.startup / icinga.debug (icinga/{startup,debug}/ingest/) ----------
@@ -3373,10 +3108,6 @@ def icinga_debug(df: DataFrame, field: str = "message") -> DataFrame:
         .otherwise("info"),
     )
     return out
-
-
-MODULES["icinga.startup"] = icinga_startup
-MODULES["icinga.debug"] = icinga_debug
 
 
 # -- pensando.dfw (pensando/dfw/ingest/pipeline.yml) -------------------------
@@ -3478,9 +3209,6 @@ def pensando_dfw(df: DataFrame, field: str = "message",
     return out.drop("j")
 
 
-MODULES["pensando.dfw"] = pensando_dfw
-
-
 # -- redis.slowlog (input/redis/harvester.go) --------------------------------
 
 
@@ -3517,6 +3245,3 @@ def redis_slowlog(df: DataFrame) -> DataFrame:
         F.lit("redis.slowlog").alias("event_dataset"),
     )
     return out
-
-
-MODULES["redis.slowlog"] = redis_slowlog

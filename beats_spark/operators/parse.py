@@ -688,17 +688,13 @@ def go_layout_to_java(layout: str) -> str:
     return out
 
 
-def timestamp(
-    df: DataFrame,
-    field: str,
-    layouts: list[str],
-    target: str = "ts",
-    timezone: str | None = None,
-) -> DataFrame:
+def parse_timestamp(
+    c: Column, layouts: list[str], timezone: str | None = None
+) -> Column:
     """Parse a time string with ordered layouts (Go layouts or UNIX/UNIX_MS),
     first successful parse wins — ≅ the timestamp processor
-    (timestamp/timestamp.go:160-167)."""
-    c = F.col(field)
+    (timestamp/timestamp.go:160-167). A zoneless result is wall time in
+    `timezone` and is shifted to UTC; a layout with a zone parses absolute."""
     attempts = []
     for layout in layouts:
         if layout == "UNIX":
@@ -710,7 +706,18 @@ def timestamp(
     ts = F.coalesce(*attempts) if len(attempts) > 1 else attempts[0]
     if timezone:
         ts = F.to_utc_timestamp(ts, timezone)
-    return df.withColumn(target, ts)
+    return ts
+
+
+def timestamp(
+    df: DataFrame,
+    field: str,
+    layouts: list[str],
+    target: str = "ts",
+    timezone: str | None = None,
+) -> DataFrame:
+    """`parse_timestamp` of column `field` into column `target`."""
+    return df.withColumn(target, parse_timestamp(F.col(field), layouts, timezone))
 
 
 def convert(

@@ -149,6 +149,12 @@ def route(
     return out
 
 
+def drop_metadata(df: DataFrame) -> DataFrame:
+    """Drop the `_meta_*` columns: @metadata is routing-only state, never
+    indexed (libbeat/beat/event.go:42, outputs drop it)."""
+    return df.drop(*[c for c in df.columns if c.startswith("_meta_")])
+
+
 def fan_out(
     df: DataFrame,
     base_path: str,
@@ -173,8 +179,7 @@ def fan_out(
     producer (or an audit of one) sees the same key→partition mapping
     without a broker in the loop.
 
-    `_meta_*` columns are dropped before write — @metadata is routing-only
-    state, never indexed (libbeat/beat/event.go:42, outputs drop it).
+    `_meta_*` columns are dropped before write (`drop_metadata`).
     """
     if kafka_key:
         from .scale import kafka_partition
@@ -182,9 +187,8 @@ def fan_out(
         df = df.withColumn(
             "_partition", kafka_partition(df, kafka_key, kafka_partitions)
         )
-    meta_cols = [c for c in df.columns if c.startswith("_meta_")]
     (
-        df.drop(*meta_cols)
+        drop_metadata(df)
         .write.partitionBy(target)
         .format(file_format)
         .mode(mode)
@@ -236,9 +240,8 @@ def fan_out_iceberg(
             "org.apache.iceberg:iceberg-spark-runtime and a catalog, then "
             "this call writes one partitioned table per fan-out."
         )
-    meta_cols = [c for c in df.columns if c.startswith("_meta_")]
     (
-        df.drop(*meta_cols)
+        drop_metadata(df)
         .writeTo(table)
         .partitionedBy(F.col(target))
         .createOrReplace()

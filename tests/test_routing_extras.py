@@ -51,6 +51,23 @@ def test_fan_out_drops_meta_columns(spark, tmp_path):
     assert back.count() == 1
 
 
+def test_checkpointed_fan_out_drops_meta_columns(spark, tmp_path):
+    """The resumable writer stages through fan_out, so committed sinks carry
+    no @metadata either."""
+    from beats_spark.checkpoint import checkpointed_fan_out
+
+    df = spark.createDataFrame(
+        [("c1", "x", "raw-idx", "s1"), ("c2", "y", "raw-idx", "s2")],
+        "conv_id string, text string, _meta_raw_index string, _sink string",
+    )
+    base = str(tmp_path / "sinks")
+    manifest = checkpointed_fan_out(df, base, job_id="meta1")
+    assert sorted(manifest["sinks"]) == ["s1", "s2"]
+    back = spark.read.parquet(base)
+    assert not [c for c in back.columns if c.startswith("_meta_")]
+    assert back.count() == 2
+
+
 def test_parse_failure_sets_error_struct(spark):
     df = spark.createDataFrame([("a=1 ok",), ("nope",)], "text string")
     out = P.dissect(df, "a=%{val} %{rest}", field="text", target_prefix="d")
