@@ -72,12 +72,12 @@ def checkpointed_fan_out(
     `fail_after` (tests only): simulate a crash after N sink commits.
 
     Scale shape (single-pass): sinks not yet committed are written in ONE
-    partitionBy job into a staging directory by routing.fan_out — the
-    batch writer, `_meta_*` drop included — so the upstream parse→enrich→route DAG executes
-    exactly once and nothing is persisted/cached — then each staged sink
-    directory is COMMITTED individually: an atomic directory rename into
-    `base` (metadata-only; FileSystem.rename on HDFS/S3A) followed by a
-    manifest entry. A crash between commits loses no data: committed sinks
+    partitionBy job into a staging directory by routing.fan_out, the batch
+    writer (its `_meta_*` drop included), so the upstream
+    parse→enrich→route DAG executes exactly once and nothing is
+    persisted/cached — then each staged sink directory is COMMITTED
+    individually: an atomic directory rename into `base` (metadata-only;
+    FileSystem.rename on HDFS/S3A) followed by a manifest entry. A crash between commits loses no data: committed sinks
     are skipped on resume (the pending filter keeps them out of the next
     staging write), uncommitted ones are re-staged. Per-sink row counts
     come from the freshly committed files (parquet footer metadata), never

@@ -693,8 +693,9 @@ def parse_timestamp(
 ) -> Column:
     """Parse a time string with ordered layouts (Go layouts or UNIX/UNIX_MS),
     first successful parse wins — ≅ the timestamp processor
-    (timestamp/timestamp.go:160-167). A zoneless result is wall time in
-    `timezone` and is shifted to UTC; a layout with a zone parses absolute."""
+    (timestamp/timestamp.go:160-167). With `timezone`, the result is read
+    as wall time in that zone and shifted to UTC; the shift applies to
+    every layout, so zoned and zoneless layouts take separate calls."""
     attempts = []
     for layout in layouts:
         if layout == "UNIX":
