@@ -155,7 +155,8 @@ FIRST_STAGE = {
     "pensando_dfw": (M.PENSANDO_DFW_PATTERNS, M.PENSANDO_DFW_DEFINITIONS),
 }
 
-# filesets with no grok bank: JSON decoders and the structured redis.slowlog
+# filesets whose first stage is not a grok bank: the JSON decoders, traefik
+# (dissect first) and the structured redis.slowlog
 NO_BANK = {"osquery_result", "traefik_access", "kibana_log", "kibana_audit",
            "redis_slowlog"}
 
