@@ -3,7 +3,7 @@
 A from-scratch reimplementation of the query/data-processing capabilities of
 Elastic Beats (reference: mjwolf/beats, studied read-only) re-expressed in
 idiomatic Spark: DataFrame/SQL plans optimized by Catalyst, vectorized
-pandas/Arrow UDFs for pattern-bank parsing, broadcast hash joins for lookup
+pandas/Arrow UDFs for pattern-bank parsing, map-literal lookups for
 enrichment, and first-match-wins routing compiled to `coalesce(when(...))`
 chains.
 
@@ -13,10 +13,10 @@ Design notes (scale-first):
   columns make every operator vectorizable and codegen-able.
 - Conditions (libbeat/conditions/conditions.go:30-40) compile to Column
   predicates, so Catalyst pushes them into the parquet/Iceberg scan.
-- Parsing (dissect/grok) compiles once per pattern bank to anchored regexes
+- Parsing (dissect/grok) compiles once per pattern bank to one regex
   executed via pandas `str.extract` over Arrow batches — no per-row Python.
 - Routing (libbeat/outputs/outil/select.go) compiles to a `_sink` column;
-  fan-out writes one filtered slice per sink in a single cached pass.
+  fan-out writes every sink in one `partitionBy(_sink)` pass.
 """
 
 __version__ = "0.1.0"

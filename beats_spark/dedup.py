@@ -363,29 +363,33 @@ def _md5_token_hashes(flat: np.ndarray) -> np.ndarray:
     return vals[inv]
 
 
-def simhash_series(texts: pd.Series) -> pd.Series:
-    """64-bit simhash per text: sign of per-bit sum of token-hash bits.
-
-    Batch-vectorized: all tokens of the Arrow batch are flattened into one
-    array, md5-hashed per unique token (`_md5_token_hashes`), expanded to a
-    bit matrix, and segment-summed per document — per-UNIQUE-token Python
-    only, all per-occurrence work in numpy."""
+def _md5_votes(texts: pd.Series, dim: int) -> np.ndarray:
+    """(n_docs, dim) vote matrix: component j = Σ_tokens (+1 if bit j of
+    the token's md5 hash else -1). Batch-vectorized: all tokens of the
+    Arrow batch are flattened into one array, md5-hashed per unique token
+    (`_md5_token_hashes`), expanded to a bit matrix and segment-summed per
+    document — per-UNIQUE-token Python only, all per-occurrence work in
+    numpy. dim ≤ 64 uses the token hash's bits directly."""
+    assert dim <= 64
     tok_lists = texts.map(
         lambda t: str(t).lower().split() if t is not None else []
     )
     lengths = tok_lists.map(len).to_numpy()
-    n_docs = len(texts)
-    sig = np.zeros(n_docs, dtype=np.int64)
+    sums = np.zeros((len(texts), dim), dtype=np.int64)
     if lengths.sum() == 0:
-        return pd.Series(sig, index=texts.index)
+        return sums
     flat = np.concatenate([np.asarray(t, dtype=object) for t in tok_lists if t])
     hashes = _md5_token_hashes(flat)  # (N,) uint64, deterministic
-    bits = ((hashes[:, None] >> np.arange(64, dtype=np.uint64)[None, :])
-            & np.uint64(1)).astype(np.int32)  # (N, 64)
-    doc_ids = np.repeat(np.arange(n_docs), lengths)
-    sums = np.zeros((n_docs, 64), dtype=np.int64)
-    np.add.at(sums, doc_ids, bits)
-    votes = sums * 2 - lengths[:, None]
+    bits = ((hashes[:, None] >> np.arange(dim, dtype=np.uint64)[None, :])
+            & np.uint64(1)).astype(np.int64)  # (N, dim)
+    np.add.at(sums, np.repeat(np.arange(len(texts)), lengths), bits)
+    return sums * 2 - lengths[:, None]
+
+
+def simhash_series(texts: pd.Series) -> pd.Series:
+    """64-bit simhash per text: the signs of the 64-component vote vector
+    (`hash_embedding_series`) packed into one long."""
+    votes = _md5_votes(texts, 64)
     weights = (np.uint64(1) << np.arange(64, dtype=np.uint64))
     packed = ((votes > 0).astype(np.uint64) * weights[None, :]).sum(axis=1)
     return pd.Series(packed.astype(np.int64), index=texts.index)
@@ -590,191 +594,25 @@ def sentences_expr(text_col: str) -> Column:
                     lambda s: s != "")
 
 
-def span_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    span_sents: int = 3,
+def _first_occurrence_dedup(
+    df: DataFrame, id_col: str, k: int, units: Column, units_col: str,
+    count_col: str,
 ) -> DataFrame:
-    """C4 three-sentence-span global dedup (Raffel et al. 2020 §2.2: "we
-    discarded all but one of any three-sentence span occurring more than
-    once in the data set"). For every `span_sents`-sentence window that
-    occurs more than once corpus-wide, only the first occurrence (min
-    (doc_id, span_idx)) keeps its sentences; every other occurrence has its
-    covered sentences removed. Emits ``n_sentences``, ``n_removed`` and
-    ``deduped`` (kept sentences re-joined with single spaces — whitespace
-    is normalized, content is not).
-
-    Scale shape — the 100 TB property is that TEXT NEVER SHUFFLES:
-      1. span hashes are built map-side from the sentence array (one
-         xxhash64 per window — the 1-hash-per-element regime where an
-         in-array fold/transform beats explode, per doc_fingerprint's A/B);
-      2. the global first-occurrence resolution shuffles bare
-         (hash, doc_id, span_idx) triples — 24 bytes per span;
-      3. removed sentence indexes aggregate back to one short array per
-         AFFECTED doc and join the original frame BY ID — broadcast while
-         the affected-doc set fits (it's orders smaller than the corpus;
-         stats/AQE pick this automatically, the plan gate in test_plans
-         pins it at test scale), degrading to one by-id hash join — the
-         only exchange text can ever ride, and none of the span-resolution
-         shuffles;
-      4. the rebuild is an in-array filter against that index set.
-    Duplicate-span equality is on xxhash64 of the joined window, so a 64-bit
-    collision could remove a non-duplicate span (same accepted odds as
-    decontaminate); the oracle dedups on the span STRINGS and would catch
-    one as a hash mismatch.
-    """
-    k = span_sents
-    sents = sentences_expr(text_col)
-    base = df.withColumn("_sents", sents).withColumn(
-        "n_sentences", F.size("_sents")
-    )
-    span_hashes = F.when(
-        F.col("n_sentences") >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.col("n_sentences") - (k - 1)),
-            lambda i: F.xxhash64(
-                F.concat_ws(
-                    _SPAN_SEP,
-                    *[F.element_at(F.col("_sents"), i + off) for off in range(k)],
-                )
-            ),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-
-    occ = base.select(
-        F.col(id_col).alias("_id"), F.posexplode(span_hashes).alias("_pos0", "_h")
-    ).select("_id", (F.col("_pos0") + 1).alias("_span_idx"), "_h")
-
-    per_hash = occ.groupBy("_h").agg(
-        F.count("*").alias("_cnt"),
-        F.min(F.struct("_id", "_span_idx")).alias("_owner"),
-    )
-    dups = (
-        occ.join(per_hash.where(F.col("_cnt") > 1), "_h")
-        .where(
-            (F.col("_id") != F.col("_owner._id"))
-            | (F.col("_span_idx") != F.col("_owner._span_idx"))
-        )
-        .select("_id", "_span_idx")
-    )
-    removed = (
-        dups.select(
-            "_id",
-            F.explode(
-                F.sequence(F.col("_span_idx"), F.col("_span_idx") + (k - 1))
-            ).alias("_ridx"),
-        )
-        .groupBy("_id")
-        .agg(F.array_sort(F.collect_set("_ridx")).alias("_removed"))
-    )
-
-    out = base.join(
-        removed.withColumnRenamed("_id", id_col), id_col, "left"
-    )
-    kept = F.filter(
-        F.col("_sents"),
-        lambda s, i: ~F.coalesce(
-            F.array_contains(F.col("_removed"), i + 1), F.lit(False)
-        ),
-    )
-    return (
-        out.withColumn("n_removed", F.coalesce(F.size("_removed"), F.lit(0)))
-        .withColumn("deduped", F.array_join(kept, " "))
-        .drop("_sents", "_removed")
-    )
-
-
-def span_dedup_oracle(table: str = "documents", text_col: str = "text",
-                      id_col: str = "doc_id", span_sents: int = 3,
-                      where: str = "TRUE") -> str:
-    """DuckDB twin of span_dedup, deduping on span STRINGS (no hashing) —
-    an independent algorithm: window row_number for first-occurrence
-    instead of min-struct aggregation."""
-    k = span_sents
-    sents = (
-        f"list_filter(list_transform(regexp_extract_all({text_col},"
-        f" '{SENTENCE_RE}'), s -> trim(s)), s -> s != '')"
-    )
-    span = " || chr(31) || ".join(f"sents[i+{off}]" for off in range(k))
-    return f"""
-WITH base AS (
-  SELECT {id_col} AS _id, {sents} AS sents
-  FROM {table} WHERE {text_col} IS NOT NULL AND ({where})
-),
-occ AS (
-  SELECT _id, i AS span_idx, {span} AS span
-  FROM base, unnest(range(1, greatest(len(sents) - {k - 1}, 0) + 1)) AS t(i)
-),
-marked AS (
-  SELECT _id, span_idx,
-         row_number() OVER (PARTITION BY span ORDER BY _id, span_idx) AS rn,
-         count(*) OVER (PARTITION BY span) AS cnt
-  FROM occ
-),
-removed AS (
-  SELECT _id, list_sort(list_distinct(list(span_idx + off.o))) AS ridx
-  FROM marked, (SELECT unnest(range(0, {k})) AS o) off
-  WHERE cnt > 1 AND rn > 1
-  GROUP BY _id
-),
-joined AS (
-  SELECT b._id, b.sents, coalesce(r.ridx, []) AS ridx
-  FROM base b LEFT JOIN removed r USING (_id)
-)
-SELECT _id AS {id_col}, len(sents) AS n_sentences,
-       len(ridx) AS n_removed,
-       coalesce(array_to_string(
-         list_filter(list_transform(range(1, len(sents) + 1),
-                     i -> CASE WHEN NOT list_contains(ridx, i)
-                               THEN sents[i] END),
-                     x -> x IS NOT NULL), ' '), '') AS deduped
-FROM joined
-"""
-
-
-def exact_substr_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 50,
-) -> DataFrame:
-    """ExactSubstr dedup at token granularity (Lee et al. 2021,
-    "Deduplicating Training Data Makes Language Models Better" §4.1: remove
-    every duplicated substring of >= N tokens, keeping one occurrence).
-    span_dedup's token-level twin: any `window`-token span occurring more
-    than once corpus-wide keeps only its first occurrence (min (doc_id,
-    pos)); every other occurrence has its covered token positions removed.
-    Tokens are the module-wide whitespace tokenizer (trim+lower), so
-    duplicates that straddle sentence boundaries — invisible to the
-    sentence-window C4 pass — are caught. Emits ``n_tokens``,
-    ``n_removed`` and ``deduped`` (kept tokens re-joined with spaces).
-
-    Scale shape is identical to span_dedup (the 100 TB property is that
-    TEXT NEVER SHUFFLES): window hashes fold map-side from the token array
-    (one xxhash64 per position), the global first-occurrence resolution
-    shuffles bare (hash, id, pos) triples, removed positions aggregate to
-    one short array per AFFECTED doc and join back BY ID, and the rebuild
-    is an in-array filter. Reference analogue: the suffix-array ExactSubstr
-    tool is a separate Rust binary in the paper's repo; here the same
-    semantics ride the engine's own shuffle machinery. 64-bit window-hash
-    collisions could remove a non-duplicate span (same accepted odds as
-    span_dedup/decontaminate); the oracle dedups on the window STRINGS and
-    would surface one as a hash mismatch.
-    """
-    k = window
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    base = df.withColumn("_toks", toks).withColumn(
-        "n_tokens", F.size("_toks")
-    )
+    """The windowed first-occurrence dedup behind span_dedup (sentence
+    units) and exact_substr_dedup (token units). Every `k`-unit window is
+    hashed map-side (one xxhash64 per window); a window hash that occurs
+    more than once keeps only its first occurrence (min (id, pos)); every
+    other occurrence has its covered units removed. Emits `count_col`,
+    ``n_removed`` and ``deduped`` (kept units joined with single spaces)."""
+    base = df.withColumn(units_col, units).withColumn(count_col, F.size(units_col))
     win_hashes = F.when(
-        F.col("n_tokens") >= k,
+        F.col(count_col) >= k,
         F.transform(
-            F.sequence(F.lit(1), F.col("n_tokens") - (k - 1)),
+            F.sequence(F.lit(1), F.col(count_col) - (k - 1)),
             lambda i: F.xxhash64(
                 F.concat_ws(
                     _SPAN_SEP,
-                    *[F.element_at(F.col("_toks"), i + off) for off in range(k)],
+                    *[F.element_at(F.col(units_col), i + off) for off in range(k)],
                 )
             ),
         ),
@@ -811,7 +649,7 @@ def exact_substr_dedup(
         removed.withColumnRenamed("_id", id_col), id_col, "left"
     )
     kept = F.filter(
-        F.col("_toks"),
+        F.col(units_col),
         lambda s, i: ~F.coalesce(
             F.array_contains(F.col("_removed"), i + 1), F.lit(False)
         ),
@@ -819,28 +657,65 @@ def exact_substr_dedup(
     return (
         out.withColumn("n_removed", F.coalesce(F.size("_removed"), F.lit(0)))
         .withColumn("deduped", F.array_join(kept, " "))
-        .drop("_toks", "_removed")
+        .drop(units_col, "_removed")
     )
 
 
-def exact_substr_dedup_oracle(table: str = "documents",
-                              text_col: str = "text",
-                              id_col: str = "doc_id",
-                              window: int = 50) -> str:
-    """DuckDB twin of exact_substr_dedup, deduping on token-window STRINGS
-    (no hashing) — an independent algorithm: window row_number for
-    first-occurrence instead of min-struct aggregation."""
-    k = window
-    toks = f"regexp_split_to_array(trim(lower({text_col})), '\\s+')"
-    span = " || chr(31) || ".join(f"toks[i+{off}]" for off in range(k))
+def span_dedup(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    span_sents: int = 3,
+) -> DataFrame:
+    """C4 three-sentence-span global dedup (Raffel et al. 2020 §2.2: "we
+    discarded all but one of any three-sentence span occurring more than
+    once in the data set"). For every `span_sents`-sentence window that
+    occurs more than once corpus-wide, only the first occurrence (min
+    (doc_id, span_idx)) keeps its sentences; every other occurrence has its
+    covered sentences removed. Emits ``n_sentences``, ``n_removed`` and
+    ``deduped`` (kept sentences re-joined with single spaces — whitespace
+    is normalized, content is not).
+
+    Scale shape — the 100 TB property is that TEXT NEVER SHUFFLES:
+      1. span hashes are built map-side from the sentence array (one
+         xxhash64 per window — the 1-hash-per-element regime where an
+         in-array fold/transform beats explode, per doc_fingerprint's A/B);
+      2. the global first-occurrence resolution shuffles bare
+         (hash, doc_id, span_idx) triples — 24 bytes per span;
+      3. removed sentence indexes aggregate back to one short array per
+         AFFECTED doc and join the original frame BY ID — broadcast while
+         the affected-doc set fits (it's orders smaller than the corpus;
+         stats/AQE pick this automatically, the plan gate in test_plans
+         pins it at test scale), degrading to one by-id hash join — the
+         only exchange text can ever ride, and none of the span-resolution
+         shuffles;
+      4. the rebuild is an in-array filter against that index set.
+    Duplicate-span equality is on xxhash64 of the joined window, so a 64-bit
+    collision could remove a non-duplicate span (same accepted odds as
+    decontaminate); the oracle dedups on the span STRINGS and would catch
+    one as a hash mismatch.
+    """
+    return _first_occurrence_dedup(
+        df, id_col, span_sents, sentences_expr(text_col), "_sents", "n_sentences"
+    )
+
+
+def _first_occurrence_dedup_oracle(table: str, text_col: str, id_col: str,
+                                   k: int, units: str, count_col: str,
+                                   where: str = "TRUE") -> str:
+    """DuckDB twin of _first_occurrence_dedup over the unit list SQL
+    `units`, deduping on window STRINGS (no hashing) — an independent
+    algorithm: window row_number for first-occurrence instead of
+    min-struct aggregation."""
+    win = " || chr(31) || ".join(f"units[i+{off}]" for off in range(k))
     return f"""
 WITH base AS (
-  SELECT {id_col} AS _id, {toks} AS toks
-  FROM {table} WHERE {text_col} IS NOT NULL
+  SELECT {id_col} AS _id, {units} AS units
+  FROM {table} WHERE {text_col} IS NOT NULL AND ({where})
 ),
 occ AS (
-  SELECT _id, i AS pos, {span} AS win
-  FROM base, unnest(range(1, greatest(len(toks) - {k - 1}, 0) + 1)) AS t(i)
+  SELECT _id, i AS pos, {win} AS win
+  FROM base, unnest(range(1, greatest(len(units) - {k - 1}, 0) + 1)) AS t(i)
 ),
 marked AS (
   SELECT _id, pos,
@@ -855,18 +730,74 @@ removed AS (
   GROUP BY _id
 ),
 joined AS (
-  SELECT b._id, b.toks, coalesce(r.ridx, []) AS ridx
+  SELECT b._id, b.units, coalesce(r.ridx, []) AS ridx
   FROM base b LEFT JOIN removed r USING (_id)
 )
-SELECT _id AS {id_col}, len(toks) AS n_tokens,
+SELECT _id AS {id_col}, len(units) AS {count_col},
        len(ridx) AS n_removed,
        coalesce(array_to_string(
-         list_filter(list_transform(range(1, len(toks) + 1),
+         list_filter(list_transform(range(1, len(units) + 1),
                      i -> CASE WHEN NOT list_contains(ridx, i)
-                               THEN toks[i] END),
+                               THEN units[i] END),
                      x -> x IS NOT NULL), ' '), '') AS deduped
 FROM joined
 """
+
+
+def span_dedup_oracle(table: str = "documents", text_col: str = "text",
+                      id_col: str = "doc_id", span_sents: int = 3,
+                      where: str = "TRUE") -> str:
+    """DuckDB twin of span_dedup, deduping on span STRINGS (no hashing)."""
+    sents = (
+        f"list_filter(list_transform(regexp_extract_all({text_col},"
+        f" '{SENTENCE_RE}'), s -> trim(s)), s -> s != '')"
+    )
+    return _first_occurrence_dedup_oracle(table, text_col, id_col, span_sents,
+                                          sents, "n_sentences", where)
+
+
+def exact_substr_dedup(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    window: int = 50,
+) -> DataFrame:
+    """ExactSubstr dedup at token granularity (Lee et al. 2021,
+    "Deduplicating Training Data Makes Language Models Better" §4.1: remove
+    every duplicated substring of >= N tokens, keeping one occurrence).
+    span_dedup's token-level twin: any `window`-token span occurring more
+    than once corpus-wide keeps only its first occurrence (min (doc_id,
+    pos)); every other occurrence has its covered token positions removed.
+    Tokens are the module-wide whitespace tokenizer (trim+lower), so
+    duplicates that straddle sentence boundaries — invisible to the
+    sentence-window C4 pass — are caught. Emits ``n_tokens``,
+    ``n_removed`` and ``deduped`` (kept tokens re-joined with spaces).
+
+    Scale shape is identical to span_dedup (the 100 TB property is that
+    TEXT NEVER SHUFFLES): window hashes fold map-side from the token array
+    (one xxhash64 per position), the global first-occurrence resolution
+    shuffles bare (hash, id, pos) triples, removed positions aggregate to
+    one short array per AFFECTED doc and join back BY ID, and the rebuild
+    is an in-array filter. Reference analogue: the suffix-array ExactSubstr
+    tool is a separate Rust binary in the paper's repo; here the same
+    semantics ride the engine's own shuffle machinery. 64-bit window-hash
+    collisions could remove a non-duplicate span (same accepted odds as
+    span_dedup/decontaminate); the oracle dedups on the window STRINGS and
+    would surface one as a hash mismatch.
+    """
+    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    return _first_occurrence_dedup(df, id_col, window, toks, "_toks", "n_tokens")
+
+
+def exact_substr_dedup_oracle(table: str = "documents",
+                              text_col: str = "text",
+                              id_col: str = "doc_id",
+                              window: int = 50) -> str:
+    """DuckDB twin of exact_substr_dedup, deduping on token-window STRINGS
+    (no hashing)."""
+    toks = f"regexp_split_to_array(trim(lower({text_col})), '\\s+')"
+    return _first_occurrence_dedup_oracle(table, text_col, id_col, window,
+                                          toks, "n_tokens")
 
 
 # -- Bloom-filter decontamination ----------------------------------------------
@@ -1192,27 +1123,10 @@ def hash_embedding_series(texts: pd.Series, dim: int = 64) -> pd.Series:
     """Model-free deterministic document embedding by feature hashing
     (Weinberger et al. 2009's hashing trick with ±1 signs): component j =
     Σ_tokens (+1 if bit j of md5(token) else -1) — exactly the simhash
-    vote vector BEFORE sign compression, kept dense so it can feed the
-    ANN/SemDeDup stack when no learned model is available. Same
-    batch-vectorized kernel as simhash_series (md5 once per UNIQUE token,
-    numpy segment sums); dim ≤ 64 uses the token hash's bits directly."""
-    assert dim <= 64
-    tok_lists = texts.map(
-        lambda t: str(t).lower().split() if t is not None else []
-    )
-    lengths = tok_lists.map(len).to_numpy()
-    n_docs = len(texts)
-    if lengths.sum() == 0:
-        return pd.Series([[0] * dim] * n_docs, index=texts.index)
-    flat = np.concatenate([np.asarray(t, dtype=object) for t in tok_lists if t])
-    hashes = _md5_token_hashes(flat)
-    bits = ((hashes[:, None] >> np.arange(dim, dtype=np.uint64)[None, :])
-            & np.uint64(1)).astype(np.int64)  # (N, dim)
-    doc_ids = np.repeat(np.arange(n_docs), lengths)
-    sums = np.zeros((n_docs, dim), dtype=np.int64)
-    np.add.at(sums, doc_ids, bits)
-    votes = sums * 2 - lengths[:, None]
-    return pd.Series(list(votes), index=texts.index)
+    vote vector BEFORE sign compression (`_md5_votes`, the kernel both
+    share), kept dense so it can feed the ANN/SemDeDup stack when no
+    learned model is available."""
+    return pd.Series(list(_md5_votes(texts, dim)), index=texts.index)
 
 
 def hash_embedding(

@@ -306,7 +306,8 @@ def _convert_scalar(v, dtype: str | None):
         return v
     try:
         if dtype in ("integer", "long"):
-            return int(v, 0)  # base-10 or 0x-hex, like strToInt
+            n = int(v, 0)  # base-10 or 0x-hex, like strToInt
+            return n if -(2**63) <= n < 2**63 else None
         if dtype in ("float", "double"):
             return float(v)
         if dtype == "boolean":
@@ -325,6 +326,12 @@ def _convert_scalar(v, dtype: str | None):
     return v
 
 
+def _int64_or_none(v):
+    if v is None or v != v or v % 1:  # None, NaN, non-integral
+        return None
+    return int(v) if -(2**63) <= v < 2**63 else None
+
+
 def _convert_series(col: pd.Series, dtype: str | None) -> pd.Series:
     if dtype in (None, "string"):
         return col
@@ -340,7 +347,13 @@ def _convert_series(col: pd.Series, dtype: str | None) -> pd.Series:
             if hexmask.any():
                 base = base.astype("object")
                 base[hexmask] = col[hexmask].map(lambda x: _convert_scalar(x, "long"))
-        return pd.Series(base, index=col.index).astype("Int64")
+        base = pd.Series(base, index=col.index)
+        try:
+            return base.astype("Int64")
+        except (TypeError, ValueError, OverflowError):
+            # a non-integral or out-of-int64 value becomes NULL, as in
+            # _convert_scalar, instead of failing the whole batch
+            return base.map(_int64_or_none).astype("Int64")
     if dtype in ("float", "double"):
         return pd.to_numeric(col, errors="coerce").astype("float64")
     if dtype == "boolean":

@@ -2,12 +2,13 @@
 
 Beats ships grok patterns inside filebeat module ingest pipelines which
 Elasticsearch executes (e.g. reference
-/root/reference/filebeat/module/apache/access/ingest/pipeline.yml:10-18:
-a list of alternative grok expressions tried in order). We re-express that
-as a compiler: each `%{SYNTAX:semantic:type}` expression expands recursively
-against a pattern bank into ONE Python regex with named groups, executed
-vectorized with `pandas.Series.str.extract`; a bank of alternatives is
-coalesced first-match-wins, exactly like the ingest processor's pattern list.
+filebeat/module/apache/access/ingest/pipeline.yml:10-18: a list of
+alternative grok expressions tried in order, the first that matches wins).
+We re-express that as a compiler: each `%{SYNTAX:semantic:type}` expression
+expands recursively against a pattern bank into a Python regex with named
+groups, and a bank of alternatives compiles to ONE first-match-wins regex
+executed vectorized with `pandas.Series.str.extract`. The scalar
+`Grok.grok` (one `re.search` per pattern) is the reference it must match.
 
 The builtin pattern table below is written from the publicly documented
 grok pattern semantics (logstash-patterns-core is Apache-2.0 public
@@ -21,7 +22,7 @@ import re
 
 import pandas as pd
 
-from beats_spark.dissect import _convert_series  # shared convert lattice
+from beats_spark.dissect import _convert_scalar, _convert_series  # shared convert lattice
 
 # Builtin grok patterns (public grok semantics; subset + extensible).
 BUILTIN_PATTERNS: dict[str, str] = {
@@ -148,12 +149,28 @@ BUILTIN_PATTERNS: dict[str, str] = {
 
 _GROK_REF = re.compile(r"%\{(\w+)(?::([\w.@\[\]]+))?(?::(\w+))?\}")
 
+# one regex token: an escape, a character class or a single character
+_TOKEN = re.compile(r"\\.|\[\^?\]?(?:\\.|[^\]\\])*\]|.", re.S)
+_BACKREF = re.compile(r"\\[1-9]")
+_GLOBAL_FLAGS = re.compile(r"\(\?([aiLmsux]+)\)")
+
 _TYPE_MAP = {"int": "integer", "long": "long", "float": "float",
              "double": "double", "boolean": "boolean", "string": "string"}
 
 
 class GrokError(ValueError):
     pass
+
+
+def _top_level(pat: str) -> list[str]:
+    """The tokens of regex `pat` outside any group."""
+    depth, out = 0, []
+    for t in _TOKEN.findall(pat):
+        depth -= t == ")"
+        if depth == 0:
+            out.append(t)
+        depth += t == "("
+    return out
 
 
 class Grok:
@@ -172,6 +189,9 @@ class Grok:
         self.fields: list[tuple[str, str]] = []  # (output name, convert type)
         self._group_names: list[str] = []
         compiled = self._expand(expr, depth=max_depth)
+        # a bank renumbers groups, so `\1` would point elsewhere there
+        if any(_BACKREF.fullmatch(t) for t in _TOKEN.findall(compiled)):
+            raise GrokError(f"grok expression {expr!r} has a numbered backreference")
         try:
             self.pattern = re.compile(compiled)
         except re.error as e:
@@ -195,14 +215,6 @@ class Grok:
 
         return _GROK_REF.sub(repl, expr)
 
-    @property
-    def output_keys(self) -> list[str]:
-        seen: list[str] = []
-        for name, _ in self.fields:
-            if name not in seen:
-                seen.append(name)
-        return seen
-
     def grok(self, s: str | None) -> dict | None:
         """Scalar reference implementation (search semantics, like ingest grok)."""
         if s is None:
@@ -212,11 +224,7 @@ class Grok:
             return None
         out = {}
         for (name, dtype), gname in zip(self.fields, self._group_names):
-            v = m.group(gname)
-            if dtype != "string" and v is not None:
-                from beats_spark.dissect import _convert_scalar
-
-                v = _convert_scalar(v, dtype)
+            v = _convert_scalar(m.group(gname), dtype)
             # a semantic may appear in several alternation branches (e.g.
             # HTTPD_ERRORLOG): first captured occurrence wins, a later
             # branch's empty group must not null it out
@@ -224,78 +232,54 @@ class Grok:
                 out[name] = v
         return out
 
-    def grok_frame(self, s: pd.Series) -> pd.DataFrame:
-        """Vectorized extraction; unmatched rows are all-NaN."""
-        if not self.fields:
-            # capture-less pattern (e.g. a bare %{GREEDYDATA} catch-all):
-            # nothing to extract — the bank computes the match flag itself
-            return pd.DataFrame(index=s.index)
-        ext = s.astype("object").str.extract(self.pattern, expand=True)
-        out = pd.DataFrame(index=s.index)
-        for (name, dtype), gname in zip(self.fields, self._group_names):
-            col = ext[gname]
-            conv = _convert_series(col, dtype) if dtype != "string" else col
-            # duplicate semantics across alternation branches coalesce
-            out[name] = (
-                conv if name not in out.columns else out[name].combine_first(conv)
-            )
-        return out
-
 
 class GrokBank:
     """Ordered list of alternative grok expressions — first match wins
-    (≅ the `patterns:` list of an ingest grok processor)."""
+    (≅ the `patterns:` list of an ingest grok processor).
+
+    The bank compiles to ONE regex, `^(?:alt_0|alt_1|...)`, run in a single
+    vectorized pass. `re` tries the alternatives in order at offset 0 only,
+    so each alternative gives its pattern `re.search` semantics itself: a
+    start-anchored pattern (leading `^`, no top-level `|`) is used as it
+    is, any other gets a lazy `(?s:.*?)` prefix, so the engine tries it at
+    every offset before the next pattern. A leading global flag such as
+    `(?m)` becomes a scoped group (a global flag must start the whole
+    regex). Each alternative carries an empty marker group `p{i}m`, so we
+    know which pattern matched a row; its `g*` groups become `p{i}_g*`."""
 
     def __init__(self, exprs: list[str], pattern_definitions: dict[str, str] | None = None):
         if not exprs:
             raise GrokError("empty grok pattern list")
         self.groks = [Grok(e, pattern_definitions) for e in exprs]
-        # union of output keys, first-appearance order
-        keys: list[str] = []
-        types: dict[str, str] = {}
+        # union of output keys, first-appearance order and type
+        self.key_types: dict[str, str] = {}
         for g in self.groks:
             for name, dtype in g.fields:
-                if name not in keys:
-                    keys.append(name)
-                    types[name] = dtype
-        self.output_keys = keys
-        self.key_types = types
-        self._build_combined()
-
-    def _build_combined(self) -> None:
-        """Fast path: ONE alternation regex over the whole bank — a single
-        vectorized pass instead of one per pattern (measured ~1.8×).
-
-        Only valid when every pattern is start-anchored: `re` alternation
-        prefers the earliest match POSITION over alternative order, so
-        unanchored patterns could violate the bank's first-match-wins
-        priority. Each alternative carries an empty sentinel group so we
-        know which pattern matched a row."""
-        self._combined = None
-        if not all(g.pattern.pattern.startswith("^") for g in self.groks):
-            return
+                self.key_types.setdefault(name, dtype)
+        self.output_keys = list(self.key_types)
         parts = []
         for i, g in enumerate(self.groks):
             pat = re.sub(r"\(\?P<(g\d+)>", rf"(?P<p{i}_\1>", g.pattern.pattern)
             pat = re.sub(r"\(\?P=(g\d+)", rf"(?P=p{i}_\1", pat)
-            parts.append(f"(?:(?P<p{i}m>){pat})")
+            flags = _GLOBAL_FLAGS.match(pat)
+            if flags:
+                pat = f"(?s:.*?)(?{flags[1]}:{pat[flags.end():]})"
+            elif not pat.startswith("^") or "|" in _top_level(pat):
+                pat = f"(?s:.*?)(?:{pat})"
+            parts.append(f"(?P<p{i}m>){pat}")
         try:
-            self._combined = re.compile("|".join(parts))
-        except re.error:
-            self._combined = None  # group-count limits etc. → sequential path
+            self.pattern = re.compile(f"^(?:{'|'.join(parts)})")
+        except re.error as e:
+            raise GrokError(f"grok bank compiled to bad regex: {e}")
 
     def grok_frame(self, s: pd.Series) -> pd.DataFrame:
-        if self._combined is not None:
-            return self._grok_frame_combined(s)
-        return self._grok_frame_sequential(s)
-
-    def _grok_frame_combined(self, s: pd.Series) -> pd.DataFrame:
-        ext = s.astype("object").str.extract(self._combined, expand=True)
-        from beats_spark.dissect import _convert_series
-
-        # an unmatched alternative's groups are already NaN, so per field a
-        # plain column take suffices; fields owned by several patterns
-        # coalesce in priority order (a row matches exactly one alternative)
+        """Vectorized extraction in one `str.extract` pass; unmatched rows
+        are all-NaN with `_grok_matched` False."""
+        ext = s.astype("object").str.extract(self.pattern, expand=True)
+        # an unmatched alternative's groups are NaN, so per field a plain
+        # column take suffices; a field several patterns own coalesces in
+        # priority order (a row matches exactly one alternative) and is
+        # converted once, with its first-appearance type
         cols: dict[str, pd.Series] = {}
         for i, g in enumerate(self.groks):
             for (name, _), gname in zip(g.fields, g._group_names):
@@ -303,49 +287,8 @@ class GrokBank:
                 cols[name] = c if name not in cols else cols[name].combine_first(c)
         out = pd.DataFrame(index=s.index)
         for name in self.output_keys:
-            dtype = self.key_types[name]
-            col = cols[name]
-            out[name] = _convert_series(col, dtype) if dtype != "string" else col
+            out[name] = _convert_series(cols[name], self.key_types[name])
         out["_grok_matched"] = (
             ext[[f"p{i}m" for i in range(len(self.groks))]].notna().any(axis=1)
         )
-        return out
-
-    def _grok_frame_sequential(self, s: pd.Series) -> pd.DataFrame:
-        out: pd.DataFrame | None = None
-        matched = pd.Series(False, index=s.index)
-        for g in self.groks:
-            todo = ~matched
-            if not todo.any():
-                break
-            sub = g.grok_frame(s[todo])
-            # a matched row has every mandatory group captured (possibly as
-            # ''), so extract output already tells us who matched; only the
-            # leftover rows (all-optional-group corner) re-run the regex
-            if len(sub.columns):
-                sub_matched = sub.notna().any(axis=1)
-                rest = ~sub_matched
-                if rest.any():
-                    import warnings
-
-                    with warnings.catch_warnings():
-                        warnings.simplefilter("ignore", UserWarning)
-                        sub_matched[rest] = (
-                            s[todo][rest].str.contains(g.pattern, na=False)
-                        )
-            else:
-                import warnings
-
-                with warnings.catch_warnings():
-                    warnings.simplefilter("ignore", UserWarning)
-                    sub_matched = s[todo].str.contains(g.pattern, na=False)
-            if out is None:
-                out = pd.DataFrame(index=s.index, columns=self.output_keys, dtype="object")
-            hit = sub_matched[sub_matched].index
-            for k in g.output_keys:
-                out.loc[hit, k] = sub.loc[hit, k]
-            matched.loc[hit] = True
-        if out is None:
-            out = pd.DataFrame(index=s.index, columns=self.output_keys, dtype="object")
-        out["_grok_matched"] = matched
         return out

@@ -26,9 +26,9 @@ date parse by layout goes through `operators.parse.parse_timestamp`, the
 function the `timestamp` processor compiles to; pensando.dfw's format-less
 ISO cast is the one `try_to_timestamp` left here.
 
-Scale shape: the grok bank is one vectorized pandas UDF (the module regexes
-are unanchored, so the bank runs the sequential first-match-wins path);
-every post-step is a pure Column expression fused by codegen. No joins, no
+Scale shape: the grok bank is one vectorized pandas UDF running the whole
+bank as one first-match-wins regex (grok.GrokBank); every post-step is a
+pure Column expression fused by codegen. No joins, no
 shuffles — a module pipeline is a projection, embarrassingly parallel over
 any partitioning.
 """

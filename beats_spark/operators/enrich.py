@@ -450,15 +450,6 @@ def add_network_direction(
     )
 
 
-def now(df: DataFrame, target: str, fixed_ts: str | None = None) -> DataFrame:
-    """Set field to current time (now/now.go:40). Pass fixed_ts for
-    deterministic/replayable pipelines (the default in this engine)."""
-    return df.withColumn(
-        target,
-        F.lit(fixed_ts).cast("timestamp") if fixed_ts else F.current_timestamp(),
-    )
-
-
 def add_data_stream(
     df: DataFrame,
     ds_type: str = "logs",

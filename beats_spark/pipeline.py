@@ -16,7 +16,7 @@ from beats_spark.data import lookups as L
 from beats_spark.data.transcripts import load_transcripts
 from beats_spark.operators import enrich as E
 from beats_spark.operators import parse as P
-from beats_spark.routing import route
+from beats_spark.routing import DEAD_LETTER, route
 
 # The grok bank for the three transcript text templates
 # (beats_spark/data/transcripts.py). First match wins.
@@ -36,7 +36,7 @@ TRANSCRIPT_PATTERNS = [
 # Routing rules (first-match-wins; SURVEY.md §2.7). The corrupt→deadletter
 # rule implements the dead-letter route (elasticsearch/client.go:490-543).
 ROUTING_RULES = [
-    {"when": {"contains": {"text": "!!corrupt"}}, "key": "deadletter"},
+    {"when": {"contains": {"text": "!!corrupt"}}, "key": DEAD_LETTER},
     {"when": {"equals": {"role": "tool"}}, "key": "sink-tools"},
     {"when": {"regexp": {"text": '(level=ERROR|" 500 )'}}, "key": "sink-errors"},
     {"key": "events-%{[role]}"},

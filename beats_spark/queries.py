@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from beats_spark.conditions import condition_sql, sql_str
 from beats_spark.data import lookups as L
 from beats_spark.data.transcripts import load_transcripts, oracle_cte
-from beats_spark.grok import Grok
+from beats_spark.grok import Grok, GrokBank
 from beats_spark.operators import enrich as E
 from beats_spark.operators import filter as FL
 from beats_spark.pipeline import (
@@ -46,7 +46,7 @@ from beats_spark.pipeline import (
     parse_stage,
     sink_aggregates,
 )
-from beats_spark.routing import selector_sql
+from beats_spark.routing import DEAD_LETTER, selector_sql
 from beats_spark.scale import widen_scan
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -550,7 +550,7 @@ def q_syslog_parse(spark, sf_dir):
     out = syslog(lines, field="line", target_prefix="s")
     # compare the RFC-5424 field set (the bank's union schema also carries
     # RFC-3164-only keys like process_pid, null here)
-    names = [n for n in Grok(RFC5424_PATTERN).output_keys if n != "ts_raw"]
+    names = [n for n in GrokBank([RFC5424_PATTERN]).output_keys if n != "ts_raw"]
     return out.select(
         *[F.col(f"s.{n}").alias(n) for n in names],
         (F.col("s.log_syslog_priority") / 8).cast("int").alias("facility"),
@@ -4273,7 +4273,7 @@ def q_stage_metrics(spark, sf_dir):
     routed = m.observe(
         route_stage(enrich_stage(parsed)),
         "route",
-        n_dead=F.sum(F.when(F.col("_sink") == "deadletter", 1).otherwise(0)),
+        n_dead=F.sum(F.when(F.col("_sink") == DEAD_LETTER, 1).otherwise(0)),
     )
     routed.count()  # ONE action drives all three fused observations
     rows = [

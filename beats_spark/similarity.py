@@ -160,29 +160,6 @@ def _planes(dim: int, n_planes: int, seed: int = 7) -> np.ndarray:
     return rng.standard_normal((dim, n_planes)).astype(np.float64)
 
 
-def lsh_signatures(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 16,
-    vec_col: str = "embedding",
-    target: str = "lsh_sig",
-    seed: int = 7,
-) -> DataFrame:
-    """Random-hyperplane signature as a long — one numpy matmul per Arrow
-    batch (vectorized; the plane matrix is captured in the UDF closure and
-    shipped once per executor)."""
-    planes = _planes(dim, n_planes, seed)
-    weights = (1 << np.arange(n_planes, dtype=np.uint64)).astype(np.uint64)
-
-    @F.pandas_udf(T.LongType())
-    def sig(s: pd.Series) -> pd.Series:
-        mat = np.stack(s.values).astype(np.float64)  # (batch, dim)
-        bits = (mat @ planes) > 0  # (batch, n_planes)
-        return pd.Series((bits.astype(np.uint64) @ weights).astype(np.int64))
-
-    return df.withColumn(target, sig(F.col(vec_col)))
-
-
 def lsh_signatures_all(
     df: DataFrame,
     dim: int,
@@ -193,9 +170,8 @@ def lsh_signatures_all(
     seed_base: int = 11,
 ) -> DataFrame:
     """All n_tables hyperplane signatures in ONE Arrow pass: the per-table
-    plane matrices (seeds seed_base + t — bit-identical to calling
-    lsh_signatures per table) stack into a single (dim, T·P) matmul and
-    pack into an array<long> of per-table signatures."""
+    plane matrices (seeds seed_base + t) stack into a single (dim, T·P)
+    matmul and pack into an array<long> of per-table signatures."""
     stacked = np.concatenate(
         [_planes(dim, n_planes, seed_base + t) for t in range(n_tables)],
         axis=1,

@@ -46,6 +46,7 @@ def main(argv: list[str] | None = None) -> int:
         parse_stage,
         route_stage,
     )
+    from beats_spark.routing import DEAD_LETTER
     from beats_spark.scale import repartition_salted
     from beats_spark.session import get_spark
 
@@ -60,7 +61,7 @@ def main(argv: list[str] | None = None) -> int:
         enriched = repartition_salted(enriched, "conv_id", args.salt_buckets)
     routed = m.observe(
         route_stage(enriched), "route",
-        deadletter=F.sum(F.when(F.col("_sink") == "deadletter", 1).otherwise(0)),
+        deadletter=F.sum(F.when(F.col("_sink") == DEAD_LETTER, 1).otherwise(0)),
     )
 
     manifest = checkpointed_fan_out(
