@@ -38,6 +38,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from beats_spark.operators.parse import convert_col
+
 _RANGE_OPS = ("gte", "gt", "lte", "lt")
 
 # IPv4 named networks (reference network.go:117-140 covers the Go stdlib
@@ -49,8 +51,6 @@ _NAMED_NETWORKS: dict[str, list[str]] = {
     "link_local_unicast": ["169.254.0.0/16"],
     "unspecified": ["0.0.0.0/32"],
 }
-
-_IPV4_RE = r"^\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}$"
 
 
 class ConditionError(ValueError):
@@ -247,7 +247,8 @@ def _ipv4_int_col(col: Column) -> Column:
         + o.getItem(2).cast("long") * 256
         + o.getItem(3).cast("long")
     )
-    return F.when(col.rlike(_IPV4_RE), as_int)
+    # the convert lattice's ip literals; the IPv6 ones all hold a colon
+    return F.when(convert_col(col, "ip").isNotNull() & ~col.contains(":"), as_int)
 
 
 def _cidr_bounds(cidr: str) -> tuple[int, int]:

@@ -25,6 +25,10 @@ Supported key modifiers (const.go:31-52):
     %{key#4}      fixed length capture
     %{key|long}   type conversion (string,long,integer,float,double,boolean,ip)
 
+Type conversion is the convert lattice (grok.CONVERT_SYNTAX): the scalar
+path applies `_convert_scalar`; the vectorized path returns raw string
+captures and the Spark operator casts them with `operators.parse.convert_col`.
+
 Failure semantics: any non-matching line yields None (scalar) / all-NaN row
 (vectorized); the Spark operator layers the `dissect_parsing_error` flag on
 top (processor.go:95-105).
@@ -49,15 +53,14 @@ from dataclasses import dataclass, field as dc_field
 import numpy as np
 import pandas as pd
 
-VALID_TYPES = {"string", "long", "integer", "float", "double", "boolean", "ip"}
+from beats_spark.grok import CONVERT_SYNTAX, _convert_scalar
+
+VALID_TYPES = {"string", *CONVERT_SYNTAX}
 
 _TOKEN_RE = re.compile(r"(?s)(.*?)%\{([^}]*?)\}")
 _SUFFIX_RE = re.compile(
     r"(?s)^(.*?)(?:/(\d{1,2}))?(?:#(\d{1,2}))?(->)?(?:\|([A-Za-z]*))?$"
 )
-
-_IPV4_RE = re.compile(r"^\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}$")
-_IPV6_RE = re.compile(r"^[0-9A-Fa-f:.]+$")
 
 
 class DissectError(ValueError):
@@ -203,6 +206,13 @@ class Dissector:
     # -- scalar reference implementation (used by tests & corpus) ------------
 
     def dissect(self, s: str | None) -> dict | None:
+        got = self.captures(s)
+        if got is None:
+            return None
+        return {k: _convert_scalar(v, t) for k, (v, t) in got.items()}
+
+    def captures(self, s: str | None) -> dict[str, tuple[str, str | None]] | None:
+        """Each output key's raw string capture with its convert type."""
         if not s:
             return None
         m = self.pattern.match(s)
@@ -239,8 +249,7 @@ class Dissector:
             if f.kind in ("pointer", "skip") and f.name:
                 out.pop(f.name, None)
         return {
-            k: _convert_scalar(v, dyn_types.get(k, self.key_types.get(k)))
-            for k, v in out.items()
+            k: (v, dyn_types.get(k, self.key_types.get(k))) for k, v in out.items()
         }
 
     def _trim(self, v: str) -> str:
@@ -257,15 +266,17 @@ class Dissector:
     def dissect_frame(self, s: pd.Series) -> pd.DataFrame:
         """Vectorized extraction: one `str.extract` per batch, column ops after.
 
-        Returns a DataFrame with one column per static key (typed per |type);
-        unmatched / null input rows are all-NaN. Dynamic (pointer/indirect)
-        tokenizers fall back to the scalar path within the batch.
+        Returns a DataFrame with one raw string capture column per static
+        key (its |type is `key_types[key]`); unmatched / null input rows are
+        all-NaN. Dynamic (pointer/indirect) tokenizers fall back to the
+        scalar path within the batch.
         """
         s = s.astype("object").where(s.notna(), None)
         if self.dynamic:
-            rows = [self.dissect(v) for v in s]
+            rows = [self.captures(v) for v in s]
             return pd.DataFrame(
-                {k: [None if r is None else r.get(k) for r in rows] for k in self.static_keys},
+                {k: [r[k][0] if r and k in r else None for r in rows]
+                 for k in self.static_keys},
                 index=s.index,
             )
         ext = s.str.extract(self.pattern, expand=True)
@@ -293,78 +304,5 @@ class Dissector:
                 col = ext[groups[0][0]].astype("object")
                 for g, join in groups[1:]:
                     col = col + join + ext[g].astype("object")
-            col = col.where(matched, None)
-            out[key] = _convert_series(col, self.key_types.get(key))
+            out[key] = col.where(matched, None)
         return out
-
-
-# -- type conversion (convert lattice: dissect.go:249-285) --------------------
-
-
-def _convert_scalar(v, dtype: str | None):
-    if v is None or dtype in (None, "string"):
-        return v
-    try:
-        if dtype in ("integer", "long"):
-            n = int(v, 0)  # base-10 or 0x-hex, like strToInt
-            return n if -(2**63) <= n < 2**63 else None
-        if dtype in ("float", "double"):
-            return float(v)
-        if dtype == "boolean":
-            lv = str(v).lower()
-            if lv in ("1", "t", "true"):
-                return True
-            if lv in ("0", "f", "false"):
-                return False
-            return None
-        if dtype == "ip":
-            if _IPV4_RE.match(v) or (":" in v and _IPV6_RE.match(v)):
-                return v
-            return None
-    except (ValueError, TypeError):
-        return None
-    return v
-
-
-def _int64_or_none(v):
-    if v is None or v != v or v % 1:  # None, NaN, non-integral
-        return None
-    return int(v) if -(2**63) <= v < 2**63 else None
-
-
-def _convert_series(col: pd.Series, dtype: str | None) -> pd.Series:
-    if dtype in (None, "string"):
-        return col
-    if dtype in ("integer", "long"):
-        base = pd.to_numeric(col, errors="coerce")
-        # hex literals fail to_numeric; only re-inspect those failures
-        # instead of regex-scanning the whole column (hot-path cost)
-        miss = base.isna() & col.notna()
-        if miss.any():
-            hexmask = miss & col[miss].reindex(col.index).str.match(
-                r"^[+-]?0[xX]", na=False
-            )
-            if hexmask.any():
-                base = base.astype("object")
-                base[hexmask] = col[hexmask].map(lambda x: _convert_scalar(x, "long"))
-        base = pd.Series(base, index=col.index)
-        try:
-            return base.astype("Int64")
-        except (TypeError, ValueError, OverflowError):
-            # a non-integral or out-of-int64 value becomes NULL, as in
-            # _convert_scalar, instead of failing the whole batch
-            return base.map(_int64_or_none).astype("Int64")
-    if dtype in ("float", "double"):
-        return pd.to_numeric(col, errors="coerce").astype("float64")
-    if dtype == "boolean":
-        lowered = col.str.lower()
-        out = pd.Series(pd.NA, index=col.index, dtype="boolean")
-        out[lowered.isin(["1", "t", "true"])] = True
-        out[lowered.isin(["0", "f", "false"])] = False
-        return out
-    if dtype == "ip":
-        valid = col.str.match(_IPV4_RE.pattern, na=False) | (
-            col.str.contains(":", na=False) & col.str.match(_IPV6_RE.pattern, na=False)
-        )
-        return col.where(valid, None)
-    return col

@@ -22,8 +22,6 @@ import re
 
 import pandas as pd
 
-from beats_spark.dissect import _convert_scalar, _convert_series  # shared convert lattice
-
 # Builtin grok patterns (public grok semantics; subset + extensible).
 BUILTIN_PATTERNS: dict[str, str] = {
     "WORD": r"\b\w+\b",
@@ -45,7 +43,7 @@ BUILTIN_PATTERNS: dict[str, str] = {
     "EMAILADDRESS": r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+",
     "UUID": r"[A-Fa-f0-9]{8}-(?:[A-Fa-f0-9]{4}-){3}[A-Fa-f0-9]{12}",
     "IPV4": r"(?:(?:25[0-5]|2[0-4][0-9]|[01]?[0-9][0-9]?)\.){3}(?:25[0-5]|2[0-4][0-9]|[01]?[0-9][0-9]?)",
-    "IPV6": r"(?:[0-9A-Fa-f]{0,4}:){2,7}[0-9A-Fa-f]{0,4}(?:%\w+)?",
+    "IPV6": r"(?:[0-9A-Fa-f]{0,4}:){2,7}[0-9A-Fa-f]{0,4}(?:%[0-9A-Za-z_]+)?",
     "IP": r"(?:%{IPV6}|%{IPV4})",
     "HOSTNAME": r"\b(?:[0-9A-Za-z][0-9A-Za-z-]{0,62})(?:\.(?:[0-9A-Za-z][0-9A-Za-z-]{0,62}))*\.?\b",
     "IPORHOST": r"(?:%{IP}|%{HOSTNAME})",
@@ -147,6 +145,59 @@ BUILTIN_PATTERNS: dict[str, str] = {
     "HTTPD_ERRORLOG": r"(?:%{HTTPD20_ERRORLOG}|%{HTTPD24_ERRORLOG})",
 }
 
+
+# -- the convert type lattice (libbeat/processors/convert/config.go:59-82) ---
+# One syntax per type, written in ASCII classes only: `\d`, `\s`, `\w` and
+# case folding differ between Python's `re` and Java's regex. The scalar
+# `_convert_scalar` and the Column form `operators.parse.convert_col` both
+# gate on it, so they accept the same strings. An integer is a sign (group 1)
+# and decimal or 0x-hex digits (group 2: the hex digits after leading
+# zeros), blanks around allowed; a float is the decimal syntax Python and
+# Java share, or inf/infinity/nan; an ip is grok's IPV6|IPV4.
+
+
+def _nocase(*words: str) -> str:
+    return "|".join(
+        "".join(f"[{c.lower()}{c.upper()}]" if c.isalpha() else c for c in w)
+        for w in words
+    )
+
+
+_INT_SYNTAX = r"[ \t]*([+-]?)(?:0[xX]0*([0-9A-Fa-f]+)|[0-9]+)[ \t]*"
+_FLOAT_SYNTAX = (
+    r"[ \t]*(?:[+-]?(?:[0-9]+(?:\.[0-9]*)?|\.[0-9]+)(?:[eE][+-]?[0-9]+)?"
+    rf"|[+-]?(?:{_nocase('inf', 'infinity')})|{_nocase('nan')})[ \t]*"
+)
+CONVERT_SYNTAX: dict[str, str] = {
+    "integer": _INT_SYNTAX,
+    "long": _INT_SYNTAX,
+    "float": _FLOAT_SYNTAX,
+    "double": _FLOAT_SYNTAX,
+    "boolean": _nocase("1", "t", "true", "0", "f", "false"),
+    "ip": f"{BUILTIN_PATTERNS['IPV6']}|{BUILTIN_PATTERNS['IPV4']}",
+}
+_SCALAR_SYNTAX = {t: re.compile(rf"(?:{p})\Z") for t, p in CONVERT_SYNTAX.items()}
+_INT_BOUND = {"integer": 2**31, "long": 2**63}
+
+
+def _convert_scalar(v, dtype: str | None):
+    """The scalar reference of the lattice: `v` as `dtype`, or None when
+    `v` lacks the type's syntax or leaves its range."""
+    if v is None or dtype not in _SCALAR_SYNTAX:  # None / "string"
+        return v
+    m = _SCALAR_SYNTAX[dtype].match(v)
+    if m is None:
+        return None
+    if dtype in _INT_BOUND:
+        n = int(v) if m[2] is None else int(m[1] + m[2], 16)
+        return n if -_INT_BOUND[dtype] <= n < _INT_BOUND[dtype] else None
+    if dtype in ("float", "double"):
+        return float(v)
+    if dtype == "boolean":
+        return v.lower() in ("1", "t", "true")
+    return v
+
+
 _GROK_REF = re.compile(r"%\{(\w+)(?::([\w.@\[\]]+))?(?::(\w+))?\}")
 
 # one regex token: an escape, a character class or a single character
@@ -222,15 +273,17 @@ class Grok:
         m = self.pattern.search(s)
         if m is None:
             return None
-        out = {}
+        raw: dict[str, str | None] = {}
+        types: dict[str, str] = {}
         for (name, dtype), gname in zip(self.fields, self._group_names):
-            v = _convert_scalar(m.group(gname), dtype)
             # a semantic may appear in several alternation branches (e.g.
-            # HTTPD_ERRORLOG): first captured occurrence wins, a later
-            # branch's empty group must not null it out
-            if name not in out or out[name] is None:
-                out[name] = v
-        return out
+            # HTTPD_ERRORLOG): its first captured occurrence wins, a later
+            # branch's empty group must not null it out; it takes the type
+            # of its first appearance, as in a bank
+            if raw.get(name) is None:
+                raw[name] = m.group(gname)
+            types.setdefault(name, dtype)
+        return {k: _convert_scalar(v, types[k]) for k, v in raw.items()}
 
 
 class GrokBank:
@@ -273,21 +326,18 @@ class GrokBank:
             raise GrokError(f"grok bank compiled to bad regex: {e}")
 
     def grok_frame(self, s: pd.Series) -> pd.DataFrame:
-        """Vectorized extraction in one `str.extract` pass; unmatched rows
-        are all-NaN with `_grok_matched` False."""
+        """Vectorized extraction in one `str.extract` pass: one raw string
+        capture column per output key (typed later by its `key_types`
+        entry); unmatched rows are all-NaN with `_grok_matched` False."""
         ext = s.astype("object").str.extract(self.pattern, expand=True)
         # an unmatched alternative's groups are NaN, so per field a plain
         # column take suffices; a field several patterns own coalesces in
-        # priority order (a row matches exactly one alternative) and is
-        # converted once, with its first-appearance type
-        cols: dict[str, pd.Series] = {}
+        # priority order (a row matches exactly one alternative)
+        out = pd.DataFrame(index=s.index)
         for i, g in enumerate(self.groks):
             for (name, _), gname in zip(g.fields, g._group_names):
                 c = ext[f"p{i}_{gname}"]
-                cols[name] = c if name not in cols else cols[name].combine_first(c)
-        out = pd.DataFrame(index=s.index)
-        for name in self.output_keys:
-            out[name] = _convert_series(cols[name], self.key_types[name])
+                out[name] = c if name not in out else out[name].combine_first(c)
         out["_grok_matched"] = (
             ext[[f"p{i}m" for i in range(len(self.groks))]].notna().any(axis=1)
         )

@@ -27,8 +27,9 @@ function the `timestamp` processor compiles to; pensando.dfw's format-less
 ISO cast is the one `try_to_timestamp` left here.
 
 Scale shape: the grok bank is one vectorized pandas UDF running the whole
-bank as one first-match-wins regex (grok.GrokBank); every post-step is a
-pure Column expression fused by codegen. No joins, no
+bank as one first-match-wins regex (grok.GrokBank) and returning raw string
+captures; their `:int`/`:long` casts, like every post-step, are pure Column
+expressions fused by codegen (operators.parse.convert_col). No joins, no
 shuffles — a module pipeline is a projection, embarrassingly parallel over
 any partitioning.
 """
@@ -49,13 +50,11 @@ _COMMA_MS = "2006-01-02T15:04:05,999"           # log4j: 2018-05-17T08:19:35,939
 _MS_OFFSET = "2006-01-02T15:04:05.999Z07:00"     # ...T13:49:45.606+00:00 / Z
 _MS_OFFSET_NOCOLON = "2006-01-02T15:04:05.999Z0700"  # ...T13:49:45.606+0000
 
-_IP_RE = f"^(?:{BUILTIN_PATTERNS['IPV6']}|{BUILTIN_PATTERNS['IPV4']})$"
-
 
 def _ip_or_domain(addr: Column) -> tuple[Column, Column]:
     """The pipelines' `convert type: ip` with an on_failure rename: an
     address is (ip, NULL) when it is an IP literal, else (NULL, domain)."""
-    is_ip = addr.rlike(_IP_RE)
+    is_ip = P.convert_col(addr, "ip").isNotNull()
     return F.when(is_ip, addr), F.when(~is_ip, addr)
 
 

@@ -2,7 +2,7 @@
 with typed metadata, processed via Arrow-batched mapInPandas.
 
 The Spark-side plumbing — schema, partitioning, UDF signatures, batch
-shapes, row-explosion for frame sampling — is real and tested. The actual
+shapes — is real and tested. The actual
 codec work (JPEG decode, audio resample, video frame extraction) needs
 codec libraries. `decode_media(mode="header")` (the default) parses
 dimensions straight from the container bytes with stdlib struct;
@@ -75,16 +75,6 @@ def detect_media_type(df: DataFrame, content_col: str = "content",
         cond = head.startswith(magic)
         out = F.when(cond, mime) if out is None else out.when(cond, mime)
     return df.withColumn(target, out.otherwise(expr))
-
-
-def media_stats(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """Cheap byte-level metadata via built-ins: size, magic, digest."""
-    c = F.col(content_col)
-    return (
-        df.withColumn("byte_len", F.octet_length(c))
-        .withColumn("magic_hex", F.hex(F.substring(c, 1, 4)))
-        .withColumn("content_sha", F.sha2(c, 256))
-    )
 
 
 def _fake_decode(buf: bytes) -> tuple[int, int, int]:
@@ -217,53 +207,6 @@ def decode_media(df: DataFrame, mode: str = "header") -> DataFrame:
             )
 
     return df.mapInPandas(run, DECODED_SCHEMA)
-
-
-FRAME_SCHEMA = "media_id long, frame_idx int, frame_sha string"
-
-
-def frame_sample(df: DataFrame, n_frames: int = 4) -> DataFrame:
-    """Video frame sampling: one output ROW per sampled frame (mapInPandas
-    row explosion — the batch-shape change real frame extraction needs).
-    Frame content is a deterministic FAKE digest of (bytes, index); swap the
-    digest for an ffmpeg seek+decode in production."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                if buf is None:
-                    continue
-                buf = bytes(buf)
-                for i in range(n_frames):
-                    d = hashlib.sha256(buf + i.to_bytes(4, "big")).hexdigest()
-                    rows.append((mid, i, d))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "frame_sha"])
-
-    return df.filter(F.col("kind") == "video").mapInPandas(run, FRAME_SCHEMA)
-
-
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize plumbing: passes bytes through a mapInPandas stage that
-    would call the resampler; the FAKE path re-digests bytes with the target
-    dims (so output is deterministic and size-dependent)."""
-
-    schema = "media_id long, width int, height int, resized_sha string"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                if buf is None:
-                    continue
-                d = hashlib.sha256(
-                    bytes(buf) + width.to_bytes(2, "big") + height.to_bytes(2, "big")
-                ).hexdigest()
-                rows.append((mid, width, height, d))
-            yield pd.DataFrame(rows, columns=["media_id", "width", "height",
-                                              "resized_sha"])
-
-    return df.mapInPandas(run, schema)
 
 
 def media_width(did: int) -> int:

@@ -1,10 +1,13 @@
 """Parse operators: dissect, grok, decode_*, convert, timestamp.
 
 Each operator is a function DataFrame → DataFrame. Pattern-bank parsers
-(dissect/grok) run as Arrow-vectorized pandas UDFs returning a struct column
-— compiled once on the driver, shipped pickled to executors, executed with
-`pandas.Series.str.extract` per batch (no per-row Python). Everything else
-is built-in Column expressions (JVM-side, whole-stage codegen).
+(dissect/grok) run as Arrow-vectorized pandas UDFs returning a struct of raw
+string captures — compiled once on the driver, shipped pickled to executors,
+executed with `pandas.Series.str.extract` per batch (no per-row Python).
+The Project that rebuilds their structs casts each typed capture with
+`convert_col`, the convert lattice the `convert` processor compiles to.
+Everything else is built-in Column expressions (JVM-side, whole-stage
+codegen).
 
 Reference processors:
 - dissect: /root/reference/libbeat/processors/dissect/processor.go:34-148
@@ -29,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from beats_spark.dissect import Dissector
-from beats_spark.grok import GrokBank
+from beats_spark.grok import CONVERT_SYNTAX, GrokBank
 
 # flag appended on parse failure (reference FlagField handling,
 # libbeat/beat/event.go:38 + dissect/processor.go:95-105)
@@ -37,15 +40,31 @@ DISSECT_FAIL_FLAG = "dissect_parsing_error"
 GROK_FAIL_FLAG = "grok_parsing_error"
 FLAGS_COL = "flags"
 
-_SPARK_TYPES = {
-    "string": T.StringType(),
-    "ip": T.StringType(),
-    "integer": T.IntegerType(),
-    "long": T.LongType(),
-    "float": T.FloatType(),
-    "double": T.DoubleType(),
-    "boolean": T.BooleanType(),
-}
+
+def convert_col(c: Column, dtype: str | None) -> Column:
+    """The convert lattice (grok.CONVERT_SYNTAX) as one Column expression:
+    string `c` as `dtype`, NULL where it lacks the type's syntax or leaves
+    the type's range; `grok._convert_scalar` is its scalar twin. Only
+    `try_` casts (ANSI mode); hex goes through `conv` behind a 16-digit
+    guard, since `conv` raises on overflow."""
+    if dtype not in CONVERT_SYNTAX:  # None / "string"
+        return c
+    syntax = f"^(?:{CONVERT_SYNTAX[dtype]})\\z"  # `$` also matches before a final \n
+    if dtype in ("integer", "long"):
+        hexd = F.regexp_extract(c, syntax, 2)
+        as_hex = F.concat(F.regexp_extract(c, syntax, 1), F.conv(hexd, 16, 10))
+        value = F.coalesce(
+            c.try_cast(dtype),
+            F.when(F.length(hexd).between(1, 16), as_hex.try_cast(dtype)),
+        )
+    elif dtype in ("float", "double"):
+        # via double, as the scalar twin parses (float rounds the double)
+        value = c.try_cast("double").cast(dtype)
+    elif dtype == "boolean":
+        value = F.lower(c).isin("1", "t", "true")
+    else:  # ip
+        value = c
+    return F.when(c.rlike(syntax), value)
 
 
 def _safe(name: str) -> str:
@@ -106,7 +125,7 @@ def dissect(
         return _dissect_dynamic(df, d, field, target_prefix, flag_failures)
 
     schema = T.StructType(
-        [T.StructField(_safe(k), _SPARK_TYPES[d.key_types[k]], True) for k in d.static_keys]
+        [T.StructField(_safe(k), T.StringType(), True) for k in d.static_keys]
     )
     rename = {k: _safe(k) for k in d.static_keys}
 
@@ -115,32 +134,53 @@ def dissect(
         frame = d.dissect_frame(s)
         return frame.rename(columns=rename)
 
-    out = df.withColumn(target_prefix, run(F.col(field)))
-    # all-null struct ⇒ parse failed (static keys always non-null on success —
-    # extracted values are at minimum empty strings)
-    first = _safe(d.static_keys[0])
-    failed = F.col(f"{target_prefix}.{first}").isNull()
-    out = out.withColumn(
-        target_prefix, F.when(~failed, F.col(target_prefix))
-    )
+    tmp = "_dissect_raw"
+    out = df.withColumn(tmp, run(F.col(field)))
+    # a matched row's captures are at minimum empty strings, so a NULL raw
+    # capture marks a failed parse (a typed key that does not convert is
+    # NULL in a matched struct)
+    failed = F.col(f"{tmp}.{_safe(d.static_keys[0])}").isNull()
+    struct_expr = F.struct(*[
+        convert_col(F.col(f"{tmp}.{_safe(k)}"), d.key_types[k]).alias(_safe(k))
+        for k in d.static_keys
+    ])
+    out = out.withColumn(target_prefix, F.when(~failed, struct_expr))
     if flag_failures:
         out = add_flag(out, failed, DISSECT_FAIL_FLAG)
         out = set_error(out, failed, f"dissect: tokenizer did not match {field}")
-    return out
+    return out.drop(tmp)
 
 
 def _dissect_dynamic(df, d: Dissector, field, target_prefix, flag_failures) -> DataFrame:
-    """Pointer/indirect tokenizers have data-dependent keys → MapType output."""
+    """Pointer/indirect tokenizers have data-dependent keys → MapType output;
+    typed values are rendered as Spark's string cast of `convert_col`."""
+    schema = T.StructType([
+        T.StructField(n, T.MapType(T.StringType(), T.StringType()))
+        for n in ("v", "t")
+    ])
 
-    @F.pandas_udf(T.MapType(T.StringType(), T.StringType()))
+    @F.pandas_udf(schema)
     def run(s):
-        return s.map(
-            lambda v: None
-            if (r := d.dissect(v)) is None
-            else {k: None if x is None else str(x) for k, x in r.items()}
-        )
+        rows = [d.captures(v) for v in s]
+        return pd.DataFrame({
+            "v": [r and {k: v for k, (v, _) in r.items()} for r in rows],
+            "t": [r and {k: t or "string" for k, (_, t) in r.items()} for r in rows],
+        })
 
-    out = df.withColumn(target_prefix, run(F.col(field)))
+    tmp = "_dissect_raw"
+    typed = sorted({f.dtype for f in d.fields} & set(CONVERT_SYNTAX))
+
+    def render(k: Column, v: Column) -> Column:
+        out = v
+        for t in typed:
+            out = F.when(F.col(f"{tmp}.t")[k] == t,
+                         convert_col(v, t).cast("string")).otherwise(out)
+        return out
+
+    out = df.withColumn(tmp, run(F.col(field)))
+    out = out.withColumn(
+        target_prefix, F.transform_values(F.col(f"{tmp}.v"), render)
+    ).drop(tmp)
     if flag_failures:
         out = add_flag(out, F.col(target_prefix).isNull(), DISSECT_FAIL_FLAG)
     return out
@@ -180,7 +220,8 @@ def grok_chain(
     message → PAM chain, mysql/postgresql/nats two-level splits). Here the
     whole cascade runs inside one pandas UDF: the text column crosses the
     Arrow boundary once, intermediate captures never leave Python, and one
-    flat struct comes back (per-stage structs are rebuilt by a codegen'd
+    flat struct of raw string captures comes back (per-stage structs are
+    rebuilt, and their typed keys cast by ``convert_col``, in a codegen'd
     Project, so downstream column logic is unchanged).
 
     Each stage dict:
@@ -222,7 +263,7 @@ def _grok_stages(df: DataFrame, stages: list[dict], field: str) -> DataFrame:
     flat_fields: list[T.StructField] = []
     for i, bank in enumerate(banks):
         flat_fields += [
-            T.StructField(f"f{i}_{_safe(k)}", _SPARK_TYPES[bank.key_types[k]], True)
+            T.StructField(f"f{i}_{_safe(k)}", T.StringType(), True)
             for k in bank.output_keys
         ]
         flat_fields.append(T.StructField(f"m{i}", T.BooleanType(), False))
@@ -258,7 +299,8 @@ def _grok_stages(df: DataFrame, stages: list[dict], field: str) -> DataFrame:
     out = df.withColumn(tmp, run(F.col(field)))
     for i, (st, bank) in enumerate(zip(stages, banks)):
         struct_expr = F.struct(*[
-            F.col(f"{tmp}.f{i}_{_safe(k)}").alias(_safe(k))
+            convert_col(F.col(f"{tmp}.f{i}_{_safe(k)}"), bank.key_types[k])
+            .alias(_safe(k))
             for k in bank.output_keys
         ])
         out = out.withColumn(
@@ -729,25 +771,20 @@ def convert(
 ) -> DataFrame:
     """Cast fields per the convert type lattice (convert/config.go:59-103).
 
-    fields: [{"from": col, "to": optional target, "type": spark-castable}]
-    type 'ip' validates IPv4 dotted-quad and nulls invalid values.
+    fields: [{"from": col, "to": optional target, "type": lattice type}]
+    A string field, and any field converted to 'ip', goes through
+    ``convert_col`` (so 'ip' keeps only IPv4/IPv6 literals); any other field
+    is a `try_cast` to the type.
     """
     out = df
     for spec in fields:
         src, tgt = spec["from"], spec.get("to", spec["from"])
         typ = spec.get("type", "string")
         c = F.col(src)
-        if typ == "ip":
-            octet = r"(?:25[0-5]|2[0-4][0-9]|1?[0-9]?[0-9])"
-            casted = F.when(c.rlike(rf"^{octet}(?:\.{octet}){{3}}$"), c)
-        elif typ in ("integer", "long"):
-            casted = c.try_cast("long" if typ == "long" else "int")
-        elif typ in ("float", "double"):
-            casted = c.try_cast(typ)
-        elif typ == "boolean":
-            casted = c.try_cast("boolean")
+        if typ == "ip" or isinstance(df.select(c).schema[0].dataType, T.StringType):
+            casted = convert_col(c.cast("string"), typ)
         else:
-            casted = c.cast("string")
+            casted = c.try_cast(typ)
         out = out.withColumn(tgt, casted)
     return out
 

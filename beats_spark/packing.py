@@ -98,21 +98,6 @@ def pack_sequences(
     )
 
 
-def packing_stats(packed: DataFrame, capacity: int) -> DataFrame:
-    """Efficiency report: bins, docs, token totals, fill ratio."""
-    per_bin = packed.groupBy("seq_id").agg(
-        F.sum("packed_tokens").alias("fill"), F.count("*").alias("docs")
-    )
-    return per_bin.agg(
-        F.count("*").alias("n_seqs"),
-        F.sum("docs").alias("n_docs"),
-        F.sum("fill").alias("total_tokens"),
-        F.round(F.sum("fill") / (F.count("*") * capacity), 6)
-            .alias("fill_ratio"),
-        F.max("fill").alias("max_fill"),
-    )
-
-
 def packing_oracle_sql(
     source_sql: str,
     capacity: int,

@@ -72,8 +72,11 @@ ISO = "strftime({col}, '%Y-%m-%dT%H:%M:%S')"  # DuckDB ISO-second render
 
 def grok_extract_sql(expr: str, text_col: str = "text") -> dict[str, str]:
     """Compile a grok expression and render each output field as a DuckDB
-    regexp_extract fragment using the IDENTICAL compiled regex the Spark
-    pandas UDF executes. Returns {field_name: sql_fragment}."""
+    regexp_extract fragment over the expression's own compiled regex (the
+    Spark pandas UDF runs it as one alternative of its bank's combined
+    regex, `GrokBank`), with a SQL CAST for a typed field (the Spark side
+    casts by `operators.parse.convert_col`). Returns {field_name:
+    sql_fragment}."""
     g = Grok(expr)
     pat = g.pattern.pattern
     idx = g.pattern.groupindex  # gname -> capture group number

@@ -82,6 +82,16 @@ def test_network(df):
     assert ids(df, {"network": {"ip": ["private", "loopback"]}}) == [1, 2]
 
 
+def test_network_rejects_out_of_range_octets(spark):
+    # an octet above 255 is not an address, so no named network holds it
+    bad = spark.createDataFrame(
+        [(1, "10.0.999.1"), (2, "300.1.1.1"), (3, "10.0.0.1"), (4, "1.1.1.1")],
+        "id int, ip string",
+    )
+    assert ids(bad, {"network": {"ip": "private"}}) == [3]
+    assert ids(bad, {"network": {"ip": "public"}}) == [4]
+
+
 def test_combinators(df):
     cond = {
         "or": [

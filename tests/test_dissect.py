@@ -3,7 +3,8 @@
 Three layers, mirroring the reference's test strategy (SURVEY.md §5):
 1. our own golden corpus (tests/golden/dissect_corpus.json, same JSON shape
    as the reference's dissect_tests.json);
-2. vectorized (pandas str.extract) path must agree with the scalar path;
+2. vectorized (pandas str.extract) path, its raw captures converted, must
+   agree with the scalar path;
 3. optional parity run against the reference's full golden corpus read
    directly from /root/reference (skipped when unavailable; never copied).
 """
@@ -18,6 +19,7 @@ import pandas as pd
 import pytest
 
 from beats_spark.dissect import DissectError, Dissector
+from beats_spark.grok import _convert_scalar
 
 HERE = os.path.dirname(__file__)
 REF_CORPUS = "/root/reference/libbeat/processors/dissect/testdata/dissect_tests.json"
@@ -64,9 +66,11 @@ def test_own_corpus_vectorized_matches_scalar(case):
     else:
         for k in d.static_keys:
             exp = scalar.get(k)
-            got = row[k]
+            # the frame holds raw captures; the Spark operator types them
+            got = _convert_scalar(None if pd.isna(row[k]) else row[k],
+                                  d.key_types[k])
             if exp is None:
-                assert pd.isna(got)
+                assert got is None
             elif isinstance(exp, float):
                 assert math.isclose(got, exp)
             else:

@@ -4,8 +4,10 @@
 single `str.extract` pass; `Grok.grok` runs one `re.search` per pattern.
 The property test draws banks that mix start-anchored and unanchored
 patterns, optional groups, a leading `(?m)`, a top-level `^a|b`
-alternation and semantics used twice with one type, over lines with
-non-ASCII text and newlines, and checks the two agree row by row.
+alternation, semantics used twice with one type and typed `INT`, `NUMBER`
+and `BASE16NUM` captures, over lines with non-ASCII text and newlines, and
+checks row by row that the frame's raw captures, converted by
+`_convert_scalar`, equal the scalar first match.
 """
 
 from __future__ import annotations
@@ -16,8 +18,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from beats_spark.dissect import _convert_scalar, _convert_series
-from beats_spark.grok import Grok, GrokBank, GrokError
+from beats_spark.grok import Grok, GrokBank, GrokError, _convert_scalar
 from beats_spark.operators import parse as P
 
 # each semantic keeps one type wherever it appears
@@ -29,10 +30,13 @@ _ATOMS = [
     "(?:%{WORD:w} )?",
     "(?:x%{INT:n:int}|y%{WORD:w})",
     "%{INT:n:int}-%{INT:n:int}",
+    "%{NUMBER:x:long}",
+    "%{NUMBER:f:float}",
+    "y%{BASE16NUM:h:int}",
 ]
 _SEPS = [" ", ":", "é", "-", "\\n"]
 _FRAGMENTS = ["foo", "12", "-3", " ", ":", "é", "ünï", "x", "y", "\n",
-              "中文", "7", "-", "ß9"]
+              "中文", "7", "-", "ß9", ".", "1.0", "0x", "fF", "3000000000"]
 
 
 @st.composite
@@ -72,7 +76,9 @@ def test_bank_frame_equals_scalar_first_match(patterns, lines):
     for i, line in enumerate(lines):
         want, matched = _scalar_first(bank.groks, bank.output_keys, line)
         row = frame.iloc[i]
-        got = {k: None if pd.isna(row[k]) else row[k] for k in bank.output_keys}
+        got = {k: _convert_scalar(None if pd.isna(row[k]) else row[k],
+                                  bank.key_types[k])
+               for k in bank.output_keys}
         assert (got, bool(row["_grok_matched"])) == (want, matched), (
             patterns, line)
 
@@ -88,17 +94,26 @@ def test_numbered_backreference_rejected():
     assert Grok(r"[\1]x").grok("\x01x") == {}
 
 
-@pytest.mark.parametrize("value", ["1.5", "99999999999999999999"])
-def test_convert_series_matches_scalar_on_bad_ints(value):
-    col = pd.Series(["7", value, None], dtype="object")
-    got = _convert_series(col, "long").tolist()
-    want = [_convert_scalar(v, "long") for v in col]
-    assert [None if pd.isna(v) else v for v in got] == want == [7, None, None]
-
-
 def test_grok_non_integral_long_is_null(spark):
     df = spark.createDataFrame([("took 1.5",), ("took 3",)], "text string")
     out = P.grok(df, r"took %{NUMBER:n:long}", field="text", target_prefix="g")
     got = [r["n"] for r in out.select("g.n").collect()]
     assert got == [None, 3]
     assert out.where(F.col("g").isNull()).count() == 0
+
+
+def test_grok_int_out_of_int32_is_null(spark):
+    df = spark.createDataFrame([("took 3000000000",), ("took 3",)], "text string")
+    out = P.grok(df, r"took %{NUMBER:n:int}", field="text", target_prefix="g")
+    assert [r["n"] for r in out.select("g.n").collect()] == [None, 3]
+    assert out.where(F.col("g").isNull()).count() == 0
+
+
+def test_grok_long_exact_beside_null_row(spark):
+    # one batch: a NULL row once turned the batch's integers into doubles
+    df = spark.createDataFrame(
+        [("took 9007199254740993",), (None,), ("took 1.0",)], "text string"
+    ).coalesce(1)
+    out = P.grok(df, r"took %{NUMBER:n:long}", field="text", target_prefix="g")
+    got = [(r["g"] is None, r["g"] and r["g"]["n"]) for r in out.collect()]
+    assert got == [(False, 9007199254740993), (True, None), (False, None)]

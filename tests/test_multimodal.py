@@ -32,13 +32,6 @@ def test_detect_media_type_builtin(media):
     assert bad.count() == 0
 
 
-def test_media_stats(media):
-    out = M.media_stats(media)
-    row = out.first()
-    assert row.byte_len > 4 and len(row.content_sha) == 64
-    assert out.filter(F.col("magic_hex").isNull()).count() == 0
-
-
 def test_decode_media_header_roundtrip(media):
     """Default decode = REAL header parse: every synthesized container's
     planted dimensions/channels come back out of the BYTES."""
@@ -79,21 +72,6 @@ def test_decode_media_real_raises(media):
     assert "NotImplementedError" in str(ei.value) or isinstance(
         ei.value, NotImplementedError
     )
-
-
-def test_frame_sample_explodes_rows(media):
-    n_videos = media.filter(F.col("kind") == "video").count()
-    frames = M.frame_sample(media, n_frames=4)
-    assert frames.count() == n_videos * 4
-    per = frames.groupBy("media_id").agg(F.countDistinct("frame_sha").alias("d"))
-    assert per.filter(F.col("d") != 4).count() == 0  # distinct frame content
-
-
-def test_resize_stub_depends_on_dims(media):
-    r1 = {r.media_id: r.resized_sha for r in M.resize_stub(media, 64, 64).collect()}
-    r2 = {r.media_id: r.resized_sha for r in M.resize_stub(media, 128, 128).collect()}
-    assert set(r1) == set(r2)
-    assert all(r1[k] != r2[k] for k in r1)
 
 
 def test_real_decode_with_pillow(spark):

@@ -89,10 +89,7 @@ def test_pack_sequences_invariants(spark):
         by_bucket.setdefault(r["bucket"], set()).add(r["bin"])
     for bins in by_bucket.values():
         assert bins == set(range(len(bins)))
-    stats = P.packing_stats(packed, cap).collect()[0]
-    assert stats["n_docs"] == 500
-    assert stats["total_tokens"] == sum(f for f in fills.values())
-    assert stats["max_fill"] <= cap
+    assert len({r["doc_id"] for r in rows}) == len(rows) == 500
 
 
 def test_pack_sequences_long_docs(spark):

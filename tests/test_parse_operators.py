@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -9,6 +12,8 @@ from beats_spark.data.transcripts import load_transcripts
 from beats_spark.operators import parse as P
 
 from .conftest import SF_SMOKE
+
+HERE = os.path.dirname(__file__)
 
 LOGFMT_TOK = 'level=%{level} ts=%{ts} caller=%{caller} msg="%{msg}" value=%{value|long} took=%{took}ms'
 APACHE_GROK = (
@@ -47,6 +52,30 @@ def test_dissect_flags_failures(tdf):
         failed.filter(F.col("text").startswith("!!corrupt")).count()
         == tdf.filter(F.col("text").startswith("!!corrupt")).count()
     )
+
+
+def test_dissect_golden_invalid_ip_matches_with_null_key(spark):
+    # a typed key that does not convert is NULL inside a matched struct;
+    # the row is not a parse failure (the golden corpus case)
+    with open(os.path.join(HERE, "golden/dissect_corpus.json")) as fh:
+        case, = [c for c in json.load(fh)
+                 if c["name"] == "type conversion ip rejects invalid"]
+    df = spark.createDataFrame([(case["msg"],)], "text string")
+    row, = P.dissect(df, case["tok"], field="text").collect()
+    assert row.dissect.asDict() == case["expected"] == {"ip": None, "t": "x"}
+    assert row.flags == [] and row.error is None
+
+
+def test_dissect_dynamic_renders_typed_values_as_spark_strings(spark):
+    df = spark.createDataFrame([("host web1 TRUE 0x10 1e20",), ("x",)],
+                               "text string")
+    out = P.dissect(df, "%{*k} %{&k} %{flag|boolean} %{n|long} %{d|double}",
+                    field="text")
+    rows = out.collect()
+    assert rows[0].dissect == {"host": "web1", "flag": "true", "n": "16",
+                               "d": "1.0E20"}
+    assert rows[0].flags == []
+    assert rows[1].dissect is None and rows[1].flags == [P.DISSECT_FAIL_FLAG]
 
 
 def test_grok_apache(tdf):

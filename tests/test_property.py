@@ -19,7 +19,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from beats_spark.dissect import Dissector
-from beats_spark.grok import Grok
+from beats_spark.grok import Grok, _convert_scalar
 
 # values must not contain the delimiter; keep both printable-simple
 _VALUE = st.text(
@@ -60,7 +60,7 @@ def test_dissect_frame_matches_scalar(case):
     scalar = d.dissect(msg)
     row = frame.iloc[0]
     for k in keys:
-        assert row[k] == scalar[k]
+        assert _convert_scalar(row[k], d.key_types[k]) == scalar[k]
 
 
 @settings(max_examples=40, deadline=None)
