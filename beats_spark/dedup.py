@@ -8,9 +8,13 @@ Five flavors, all DataFrame-native:
   the JVM (one hash per shingle, then K min() aggregates — no Python);
 - SimHash: 64-bit signature via Arrow-vectorized numpy (bit-parallel),
   near-dup = Hamming distance ≤ t within LSH-style chunk buckets;
-- n-gram Jaccard: exact pairwise verify used standalone on small candidate
-  sets (blocking by length bucket);
+- n-gram Jaccard: word n-gram sets, MinHash-banded or prefix-filter
+  candidates, exact verify;
 - embedding cosine: see beats_spark.similarity (near-dup = cos ≥ τ).
+
+Text units come from textops (`normalize_text`, `tokens`, `word_ngrams`),
+and every pair join verifies its bare (id_a, id_b) candidates through the
+one by-id join `_verify_by_id`, each with its own measure.
 
 Scale shape: every stage is a map or a shuffle on a dedup key; candidate
 generation never does an unblocked cross join. At 100 TB, band hashing
@@ -29,11 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .scale import truncate_lineage
-
-
-def normalize_text(col: Column) -> Column:
-    """Canonical form for exact dedup: lowercase, collapse whitespace."""
-    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
+from .textops import normalize_text, tokens, word_ngrams
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -79,12 +79,6 @@ def _affine_params(i: int) -> tuple[int, int]:
     a = (int.from_bytes(d[:4], "big") % (_MERSENNE_31 - 1)) | 1
     b = int.from_bytes(d[4:8], "big") % _MERSENNE_31
     return a, b
-
-
-def jaccard(a: Column, b: Column) -> Column:
-    """Exact Jaccard over two string arrays (assumed distinct elements)."""
-    inter = F.size(F.array_intersect(a, b))
-    return (inter / (F.size(a) + F.size(b) - inter)).cast("double")
 
 
 def _minhash_signature(hashed: DataFrame, num_hashes: int) -> DataFrame:
@@ -136,6 +130,24 @@ def _band_candidates(
     )
 
 
+def _verify_by_id(cand: DataFrame, base: DataFrame) -> DataFrame:
+    """The exact verify behind every candidate generator here: join bare
+    (id_a, id_b) candidates back to base's per-doc (_id, _g) sets BY ID —
+    two equi-joins, so the set arrays never ride the band or candidate-dedup
+    exchanges — and return (id_a, id_b, inter_size, size_a, size_b); each
+    caller applies its own measure."""
+    def side(s: str) -> DataFrame:
+        return base.select(F.col("_id").alias(f"id_{s}"), F.col("_g").alias(f"g_{s}"))
+
+    return cand.join(side("a"), "id_a").join(side("b"), "id_b").select(
+        "id_a",
+        "id_b",
+        F.size(F.array_intersect("g_a", "g_b")).alias("inter_size"),
+        F.size("g_a").alias("size_a"),
+        F.size("g_b").alias("size_b"),
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -153,8 +165,9 @@ def minhash_lsh_pairs(
     (one hash aggregate computes the whole signature; map-side partials
     shrink the shuffle to |docs|×K) → band hashes as plain columns →
     explode(bands) → self-join per (band, band_hash) bucket → candidates
-    as bare id pairs → exact-Jaccard verify joining the shingle arrays
-    back BY ID (arrays never travel through the candidate join).
+    as bare id pairs → exact-Jaccard verify joining the shingle-hash
+    arrays back BY ID (`_verify_by_id`; arrays never travel through the
+    candidate join).
 
     Why explode+aggregate instead of array transforms: Spark higher-order
     functions are interpreted per element, never whole-stage-codegen'd —
@@ -171,7 +184,7 @@ def minhash_lsh_pairs(
             normalize_text(F.col(text_col)).alias("_norm"),
         )
         .withColumn("_sh", shingles_expr("_norm", shingle_k))
-        .select("_id", F.expr("transform(_sh, s -> xxhash64(s))").alias("_hv"))
+        .select("_id", F.expr("transform(_sh, s -> xxhash64(s))").alias("_g"))
     )
     # lineage cut: `base` feeds the signature agg AND both verify joins —
     # without it the shingle scan re-runs 3×. eager=False defers the
@@ -182,18 +195,16 @@ def minhash_lsh_pairs(
     hashed = base.select(
         "_id",
         F.explode(
-            F.expr(f"transform(_hv, h -> pmod(h, {_MERSENNE_31}))")
+            F.expr(f"transform(_g, h -> pmod(h, {_MERSENNE_31}))")
         ).alias("_h"),
     )
     cand = _band_candidates(hashed, num_hashes, bands, max_bucket)
-    ga = base.select(F.col("_id").alias("id_a"), F.col("_hv").alias("hv_a"))
-    gb = base.select(F.col("_id").alias("id_b"), F.col("_hv").alias("hv_b"))
+    inter = F.col("inter_size")
+    jaccard = inter / (F.col("size_a") + F.col("size_b") - inter)
     return (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn("jaccard", jaccard(F.col("hv_a"), F.col("hv_b")))
+        _verify_by_id(cand, base)
+        .select("id_a", "id_b", jaccard.cast("double").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -254,9 +265,7 @@ def prefix_filter_jaccard_pairs(
     """
     base = df.select(
         F.col(id_col).alias("_id"),
-        F.array_distinct(
-            F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-        ).alias("_g"),
+        F.array_distinct(tokens(F.col(text_col))).alias("_g"),
     )
     return _prefix_filter_pairs(base, threshold)
 
@@ -281,6 +290,32 @@ def _rarest_first(base: DataFrame) -> DataFrame:
     )
 
 
+def _prefix(threshold: float) -> Column:
+    """The first |_g| - ceil(t·|_g|) + 1 elements of a rarest-first `_g`:
+    the prefix any set reaching a t-overlap must share a token with."""
+    return F.expr(
+        f"slice(_g, 1, size(_g) - cast(ceil({threshold} * size(_g)) as int) + 1)"
+    )
+
+
+def _jaccard_verify(cand: DataFrame, base: DataFrame,
+                    threshold: float) -> DataFrame:
+    """(id_a, id_b, inter_size, union_size, jaccard) of the candidates with
+    exact Jaccard ≥ threshold: an integer cross-multiply test, so no float
+    rounding can diverge from an independent engine's arithmetic, and the
+    reported jaccard rounded to 6 places."""
+    inter = F.col("inter_size")
+    return (
+        _verify_by_id(cand, base)
+        .withColumn("union_size", F.col("size_a") + F.col("size_b") - inter)
+        .where(inter >= F.lit(threshold) * F.col("union_size"))
+        .select(
+            "id_a", "id_b", "inter_size", "union_size",
+            F.round(inter / F.col("union_size"), 6).alias("jaccard"),
+        )
+    )
+
+
 def _prefix_filter_pairs(base: DataFrame, threshold: float) -> DataFrame:
     """AllPairs/PPJoin core over a prepared (_id, _g: array<string>) frame:
     exact Jaccard pairs (id_a < id_b, jaccard ≥ threshold) with
@@ -296,15 +331,10 @@ def _prefix_filter_pairs(base: DataFrame, threshold: float) -> DataFrame:
     1k-doc oracle caps, where set construction is cheap; containment_pairs
     (uncapped corpus slice, same shape) keeps the cut because its A/B
     said 3.58→2.03 s. Re-cut if the caps are lifted."""
-    ranked = _rarest_first(base)
-    prefixed = ranked.withColumn(
-        "_prefix",
-        F.expr(
-            f"slice(_g, 1, size(_g) - cast(ceil({threshold} * size(_g)) as int) + 1)"
-        ),
-    )
-    inv = prefixed.select(
-        "_id", F.size("_g").alias("_len"), F.explode("_prefix").alias("g")
+    inv = (
+        _rarest_first(base)
+        .withColumn("_prefix", _prefix(threshold))
+        .select("_id", F.size("_g").alias("_len"), F.explode("_prefix").alias("g"))
     )
     a = inv.select("g", F.col("_id").alias("id_a"), F.col("_len").alias("len_a"))
     b = inv.select("g", F.col("_id").alias("id_b"), F.col("_len").alias("len_b"))
@@ -318,26 +348,7 @@ def _prefix_filter_pairs(base: DataFrame, threshold: float) -> DataFrame:
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    ga = base.select(F.col("_id").alias("id_a"), F.col("_g").alias("g_a"))
-    gb = base.select(F.col("_id").alias("id_b"), F.col("_g").alias("g_b"))
-    inter = F.size(F.array_intersect(F.col("g_a"), F.col("g_b")))
-    return (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn("inter_size", inter)
-        .withColumn(
-            "union_size",
-            F.size("g_a") + F.size("g_b") - F.col("inter_size"),
-        )
-        # integer cross-multiply ≥ test: exact, no float rounding to
-        # diverge from an independent engine's arithmetic
-        .where(F.col("inter_size") >= F.lit(threshold) * F.col("union_size"))
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter_size") / F.col("union_size"), 6),
-        )
-        .select("id_a", "id_b", "inter_size", "union_size", "jaccard")
-    )
+    return _jaccard_verify(cand, base, threshold)
 
 
 # -- simhash (vectorized numpy over Arrow batches) ---------------------------
@@ -471,31 +482,23 @@ def ngram_jaccard_pairs(
       rarest grams (AllPairs, Bayardo WWW'07) — provably no missed pairs,
       so the result is brute-force oracle-able in an independent engine.
 
-    Candidates travel as BARE id pairs in both modes; gram arrays are
-    joined back BY ID only for the exact-Jaccard verify (mirroring
-    minhash_lsh_pairs), so array payloads never ride the band join or the
-    dropDuplicates exchange. Signatures come from the explode + K
-    codegen'd min() aggregate shape (higher-order array lambdas are
-    interpreted per element — the measured-slow path)."""
-    grams = F.expr(
-        f"array_distinct(transform(sequence(1, greatest(size(_toks) - {n - 1}, 1)),"
-        f" i -> concat_ws(' ', slice(_toks, i, {n}))))"
-    )
+    Tokens are `textops.tokens`, grams `textops.word_ngrams`. Candidates
+    travel as BARE id pairs in both modes; gram arrays are joined back BY
+    ID only for the exact-Jaccard verify (`_jaccard_verify`, on the same
+    `_verify_by_id` as minhash_lsh_pairs), so array payloads never ride
+    the band join or the dropDuplicates exchange. Signatures come from the
+    explode + K codegen'd min() aggregate shape (higher-order array lambdas
+    are interpreted per element — the measured-slow path)."""
     base = (
-        df.select(
-            F.col(id_col).alias("_id"),
-            F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("_toks"),
-        )
-        .withColumn("_g", grams)
+        df.select(F.col(id_col).alias("_id"),
+                  tokens(F.col(text_col)).alias("_toks"))
+        .withColumn("_g", F.array_distinct(word_ngrams(F.col("_toks"), n)))
         .drop("_toks")
     )
     # gram arrays feed candidate generation AND both verify joins; cut the
     # lineage so tokenization runs once. eager=False: constructing the
     # pairs frame triggers no job. reliable=True for cluster durability.
     base = truncate_lineage(base, reliable=reliable, eager=False)
-    verify_jaccard = F.round(
-        F.col("inter_size") / F.col("union_size"), 6
-    ).alias("jaccard")
     if exact:
         return _prefix_filter_pairs(base, threshold).select(
             "id_a", "id_b", "jaccard"
@@ -507,18 +510,8 @@ def ngram_jaccard_pairs(
         ).alias("_h"),
     )
     cand = _band_candidates(hashed, num_hashes, bands, max_bucket)
-    ga = base.select(F.col("_id").alias("id_a"), F.col("_g").alias("g_a"))
-    gb = base.select(F.col("_id").alias("id_b"), F.col("_g").alias("g_b"))
-    inter = F.size(F.array_intersect(F.col("g_a"), F.col("g_b")))
-    return (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn("inter_size", inter)
-        .withColumn(
-            "union_size", F.size("g_a") + F.size("g_b") - F.col("inter_size")
-        )
-        .where(F.col("inter_size") >= F.lit(threshold) * F.col("union_size"))
-        .select("id_a", "id_b", verify_jaccard)
+    return _jaccard_verify(cand, base, threshold).select(
+        "id_a", "id_b", "jaccard"
     )
 
 
@@ -535,31 +528,29 @@ def decontaminate(
     at least one word n-gram (default 13, the GPT-3/PaLM convention) with
     the probe (benchmark/eval) corpus.
 
-    Scale shape: the corpus side explodes to DISTINCT (id, xxhash64(gram))
-    pairs — 8 bytes per gram, never the gram strings; the probe side is a
-    distinct hash set, typically millions of rows at most (benchmarks are
-    small), so the membership test is a BROADCAST left-semi join: the 100 TB
-    side is never shuffled. Tokenization is lower+whitespace; documents
-    shorter than n tokens contribute their full token run as a single gram
-    (both sides build grams identically, so the contract is symmetric).
+    Scale shape: the corpus side explodes each doc's DISTINCT grams and
+    hashes each to xxhash64 right after the explode — 8 bytes per gram
+    reach the join, never the gram strings; the probe side is a distinct
+    hash set, typically millions of rows at most (benchmarks are small), so
+    the membership test is a BROADCAST left-semi join: the 100 TB side is
+    never shuffled. Tokens are `textops.tokens` and grams
+    `textops.word_ngrams`; documents shorter than n tokens contribute their
+    full token run as a single gram (both sides build grams identically,
+    so the contract is symmetric).
 
     Reference parity note: no analogue in mjwolf/beats (training-data
     mandate); the n-gram overlap rule follows Brown et al. 2020 (GPT-3,
     appendix C) / Chowdhery et al. 2022 (PaLM, §6.1).
     """
-    grams = F.expr(
-        f"array_distinct(transform(sequence(1, greatest(size(_toks) - {n - 1}, 1)),"
-        f" i -> xxhash64(concat_ws(' ', slice(_toks, i, {n})))))"
-    )
-
     def _hashed(frame: DataFrame, col: str, with_id: bool) -> DataFrame:
+        keep = ["_id"] if with_id else []
         toks = frame.where(F.col(col).isNotNull()).select(
             *([F.col(id_col).alias("_id")] if with_id else []),
-            F.split(F.trim(F.lower(F.col(col))), r"\s+").alias("_toks"),
+            tokens(F.col(col)).alias("_toks"),
         )
-        return toks.select(
-            *([F.col("_id")] if with_id else []),
-            F.explode(grams).alias("_h"),
+        grams = F.array_distinct(word_ngrams(F.col("_toks"), n))
+        return toks.select(*keep, F.explode(grams).alias("_g")).select(
+            *keep, F.xxhash64("_g").alias("_h")
         )
 
     doc_h = _hashed(df, text_col, True)
@@ -768,7 +759,7 @@ def exact_substr_dedup(
     span_dedup's token-level twin: any `window`-token span occurring more
     than once corpus-wide keeps only its first occurrence (min (doc_id,
     pos)); every other occurrence has its covered token positions removed.
-    Tokens are the module-wide whitespace tokenizer (trim+lower), so
+    Tokens are `textops.tokens` (whitespace split of trim+lower), so
     duplicates that straddle sentence boundaries — invisible to the
     sentence-window C4 pass — are caught. Emits ``n_tokens``,
     ``n_removed`` and ``deduped`` (kept tokens re-joined with spaces).
@@ -785,8 +776,9 @@ def exact_substr_dedup(
     span_dedup/decontaminate); the oracle dedups on the window STRINGS and
     would surface one as a hash mismatch.
     """
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    return _first_occurrence_dedup(df, id_col, window, toks, "_toks", "n_tokens")
+    return _first_occurrence_dedup(
+        df, id_col, window, tokens(F.col(text_col)), "_toks", "n_tokens"
+    )
 
 
 def exact_substr_dedup_oracle(table: str = "documents",
@@ -813,20 +805,11 @@ def exact_substr_dedup_oracle(table: str = "documents",
 #
 # Positions use Kirsch-Mitzenmacher double hashing (h1 + i*h2 mod m) from two
 # 32-bit md5 halves; the bitmap is stored as m/32 int32 words so every shift
-# stays within BIGINT range in both engines.
+# stays within BIGINT range in both engines. Build and test take their grams
+# from the one builder, `textops.word_ngrams`: a drift between the two sides
+# would silently under-flag.
 
 _BLOOM_WORD = 32
-
-
-def _bloom_grams_expr(n: int) -> "F.Column":
-    """Distinct word n-grams over a pre-split `_toks` array — ONE shared
-    expression for bloom_build and bloom_decontaminate: build/test gram
-    parity is the correctness invariant of the whole Bloom path (a drift
-    between the two would silently under-flag)."""
-    return F.expr(
-        f"array_distinct(transform(sequence(1, greatest(size(_toks) - {n - 1}, 1)),"
-        f" i -> concat_ws(' ', slice(_toks, i, {n}))))"
-    )
 
 
 def bloom_positions_exprs(gram: str, m_bits: int, k_hashes: int) -> list[str]:
@@ -851,12 +834,12 @@ def bloom_build(
     same bounded-driver-state class as the CC convergence fingerprint."""
     if m_bits % _BLOOM_WORD:
         raise ValueError(f"m_bits must be a multiple of {_BLOOM_WORD}")
-    grams = _bloom_grams_expr(n)
     pos_exprs = bloom_positions_exprs("_g", m_bits, k_hashes)
     words = (
         probe.where(F.col(text_col).isNotNull())
-        .select(F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("_toks"))
-        .select(F.explode(grams).alias("_g"))
+        .select(tokens(F.col(text_col)).alias("_toks"))
+        .select(F.explode(
+            F.array_distinct(word_ngrams(F.col("_toks"), n))).alias("_g"))
         .select(F.explode(F.array(
             *[F.expr(e).cast("long") for e in pos_exprs]
         )).alias("_pos"))
@@ -904,7 +887,6 @@ def bloom_decontaminate(
     bitmap = bloom_build(probe, probe_text_col, n, m_bits, k_hashes)
     spark = df.sparkSession
     bm = spark.createDataFrame([(bitmap,)], "_bloom array<bigint>")
-    grams = _bloom_grams_expr(n)
     checks = " AND ".join(
         f"(shiftright(element_at(_bloom, CAST({p} div {_BLOOM_WORD} AS INT) + 1),"
         f" CAST({p} % {_BLOOM_WORD} AS INT)) & 1) = 1"
@@ -914,10 +896,11 @@ def bloom_decontaminate(
     out = (
         df.withColumn(
             "_toks",
-            F.when(F.col(text_col).isNotNull(),
-                   F.split(F.trim(F.lower(F.col(text_col))), r"\s+")),
+            F.when(F.col(text_col).isNotNull(), tokens(F.col(text_col))),
         )
-        .withColumn("_grams", F.when(F.col("_toks").isNotNull(), grams))
+        .withColumn("_grams",
+                    F.when(F.col("_toks").isNotNull(),
+                           F.array_distinct(word_ngrams(F.col("_toks"), n))))
         .join(F.broadcast(bm))
         .withColumn(target, F.coalesce(hit, F.lit(False)))
         .drop("_toks", "_grams", "_bloom")
@@ -1022,34 +1005,19 @@ def containment_pairs(
     Reference parity note: no analogue in mjwolf/beats (training-data
     mandate).
     """
-    k = ngram_n
-    # guarded: Spark's sequence(1, 0) would COUNT DOWN ([1, 0]) — docs
-    # shorter than n tokens must yield an empty gram set, as in the oracle
-    grams = F.expr(
-        f"CASE WHEN size(_tk) >= {k} THEN "
-        f"array_distinct(transform(sequence(1, size(_tk) - {k - 1}),"
-        f" i -> concat_ws(' ', slice(_tk, i, {k})))) "
-        f"ELSE array() END"
-    )
+    # guarded: docs shorter than n tokens yield an empty gram set, as in the
+    # oracle
+    grams = word_ngrams(F.col("_toks"), ngram_n, guarded=True)
     base = truncate_lineage(
         df.where(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col).alias("_id"),
-            F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("_tk"),
-        )
-        .select("_id", grams.alias("_g"))
+        .select(F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_toks"))
+        .select("_id", F.array_distinct(grams).alias("_g"))
         .where(F.size("_g") > 0)
     )
     # lineage cut: base feeds the _rarest_first inverted index and both
     # exact-verify array joins — same rationale as _prefix_filter_pairs
     ranked = _rarest_first(base)
-    prefixed = ranked.withColumn(
-        "_prefix",
-        F.expr(
-            f"slice(_g, 1, size(_g) - cast(ceil({threshold} * size(_g)) as int) + 1)"
-        ),
-    )
-    probe = prefixed.select(
+    probe = ranked.withColumn("_prefix", _prefix(threshold)).select(
         F.col("_id").alias("id_a"), F.size("_g").alias("size_a"),
         F.explode("_prefix").alias("g"),
     )
@@ -1066,20 +1034,14 @@ def containment_pairs(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    ga = base.select(F.col("_id").alias("id_a"), F.col("_g").alias("g_a"))
-    gb = base.select(F.col("_id").alias("id_b"), F.col("_g").alias("g_b"))
-    inter = F.size(F.array_intersect(F.col("g_a"), F.col("g_b")))
+    inter = F.col("inter_size")
     return (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn("inter_size", inter)
-        .withColumn("size_a", F.size("g_a"))
-        .where(F.col("inter_size") >= F.lit(threshold) * F.col("size_a"))
-        .withColumn(
-            "containment",
-            F.round(F.col("inter_size") / F.col("size_a"), 6),
+        _verify_by_id(cand, base)
+        .where(inter >= F.lit(threshold) * F.col("size_a"))
+        .select(
+            "id_a", "id_b", "inter_size", "size_a",
+            F.round(inter / F.col("size_a"), 6).alias("containment"),
         )
-        .select("id_a", "id_b", "inter_size", "size_a", "containment")
     )
 
 

@@ -27,6 +27,7 @@ Reference processors:
 from __future__ import annotations
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -65,6 +66,39 @@ def convert_col(c: Column, dtype: str | None) -> Column:
     else:  # ip
         value = c
     return F.when(c.rlike(syntax), value)
+
+
+def convert_sql(expr: str, dtype: str | None) -> str:
+    """`convert_col`'s DuckDB twin for the correctness oracles: string SQL
+    `expr` as `dtype`, gated on the same `grok.CONVERT_SYNTAX`, since
+    DuckDB's own TRY_CAST also reads `1.0` and `1_000` as integers and
+    rejects `-0x10`. Hex goes through UBIGINT, which reads the 16 digits
+    that fit; a float beyond float32 range is ±inf, as the double rounds."""
+    if dtype not in CONVERT_SYNTAX:  # None / "string"
+        return expr
+    syntax = f"'^(?:{CONVERT_SYNTAX[dtype]})\\z'"
+    bare = f"trim({expr}, ' ' || chr(9))"
+    if dtype in ("integer", "long"):
+        sql_type = "INTEGER" if dtype == "integer" else "BIGINT"
+        hexd = f"regexp_extract({expr}, {syntax}, 2)"
+        mag = f"CAST(TRY_CAST('0x' || {hexd} AS UBIGINT) AS HUGEINT)"
+        sign = f"regexp_extract({expr}, {syntax}, 1)"
+        value = (
+            f"CASE WHEN {hexd} = '' THEN TRY_CAST({bare} AS {sql_type})"
+            f" ELSE TRY_CAST(CASE WHEN {sign} = '-' THEN -{mag} ELSE {mag} END"
+            f" AS {sql_type}) END"
+        )
+    elif dtype == "double":
+        value = f"TRY_CAST({bare} AS DOUBLE)"
+    elif dtype == "float":
+        d = f"TRY_CAST({bare} AS DOUBLE)"
+        value = (f"coalesce(TRY_CAST({d} AS FLOAT), CAST(CASE WHEN {d} > 0"
+                 f" THEN 'inf' ELSE '-inf' END AS FLOAT))")
+    elif dtype == "boolean":
+        value = f"lower({expr}) IN ('1', 't', 'true')"
+    else:  # ip
+        value = expr
+    return f"CASE WHEN regexp_matches({expr}, {syntax}) THEN {value} END"
 
 
 def _safe(name: str) -> str:
@@ -767,21 +801,27 @@ def convert(
     df: DataFrame,
     fields: list[dict],
     ignore_missing: bool = False,
-    fail_on_error: bool = True,
 ) -> DataFrame:
     """Cast fields per the convert type lattice (convert/config.go:59-103).
 
-    fields: [{"from": col, "to": optional target, "type": lattice type}]
-    A string field, and any field converted to 'ip', goes through
-    ``convert_col`` (so 'ip' keeps only IPv4/IPv6 literals); any other field
-    is a `try_cast` to the type.
+    fields: [{"from": col, "to": optional target, "type": lattice type}],
+    applied in order. A string field, and any field converted to 'ip', goes
+    through ``convert_col`` (so 'ip' keeps only IPv4/IPv6 literals); any
+    other field is a `try_cast` to the type. A spec whose `from` field is
+    absent is skipped with `ignore_missing`, else raises ValueError.
     """
     out = df
     for spec in fields:
         src, tgt = spec["from"], spec.get("to", spec["from"])
         typ = spec.get("type", "string")
         c = F.col(src)
-        if typ == "ip" or isinstance(df.select(c).schema[0].dataType, T.StringType):
+        try:
+            src_type = out.select(c).schema[0].dataType
+        except AnalysisException:
+            if ignore_missing:
+                continue
+            raise ValueError(f"convert: field {src!r} is missing") from None
+        if typ == "ip" or isinstance(src_type, T.StringType):
             casted = convert_col(c.cast("string"), typ)
         else:
             casted = c.try_cast(typ)

@@ -29,12 +29,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from beats_spark.conditions import condition_sql, sql_str
+from beats_spark import dedup as D
+from beats_spark import packing as PK
+from beats_spark import sampling as SM
+from beats_spark import similarity as SIM
+from beats_spark import textops as X
+from beats_spark.conditions import (
+    _NAMED_NETWORKS,
+    _cidr_bounds,
+    condition_sql,
+    sql_str,
+)
 from beats_spark.data import lookups as L
 from beats_spark.data.transcripts import load_transcripts, oracle_cte
 from beats_spark.grok import Grok, GrokBank
 from beats_spark.operators import enrich as E
 from beats_spark.operators import filter as FL
+from beats_spark.operators.parse import convert_sql
 from beats_spark.pipeline import (
     IS_TOOL_CALL,
     ROUTING_RULES,
@@ -666,18 +677,19 @@ def q_field_surgery(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
+_TOK0_SQL = "split_part(text, ' ', 1)"  # extract_field(text, " ", 0)
+
+
 @register(
     "convert_types",
     oracle_cte()
-    + """
+    + f"""
 SELECT conv_id, turn_idx,
        CAST(turn_idx AS BIGINT) AS idx_long,
        CAST(turn_idx AS DOUBLE) AS idx_double,
        CAST(turn_idx AS VARCHAR) AS idx_str,
-       TRY_CAST(split_part(text, ' ', 1) AS BIGINT) AS maybe_num,
-       CASE WHEN regexp_matches(split_part(text, ' ', 1),
-            '^(25[0-5]|2[0-4][0-9]|1?[0-9]?[0-9])(\\.(25[0-5]|2[0-4][0-9]|1?[0-9]?[0-9])){3}$')
-            THEN split_part(text, ' ', 1) END AS maybe_ip
+       {convert_sql(_TOK0_SQL, "long")} AS maybe_num,
+       {convert_sql(_TOK0_SQL, "ip")} AS maybe_ip
 FROM transcripts
 """,
 )
@@ -732,22 +744,28 @@ def q_codec_roundtrip(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
+_PRIVATE_IP4_SQL = " OR ".join(
+    f"ip4 BETWEEN {lo} AND {hi}"
+    for lo, hi in map(_cidr_bounds, _NAMED_NETWORKS["private"])
+)
+
+
 @register(
     "network_direction",
     oracle_cte()
-    + """
+    + f"""
 SELECT direction, count(*) AS n FROM (
   SELECT CASE
-    WHEN ip IS NULL THEN 'external'
-    WHEN (CAST(split_part(ip,'.',1) AS BIGINT)*16777216 + CAST(split_part(ip,'.',2) AS BIGINT)*65536
-          + CAST(split_part(ip,'.',3) AS BIGINT)*256 + CAST(split_part(ip,'.',4) AS BIGINT))
-         BETWEEN 167772160 AND 184549375 THEN 'outbound'  -- 10.0.0.0/8 src internal
-    ELSE 'external' END AS direction
+    WHEN {_PRIVATE_IP4_SQL} THEN 'outbound'
+    ELSE 'external' END AS direction  -- dst is public
   FROM (
-    SELECT CASE WHEN regexp_matches(split_part(text,' ',1),
-           '^(25[0-5]|2[0-4][0-9]|1?[0-9]?[0-9])(\\.(25[0-5]|2[0-4][0-9]|1?[0-9]?[0-9])){3}$')
-           THEN split_part(text,' ',1) END AS ip
-    FROM transcripts
+    -- the IPv4 half of the lattice's ip literals, as _ipv4_int_col
+    SELECT CASE WHEN NOT contains(ip, ':') THEN
+             CAST(split_part(ip,'.',1) AS BIGINT)*16777216
+             + CAST(split_part(ip,'.',2) AS BIGINT)*65536
+             + CAST(split_part(ip,'.',3) AS BIGINT)*256
+             + CAST(split_part(ip,'.',4) AS BIGINT) END AS ip4
+    FROM (SELECT {convert_sql(_TOK0_SQL, "ip")} AS ip FROM transcripts)
   )
 )
 GROUP BY direction
@@ -793,21 +811,13 @@ FROM p
 """,
 )
 def q_embedding_dedup(spark, sf_dir):
-    from beats_spark.similarity import allpairs_cosine_stats
-
     embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return allpairs_cosine_stats(embs, threshold=0.9)
+    return SIM.allpairs_cosine_stats(embs, threshold=0.9)
 
 
 # --------------------------------------------------------------------------
 # training-data ops: dedup / similarity / text analysis (documents, embeddings)
 # --------------------------------------------------------------------------
-
-import beats_spark.dedup as D
-import beats_spark.packing as PK
-import beats_spark.sampling as SM
-import beats_spark.similarity as SIM
-import beats_spark.textops as X
 
 
 @register(
@@ -2295,7 +2305,6 @@ def q_repetition_quality(spark, sf_dir):
     > 0.3, top 2-gram char fraction > 0.2) counted; the oracle recomputes
     every signal from scratch in DuckDB (independent line/gram pipeline,
     window arg-max instead of struct-max)."""
-    from beats_spark import textops as TX
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
         F.col("doc_id") < 1000
@@ -2311,7 +2320,7 @@ def q_repetition_quality(spark, sf_dir):
             ),
         ).otherwise(F.col("text")),
     )
-    out = TX.repetition_features(docs2)
+    out = X.repetition_features(docs2)
     out = docs.select("doc_id").join(
         out.select("doc_id", "dup_line_frac", "dup_line_char_frac",
                    "top_ngram_char_frac"),
@@ -2364,7 +2373,6 @@ def q_decontaminate(spark, sf_dir):
     themselves — trivially contaminated). Oracle: DuckDB recomputes the
     overlap on gram STRINGS while Spark joins on xxhash64(gram) — equal
     flags unless a 64-bit collision manufactures a false positive."""
-    from beats_spark import dedup as D
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
         F.col("doc_id") < 1500
@@ -2461,12 +2469,11 @@ def q_gopher_filter(spark, sf_dir):
     """Composite Gopher-rule keep/drop filter (textops.gopher_filter) over
     the documents table; oracle independently recomputes every signal AND
     every threshold in DuckDB and compares keep + per-reason counts."""
-    from beats_spark import textops as TX
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
         (F.col("doc_id") < 1000) & F.col("text").isNotNull()
     )
-    out = TX.gopher_filter(docs)
+    out = X.gopher_filter(docs)
     has = lambda r: F.array_contains(F.col("drop_reasons"), r)
     return out.agg(
         F.count("*").alias("n_docs"),
@@ -2509,7 +2516,6 @@ def q_pii_redact(spark, sf_dir):
     identically on both sides; the oracle re-runs the chain in DuckDB/RE2
     and compares per-doc counts plus an md5 of the redacted text. Map-only
     scan, whole-stage codegen, no shuffle — the 100-TB shape."""
-    from beats_spark import textops as TX
 
     doc = F.col("doc_id")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
@@ -2528,7 +2534,7 @@ def q_pii_redact(spark, sf_dir):
         F.concat(t2, F.lit(" src=10."), (doc % 200).cast("string"),
                  F.lit(".3.7 ssn 123-45-6789")),
     ).otherwise(t2)
-    out = TX.pii_redact(docs.withColumn("text", injected))
+    out = X.pii_redact(docs.withColumn("text", injected))
     return out.select(
         "doc_id", "n_email", "n_ssn", "n_ipv4", "n_phone",
         F.md5("redacted").alias("red_md5"),
@@ -2567,7 +2573,6 @@ def q_c4_clean(spark, sf_dir):
     usually lacks terminal punctuation; doc_id % 7 plants lorem ipsum,
     % 11 a javascript line) identically on both sides; oracle compares
     per-doc kept-line count, keep flag, and md5 of the cleaned text."""
-    from beats_spark import textops as TX
 
     doc = F.col("doc_id")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
@@ -2588,7 +2593,7 @@ def q_c4_clean(spark, sf_dir):
             F.lit("Yet another keeper line with sufficient words included.")
         ),
     )
-    out = TX.c4_clean(docs.withColumn("text", page))
+    out = X.c4_clean(docs.withColumn("text", page))
     return out.select(
         "doc_id", "n_lines_kept", "keep",
         F.md5("cleaned").alias("clean_md5"),
@@ -2627,7 +2632,6 @@ def q_url_blocklist(spark, sf_dir):
     deterministically (% 4 → blocked tracker w/ case-folding, % 9 → clean
     host, % 12 → blocked bare host); oracle compares host count, first
     host, and the flag per doc."""
-    from beats_spark import textops as TX
 
     doc = F.col("doc_id")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
@@ -2643,7 +2647,7 @@ def q_url_blocklist(spark, sf_dir):
         F.when(doc % 12 == 0,
                F.lit(" plus http://seo-farm.example/")).otherwise(F.lit("")),
     )
-    out = TX.url_blocklist_flag(docs.withColumn("text", injected))
+    out = X.url_blocklist_flag(docs.withColumn("text", injected))
     return out.select(
         "doc_id", F.size("url_hosts").alias("n_hosts"),
         F.try_element_at("url_hosts", F.lit(1)).alias("first_host"),
@@ -2674,7 +2678,6 @@ def q_span_dedup(spark, sf_dir):
     over span STRINGS vs Spark's min-struct aggregation over xxhash64) —
     per-doc sentence counts, removed counts, and md5 of the rebuilt text
     must all agree."""
-    from beats_spark import dedup as D
 
     doc = F.col("doc_id")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
@@ -2706,7 +2709,6 @@ def q_stratified_sample(spark, sf_dir):
     partitioning/engine. Oracle recomputes every decision in DuckDB and
     compares per-source kept counts (md5 of identical input strings is
     engine-independent, so counts match exactly, not statistically)."""
-    from beats_spark import sampling as SM
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = SM.stratified_sample(docs, _MIX_RATES, salt="mix-v1",
@@ -2730,7 +2732,6 @@ def q_stratified_topn(spark, sf_dir):
     the identical rows in DuckDB, so this is a row-set equality on the
     actual sample, not a count check. One exchange on source; per-group
     top-N window, no global sort."""
-    from beats_spark import sampling as SM
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return SM.stratified_topn(docs, 10, salt="quota-v1").select(
@@ -2754,13 +2755,11 @@ def q_pack_sequences(spark, sf_dir):
     the identical deterministic spec with a DuckDB recursive CTE
     (sequential replay vs Spark's bucketed parallel pass) and compares
     every doc's bucket, truncated token count, bin and seq_id."""
-    from beats_spark import packing as PK
-    from beats_spark import textops as TX
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
         (F.col("doc_id") < 2000) & F.col("text").isNotNull()
     )
-    toks = TX.token_count(docs).select("doc_id", "n_tokens")
+    toks = X.token_count(docs).select("doc_id", "n_tokens")
     out = PK.pack_sequences(toks, capacity=512, bucket_chars=1)
     return out.select("doc_id", "bucket", "packed_tokens", "bin", "seq_id")
 
@@ -2779,12 +2778,11 @@ def q_chunk_documents(spark, sf_dir):
     upstream of pack_sequences. Map-only (in-array slices + one
     posexplode); oracle rebuilds every chunk with DuckDB list slicing and
     compares per-chunk token counts + md5 of the chunk text."""
-    from beats_spark import packing as PK2
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
         (F.col("doc_id") < 1500) & F.col("text").isNotNull()
     )
-    out = PK2.chunk_documents(docs, max_tokens=64, overlap=8)
+    out = PK.chunk_documents(docs, max_tokens=64, overlap=8)
     return out.select(
         "doc_id", "chunk_idx", "n_doc_tokens", "n_chunk_tokens",
         F.md5("chunk_text").alias("chunk_md5"),
@@ -2813,7 +2811,6 @@ def q_normalize_unicode(spark, sf_dir):
     which NFC must compose and the strip must remove. Oracle: DuckDB's
     native nfc_normalize over the identical injection — md5 and codepoint
     length of the normalized text compared per doc."""
-    from beats_spark import textops as TX
 
     doc = F.col("doc_id")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
@@ -2823,7 +2820,7 @@ def q_normalize_unicode(spark, sf_dir):
         doc % 3 == 0,
         F.concat(F.col("text"), F.lit(" Café\x07 fin")),
     ).otherwise(F.col("text"))
-    out = TX.normalize_unicode(docs.withColumn("text", injected))
+    out = X.normalize_unicode(docs.withColumn("text", injected))
     return out.select(
         "doc_id",
         F.md5("norm_text").alias("norm_md5"),
@@ -2921,9 +2918,6 @@ def q_curation_funnel(spark, sf_dir):
     which shuffle bare hashes/ids), so the funnel costs one scan plus two
     small exchanges regardless of stage count. The oracle rebuilds every
     stage from the shared SQL fragments and recomputes all six counts."""
-    from beats_spark import dedup as D2
-    from beats_spark import sampling as SM2
-    from beats_spark import textops as TX
 
     doc = F.col("doc_id")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
@@ -2945,14 +2939,14 @@ def q_curation_funnel(spark, sf_dir):
         F.when(doc % 13 == 0, F.concat(t2, F.lit(" lorem ipsum")))
         .otherwise(t2),
     )
-    n = TX.normalize_unicode(docs)
+    n = X.normalize_unicode(docs)
     # line-ify: one sentence per line, so the C4 line rules see real lines
     n = n.withColumn(
-        "norm_text", F.array_join(D2.sentences_expr("norm_text"), "\n")
+        "norm_text", F.array_join(D.sentences_expr("norm_text"), "\n")
     )
-    c4 = TX.c4_clean(n, text_col="norm_text")
-    q = TX.quality_features(c4.withColumnRenamed("keep", "f_c4"),
-                            text_col="cleaned")
+    c4 = X.c4_clean(n, text_col="norm_text")
+    q = X.quality_features(c4.withColumnRenamed("keep", "f_c4"),
+                           text_col="cleaned")
     work = q.select(
         "doc_id", "source", "cleaned", "f_c4",
         (F.col("f_c4") & (F.col("n_tokens") >= 40)
@@ -2961,7 +2955,7 @@ def q_curation_funnel(spark, sf_dir):
     # dedup reps resolved on bare (hash, id) pairs; BOTH flag joins below
     # key on doc_id so the corpus shuffles once and the second join reuses
     # the partitioning (no exchange between them)
-    key = F.sha2(D2.normalize_text(F.col("cleaned")), 256)
+    key = F.sha2(D.normalize_text(F.col("cleaned")), 256)
     # lineage cut: keyed feeds the dedup rep resolution, its own join-back,
     # both decontamination gram sides and the dec join-back — without it
     # the whole normalize→c4→quality chain (including the Arrow
@@ -2982,15 +2976,15 @@ def q_curation_funnel(spark, sf_dir):
     )
     surv = keyed.where("f_d").select("doc_id", "cleaned")
     probe = surv.where(doc % 11 == 0)
-    dec = D2.decontaminate(surv, probe, text_col="cleaned",
-                           probe_text_col="cleaned", n=8)
+    dec = D.decontaminate(surv, probe, text_col="cleaned",
+                          probe_text_col="cleaned", n=8)
     keyed = keyed.join(dec.select("doc_id", "contaminated"), "doc_id", "left")
     keyed = keyed.withColumn(
         "f_dec",
         F.col("f_d") & ~F.coalesce(F.col("contaminated"), F.lit(False)),
     )
-    flagged = SM2.stratified_sample(keyed, _FUNNEL_RATES, salt="funnel",
-                                    default_rate=0.8)
+    flagged = SM.stratified_sample(keyed, _FUNNEL_RATES, salt="funnel",
+                                   default_rate=0.8)
     return flagged.agg(
         F.count("*").alias("n_input"),
         F.count(F.when(F.col("f_c4"), 1)).alias("n_c4"),
@@ -3003,9 +2997,7 @@ def q_curation_funnel(spark, sf_dir):
 
 
 def _transcript_curation_oracle() -> str:
-    from beats_spark.textops import pii_redact_sql, token_count_sql
-
-    p = pii_redact_sql("text")
+    p = X.pii_redact_sql("text")
     kept = "NOT corrupt AND dup_rank = 1"
     return oracle_cte() + f"""
 , red AS (
@@ -3029,7 +3021,7 @@ SELECT role, count(*) AS turns,
        CAST(sum(n_ipv4) AS BIGINT) AS ipv4_hits,
        CAST(sum(n_email) AS BIGINT) AS email_hits,
        CAST(sum(n_phone) AS BIGINT) AS phone_hits,
-       CAST(sum(CASE WHEN {kept} THEN {token_count_sql('redacted')} ELSE 0 END)
+       CAST(sum(CASE WHEN {kept} THEN {X.token_count_sql('redacted')} ELSE 0 END)
             AS BIGINT) AS kept_tokens
 FROM ranked GROUP BY role
 """
@@ -3048,15 +3040,14 @@ def q_transcript_curation(spark, sf_dir):
     conversations; the final per-role funnel is a partial-agg groupBy over
     tiny numeric columns. The DuckDB oracle rebuilds every stage from the
     shared pii_redact_sql/token_count_sql fragments."""
-    from beats_spark import textops as TX
 
     t = load_transcripts(spark, sf_dir)
-    r = TX.pii_redact(t, text_col="text")
+    r = X.pii_redact(t, text_col="text")
     r = r.withColumn("corrupt", F.col("text").startswith("!!corrupt"))
     w = W.partitionBy("conv_id", F.md5("redacted")).orderBy("turn_idx")
     r = r.withColumn("dup_rank", F.row_number().over(w))
     kept = ~F.col("corrupt") & (F.col("dup_rank") == 1)
-    r = TX.token_count(r, text_col="redacted")
+    r = X.token_count(r, text_col="redacted")
     return r.groupBy("role").agg(
         F.count("*").alias("turns"),
         F.sum(F.col("corrupt").cast("long")).alias("corrupt_turns"),
@@ -4589,17 +4580,14 @@ def q_event_stamp(spark, sf_dir):
 @register(
     "dns_enrich",
     oracle_cte()
-    + r"""
+    + f"""
 , base AS (
-  SELECT CASE WHEN regexp_matches(split_part(text, ' ', 1),
-         '^(25[0-5]|2[0-4][0-9]|1?[0-9]?[0-9])(\.(25[0-5]|2[0-4][0-9]|1?[0-9]?[0-9])){3}$')
-         THEN split_part(text, ' ', 1) END AS ip
-  FROM transcripts
+  SELECT {convert_sql(_TOK0_SQL, "ip")} AS ip FROM transcripts
 ), res AS (
   SELECT DISTINCT ip AS query,
          'host-' || replace(ip, '.', '-') || '.internal.example' AS answer
   FROM base
-  WHERE ip IS NOT NULL AND CAST(split_part(ip, '.', 4) AS BIGINT) % 3 <> 0
+  WHERE ip IS NOT NULL AND TRY_CAST(split_part(ip, '.', 4) AS BIGINT) % 3 <> 0
 )
 SELECT r.answer AS resolved_host,
        (b.ip IS NOT NULL AND r.answer IS NULL) AS dns_failed,
@@ -4660,18 +4648,16 @@ def q_dns_enrich(spark, sf_dir):
 
 
 def _hash_split_oracle() -> str:
-    from beats_spark.sampling import hash_split_sql
-
     return f"""
 SELECT split, count(*) AS n_docs,
        CAST(sum(doc_id) AS BIGINT) AS sum_id,
        min(doc_id) AS min_id, max(doc_id) AS max_id
-FROM (SELECT doc_id, {hash_split_sql()} AS split FROM documents) s
+FROM (SELECT doc_id, {SM.hash_split_sql()} AS split FROM documents) s
 GROUP BY 1
 """.strip()
 
 
-@register("hash_split", None)
+@register("hash_split", _hash_split_oracle())
 def q_hash_split(spark, sf_dir):
     """Deterministic train/val/test holdout (sampling.hash_split): every
     document lands in the first split whose cumulative md5-threshold
@@ -4681,7 +4667,6 @@ def q_hash_split(spark, sf_dir):
     an old one between splits). Plan: map-only CASE chain in whole-stage
     codegen, one corpus groupBy with map-side partials. Oracle restates
     the identical threshold CASE in DuckDB."""
-    from beats_spark import sampling as SM
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return SM.hash_split(docs).groupBy("split").agg(
@@ -4692,7 +4677,7 @@ def q_hash_split(spark, sf_dir):
     )
 
 
-@register("ngram_topk", None)
+@register("ngram_topk", X.ngram_topk_sql(n=2, k=20))
 def q_ngram_topk(spark, sf_dir):
     """Corpus-wide top-20 word bigrams (textops.ngram_topk) — the classic
     heavy-hitters audit (vocab building, boilerplate detection). Plan:
@@ -4701,13 +4686,17 @@ def q_ngram_topk(spark, sf_dir):
     orderBy+limit compiles to TakeOrderedAndProject — per-partition
     bounded heaps, never a global sort. Tie-break (count desc, gram asc)
     is shared with the oracle so the listing is deterministic."""
-    from beats_spark import textops as X
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return X.ngram_topk(docs, n=2, k=20)
 
 
-@register("tfidf_keywords", None)
+@register(
+    "tfidf_keywords",
+    X.tfidf_topk_sql(
+        table="(SELECT * FROM documents WHERE doc_id < 2000) b", k=3
+    ),
+)
 def q_tfidf_keywords(spark, sf_dir):
     """Per-document top-3 keywords by tf-idf (textops.tfidf_topk), scored
     as tf/df — idf's rank-equivalent core chosen because integer÷integer
@@ -4717,7 +4706,6 @@ def q_tfidf_keywords(spark, sf_dir):
     hash-on-term, then a per-document row_number window whose sort is
     bounded by one document's vocabulary. Ties break by term asc in both
     engines."""
-    from beats_spark import textops as X
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
         F.col("doc_id") < 2000
@@ -4725,7 +4713,20 @@ def q_tfidf_keywords(spark, sf_dir):
     return X.tfidf_topk(docs, k=3)
 
 
-@register("bloom_decontaminate", None)
+def _bloom_decontaminate_oracle() -> str:
+    flags = D.bloom_decontaminate_sql(
+        table="(SELECT * FROM documents"
+              " WHERE doc_id < 1500 AND text IS NOT NULL) b"
+    )
+    return f"""
+SELECT contaminated, count(*) AS n_docs,
+       min(doc_id) AS min_id, max(doc_id) AS max_id,
+       CAST(sum(doc_id) AS BIGINT) AS sum_id
+FROM ({flags}) f GROUP BY 1
+""".strip()
+
+
+@register("bloom_decontaminate", _bloom_decontaminate_oracle())
 def q_bloom_decontaminate(spark, sf_dir):
     """Bloom-filter decontamination (dedup.bloom_decontaminate): the scale
     path for when the probe's exact 13-gram hash set is itself too big to
@@ -4736,7 +4737,6 @@ def q_bloom_decontaminate(spark, sf_dir):
     false positives are DETERMINISTIC: both engines derive the same
     md5 double-hash positions, so the oracle rebuilds the identical
     bitmap and reproduces every flag, false positives included."""
-    from beats_spark import dedup as D
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
         F.col("doc_id") < 1500
@@ -4756,7 +4756,19 @@ _BOILER_FOOTERS = ("Copyright 2024 Example Corp",
                    "Subscribe to our newsletter")
 
 
-@register("strip_boilerplate", None)
+def _strip_boilerplate_oracle() -> str:
+    page = f"""
+(SELECT doc_id,
+        '{_BOILER_HEADER}' || chr(10) || text || chr(10) ||
+        CASE WHEN doc_id % 2 = 0 THEN '{_BOILER_FOOTERS[0]}'
+             ELSE '{_BOILER_FOOTERS[1]}' END || chr(10) ||
+        'ref: doc-' || doc_id AS text
+ FROM documents WHERE doc_id < 3000 AND text IS NOT NULL) p
+""".strip()
+    return X.strip_boilerplate_sql(table=page, min_docs=50)
+
+
+@register("strip_boilerplate", _strip_boilerplate_oracle())
 def q_strip_boilerplate(spark, sf_dir):
     """Corpus-level boilerplate line removal (textops.strip_boilerplate —
     RefinedWeb §3.2 line-wise filtering applied corpus-wide): any trimmed
@@ -4769,7 +4781,6 @@ def q_strip_boilerplate(spark, sf_dir):
     would surface as a hash mismatch. Plan: bare (id, hash) frequency
     shuffle, removed-hash sets join back BY ID, in-array rebuild — text
     never rides the frequency exchange (plan-gated)."""
-    from beats_spark import textops as X
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
         (F.col("doc_id") < 3000) & F.col("text").isNotNull()
@@ -4791,20 +4802,6 @@ def q_strip_boilerplate(spark, sf_dir):
         "doc_id", "n_lines", "n_removed",
         F.md5("cleaned").alias("cleaned_md5"),
     )
-
-
-def _strip_boilerplate_oracle() -> str:
-    from beats_spark.textops import strip_boilerplate_sql
-
-    page = f"""
-(SELECT doc_id,
-        '{_BOILER_HEADER}' || chr(10) || text || chr(10) ||
-        CASE WHEN doc_id % 2 = 0 THEN '{_BOILER_FOOTERS[0]}'
-             ELSE '{_BOILER_FOOTERS[1]}' END || chr(10) ||
-        'ref: doc-' || doc_id AS text
- FROM documents WHERE doc_id < 3000 AND text IS NOT NULL) p
-""".strip()
-    return strip_boilerplate_sql(table=page, min_docs=50)
 
 
 def _hash_embed_votes_cte(max_id: int) -> str:
@@ -4851,7 +4848,6 @@ def q_hash_embed(spark, sf_dir):
     re-derives every bit from the hex digest exactly as the simhash
     oracle does and compares a per-doc vector digest plus the exact
     integer L1 norm."""
-    from beats_spark import dedup as D
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -4912,8 +4908,6 @@ def q_hash_embed_topk(spark, sf_dir):
     engines' IEEE arithmetic agrees bit-for-bit, ties broken by neighbor
     id. Queries = the doc_id % 50 slice, broadcast against the corpus
     slice."""
-    from beats_spark import dedup as D
-    from beats_spark import similarity as SIM
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -4951,7 +4945,7 @@ GROUP BY role
     )
 
 
-@register("sample_gate", None)
+@register("sample_gate", _sample_gate_oracle())
 def q_sample_gate(spark, sf_dir):
     """has_fields condition + the sample processor through the driver
     gate: keep turns where tool AND text are present (actions/
@@ -4971,7 +4965,14 @@ def q_sample_gate(spark, sf_dir):
     )
 
 
-@register("containment_pairs", None)
+@register(
+    "containment_pairs",
+    D.containment_pairs_sql(
+        table="(SELECT * FROM documents"
+              " WHERE doc_id < 1000 AND text IS NOT NULL) b",
+        threshold=0.8,
+    ),
+)
 def q_containment_pairs(spark, sf_dir):
     """Directed containment join (dedup.containment_pairs — Broder 1997's
     containment coefficient, |A∩B|/|A| >= 0.8): the quote/subset detector
@@ -4983,7 +4984,6 @@ def q_containment_pairs(spark, sf_dir):
     documented rationale as prefix_jaccard_pairs (queries.py
     q_prefix_jaccard_pairs); the Spark plan itself is the
     inverted-index join that scales."""
-    from beats_spark import dedup as D
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
         (F.col("doc_id") < 1000) & F.col("text").isNotNull()
@@ -4991,37 +4991,6 @@ def q_containment_pairs(spark, sf_dir):
     return D.containment_pairs(docs, threshold=0.8)
 
 
-def _late_r5_oracles() -> None:
-    """Oracles for the round-5 additions above, built from the same
-    *_sql helpers the operators export (single source of truth)."""
-    from beats_spark import dedup as D
-    from beats_spark import textops as X
-
-    ORACLES["hash_split"] = _hash_split_oracle()
-    ORACLES["strip_boilerplate"] = _strip_boilerplate_oracle()
-    ORACLES["sample_gate"] = _sample_gate_oracle()
-    ORACLES["containment_pairs"] = D.containment_pairs_sql(
-        table="(SELECT * FROM documents"
-              " WHERE doc_id < 1000 AND text IS NOT NULL) b",
-        threshold=0.8,
-    )
-    ORACLES["ngram_topk"] = X.ngram_topk_sql(n=2, k=20)
-    ORACLES["tfidf_keywords"] = X.tfidf_topk_sql(
-        table="(SELECT * FROM documents WHERE doc_id < 2000) b", k=3
-    )
-    _bloom = D.bloom_decontaminate_sql(
-        table="(SELECT * FROM documents"
-              " WHERE doc_id < 1500 AND text IS NOT NULL) b"
-    )
-    ORACLES["bloom_decontaminate"] = f"""
-SELECT contaminated, count(*) AS n_docs,
-       min(doc_id) AS min_id, max(doc_id) AS max_id,
-       CAST(sum(doc_id) AS BIGINT) AS sum_id
-FROM ({_bloom}) f GROUP BY 1
-""".strip()
-
-
-_late_r5_oracles()
 
 
 # --------------------------------------------------------------------------

@@ -18,6 +18,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .textops import tokens
+
 _HEX_SPACE = 16 ** 8  # decisions use the first 8 hex chars of md5
 
 
@@ -201,10 +203,10 @@ _DSIR_SCALE = 1_000_000
 
 def _dsir_pairs(df: DataFrame, is_target: Column,
                 text_col: str, id_col: str) -> DataFrame:
-    """(id, is-target, bucket) hashed-bigram pairs; whitespace tokens,
-    lowercased. One explode serves both the distribution aggregates and
-    the per-doc weight sum."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    """(id, is-target, bucket) hashed-bigram pairs over `textops.tokens`.
+    One explode serves both the distribution aggregates and the per-doc
+    weight sum."""
+    toks = tokens(F.col(text_col))
     buckets = F.when(
         F.size(F.col("_toks")) >= 2,
         F.expr(
@@ -376,8 +378,8 @@ def gumbel_topk(
 def _lm_positions(df: DataFrame, is_target: Column,
                   text_col: str, id_col: str) -> DataFrame:
     """(id, is-target, b1: unigram-context bucket, b2: bigram bucket) per
-    adjacent token position (whitespace tokens, lowercased)."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    adjacent token position (`textops.tokens`)."""
+    toks = tokens(F.col(text_col))
     pos = F.when(
         F.size(F.col("_toks")) >= 2,
         F.expr(
@@ -608,58 +610,6 @@ dec AS (
 )
 SELECT * FROM dec
 """.strip()
-
-
-def temperature_mix_copies(
-    df: DataFrame,
-    group_col: str = "lang",
-    budget: int = 1000,
-    id_col: str = "doc_id",
-    salt: str = "mix",
-) -> DataFrame:
-    """temperature_mix's oversampling twin: when a group's α=0.5 target
-    EXCEEDS its size (the small-domain case — e.g. a multilingual
-    schedule giving a low-resource language several epochs), emit
-    ``mix_copies`` = how many times each doc appears in the mixed corpus
-    (0 = dropped) instead of the boolean keep. Exact integer semantics:
-    rate r = t / 16^8 with the same floor-quantized threshold t as
-    temperature_mix; every doc gets floor(r) copies and the fractional
-    remainder is awarded to docs whose md5(id:salt) prefix falls under
-    t mod 16^8 — so group totals land within |group| of budget·p_g and
-    the decision stays deterministic, repartition-stable, and monotone
-    in budget. Explode downstream with
-    ``df.withColumn("copy", F.explode(F.sequence(F.lit(1), "mix_copies")))``
-    — per-doc work, map-only."""
-    base = df.where(F.col(group_col).isNotNull())
-    counts = [
-        (r["_g"], r["_n"])
-        for r in base.groupBy(F.col(group_col).alias("_g"))
-        .agg(F.count("*").alias("_n")).collect()
-    ]
-    import math
-
-    qs = {g: math.floor(_MIX_Q * math.sqrt(n)) for g, n in counts}
-    s = sum(qs.values())
-    rows = []
-    for g, n in sorted(counts):
-        t = (_MIX_HEX_SPACE * budget * qs[g]) // (s * n) if s and n else 0
-        whole = t // _MIX_HEX_SPACE
-        frac_hex = format(t % _MIX_HEX_SPACE, "08x")
-        rows.append((g, int(whole), frac_hex))
-    spark = df.sparkSession
-    rates = spark.createDataFrame(
-        rows, f"{group_col} string, _whole int, _frac_hex string"
-    )
-    dec = _decision_hex(id_col, salt)
-    return (
-        base.join(F.broadcast(rates), group_col)
-        .withColumn(
-            "mix_copies",
-            F.col("_whole")
-            + (dec < F.col("_frac_hex")).cast("int"),
-        )
-        .drop("_whole", "_frac_hex")
-    )
 
 
 def _split_thresholds(weights: dict[str, float]) -> list[tuple[str, str]]:

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from beats_spark.pipeline import enrich_stage, parse_stage, route_stage
+from beats_spark.routing import drop_metadata
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -58,9 +59,12 @@ def write_sinks(
     """Per-sink fan-out writer with exactly-once file-sink semantics: the
     checkpointLocation tracks committed micro-batches (≅ registrar), and the
     file sink's transaction log makes replays idempotent — this is the
-    resumable path of the north rule in streaming form."""
+    resumable path of the north rule in streaming form. As in the batch
+    writer (`routing.fan_out`), `_meta_*` columns are dropped before write:
+    @metadata is never indexed."""
     w = (
-        routed.writeStream.format("parquet")
+        drop_metadata(routed)
+        .writeStream.format("parquet")
         .partitionBy("_sink")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)

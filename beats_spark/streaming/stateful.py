@@ -12,72 +12,11 @@ order, bucket refilled continuously at `rate_per_sec` up to `burst`.
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-
-def stream_cache_enrich(
-    tdf: DataFrame,
-    key_col: str,
-    op_col: str,
-    value_col: str,
-    target_col: str = "cached_value",
-    ts_col: str = "ts",
-    ttl_seconds: float | None = None,
-):
-    """The cache processor as a stateful streaming operator (reference:
-    /root/reference/libbeat/processors/cache/config.go:26-108 — put
-    stores {key → value, ts}, get enriches from the store, entries expire
-    after TTL). State is the per-key (value, stored_ts) pair in the state
-    store, so puts in one micro-batch enrich gets in later ones — the
-    ordering guarantee the batch join flavor (enrich.cache_put +
-    misc.cache_get) cannot give.
-
-    Rows with op_col=='put' update state (and pass through, target null);
-    rows with 'get' emit the cached value if fresh, else null.
-    """
-    out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in tdf.schema)
-        + f", {target_col} string"
-    )
-    state_schema = "value string, stored_ts double"
-
-    def fn(key, pdfs, state: GroupState):
-        value, stored = state.get if state.exists else (None, float("-inf"))
-        outs = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            col = []
-            for op, v, t in zip(pdf[op_col], pdf[value_col], pdf[ts_col]):
-                now = t.timestamp()
-                if op == "put":
-                    value, stored = v, now
-                    col.append(None)
-                else:  # get
-                    fresh = value is not None and (
-                        ttl_seconds is None or now - stored <= ttl_seconds
-                    )
-                    col.append(value if fresh else None)
-            pdf = pdf.copy()
-            pdf[target_col] = col
-            outs.append(pdf)
-        if value is not None:
-            # never seed state for a key with no put yet — a ('', -inf)
-            # sentinel would pass the `value is not None` freshness check on
-            # later micro-batches and make gets emit '' instead of null
-            state.update((value, stored))
-        yield pd.concat(outs)
-
-    return tdf.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def token_bucket_limit(

@@ -11,7 +11,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from beats_spark.scale import truncate_lineage
 
@@ -31,8 +30,33 @@ _WS = r"\s+"
 BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
+def normalize_text(col: Column) -> Column:
+    """Canonical text: lowercased, whitespace runs collapsed to one space,
+    trimmed — the exact-dedup key and the char-shingle input."""
+    return F.trim(F.regexp_replace(F.lower(col), _WS, " "))
+
+
 def tokens(col: Column) -> Column:
+    """Whitespace tokens of the lowercased, trimmed text — the one word
+    tokenizer of dedup, sampling and the text filters."""
     return F.split(F.trim(F.lower(col)), _WS)
+
+
+def word_ngrams(toks: Column, n: int, guarded: bool = False) -> Column:
+    """The word n-grams of a token array, in order and with repeats (callers
+    that want a set apply `array_distinct`), each joined with single spaces.
+    A run shorter than n tokens gives one gram of the whole run, or none
+    with `guarded`. Pass a materialized column: the lambda reads it once
+    per gram."""
+    def grams(last: Column) -> Column:
+        return F.transform(F.sequence(F.lit(1), last),
+                           lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
+
+    if guarded:  # sequence(1, 0) would count down, so the guard comes first
+        return F.when(
+            F.size(toks) >= n, grams(F.size(toks) - (n - 1))
+        ).otherwise(F.array())
+    return grams(F.greatest(F.size(toks) - (n - 1), F.lit(1)))
 
 
 def token_count(df: DataFrame, text_col: str = "text",
@@ -174,10 +198,7 @@ def doc_fingerprint(df: DataFrame, text_col: str = "text",
     is NULL keep a NULL fingerprint (the fold propagates null)."""
     # normalization staged as a real column: the fold lambda is interpreted
     # per element, so an inlined regexp_replace would re-run per position
-    out = df.withColumn(
-        "_fp_norm",
-        F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")),
-    )
+    out = df.withColumn("_fp_norm", normalize_text(F.col(text_col)))
     norm = F.col("_fp_norm")
     positions = F.sequence(
         F.lit(1), F.greatest(F.length(norm) - (k - 1), F.lit(1))
@@ -252,17 +273,14 @@ def repetition_features(
             ).alias("dup_line_char_frac"),
         )
     )
-    grams = F.expr(
-        f"transform(sequence(1, greatest(size(_toks) - {ngram_n - 1}, 1)),"
-        f" i -> concat_ws(' ', slice(_toks, i, {ngram_n})))"
-    )
     top = (
         df.select(
             F.col(id_col).alias("_id"),
             F.length(F.trim(F.col(text_col))).alias("_len"),
-            F.split(F.trim(F.lower(F.col(text_col))), _WS).alias("_toks"),
+            tokens(F.col(text_col)).alias("_toks"),
         )
-        .select("_id", "_len", F.explode(grams).alias("_g"))
+        .select("_id", "_len",
+                F.explode(word_ngrams(F.col("_toks"), ngram_n)).alias("_g"))
         .groupBy("_id", "_len", "_g")
         .agg(F.count("*").alias("_c"))
         .groupBy("_id")
@@ -982,82 +1000,6 @@ def bpe_learn_merges(
     return merges
 
 
-def bpe_encode(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    out_col: str = "bpe_tokens",
-) -> DataFrame:
-    """Apply learned BPE merges to the corpus (the tokenizer-APPLY step —
-    bpe_learn_merges is the train step). Standard merge-rank encoding:
-    per word, repeatedly merge the lowest-rank adjacent pair until no
-    learned pair remains. Adds `out_col: array<string>` and
-    `n_bpe_tokens`.
-
-    Scale shape: one mapInPandas pass (Arrow batches, no per-row Python
-    dispatch at the Spark layer); the kernel memoizes per-WORD encodings
-    in a batch-local dict, so the inner loop runs once per distinct word
-    per batch — Zipf makes that a small fraction of token volume. The
-    merge table ships in the closure (it is n_merges rows — vocab-sized).
-    Iterative semantics are not SQL-expressible; correctness is pinned in
-    pytest against a pure-Python reference encoder.
-
-    Tokenization mirrors tokens() (Java regex \\s+ — ASCII whitespace):
-    the kernel splits with re.ASCII so a word containing non-ASCII
-    whitespace (e.g. \\xa0) segments identically at train and encode
-    time, keeping encodings inside the learned-merge vocabulary."""
-    import re
-
-    ws_split = re.compile(r"\s+", re.ASCII).split
-    ranks = {pair: i for i, pair in enumerate(merges)}
-
-    def encode_word(word: str, memo: dict) -> list[str]:
-        got = memo.get(word)
-        if got is not None:
-            return got
-        syms = list(word) + [_EOW]
-        while len(syms) > 1:
-            best, bi = None, -1
-            for i in range(len(syms) - 1):
-                r = ranks.get((syms[i], syms[i + 1]))
-                if r is not None and (best is None or r < best):
-                    best, bi = r, i
-            if best is None:
-                break
-            syms[bi:bi + 2] = [syms[bi] + syms[bi + 1]]
-        memo[word] = syms
-        return syms
-
-    out_fields = df.schema.fields + [
-        T.StructField(out_col, T.ArrayType(T.StringType())),
-        T.StructField("n_bpe_tokens", T.IntegerType()),
-    ]
-    schema = T.StructType(out_fields)
-
-    def kernel(batches):
-        memo: dict = {}
-        for pdf in batches:
-            toks, counts = [], []
-            for text in pdf[text_col]:
-                if text is None or not str(text).strip():
-                    toks.append([])
-                    counts.append(0)
-                    continue
-                enc: list[str] = []
-                for w in ws_split(str(text).lower()):
-                    if w:
-                        enc.extend(encode_word(w, memo))
-                toks.append(enc)
-                counts.append(len(enc))
-            pdf = pdf.copy()
-            pdf[out_col] = toks
-            pdf["n_bpe_tokens"] = pd.Series(counts, dtype="int32",
-                                            index=pdf.index)
-            yield pdf
-
-    return df.mapInPandas(kernel, schema)
-
-
 def winnow_fingerprints(
     df: DataFrame,
     text_col: str = "text",
@@ -1082,8 +1024,7 @@ def winnow_fingerprints(
     trade simhash made (dedup.py): a production variant would use
     xxhash64, which DuckDB lacks. Docs shorter than w + k - 1 chars get
     an empty fingerprint set."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
-    out = df.withColumn("_wn_norm", norm)
+    out = df.withColumn("_wn_norm", normalize_text(F.col(text_col)))
     n_hashes = F.length(F.col("_wn_norm")) - (k - 1)
     hashes = F.transform(
         F.sequence(F.lit(1), F.greatest(n_hashes, F.lit(0))),
@@ -1140,8 +1081,7 @@ def cdc_chunk_hashes(
     in-array (transform/filter/zip); no exchange, no join, no Python.
     """
     zeros = "0" * zero_prefix
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
-    out = df.withColumn("_cdc_norm", norm)
+    out = df.withColumn("_cdc_norm", normalize_text(F.col(text_col)))
     n = F.length("_cdc_norm")
     npos = n - (k - 1)
     cut_ends = F.filter(
@@ -1365,17 +1305,11 @@ def ngram_counts(
     mandate); this is the classic heavy-hitters job every corpus audit
     runs (vocab building, boilerplate detection, contamination triage).
     """
-    grams = F.when(
-        F.size("_toks") >= n,
-        F.expr(
-            f"transform(sequence(1, size(_toks) - {n - 1}),"
-            f" i -> concat_ws(' ', slice(_toks, i, {n})))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     return (
         df.where(F.col(text_col).isNotNull())
         .select(tokens(F.col(text_col)).alias("_toks"))
-        .select(F.explode(grams).alias("gram"))
+        .select(F.explode(word_ngrams(F.col("_toks"), n, guarded=True))
+                .alias("gram"))
         .groupBy("gram")
         .agg(F.count("*").alias("n_occurrences"))
     )

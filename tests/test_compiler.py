@@ -198,3 +198,17 @@ def test_script_js_source_rejected_with_pointer(df):
                                       "source": "function process(e){}"}}])
     with pytest.raises(CompileError, match="processors"):
         compile_pipeline([{"script": {}}])
+
+
+def test_convert_processor_ignore_missing(df):
+    # a convert spec naming an absent field is skipped with ignore_missing
+    # and reported by name without it; the other specs still apply
+    fields = [{"from": "missing", "type": "long"},
+              {"from": "turn_idx", "to": "idx", "type": "string"}]
+    prog = compile_pipeline([{"convert": {"fields": fields,
+                                          "ignore_missing": True}}])
+    out = prog(df)
+    assert "missing" not in out.columns
+    assert sorted(r.idx for r in out.collect()) == ["0", "0", "1"]
+    with pytest.raises(ValueError, match="missing"):
+        compile_pipeline([{"convert": {"fields": fields}}])(df)

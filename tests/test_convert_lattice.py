@@ -4,12 +4,14 @@
 `convert` processor compile to, run on the JVM) and `grok._convert_scalar`
 (what `Grok.grok` and `Dissector.dissect` apply) both gate on
 `grok.CONVERT_SYNTAX`; for every type they must give the same value for the
-same string. Floats compare after rounding the scalar's double to float32,
+same string. So must `operators.parse.convert_sql`, the DuckDB twin the
+oracles use. Floats compare after rounding the scalar's double to float32,
 which is what the Column form does too.
 """
 
 from __future__ import annotations
 
+import duckdb
 import numpy as np
 import pytest
 from hypothesis import given, settings
@@ -62,9 +64,21 @@ def _check(spark, values):
             assert _same(row[t], _want(v, t)), (v, t, row[t], _want(v, t))
 
 
+def _check_sql(values):
+    cols = ", ".join(f'{P.convert_sql("s", t)} AS "{t}"' for t in _TYPES)
+    with duckdb.connect() as con:
+        con.execute("CREATE TABLE v (i INTEGER, s VARCHAR)")
+        con.executemany("INSERT INTO v VALUES (?, ?)", list(enumerate(values)))
+        rows = con.execute(f"SELECT {cols} FROM v ORDER BY i").fetchall()
+    for v, row in zip(values, rows):
+        for t, got in zip(_TYPES, row):
+            assert _same(got, _want(v, t)), (v, t, got, _want(v, t))
+
+
 @pytest.mark.parametrize("value", _TABLE)
 def test_lattice_table_rows(spark, value):
     _check(spark, ["7", value, None])
+    _check_sql(["7", value, None])
 
 
 @settings(max_examples=30, deadline=None)

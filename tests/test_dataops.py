@@ -706,60 +706,6 @@ def test_bpe_merge_overlap_is_leftmost(spark):
     assert got == want
 
 
-def _bpe_reference_encode(word: str, merges: list[tuple[str, str]]):
-    ranks = {p: i for i, p in enumerate(merges)}
-    syms = list(word) + ["</w>"]
-    while len(syms) > 1:
-        best, bi = None, -1
-        for i in range(len(syms) - 1):
-            r = ranks.get((syms[i], syms[i + 1]))
-            if r is not None and (best is None or r < best):
-                best, bi = r, i
-        if best is None:
-            break
-        syms[bi:bi + 2] = [syms[bi] + syms[bi + 1]]
-    return syms
-
-
-def test_bpe_encode_matches_learned_merges(spark):
-    corpus = "low low low low low lower lower newest newest newest " \
-             "newest newest newest widest widest widest"
-    df = spark.createDataFrame(
-        [(0, corpus), (1, "low newest"), (2, None), (3, "   ")],
-        "doc_id long, text string",
-    )
-    merges = X.bpe_learn_merges(df, n_merges=6)
-    got = {r["doc_id"]: r for r in X.bpe_encode(df, merges).collect()}
-    want1 = (_bpe_reference_encode("low", merges)
-             + _bpe_reference_encode("newest", merges))
-    assert got[1]["bpe_tokens"] == want1
-    assert got[1]["n_bpe_tokens"] == len(want1)
-    assert got[2]["bpe_tokens"] == [] and got[2]["n_bpe_tokens"] == 0
-    assert got[3]["bpe_tokens"] == [] and got[3]["n_bpe_tokens"] == 0
-    # full corpus doc: encode word-by-word with the reference
-    want0 = []
-    for w in corpus.split():
-        want0.extend(_bpe_reference_encode(w, merges))
-    assert got[0]["bpe_tokens"] == want0
-
-
-def test_bpe_encode_rank_priority_not_greedy_position(spark):
-    # merges ranked [(b,c), (a,b)]: "abc" must merge (b,c) FIRST even
-    # though (a,b) appears earlier in the word
-    df = spark.createDataFrame([(0, "abc")], "doc_id long, text string")
-    got = X.bpe_encode(df, [("b", "c"), ("a", "b")]).collect()[0]
-    assert got["bpe_tokens"] == ["a", "bc", "</w>"]
-
-
-def test_bpe_encode_ascii_whitespace_matches_train_tokenization(spark):
-    # \xa0 is NOT a token boundary at train time (tokens() uses Java
-    # \s+, ASCII-only); the encoder splits with re.ASCII so the same
-    # text yields the same single word at encode time
-    df = spark.createDataFrame([(0, "ab\xa0cd")], "doc_id long, text string")
-    got = X.bpe_encode(df, []).collect()[0]
-    assert got["bpe_tokens"] == list("ab\xa0cd") + ["</w>"]
-
-
 def test_winnow_guarantee_shared_substring(spark):
     from beats_spark.textops import winnow_fingerprints
 

@@ -469,48 +469,3 @@ def test_mix_threshold_math_invariants(counts, budget):
             # the hex threshold is the floor of the exact rate in 1/2^32
             # units — never above it, within 1 ulp below
             assert t <= exact_rate * _MIX_HEX_SPACE < t + n * s + 1
-
-
-def test_temperature_mix_copies_oversamples_small_groups(spark):
-    from beats_spark.sampling import temperature_mix, temperature_mix_copies
-
-    # 900 big + 100 small docs, budget 1000: α=0.5 targets ≈ 750/250 —
-    # the small group needs 2.5 epochs
-    rows = [(i, "big" if i < 900 else "small") for i in range(1000)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    got = (
-        temperature_mix_copies(df, budget=1000)
-        .groupBy("lang")
-        .agg(F.count("*").alias("n"), F.sum("mix_copies").alias("total"),
-             F.min("mix_copies").alias("lo"), F.max("mix_copies").alias("hi"))
-        .collect()
-    )
-    by = {r["lang"]: r for r in got}
-    # every small doc appears at least twice (floor(2.5) = 2)
-    assert by["small"]["lo"] >= 2 and by["small"]["hi"] <= 3
-    assert by["big"]["lo"] >= 0 and by["big"]["hi"] <= 1
-    # group totals land near budget * p_g (within binomial noise)
-    assert 200 <= by["small"]["total"] <= 300
-    assert 700 <= by["big"]["total"] <= 810
-    # sub-1 rates agree with temperature_mix's boolean: same threshold
-    keep = {r["doc_id"] for r in temperature_mix(df, budget=1000)
-            .where("mix_kept").collect() if r["doc_id"] < 900}
-    copies = {r["doc_id"] for r in temperature_mix_copies(df, budget=1000)
-              .where("mix_copies > 0").collect() if r["doc_id"] < 900}
-    assert keep == copies
-
-
-def test_temperature_mix_copies_partition_stable(spark):
-    from beats_spark.sampling import temperature_mix_copies
-
-    rows = [(i, ["en", "de"][i % 2]) for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-
-    def result(parts):
-        return sorted(
-            (r["doc_id"], r["mix_copies"])
-            for r in temperature_mix_copies(df.repartition(parts),
-                                            budget=300).collect()
-        )
-
-    assert result(1) == result(7)

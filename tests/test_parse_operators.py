@@ -161,6 +161,16 @@ def test_convert_and_ip_validation(spark):
     assert rows[1].n_int is None and rows[1].ip is None
 
 
+def test_convert_ignore_missing(spark):
+    df = spark.createDataFrame([("42",)], "n string")
+    spec = [{"from": "missing", "type": "long"},
+            {"from": "n", "to": "n_int", "type": "long"}]
+    out = P.convert(df, spec, ignore_missing=True)
+    assert out.columns == ["n", "n_int"] and out.first().n_int == 42
+    with pytest.raises(ValueError, match="'missing'"):
+        P.convert(df, spec)
+
+
 def test_decode_duration(spark):
     df = spark.createDataFrame(
         [("1h30m",), ("250ms",), ("2s",),

@@ -426,3 +426,34 @@ def test_containment_prefix_filter_equals_brute_force(spark, texts):
         and len(sets[a] & sets[b]) >= 0.6 * len(sets[a])
     }
     assert got == want
+
+
+def _word_ngrams_reference(toks: list[str], n: int, guarded: bool) -> list[str]:
+    if len(toks) < n:
+        return [] if guarded else [" ".join(toks)]
+    return [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+
+
+@settings(max_examples=20, deadline=None)
+@given(st.lists(st.lists(st.sampled_from(["a", "b", "cd", "é"]), max_size=8),
+                min_size=1, max_size=6),
+       st.integers(min_value=1, max_value=4))
+def test_word_ngrams_matches_slice_reference(spark, runs, n):
+    """textops.word_ngrams, the one word n-gram builder of dedup and the
+    text filters, against a Python slice reference: in order, repeats
+    kept, a run shorter than n one whole-run gram (none when guarded)."""
+    from pyspark.sql import functions as F
+
+    from beats_spark.textops import word_ngrams
+
+    runs = [*runs, ["a"] * (n - 1)]  # always one run shorter than n
+    df = spark.createDataFrame(list(enumerate(runs)), "i int, toks array<string>")
+    got = df.select(
+        "i",
+        word_ngrams(F.col("toks"), n).alias("g"),
+        word_ngrams(F.col("toks"), n, guarded=True).alias("guarded"),
+    ).collect()
+    for row in got:
+        toks = runs[row["i"]]
+        assert row["g"] == _word_ngrams_reference(toks, n, False), (toks, n)
+        assert row["guarded"] == _word_ngrams_reference(toks, n, True), (toks, n)

@@ -71,6 +71,24 @@ def test_stream_resume_from_checkpoint(spark, source_dir, tmp_path):
     assert n1 == n2 > 0
 
 
+def test_stream_sinks_drop_metadata(spark, source_dir, tmp_path):
+    # @metadata routes but is never indexed: the stream writer drops
+    # `_meta_*` as the batch fan_out does
+    from beats_spark.operators.enrich import add_data_stream
+
+    out = str(tmp_path / "out_meta")
+    routed = add_data_stream(
+        stream_pipeline(stream_transcripts(spark, source_dir)),
+        dataset="transcripts",
+    )
+    assert "_meta_raw_index" in routed.columns
+    q = write_sinks(routed, out, str(tmp_path / "ckpt_meta"))
+    q.awaitTermination(120)
+    back = spark.read.parquet(out)
+    assert back.count() > 0 and "data_stream" in back.columns
+    assert not [c for c in back.columns if c.startswith("_meta_")]
+
+
 def _run_memory_stream(spark, df, name, mode="append"):
     q = (
         df.writeStream.format("memory")
@@ -130,61 +148,6 @@ def test_token_bucket_stateful(spark, tmp_path):
     counts = {r.key: r.n for r in got.groupBy("key").agg(F.count("*").alias("n")).collect()}
     assert counts["k1"] == 3  # burst exhausted within one second
     assert counts["k2"] == 4  # refill rate 1/s covers 5s spacing
-
-
-def test_stream_cache_enrich_cross_batch(spark, tmp_path):
-    from beats_spark.streaming.stateful import stream_cache_enrich
-
-    base = datetime.datetime(2024, 1, 1)
-    # batch files processed in order (maxFilesPerTrigger=1): put in file 0
-    # must enrich gets in file 1 (state survives micro-batches)
-    src = tmp_path / "cache_src"
-    src.mkdir()
-    rows0 = [("k1", "put", "v1", base)]
-    rows1 = [
-        ("k1", "get", None, base + datetime.timedelta(seconds=30)),
-        ("k2", "get", None, base + datetime.timedelta(seconds=30)),
-    ]
-    schema = "key string, op string, value string, ts timestamp"
-    spark.createDataFrame(rows0, schema).coalesce(1).write.parquet(str(src / "f0"))
-    spark.createDataFrame(rows1, schema).coalesce(1).write.parquet(str(src / "f1"))
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
-    enriched = stream_cache_enrich(sdf, "key", "op", "value", ttl_seconds=3600)
-    got = _run_memory_stream(spark, enriched, "cache_t")
-    rows = {(r.key, r.op): r.cached_value for r in got.collect()}
-    assert rows[("k1", "get")] == "v1"  # put from earlier batch visible
-    assert rows[("k2", "get")] is None  # miss
-    assert rows[("k1", "put")] is None  # puts pass through unenriched
-
-
-def test_stream_cache_never_put_key_stays_null(spark, tmp_path):
-    # ADVICE r1: gets on a never-put key must emit null in EVERY micro-batch
-    # — the old ('', -inf) state seed leaked '' from the second batch on
-    from beats_spark.streaming.stateful import stream_cache_enrich
-
-    base = datetime.datetime(2024, 1, 1)
-    src = tmp_path / "cache_src2"
-    src.mkdir()
-    schema = "key string, op string, value string, ts timestamp"
-    for i in range(3):  # three micro-batches of gets, no put ever
-        rows = [("k", "get", None, base + datetime.timedelta(seconds=i))]
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(src / f"f{i}")
-        )
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
-    enriched = stream_cache_enrich(sdf, "key", "op", "value",
-                                   ttl_seconds=None)
-    got = _run_memory_stream(spark, enriched, "cache_t2")
-    vals = [r.cached_value for r in got.collect()]
-    assert len(vals) == 3 and all(v is None for v in vals)
 
 
 def test_stream_exact_dedup(spark, source_dir, tmp_path):
