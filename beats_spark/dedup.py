@@ -6,15 +6,18 @@ Five flavors, all DataFrame-native:
 - MinHash + LSH: char-shingles → K minhashes → B bands → band-bucket
   self-join → exact Jaccard verify. Shingling/minhashing run entirely in
   the JVM (one hash per shingle, then K min() aggregates — no Python);
-- SimHash: 64-bit signature via Arrow-vectorized numpy (bit-parallel),
-  near-dup = Hamming distance ≤ t within LSH-style chunk buckets;
+- SimHash: 64-bit signature via Arrow-vectorized numpy (bit-parallel) over
+  `textops.tokens` cut on the JVM, near-dup = Hamming distance ≤ t within
+  LSH-style chunk buckets;
 - n-gram Jaccard: word n-gram sets, MinHash-banded or prefix-filter
   candidates, exact verify;
 - embedding cosine: see beats_spark.similarity (near-dup = cos ≥ τ).
 
 Text units come from textops (`normalize_text`, `tokens`, `word_ngrams`),
-and every pair join verifies its bare (id_a, id_b) candidates through the
-one by-id join `_verify_by_id`, each with its own measure.
+and the DuckDB oracles spell them through their twins there (`*_sql`; the
+shingle twin `shingles_sql` sits beside `shingles_expr`). Every pair join
+verifies its bare (id_a, id_b) candidates through the one by-id join
+`_verify_by_id`, each with its own measure.
 
 Scale shape: every stage is a map or a shuffle on a dedup key; candidate
 generation never does an unblocked cross join. At 100 TB, band hashing
@@ -33,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .scale import truncate_lineage
-from .textops import normalize_text, tokens, word_ngrams
+from .textops import normalize_text, tokens, tokens_sql, word_ngrams, word_ngrams_sql
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -64,6 +67,15 @@ def shingles_expr(norm_col: str, k: int = 5) -> Column:
     return F.expr(
         f"array_distinct(transform(sequence(1, greatest(length({norm_col}) - {k - 1}, 1)),"
         f" i -> substr({norm_col}, i, {k})))"
+    )
+
+
+def shingles_sql(norm: str, k: int = 5) -> str:
+    """DuckDB twin of `shingles_expr` (a set: `list_distinct` does not keep
+    order, and it drops the NULL shingle that Spark gives NULL text)."""
+    return (
+        f"list_distinct(list_transform(range(1, greatest(length({norm}) - {k - 1}, 1) + 1),"
+        f" i -> substr({norm}, CAST(i AS INTEGER), {k})))"
     )
 
 
@@ -374,36 +386,36 @@ def _md5_token_hashes(flat: np.ndarray) -> np.ndarray:
     return vals[inv]
 
 
-def _md5_votes(texts: pd.Series, dim: int) -> np.ndarray:
-    """(n_docs, dim) vote matrix: component j = Σ_tokens (+1 if bit j of
-    the token's md5 hash else -1). Batch-vectorized: all tokens of the
-    Arrow batch are flattened into one array, md5-hashed per unique token
-    (`_md5_token_hashes`), expanded to a bit matrix and segment-summed per
-    document — per-UNIQUE-token Python only, all per-occurrence work in
-    numpy. dim ≤ 64 uses the token hash's bits directly."""
+def _md5_votes(toks: pd.Series, dim: int) -> np.ndarray:
+    """(n_docs, dim) vote matrix over token lists (`textops.tokens`, cut on
+    the JVM): component j = Σ_tokens (+1 if bit j of the token's md5 hash
+    else -1). Empty tokens are dropped, so empty and NULL text are the zero
+    vector. Batch-vectorized: all tokens of the Arrow batch are flattened
+    into one array, md5-hashed per unique token (`_md5_token_hashes`),
+    expanded to a bit matrix and segment-summed per document — per-UNIQUE-
+    token Python only, all per-occurrence work in numpy. dim ≤ 64 uses the
+    token hash's bits directly."""
     assert dim <= 64
-    tok_lists = texts.map(
-        lambda t: str(t).lower().split() if t is not None else []
-    )
-    lengths = tok_lists.map(len).to_numpy()
-    sums = np.zeros((len(texts), dim), dtype=np.int64)
+    tok_lists = [[x for x in t if x] if t is not None else [] for t in toks]
+    lengths = np.array([len(t) for t in tok_lists], dtype=np.int64)
+    sums = np.zeros((len(toks), dim), dtype=np.int64)
     if lengths.sum() == 0:
         return sums
     flat = np.concatenate([np.asarray(t, dtype=object) for t in tok_lists if t])
     hashes = _md5_token_hashes(flat)  # (N,) uint64, deterministic
     bits = ((hashes[:, None] >> np.arange(dim, dtype=np.uint64)[None, :])
             & np.uint64(1)).astype(np.int64)  # (N, dim)
-    np.add.at(sums, np.repeat(np.arange(len(texts)), lengths), bits)
+    np.add.at(sums, np.repeat(np.arange(len(toks)), lengths), bits)
     return sums * 2 - lengths[:, None]
 
 
-def simhash_series(texts: pd.Series) -> pd.Series:
-    """64-bit simhash per text: the signs of the 64-component vote vector
-    (`hash_embedding_series`) packed into one long."""
-    votes = _md5_votes(texts, 64)
+def simhash_series(toks: pd.Series) -> pd.Series:
+    """64-bit simhash per token list: the signs of the 64-component vote
+    vector (`hash_embedding_series`) packed into one long."""
+    votes = _md5_votes(toks, 64)
     weights = (np.uint64(1) << np.arange(64, dtype=np.uint64))
     packed = ((votes > 0).astype(np.uint64) * weights[None, :]).sum(axis=1)
-    return pd.Series(packed.astype(np.int64), index=texts.index)
+    return pd.Series(packed.astype(np.int64), index=toks.index)
 
 
 def simhash(df: DataFrame, text_col: str = "text", target: str = "simhash") -> DataFrame:
@@ -411,7 +423,7 @@ def simhash(df: DataFrame, text_col: str = "text", target: str = "simhash") -> D
     def _udf(s: pd.Series) -> pd.Series:
         return simhash_series(s)
 
-    return df.withColumn(target, _udf(F.col(text_col)))
+    return df.withColumn(target, _udf(tokens(F.col(text_col))))
 
 
 def simhash_near_pairs(
@@ -787,9 +799,8 @@ def exact_substr_dedup_oracle(table: str = "documents",
                               window: int = 50) -> str:
     """DuckDB twin of exact_substr_dedup, deduping on token-window STRINGS
     (no hashing)."""
-    toks = f"regexp_split_to_array(trim(lower({text_col})), '\\s+')"
     return _first_occurrence_dedup_oracle(table, text_col, id_col, window,
-                                          toks, "n_tokens")
+                                          tokens_sql(text_col), "n_tokens")
 
 
 # -- Bloom-filter decontamination ----------------------------------------------
@@ -928,13 +939,11 @@ def bloom_decontaminate_sql(
     unp = ", ".join(f"p{i}" for i in range(k_hashes))
     return f"""
 WITH toks AS (
-  SELECT {id_col} AS _id, regexp_split_to_array(trim(lower({text_col})), '\\s+') AS t
+  SELECT {id_col} AS _id, {tokens_sql(text_col)} AS t
   FROM {table} WHERE {text_col} IS NOT NULL
 ),
 grams AS (
-  SELECT _id, unnest(list_distinct(list_transform(
-           range(1, greatest(len(t) - {n - 1}, 1) + 1),
-           i -> array_to_string(t[i:i+{n - 1}], ' ')))) AS g
+  SELECT _id, unnest(list_distinct({word_ngrams_sql("t", n)})) AS g
   FROM toks
 ),
 probe_pos AS (
@@ -1055,17 +1064,13 @@ def containment_pairs_sql(
     """DuckDB oracle: brute-force all-ordered-pairs containment — an
     INDEPENDENT algorithm (no prefix filter), so it also proves the
     filter misses nothing. Quadratic: cap the table slice."""
-    k = ngram_n
     return f"""
 WITH toks AS (
-  SELECT {id_col} AS _id,
-         regexp_split_to_array(trim(lower({text_col})), '\\s+') AS tk
+  SELECT {id_col} AS _id, {tokens_sql(text_col)} AS tk
   FROM {table} WHERE {text_col} IS NOT NULL
 ),
 sets AS (
-  SELECT _id, list_distinct(list_transform(
-           range(1, greatest(len(tk) - {k - 1}, 0) + 1),
-           i -> array_to_string(tk[i:i+{k - 1}], ' '))) AS g
+  SELECT _id, list_distinct({word_ngrams_sql("tk", ngram_n, guarded=True)}) AS g
   FROM toks
 ),
 pairs AS (
@@ -1081,14 +1086,14 @@ FROM pairs WHERE inter_size >= {threshold} * size_a
 """.strip()
 
 
-def hash_embedding_series(texts: pd.Series, dim: int = 64) -> pd.Series:
+def hash_embedding_series(toks: pd.Series, dim: int = 64) -> pd.Series:
     """Model-free deterministic document embedding by feature hashing
     (Weinberger et al. 2009's hashing trick with ±1 signs): component j =
     Σ_tokens (+1 if bit j of md5(token) else -1) — exactly the simhash
     vote vector BEFORE sign compression (`_md5_votes`, the kernel both
     share), kept dense so it can feed the ANN/SemDeDup stack when no
     learned model is available."""
-    return pd.Series(list(_md5_votes(texts, dim)), index=texts.index)
+    return pd.Series(list(_md5_votes(toks, dim)), index=toks.index)
 
 
 def hash_embedding(
@@ -1109,4 +1114,4 @@ def hash_embedding(
     def _udf(s: pd.Series) -> pd.Series:
         return hash_embedding_series(s, dim)
 
-    return df.withColumn(target, _udf(F.col(text_col)))
+    return df.withColumn(target, _udf(tokens(F.col(text_col))))

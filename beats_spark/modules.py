@@ -134,12 +134,7 @@ def apache_access(df: DataFrame, field: str = "message",
     p = F.col("parsed")
     status = p["http_response_status_code"]
     # set event.outcome by status class (pipeline.yml:39-47)
-    out = out.withColumn(
-        "event_outcome",
-        F.when(status.isNull(), None)
-        .when(status < 400, "success")
-        .otherwise("failure"),
-    )
+    out = out.withColumn("event_outcome", _http_outcome(status))
     # uri_parts-lite: url.original → url.path / url.query (path is
     # percent-DECODED in the reference's uri_parts output)
     url = p["url_original"]

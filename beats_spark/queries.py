@@ -11,7 +11,10 @@ etc. are pre-registered). Both sides share single sources of truth:
   DuckDB oracle (`grok_extract_sql`) — RE2 and Python `re` agree on the
   pattern subset we emit (no lookaround, no backrefs);
 - the condition DSL renders to SQL via `beats_spark.conditions.condition_sql`;
-- lookup tables render to VALUES clauses (`beats_spark.data.lookups`).
+- lookup tables render to VALUES clauses (`beats_spark.data.lookups`);
+- text units (tokens, word n-grams, normalized text, char shingles) come
+  from their DuckDB twins in `textops` and `dedup` (`tokens_sql`,
+  `word_ngrams_sql`, `normalize_text_sql`, `shingles_sql`).
 
 Output hygiene for value-hash comparison: no raw TIMESTAMP columns (rendered
 to ISO strings on both sides), sums cast to BIGINT (DuckDB sums int→HUGEINT),
@@ -822,12 +825,12 @@ def q_embedding_dedup(spark, sf_dir):
 
 @register(
     "dedup_exact",
-    """
+    f"""
 SELECT count(*) AS n_groups, CAST(sum(dup_count) AS BIGINT) AS n_docs,
        CAST(sum(CASE WHEN dup_count > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_groups,
        min(keep_id) AS min_keep, max(keep_id) AS max_keep
 FROM (
-  SELECT sha256(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS k,
+  SELECT sha256({X.normalize_text_sql('text')}) AS k,
          min(doc_id) AS keep_id, count(*) AS dup_count
   FROM documents GROUP BY 1
 )
@@ -969,9 +972,7 @@ def q_ann_cosine_topk(spark, sf_dir):
     )
 
 
-_TOKSET_SQL = (
-    "list_distinct(regexp_split_to_array(trim(lower(text)), '\\s+'))"
-)
+_TOKSET_SQL = f"list_distinct({X.tokens_sql('text')})"
 
 
 @register(
@@ -1046,14 +1047,6 @@ def q_dedup_components(spark, sf_dir):
     return assign_components(docs, pairs).select("doc_id", "component")
 
 
-# shingle-set SQL twin of dedup.normalize_text + shingles_expr (k=5)
-_SHINGLE_SQL = (
-    "list_distinct(list_transform("
-    "range(1, greatest(length(nt) - 4, 1) + 1),"
-    " i -> substr(nt, CAST(i AS INTEGER), 5)))"
-)
-_NORM_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-
 # exact near-dup pair CTE over char-5 shingle sets at J ≥ 0.6: brute-force
 # all-pairs, so it is the ground truth the banded minhash path must equal.
 # The Spark side runs bands = num_hashes (1 minhash row per band): a true
@@ -1062,8 +1055,8 @@ _NORM_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 # same exact-Jaccard verify, so the two engines agree up to 64-bit shingle
 # hash collisions (P ≈ |shingles|²/2⁶⁴ per pair).
 _MINHASH_PAIRS_CTE = f"""
-d AS (SELECT doc_id, {_SHINGLE_SQL} AS s
-      FROM (SELECT doc_id, {_NORM_SQL} AS nt FROM documents
+d AS (SELECT doc_id, {D.shingles_sql("nt", 5)} AS s
+      FROM (SELECT doc_id, {X.normalize_text_sql("text")} AS nt FROM documents
             WHERE text IS NOT NULL AND doc_id < 2000)),
 p AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b
@@ -1132,6 +1125,31 @@ def q_minhash_dedup_cc(spark, sf_dir):
 # driver records the weaker rows-only check; pytest covers exact behavior)
 
 
+def _hash_embed_votes_cte(max_id: int) -> str:
+    """Shared DuckDB CTE chain deriving the dense feature-hashing vote
+    vectors from md5 hex digests — single source for the simhash_pairs,
+    hash_embed and hash_embed_topk oracles (bit-extraction parity is the
+    whole point; copies could drift). Tokens are `textops.tokens_sql`
+    minus the empty ones, as the kernel drops them."""
+    return f"""
+WITH d AS (
+  SELECT doc_id, {X.tokens_sql('text')} AS toks
+  FROM documents
+  WHERE text IS NOT NULL AND trim(text, ' ') != '' AND doc_id < {max_id}
+),
+th AS (SELECT doc_id, md5(t.t) AS h FROM d, unnest(toks) AS t(t)
+       WHERE t.t != ''),
+bits AS (
+  SELECT doc_id, bb.b AS b,
+         CAST(sum(CASE WHEN ((strpos('0123456789abcdef',
+                                     substr(h, 16 - (bb.b // 4), 1)) - 1)
+                             >> (bb.b % 4)) & 1 = 1
+                       THEN 1 ELSE -1 END) AS BIGINT) AS vote
+  FROM th CROSS JOIN (SELECT unnest(range(0, 64)) AS b) bb
+  GROUP BY 1, 2
+)"""
+
+
 # DuckDB recompute of the ENTIRE simhash pipeline: the 64-bit token hash is
 # the first 8 md5 bytes (dedup._md5_token_hashes), so bit b of token t is
 # nibble (15 - b//4) of md5(t) shifted by b%4 — SQL below extracts it with
@@ -1140,22 +1158,7 @@ def q_minhash_dedup_cc(spark, sf_dir):
 # exactly; max_hamming=3 keeps the Spark side's pigeonhole blocking
 # EXHAUSTIVE (any pair within hamming 3 of 64 bits shares a 16-bit chunk),
 # so the brute-force oracle is an equality check.
-_SIMHASH_ORACLE = """
-WITH d AS (
-  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
-  FROM documents
-  WHERE text IS NOT NULL AND trim(text) != '' AND doc_id < 1500
-),
-th AS (SELECT doc_id, md5(t.t) AS h FROM d, unnest(toks) AS t(t)),
-bits AS (
-  SELECT doc_id, bb.b AS b,
-         sum(CASE WHEN ((strpos('0123456789abcdef',
-                                substr(h, 16 - (bb.b // 4), 1)) - 1)
-                        >> (bb.b % 4)) & 1 = 1
-                  THEN 1 ELSE -1 END) AS vote
-  FROM th CROSS JOIN (SELECT unnest(range(0, 64)) AS b) bb
-  GROUP BY 1, 2
-),
+_SIMHASH_ORACLE = _hash_embed_votes_cte(1500) + """,
 ch AS (
   SELECT doc_id, CAST(b // 16 AS INT) AS c,
          sum(CASE WHEN vote > 0 THEN 1 << (b % 16) ELSE 0 END) AS cv
@@ -1196,13 +1199,10 @@ def q_simhash_pairs(spark, sf_dir):
 
 @register(
     "ngram_jaccard_pairs",
-    """
+    f"""
 WITH d AS (
-  SELECT doc_id, list_distinct(list_transform(
-           range(1, greatest(len(toks) - 2, 1) + 1),
-           i -> array_to_string(toks[i:i+2], ' '))) AS g
-  FROM (SELECT doc_id,
-               regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
+  SELECT doc_id, list_distinct({X.word_ngrams_sql("toks", 3)}) AS g
+  FROM (SELECT doc_id, {X.tokens_sql("text")} AS toks
         FROM documents WHERE text IS NOT NULL AND doc_id < 1000)
 ),
 p AS (
@@ -2237,21 +2237,14 @@ def q_module_redis_slowlog(spark, sf_dir):
     )
 
 
-@register(
-    "repetition_quality",
-    r"""
-WITH docs2 AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 4 = 0 THEN
-           text || chr(10) || substr(text, 1, 40)
-                || chr(10) || substr(text, 1, 40)
-         ELSE text END AS text
-  FROM documents WHERE text IS NOT NULL AND doc_id < 1000
-),
-lines AS (
+def _repetition_ctes(src: str) -> str:
+    """DuckDB CTEs `lf` (dup_line_frac, dup_line_char_frac) and `tg`
+    (top_ngram_char_frac) of textops.repetition_features over relation
+    `src` (doc_id, text) — shared by the repetition and Gopher oracles."""
+    return f"""lines AS (
   SELECT doc_id, t AS ln, count(*) AS c
-  FROM (SELECT doc_id, trim(u.ln) AS t
-        FROM docs2, unnest(string_split(text, chr(10))) AS u(ln)) s
+  FROM (SELECT doc_id, trim(u.ln, ' ') AS t
+        FROM {src}, unnest(string_split(text, chr(10))) AS u(ln)) s
   WHERE t != '' GROUP BY 1, 2
 ),
 lf AS (
@@ -2263,13 +2256,10 @@ lf AS (
 ),
 grams AS (
   SELECT doc_id, ln AS total_len, g, count(*) AS c
-  FROM (SELECT doc_id, len(trim(text)) AS ln,
-               unnest(list_transform(
-                 range(1, greatest(len(toks) - 1, 1) + 1),
-                 i -> array_to_string(toks[i:i+1], ' '))) AS g
-        FROM (SELECT doc_id, text,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-              FROM docs2) s0) s
+  FROM (SELECT doc_id, len(trim(text, ' ')) AS ln,
+               unnest({X.word_ngrams_sql("toks", 2)}) AS g
+        FROM (SELECT doc_id, text, {X.tokens_sql("text")} AS toks
+              FROM {src}) s0) s
   GROUP BY 1, 2, 3
 ),
 tg AS (
@@ -2280,7 +2270,21 @@ tg AS (
   FROM (SELECT *, row_number() OVER
           (PARTITION BY doc_id ORDER BY c DESC, g DESC) AS rn FROM grams)
   WHERE rn = 1
+)"""
+
+
+@register(
+    "repetition_quality",
+    f"""
+WITH docs2 AS (
+  SELECT doc_id,
+         CASE WHEN doc_id % 4 = 0 THEN
+           text || chr(10) || substr(text, 1, 40)
+                || chr(10) || substr(text, 1, 40)
+         ELSE text END AS text
+  FROM documents WHERE text IS NOT NULL AND doc_id < 1000
 ),
+{_repetition_ctes('docs2')},
 feats AS (
   SELECT d.doc_id,
          coalesce(lf.dup_line_frac, 0.0) AS dup_line_frac,
@@ -2340,15 +2344,13 @@ def q_repetition_quality(spark, sf_dir):
 
 @register(
     "decontaminate",
-    r"""
+    f"""
 WITH toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
+  SELECT doc_id, {X.tokens_sql("text")} AS t
   FROM documents WHERE text IS NOT NULL AND doc_id < 1500
 ),
 grams AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           range(1, greatest(len(t) - 12, 1) + 1),
-           i -> array_to_string(t[i:i+12], ' ')))) AS g
+  SELECT doc_id, unnest(list_distinct({X.word_ngrams_sql("t", 13)})) AS g
   FROM toks
 ),
 probe AS (
@@ -2400,38 +2402,7 @@ q AS (
          {stopword_hits} AS stopword_hits
   FROM base
 ),
-lines AS (
-  SELECT doc_id, t AS ln, count(*) AS c
-  FROM (SELECT doc_id, trim(u.ln) AS t
-        FROM base, unnest(string_split(text, chr(10))) AS u(ln)) s
-  WHERE t != '' GROUP BY 1, 2
-),
-lf AS (
-  SELECT doc_id,
-         (sum(c) - count(*)) / sum(c) AS dup_line_frac,
-         (sum(len(ln) * c) - sum(len(ln))) / sum(len(ln) * c)
-           AS dup_line_char_frac
-  FROM lines GROUP BY 1
-),
-grams AS (
-  SELECT doc_id, ln AS total_len, g, count(*) AS c
-  FROM (SELECT doc_id, len(trim(text)) AS ln,
-               unnest(list_transform(
-                 range(1, greatest(len(toks) - 1, 1) + 1),
-                 i -> array_to_string(toks[i:i+1], ' '))) AS g
-        FROM (SELECT doc_id, text,
-                     regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
-              FROM base) s0) s
-  GROUP BY 1, 2, 3
-),
-tg AS (
-  SELECT doc_id,
-         CASE WHEN total_len > 0
-              THEN c * len(g) / CAST(total_len AS DOUBLE) ELSE 0.0 END AS topf
-  FROM (SELECT *, row_number() OVER
-          (PARTITION BY doc_id ORDER BY c DESC, g DESC) AS rn FROM grams)
-  WHERE rn = 1
-),
+{repetition},
 flags AS (
   SELECT q.doc_id,
          q.n_tokens < 50 AS too_few_words,
@@ -2441,7 +2412,7 @@ flags AS (
          q.stopword_hits < 2 AS few_stop,
          coalesce(lf.dup_line_frac, 0.0) > 0.3 AS dup_lines,
          coalesce(lf.dup_line_char_frac, 0.0) > 0.2 AS dup_chars,
-         coalesce(tg.topf, 0.0) > 0.2 AS rep_ngram
+         coalesce(tg.top_ngram_char_frac, 0.0) > 0.2 AS rep_ngram
   FROM q LEFT JOIN lf USING (doc_id) LEFT JOIN tg USING (doc_id)
 )
 SELECT count(*) AS n_docs,
@@ -2461,6 +2432,7 @@ _gf = X.quality_features_sql("text")
 _GOPHER_ORACLE = _GOPHER_ORACLE.format(
     n_tokens=_gf["n_tokens"], mean_word_len=_gf["mean_word_len"],
     punct_ratio=_gf["punct_ratio"], stopword_hits=_gf["stopword_hits"],
+    repetition=_repetition_ctes("base"),
 )
 
 
@@ -2835,7 +2807,7 @@ def _funnel_oracle() -> str:
     qf = X.quality_features_sql("cleaned")
     samp = SM.stratified_sample_sql(_FUNNEL_RATES, salt="funnel",
                                     default_rate=0.8)
-    normkey = "trim(regexp_replace(lower(cleaned), '\\s+', ' ', 'g'))"
+    normkey = X.normalize_text_sql("cleaned")
     return f"""
 WITH base AS (
   SELECT doc_id, source,
@@ -2879,13 +2851,11 @@ d AS (
   FROM w LEFT JOIN reps r ON {normkey} = r.k
 ),
 toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(lower(cleaned)), '\\s+') AS t
+  SELECT doc_id, {X.tokens_sql("cleaned")} AS t
   FROM d WHERE f_d
 ),
 grams AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           range(1, greatest(len(t) - 7, 1) + 1),
-           i -> array_to_string(t[i:i+7], ' ')))) AS g
+  SELECT doc_id, unnest(list_distinct({X.word_ngrams_sql("t", 8)})) AS g
   FROM toks
 ),
 contam AS (
@@ -3101,12 +3071,12 @@ def q_transcript_pack(spark, sf_dir):
 
 @register(
     "token_vocab",
-    """
+    f"""
 WITH toks AS (
   SELECT u.tok AS token
-  FROM (SELECT trim(lower(text)) AS t FROM documents
+  FROM (SELECT {X.tokens_sql("text")} AS t FROM documents
         WHERE text IS NOT NULL AND doc_id < 4000) s,
-       unnest(regexp_split_to_array(s.t, '\\s+')) AS u(tok)
+       unnest(s.t) AS u(tok)
   WHERE u.tok != ''
 )
 SELECT token, count(*) AS n
@@ -4577,6 +4547,28 @@ def q_event_stamp(spark, sf_dir):
     )
 
 
+def _dns_snapshot(t: DataFrame) -> DataFrame:
+    """(query, answers) for every distinct `ip` whose last IPv4 octet is not
+    a multiple of 3; an IPv6 literal has no fourth octet and stays
+    unresolved, as in the oracle's TRY_CAST."""
+    octet4 = F.try_element_at(F.split("ip", r"\."), F.lit(4)).try_cast("long")
+    return (
+        t.where(F.col("ip").isNotNull() & (octet4 % 3 != 0))
+        .select(F.col("ip").alias("query"))
+        .distinct()
+        .withColumn(
+            "answers",
+            F.array(
+                F.concat(
+                    F.lit("host-"),
+                    F.regexp_replace("query", r"\.", "-"),
+                    F.lit(".internal.example"),
+                )
+            ),
+        )
+    )
+
+
 @register(
     "dns_enrich",
     oracle_cte()
@@ -4615,27 +4607,9 @@ def q_dns_enrich(spark, sf_dir):
     t = load_transcripts(spark, sf_dir)
     t = P.extract_field(t, "text", " ", 0, "tok0")
     t = P.convert(t, [{"from": "tok0", "to": "ip", "type": "ip"}])
-    resolution = (
-        t.where(
-            F.col("ip").isNotNull()
-            & (F.element_at(F.split("ip", r"\."), 4).cast("long") % 3 != 0)
-        )
-        .select(F.col("ip").alias("query"))
-        .distinct()
-        .withColumn(
-            "answers",
-            F.array(
-                F.concat(
-                    F.lit("host-"),
-                    F.regexp_replace("query", r"\.", "-"),
-                    F.lit(".internal.example"),
-                )
-            ),
-        )
-    )
     out = E.dns_enrich(
         t,
-        resolution,
+        _dns_snapshot(t),
         {"ip": "host"},
         qtype="reverse",
         action="append",
@@ -4802,29 +4776,6 @@ def q_strip_boilerplate(spark, sf_dir):
         "doc_id", "n_lines", "n_removed",
         F.md5("cleaned").alias("cleaned_md5"),
     )
-
-
-def _hash_embed_votes_cte(max_id: int) -> str:
-    """Shared DuckDB CTE chain deriving the dense feature-hashing vote
-    vectors from md5 hex digests — single source for the hash_embed and
-    hash_embed_topk oracles (bit-extraction parity is the whole point;
-    two copies could drift)."""
-    return f"""
-WITH d AS (
-  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
-  FROM documents
-  WHERE text IS NOT NULL AND trim(text) != '' AND doc_id < {max_id}
-),
-th AS (SELECT doc_id, md5(t.t) AS h FROM d, unnest(toks) AS t(t)),
-bits AS (
-  SELECT doc_id, bb.b AS b,
-         CAST(sum(CASE WHEN ((strpos('0123456789abcdef',
-                                     substr(h, 16 - (bb.b // 4), 1)) - 1)
-                             >> (bb.b % 4)) & 1 = 1
-                       THEN 1 ELSE -1 END) AS BIGINT) AS vote
-  FROM th CROSS JOIN (SELECT unnest(range(0, 64)) AS b) bb
-  GROUP BY 1, 2
-)"""
 
 
 # DuckDB recompute of the feature-hashing embedding: same md5 bit

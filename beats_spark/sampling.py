@@ -18,7 +18,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .textops import tokens
+from .textops import tokens, tokens_sql
 
 _HEX_SPACE = 16 ** 8  # decisions use the first 8 hex chars of md5
 
@@ -293,7 +293,7 @@ def dsir_weights_sql(
     return f"""
 toks AS (
   SELECT {id_col} AS _id, ({target_pred}) AS _t,
-         regexp_split_to_array(trim(lower({text_col})), '\\s+') AS t
+         {tokens_sql(text_col)} AS t
   FROM {table}
 ),
 pairs AS (
@@ -468,7 +468,7 @@ def lm_nll_sql(
     return f"""
 lm_toks AS (
   SELECT {id_col} AS _id, ({target_pred}) AS _t,
-         regexp_split_to_array(trim(lower({text_col})), '\\s+') AS t
+         {tokens_sql(text_col)} AS t
   FROM {table}
 ),
 lm_pos AS (

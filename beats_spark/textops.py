@@ -4,6 +4,12 @@ token counting, document fingerprinting.
 Everything is built-in Column expressions (JVM, whole-stage codegen) so the
 identical logic renders to DuckDB SQL for the correctness oracle — see
 `*_sql` companions. No Python in the hot path.
+
+This module says once, for every engine, what whitespace, a token, a word
+n-gram and normalized text are: `_WS` is the one whitespace class, and
+`tokens`, `normalize_text` and `word_ngrams` each sit beside their DuckDB
+twin (`tokens_sql`, `normalize_text_sql`, `word_ngrams_sql`), which every
+oracle calls instead of spelling the unit.
 """
 
 from __future__ import annotations
@@ -24,10 +30,16 @@ STOPWORDS: dict[str, list[str]] = {
     "zh": ["的", "是", "在", "了", "和", "有", "我", "不", "人", "这"],
 }
 
-_WS = r"\s+"
+# The one whitespace class of every text unit, in every engine: exactly the
+# characters Java's `\s` matches, spelled out because RE2's `\s` lacks \x0B
+# (and Java's `\v` is wider). Spark gets it through the Column API only: its
+# SQL parser would turn `\x` into `x` inside a string literal.
+_WS_CHARS = r"\t\n\x0B\f\r "
+_WS = f"[{_WS_CHARS}]+"
 # BPE-ish token regex: runs of letters, runs of digits, or single
 # punctuation — the common pre-tokenizer shape
-BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
+BPE_TOKEN_RE = rf"[A-Za-z]+|[0-9]+|[^A-Za-z0-9{_WS_CHARS}]"
+_PUNCT_RE = rf"[^\w{_WS_CHARS}]"
 
 
 def normalize_text(col: Column) -> Column:
@@ -36,10 +48,21 @@ def normalize_text(col: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(col), _WS, " "))
 
 
+def normalize_text_sql(expr: str) -> str:
+    """DuckDB twin of `normalize_text`. `trim(x, ' ')` because DuckDB's bare
+    trim also strips NBSP and the other Unicode space separators."""
+    return f"trim(regexp_replace(lower({expr}), '{_WS}', ' ', 'g'), ' ')"
+
+
 def tokens(col: Column) -> Column:
     """Whitespace tokens of the lowercased, trimmed text — the one word
-    tokenizer of dedup, sampling and the text filters."""
+    tokenizer of dedup, sampling, the text filters and the hash kernel."""
     return F.split(F.trim(F.lower(col)), _WS)
+
+
+def tokens_sql(expr: str) -> str:
+    """DuckDB twin of `tokens` (space-only trim, as in `normalize_text_sql`)."""
+    return f"regexp_split_to_array(trim(lower({expr}), ' '), '{_WS}')"
 
 
 def word_ngrams(toks: Column, n: int, guarded: bool = False) -> Column:
@@ -59,6 +82,16 @@ def word_ngrams(toks: Column, n: int, guarded: bool = False) -> Column:
     return grams(F.greatest(F.size(toks) - (n - 1), F.lit(1)))
 
 
+def word_ngrams_sql(toks: str, n: int, guarded: bool = False) -> str:
+    """DuckDB twin of `word_ngrams` over a token-list column name. NULL
+    tokens give `['']` (or none with `guarded`), as `concat_ws` does."""
+    return (
+        f"list_transform(range(1, greatest(len({toks}) - {n - 1},"
+        f" {0 if guarded else 1}) + 1),"
+        f" i -> coalesce(array_to_string({toks}[i:i+{n - 1}], ' '), ''))"
+    )
+
+
 def token_count(df: DataFrame, text_col: str = "text",
                 target: str = "n_tokens") -> DataFrame:
     """Whitespace token count."""
@@ -72,8 +105,8 @@ def token_count(df: DataFrame, text_col: str = "text",
 
 def token_count_sql(text_col: str = "text") -> str:
     return (
-        f"CASE WHEN trim({text_col}) = '' THEN 0 ELSE "
-        f"len(regexp_split_to_array(trim(lower({text_col})), '\\s+')) END"
+        f"CASE WHEN trim({text_col}, ' ') = '' THEN 0 ELSE "
+        f"len({tokens_sql(text_col)}) END"
     )
 
 
@@ -96,7 +129,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     c = F.col(text_col)
     n_chars = F.length(c)
     n_tok = F.size(tokens(c))
-    n_punct = F.regexp_count(c, F.lit(r"[^\w\s]"))
+    n_punct = F.regexp_count(c, F.lit(_PUNCT_RE))
     n_stop = F.size(
         F.array_intersect(
             F.array_distinct(tokens(c)),
@@ -124,10 +157,10 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def quality_features_sql(text_col: str = "text") -> dict[str, str]:
     """DuckDB fragments computing the identical features."""
-    toks = f"regexp_split_to_array(trim(lower({text_col})), '\\s+')"
+    toks = tokens_sql(text_col)
     n_chars = f"length({text_col})"
     n_tok = f"len({toks})"
-    n_punct = f"len(regexp_extract_all({text_col}, '[^\\w\\s]'))"
+    n_punct = f"len(regexp_extract_all({text_col}, '{_PUNCT_RE}'))"
     stop_list = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
     n_stop = f"len(list_intersect(list_distinct({toks}), [{stop_list}]))"
     return {
@@ -163,7 +196,7 @@ def lang_id(df: DataFrame, text_col: str = "text",
 
 
 def lang_id_sql(text_col: str = "text") -> str:
-    toks = f"list_distinct(regexp_split_to_array(trim(lower({text_col})), '\\s+'))"
+    toks = f"list_distinct({tokens_sql(text_col)})"
     scores = {
         lang: f"len(list_intersect({toks}, [{', '.join(chr(39) + w + chr(39) for w in words)}]))"
         for lang, words in sorted(STOPWORDS.items())
@@ -227,8 +260,7 @@ def doc_fingerprint_oracle(table: str = "documents", text_col: str = "text",
                            k: int = 8) -> str:
     return (
         f"SELECT doc_id, {doc_fingerprint_sql(text_col, k)} AS doc_fp FROM "
-        f"(SELECT doc_id, trim(regexp_replace(lower({text_col}), '\\s+', ' ', 'g'))"
-        f" AS _fp_norm FROM {table})"
+        f"(SELECT doc_id, {normalize_text_sql(text_col)} AS _fp_norm FROM {table})"
     )
 
 
@@ -444,7 +476,7 @@ def c4_clean(df: DataFrame, text_col: str = "text",
     kept = F.filter(
         trimmed,
         lambda t: t.rlike(C4_TERMINAL_RE)
-        & (F.size(F.split(t, r"\s+")) >= min_words_per_line)
+        & (F.size(F.split(t, _WS)) >= min_words_per_line)
         & ~F.lower(t).contains("javascript"),
     )
     lorem = F.lower(F.col(text_col)).contains("lorem ipsum")
@@ -467,13 +499,14 @@ def c4_clean_sql(text_col: str = "text", min_words_per_line: int = 5,
     """DuckDB fragments computing the identical cleaning."""
     kept = (
         f"list_filter(list_transform(string_split({text_col}, chr(10)),"
-        f" x -> trim(x)),"
+        f" x -> trim(x, ' ')),"
         f" t -> regexp_matches(t, '{C4_TERMINAL_RE}')"
-        f" AND len(regexp_split_to_array(t, '\\s+')) >= {min_words_per_line}"
+        f" AND len(regexp_split_to_array(t, '{_WS}')) >= {min_words_per_line}"
         f" AND NOT contains(lower(t), 'javascript'))"
     )
     return {
-        "cleaned": f"array_to_string({kept}, chr(10))",
+        # DuckDB joins an empty list to NULL, Spark's array_join to ''
+        "cleaned": f"coalesce(array_to_string({kept}, chr(10)), '')",
         "n_lines_kept": f"len({kept})",
         "keep": (
             f"coalesce(len({kept}) >= {min_lines}"
@@ -487,6 +520,7 @@ def c4_clean_sql(text_col: str = "text", min_words_per_line: int = 5,
 # URL / domain blocklist flag
 # ---------------------------------------------------------------------------
 
+_HTTP_HOST_RE = rf"https?://([^/{_WS_CHARS}:]+)"
 DEFAULT_URL_BLOCKLIST = [
     "spam-mill.example", "seo-farm.example", "tracker.example",
 ]
@@ -507,7 +541,7 @@ def url_blocklist_flag(df: DataFrame, blocklist: list[str] | None = None,
     domains = blocklist if blocklist is not None else DEFAULT_URL_BLOCKLIST
     hosts = F.transform(
         F.regexp_extract_all(
-            F.col(text_col), F.lit(r"https?://([^/\s:]+)"), F.lit(1)
+            F.col(text_col), F.lit(_HTTP_HOST_RE), F.lit(1)
         ),
         lambda h: F.lower(h),
     )
@@ -525,7 +559,7 @@ def url_blocklist_sql(blocklist: list[str] | None = None,
     domains = blocklist if blocklist is not None else DEFAULT_URL_BLOCKLIST
     hosts = (
         f"list_transform(regexp_extract_all({text_col},"
-        f" 'https?://([^/\\s:]+)', 1), h -> lower(h))"
+        f" '{_HTTP_HOST_RE}', 1), h -> lower(h))"
     )
     pat = r"(^|\.)(" + "|".join(d.replace(".", r"\.") for d in domains) + ")$"
     return {
@@ -688,9 +722,8 @@ def bm25_topk_sql(
     return f"""
 WITH base AS (
   SELECT {id_col} AS _id,
-         len(regexp_split_to_array(trim(lower({text_col})), '\\s+')) AS _dl,
-         list_filter(regexp_split_to_array(trim(lower({text_col})), '\\s+'),
-                     t -> t IN ({tlist})) AS _hits
+         len({tokens_sql(text_col)}) AS _dl,
+         list_filter({tokens_sql(text_col)}, t -> t IN ({tlist})) AS _hits
   FROM {table}
 ),
 tf AS (
@@ -828,7 +861,7 @@ def bpe_pair_stats_sql(table: str = "documents", text_col: str = "text",
 WITH words AS (
   SELECT u.w AS _w
   FROM {table},
-       unnest(regexp_split_to_array(trim(lower({text_col})), '\\s+')) AS u(w)
+       unnest({tokens_sql(text_col)}) AS u(w)
   WHERE {text_col} IS NOT NULL AND u.w <> ''
 ),
 vocab AS (SELECT _w, count(*) AS _n FROM words GROUP BY 1),
@@ -1139,7 +1172,7 @@ def cdc_chunk_hashes_sql(table: str = "documents", text_col: str = "text",
     identical chunk slicing. Yields ({id_col}, n_chunks, chunks_md5)
     where chunks_md5 digests the in-order chunk-hash list."""
     zeros = "0" * zero_prefix
-    norm = f"trim(regexp_replace(lower({text_col}), '\\s+', ' ', 'g'))"
+    norm = normalize_text_sql(text_col)
     return f"""
 WITH base AS (
   SELECT {id_col} AS _id, {norm} AS norm FROM {table}
@@ -1189,7 +1222,7 @@ def winnow_fingerprints_sql(table: str = "documents", text_col: str = "text",
     """DuckDB twin: identical md5 shingle hashes, identical window minima.
     Yields ({id_col}, n_fingerprints, fps_md5) where fps_md5 is md5 of
     the sorted-distinct fingerprint set joined with ','."""
-    norm = f"trim(regexp_replace(lower({text_col}), '\\s+', ' ', 'g'))"
+    norm = normalize_text_sql(text_col)
     return f"""
 WITH base AS (
   SELECT {id_col} AS _id, {norm} AS norm FROM {table}
@@ -1342,12 +1375,11 @@ def ngram_topk_sql(
     (count desc, gram asc) tie-break."""
     return f"""
 WITH toks AS (
-  SELECT regexp_split_to_array(trim(lower({text_col})), '\\s+') AS t
+  SELECT {tokens_sql(text_col)} AS t
   FROM {table} WHERE {text_col} IS NOT NULL
 ),
 grams AS (
-  SELECT unnest(list_transform(range(1, greatest(len(t) - {n - 1}, 0) + 1),
-                i -> array_to_string(t[i:i+{n - 1}], ' '))) AS gram
+  SELECT unnest({word_ngrams_sql("t", n, guarded=True)}) AS gram
   FROM toks
 )
 SELECT gram, count(*) AS n_occurrences
@@ -1428,8 +1460,7 @@ def tfidf_topk_sql(
 WITH terms AS (
   SELECT {id_col} AS _id, t AS term
   FROM (SELECT {id_col},
-               unnest(regexp_split_to_array(trim(lower({text_col})),
-                                            '\\s+')) AS t
+               unnest({tokens_sql(text_col)}) AS t
         FROM {table} WHERE {text_col} IS NOT NULL) s
   WHERE t != ''
 ),

@@ -323,3 +323,18 @@ def test_dns_enrich_rejects_bad_config(spark):
         E.dns_enrich(events, resolution, {"src_ip": "h"}, qtype="MX")
     with _pytest.raises(ValueError, match="invalid dns field action"):
         E.dns_enrich(events, resolution, {"src_ip": "h"}, action="merge")
+
+
+def test_dns_enrich_query_snapshot_skips_ipv6(spark):
+    """The registry query's resolver snapshot keys on the fourth IPv4
+    octet; an IPv6 first token (kept by the convert lattice) has none and
+    stays unresolved instead of failing the job under ANSI mode."""
+    from beats_spark.queries import _dns_snapshot
+
+    t = spark.createDataFrame(
+        [("fe80::1",), ("10.0.0.3",), ("10.0.0.4",), (None,)], "ip string"
+    )
+    rows = _dns_snapshot(t).collect()
+    assert [(r.query, r.answers) for r in rows] == [
+        ("10.0.0.4", ["host-10-0-0-4.internal.example"])
+    ]

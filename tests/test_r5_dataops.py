@@ -264,9 +264,10 @@ class TestHashEmbedding:
         from beats_spark.dedup import hash_embedding_series, simhash_series
         import pandas as pd
 
-        texts = pd.Series(["alpha beta gamma", "one two", "solo", ""])
-        votes = hash_embedding_series(texts)
-        sigs = simhash_series(texts)
+        toks = pd.Series([["alpha", "beta", "gamma"], ["one", "two"],
+                          ["solo"], [""]])
+        votes = hash_embedding_series(toks)
+        sigs = simhash_series(toks)
         for v, sig in zip(votes, sigs):
             packed = sum(
                 (1 << j) for j, x in enumerate(np.asarray(v)) if x > 0
@@ -282,7 +283,7 @@ class TestHashEmbedding:
 
         from beats_spark.dedup import hash_embedding_series
 
-        e = hash_embedding_series(pd.Series(["a b", "a", "b", ""]))
+        e = hash_embedding_series(pd.Series([["a", "b"], ["a"], ["b"], [""]]))
         assert (np.asarray(e[0]) == np.asarray(e[1]) + np.asarray(e[2])).all()
         assert (np.asarray(e[3]) == 0).all()
 
@@ -295,7 +296,7 @@ class TestHashEmbedding:
         )
         rows = {r["doc_id"]: r["hash_emb"]
                 for r in hash_embedding(df).collect()}
-        want = hash_embedding_series(pd.Series(["hello world"]))[0]
+        want = hash_embedding_series(pd.Series([["hello", "world"]]))[0]
         assert rows[1] == list(want)
         assert rows[2] == [0] * 64
 
