@@ -61,18 +61,20 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 def shingles_expr(norm_col: str, k: int = 5) -> Column:
     """Distinct char k-shingles over a PRE-NORMALIZED text column, as
-    array<string>. SQL expr because substr needs a dynamic start position;
-    takes a materialized column (not an expression) so Catalyst doesn't
-    re-evaluate normalization once per array element."""
+    array<string>; NULL text has none, so it never enters banding. SQL expr
+    because substr needs a dynamic start position; takes a materialized
+    column (not an expression) so Catalyst doesn't re-evaluate
+    normalization once per array element."""
     return F.expr(
-        f"array_distinct(transform(sequence(1, greatest(length({norm_col}) - {k - 1}, 1)),"
-        f" i -> substr({norm_col}, i, {k})))"
+        f"IF({norm_col} IS NULL, array(),"
+        f" array_distinct(transform(sequence(1, greatest(length({norm_col}) - {k - 1}, 1)),"
+        f" i -> substr({norm_col}, i, {k}))))"
     )
 
 
 def shingles_sql(norm: str, k: int = 5) -> str:
     """DuckDB twin of `shingles_expr` (a set: `list_distinct` does not keep
-    order, and it drops the NULL shingle that Spark gives NULL text)."""
+    order; it also drops the one NULL shingle of NULL text)."""
     return (
         f"list_distinct(list_transform(range(1, greatest(length({norm}) - {k - 1}, 1) + 1),"
         f" i -> substr({norm}, CAST(i AS INTEGER), {k})))"
@@ -169,7 +171,6 @@ def minhash_lsh_pairs(
     shingle_k: int = 5,
     threshold: float = 0.6,
     max_bucket: int = 1000,
-    reliable: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard ≥ threshold).
 
@@ -201,9 +202,8 @@ def minhash_lsh_pairs(
     # lineage cut: `base` feeds the signature agg AND both verify joins —
     # without it the shingle scan re-runs 3×. eager=False defers the
     # materializing job to the first action (constructing the pairs frame
-    # must not itself run computation); reliable=True survives executor
-    # loss on a real cluster (see scale.truncate_lineage).
-    base = truncate_lineage(base, reliable=reliable, eager=False)
+    # must not itself run computation).
+    base = truncate_lineage(base, eager=False)
     hashed = base.select(
         "_id",
         F.explode(
@@ -246,7 +246,7 @@ def minhash_dedup_cc(
     from beats_spark.graph import connected_components
 
     pairs = minhash_lsh_pairs(df, text_col, id_col, **kw)
-    comp = connected_components(pairs, reliable=kw.get("reliable", False))
+    comp = connected_components(pairs)
     drop = comp.where(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )
@@ -480,7 +480,6 @@ def ngram_jaccard_pairs(
     bands: int = 8,
     max_bucket: int = 1000,
     exact: bool = False,
-    reliable: bool = False,
 ) -> DataFrame:
     """Word-n-gram Jaccard pairs (id_a < id_b, jaccard ≥ threshold), exact
     verify in both modes; `exact` selects the candidate generator:
@@ -509,8 +508,8 @@ def ngram_jaccard_pairs(
     )
     # gram arrays feed candidate generation AND both verify joins; cut the
     # lineage so tokenization runs once. eager=False: constructing the
-    # pairs frame triggers no job. reliable=True for cluster durability.
-    base = truncate_lineage(base, reliable=reliable, eager=False)
+    # pairs frame triggers no job.
+    base = truncate_lineage(base, eager=False)
     if exact:
         return _prefix_filter_pairs(base, threshold).select(
             "id_a", "id_b", "jaccard"
@@ -1104,8 +1103,10 @@ def hash_embedding(
 ) -> DataFrame:
     """Attach the feature-hashing embedding as array<long>. Map-only Arrow
     kernel — the output vectors plug directly into similarity.cosine_topk /
-    lsh_topk / semdedup (cast to float as needed), giving the full ANN and
-    semantic-dedup stack a deterministic, model-free input column.
+    lsh_topk / semdedup (cast to float as needed; lsh_topk takes its planes
+    from the corpus, so the ids must cover its plane id range), giving the
+    full ANN and semantic-dedup stack a deterministic, model-free input
+    column.
 
     Reference parity note: no analogue in mjwolf/beats (training-data
     mandate)."""

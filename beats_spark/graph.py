@@ -71,7 +71,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    reliable: bool = False,
 ) -> DataFrame:
     """(node, component) for every node that appears in `edges`; component =
     the minimum node id reachable from it. Nodes absent from the edge list
@@ -80,12 +79,9 @@ def connected_components(
 
     Each round is two groupBy-min + join shuffles on the node id; lineage is
     truncated per round (`scale.truncate_lineage`) so the plan stays O(1)
-    deep. `reliable=False` (default) uses localCheckpoint — fast, but blocks
-    are unreplicated executor-local, so on a real cluster one lost executor
-    mid-iteration kills the job; pass `reliable=True` on a cluster to
-    checkpoint to the session's checkpoint dir (or persist(DISK_ONLY) when
-    none is set). Driver state is a 2-value fingerprint per round — never
-    the edge set.
+    deep; set a session checkpoint directory on a cluster so that the cuts
+    survive executor loss. Driver state is a 2-value fingerprint per round —
+    never the edge set.
 
     Raises RuntimeError if the star rounds have not converged after
     `max_iter` iterations: returning the partially-contracted mapping would
@@ -96,13 +92,12 @@ def connected_components(
     e = truncate_lineage(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
-        .distinct(),
-        reliable=reliable,
+        .distinct()
     )
     prev = _fingerprint(e)
     converged = False
     for _ in range(max_iter):
-        e = truncate_lineage(_small_star(_large_star(e)), reliable=reliable)
+        e = truncate_lineage(_small_star(_large_star(e)))
         cur = _fingerprint(e)
         if cur == prev:
             converged = True
@@ -134,13 +129,12 @@ def assign_components(
     src: str = "id_a",
     dst: str = "id_b",
     target: str = "component",
-    reliable: bool = False,
 ) -> DataFrame:
     """Attach a component id to every row of `df`: the min reachable id via
     `edges`, or the row's own id when it touches no edge (singleton)."""
-    comp = connected_components(
-        edges, src=src, dst=dst, reliable=reliable
-    ).withColumnRenamed("node", id_col)
+    comp = connected_components(edges, src=src, dst=dst).withColumnRenamed(
+        "node", id_col
+    )
     return df.join(comp, id_col, "left").withColumn(
         target, F.coalesce(F.col("component"), F.col(id_col))
     )

@@ -798,13 +798,10 @@ def q_network_direction(spark, sf_dir):
 
 @register(
     "embedding_dedup",
-    """
+    f"""
 WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
 p AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         list_dot_product(a.e, b.e)
-           / (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e)))
-           AS cos
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b, {SIM.cosine_sql("a.e", "b.e")} AS cos
   FROM v a CROSS JOIN v b WHERE a.vec_id < b.vec_id
 )
 SELECT count(*) AS n_pairs,
@@ -942,34 +939,6 @@ def q_perplexity_filter(spark, sf_dir):
 def q_doc_fingerprint(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return X.doc_fingerprint(docs).select("doc_id", "doc_fp")
-
-
-@register(
-    "ann_cosine_topk",
-    """
-WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-           FROM embeddings WHERE vec_id < 10),
-v AS (SELECT vec_id AS nid, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-s AS (SELECT qid, nid,
-             list_dot_product(qv, vv)
-               / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(vv, vv)))
-               AS score
-      FROM q CROSS JOIN v WHERE nid <> qid),
-r AS (SELECT qid AS query_id, nid AS neighbor_id, score,
-             CAST(row_number() OVER (PARTITION BY qid
-                                     ORDER BY score DESC, nid) AS INTEGER) AS rank
-      FROM s)
-SELECT query_id, neighbor_id, round(score, 4) AS score, rank
-FROM r WHERE rank <= 5
-""",
-)
-def q_ann_cosine_topk(spark, sf_dir):
-    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = embs.filter(F.col("vec_id") < 10)
-    out = SIM.cosine_topk(embs, q, k=5)
-    return out.select(
-        "query_id", "neighbor_id", F.round("score", 4).alias("score"), "rank"
-    )
 
 
 _TOKSET_SQL = f"list_distinct({X.tokens_sql('text')})"
@@ -1121,10 +1090,6 @@ def q_minhash_dedup_cc(spark, sf_dir):
     ).select("doc_id")
 
 
-# rows-only entries (hash-family internals differ engine-to-engine → the
-# driver records the weaker rows-only check; pytest covers exact behavior)
-
-
 def _hash_embed_votes_cte(max_id: int) -> str:
     """Shared DuckDB CTE chain deriving the dense feature-hashing vote
     vectors from md5 hex digests — single source for the simhash_pairs,
@@ -1228,45 +1193,68 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     return D.ngram_jaccard_pairs(docs, threshold=0.3, exact=True)
 
 
-@register("ann_lsh_topk")
-def q_ann_lsh_topk(spark, sf_dir):
-    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = embs.filter(F.col("vec_id") < 10)
-    return SIM.lsh_topk(embs, q, dim=64, k=5, n_planes=6, n_tables=8)
+# Every ANN listing and recall@k query is oracled: DuckDB recomputes the
+# index itself (the LSH planes are corpus vectors, the IVF seed an id-range
+# centroid slice, so bucket and cell assignment are plain SQL arithmetic)
+# through the twins in `similarity`, ranks the candidates, and for recall
+# replays the exact top-k and the hit join. A green row therefore pins
+# candidate generation and ranking, not just arithmetic on Spark-computed
+# inputs. `_ANN_CTE` gives `v` (vec_id, vv), the ten queries `q` and their
+# exact top-5 `exact` (`cosine_topk`).
+
+_ANN_CTE = f"""v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+q AS (SELECT * FROM v WHERE vec_id < 10),
+exact_p AS (
+  SELECT q.vec_id AS query_id, q.vv AS qv, n.vec_id AS neighbor_id, n.vv AS nv
+  FROM q CROSS JOIN v n WHERE n.vec_id <> q.vec_id),
+exact AS ({SIM.top_k_sql("exact_p", 5)})"""
+_LSH = dict(n_planes=3, n_tables=5, plane_id_start=100)
+# the id-range centroid seed of the IVF and SemDeDup queries
+_SEED_IDS = (200, 208)
+_SEED_SQL = ("SELECT vec_id AS cell_id, vv AS cv FROM v"
+             " WHERE vec_id >= {} AND vec_id < {}".format(*_SEED_IDS))
 
 
-@register("ann_ivf_topk")
-def q_ann_ivf_topk(spark, sf_dir):
-    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = embs.filter(F.col("vec_id") < 10)
-    return SIM.ivf_topk(embs, q, k=5, n_cells=8, n_probe=4, kmeans_iters=1)
+def _approx_cte(cand: str) -> str:
+    """The candidate pairs `cand` (query_id, neighbor_id) ranked as
+    `approx`: the engine's `_top_k` on the vectors joined back by id."""
+    return f"""cand AS ({cand}),
+cand_v AS (
+  SELECT c.query_id, qv.vv AS qv, c.neighbor_id, nv.vv AS nv
+  FROM cand c
+  JOIN v qv ON qv.vec_id = c.query_id
+  JOIN v nv ON nv.vec_id = c.neighbor_id),
+approx AS ({SIM.top_k_sql("cand_v", 5)})"""
 
 
-# recall@k oracles: DuckDB recomputes BOTH sides — the exact brute-force
-# top-k AND the approximate index itself (the LSH variant uses data-vector
-# hyperplanes, the IVF variant an id-range centroid slice, so bucket
-# assignment is plain SQL arithmetic) — then replays the hit join. A green
-# row therefore pins candidate generation, ranking, and the recall math,
-# not just the arithmetic on Spark-computed inputs.
+_LSH_APPROX = _approx_cte(SIM.lsh_candidates_sql("v", "q", **_LSH))
 
-_EXACT_TOPK_CTE = """
-v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-           row_number() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY list_dot_product(q.vv, n.vv)
-                      / (sqrt(list_dot_product(q.vv, q.vv))
-                         * sqrt(list_dot_product(n.vv, n.vv))) DESC,
-                      n.vec_id) AS rank
-    FROM v q CROSS JOIN v n
-    WHERE q.vec_id < 10 AND n.vec_id <> q.vec_id)
-  WHERE rank <= 5
-)
-"""
 
-_RECALL_TAIL = """
+def _ivf_approx(n_probe: int, kmeans_iters: int) -> str:
+    """`ivf_topk` from the `_SEED_IDS` slice: `kmeans_iters` Lloyd steps
+    (per-cell per-dimension mean, cast to float as in Spark), then the
+    assignment, the probe and the ranking."""
+    cents = [f"c0 AS ({_SEED_SQL})"]
+    for i in range(1, kmeans_iters + 1):
+        cents.append(f"""c{i} AS (
+  SELECT cell_id, CAST(list(CAST(m AS FLOAT) ORDER BY pos) AS DOUBLE[]) AS cv
+  FROM (SELECT cell_id, pos, avg(vv[pos]) AS m
+        FROM (SELECT cell_id, vv, unnest(range(1, len(vv) + 1)) AS pos
+              FROM ({SIM.nearest_cells_sql("v", f"c{i - 1}")}))
+        GROUP BY 1, 2)
+  GROUP BY 1)""")
+    c = f"c{kmeans_iters}"
+    return ",\n".join(cents) + f""",
+assign AS ({SIM.nearest_cells_sql("v", c)}),
+probe AS ({SIM.nearest_cells_sql("q", c, n_probe)}),
+""" + _approx_cte("""SELECT p.vec_id AS query_id, a.vec_id AS neighbor_id
+  FROM probe p JOIN assign a ON a.cell_id = p.cell_id
+  WHERE a.vec_id <> p.vec_id""")
+
+
+_LISTING = "SELECT query_id, neighbor_id, round(score, 4) AS score, rank FROM"
+
+_RECALL = """
 SELECT 5 AS k,
        count(DISTINCT e.query_id) AS n_queries,
        count(*) AS n_exact,
@@ -1280,46 +1268,51 @@ LEFT JOIN approx a
 """
 
 
+def _ann_inputs(spark, sf_dir):
+    """The vectors, the ten queries and the `_SEED_IDS` centroid slice."""
+    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    lo, hi = _SEED_IDS
+    return (embs, embs.filter(F.col("vec_id") < 10),
+            embs.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)))
+
+
+def _listing(out):
+    return out.select(
+        "query_id", "neighbor_id", F.round("score", 4).alias("score"), "rank"
+    )
+
+
+@register("ann_cosine_topk", f"WITH {_ANN_CTE}\n{_LISTING} exact")
+def q_ann_cosine_topk(spark, sf_dir):
+    embs, q, _ = _ann_inputs(spark, sf_dir)
+    return _listing(SIM.cosine_topk(embs, q, k=5))
+
+
+@register("ann_lsh_topk", f"WITH {_ANN_CTE},\n{_LSH_APPROX}\n{_LISTING} approx")
+def q_ann_lsh_topk(spark, sf_dir):
+    embs, q, _ = _ann_inputs(spark, sf_dir)
+    return _listing(SIM.lsh_topk(embs, q, k=5, **_LSH))
+
+
 @register(
-    "ann_lsh_recall",
-    f"""
-WITH {_EXACT_TOPK_CTE},
-p AS (
-  SELECT CAST((vec_id - 100) // 3 AS INT) AS tbl,
-         (vec_id - 100) % 3 AS bit,
-         CAST(embedding AS DOUBLE[]) AS pv
-  FROM embeddings WHERE vec_id >= 100 AND vec_id < 115),
-sig AS (
-  SELECT v.vec_id, p.tbl,
-         sum(CASE WHEN list_dot_product(vv, pv) > 0
-                  THEN 1 << bit ELSE 0 END) AS sg
-  FROM v CROSS JOIN p GROUP BY 1, 2),
-cand AS (
-  SELECT DISTINCT q.vec_id AS query_id, s.vec_id AS neighbor_id
-  FROM sig s JOIN sig q ON s.tbl = q.tbl AND s.sg = q.sg
-  WHERE q.vec_id < 10 AND s.vec_id <> q.vec_id),
-approx AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT c.query_id, c.neighbor_id,
-           row_number() OVER (
-             PARTITION BY c.query_id
-             ORDER BY list_dot_product(qv.vv, nv.vv)
-                      / (sqrt(list_dot_product(qv.vv, qv.vv))
-                         * sqrt(list_dot_product(nv.vv, nv.vv))) DESC,
-                      c.neighbor_id) AS rank
-    FROM cand c
-    JOIN v qv ON qv.vec_id = c.query_id
-    JOIN v nv ON nv.vec_id = c.neighbor_id)
-  WHERE rank <= 5
+    "ann_ivf_topk",
+    f"WITH {_ANN_CTE},\n{_ivf_approx(4, 1)}\n{_LISTING} approx",
 )
-{_RECALL_TAIL}
-""",
-)
+def q_ann_ivf_topk(spark, sf_dir):
+    """IVF-flat with one Lloyd step, seeded from the id-range slice
+    because DuckDB has no xxhash64 for the default sample."""
+    embs, q, seed = _ann_inputs(spark, sf_dir)
+    return _listing(SIM.ivf_topk(
+        embs, q, k=5, n_cells=8, n_probe=4, kmeans_iters=1, centroids=seed
+    ))
+
+
+@register("ann_lsh_recall", f"WITH {_ANN_CTE},\n{_LSH_APPROX}\n{_RECALL}")
 def q_ann_lsh_recall(spark, sf_dir):
-    """recall@5 of the data-plane LSH index vs exact brute-force cosine —
-    one row (k, n_queries, n_exact, n_hit, recall). The oracle recomputes
-    the LSH buckets, the candidate join, the within-bucket ranking, the
-    exact top-k, AND the hit join entirely in DuckDB.
+    """recall@5 of the LSH index vs exact brute-force cosine — one row (k,
+    n_queries, n_exact, n_hit, recall). The oracle recomputes the LSH
+    buckets, the candidate join, the within-bucket ranking, the exact
+    top-k, AND the hit join entirely in DuckDB.
 
     Params (3 bits × 5 tables) were swept against this corpus: the
     synthetic embeddings are near-random (weak label clusters), so recall
@@ -1328,103 +1321,34 @@ def q_ann_lsh_recall(spark, sf_dir):
     8-bit signature agreement is rare without real cluster structure.
     Real embedding corpora sit far above this floor; the point of the
     QUERY is the driver-verified recall measurement itself."""
-    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = embs.filter(F.col("vec_id") < 10)
+    embs, q, _ = _ann_inputs(spark, sf_dir)
     exact = SIM.cosine_topk(embs, q, k=5)
-    approx = SIM.lsh_topk_data_planes(
-        embs, q, k=5, n_planes=3, n_tables=5, plane_id_start=100
-    )
+    approx = SIM.lsh_topk(embs, q, k=5, **_LSH)
     return SIM.recall_vs_exact(approx, exact, k=5)
 
 
-@register(
-    "ann_ivf_recall",
-    f"""
-WITH {_EXACT_TOPK_CTE},
-cents AS (
-  SELECT vec_id AS cell_id, CAST(embedding AS DOUBLE[]) AS cv
-  FROM embeddings WHERE vec_id >= 200 AND vec_id < 208),
-assign AS (
-  SELECT vec_id, cell_id FROM (
-    SELECT v.vec_id, c.cell_id,
-           row_number() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_dot_product(v.vv, c.cv)
-                      / (sqrt(list_dot_product(v.vv, v.vv))
-                         * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-                      c.cell_id) AS rn
-    FROM v CROSS JOIN cents c)
-  WHERE rn = 1),
-probe AS (
-  SELECT vec_id AS query_id, cell_id FROM (
-    SELECT v.vec_id, c.cell_id,
-           row_number() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_dot_product(v.vv, c.cv)
-                      / (sqrt(list_dot_product(v.vv, v.vv))
-                         * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-                      c.cell_id) AS rn
-    FROM v CROSS JOIN cents c WHERE v.vec_id < 10)
-  WHERE rn <= 3),
-cand AS (
-  SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
-  FROM probe p JOIN assign a ON a.cell_id = p.cell_id
-  WHERE a.vec_id <> p.query_id),
-approx AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT c.query_id, c.neighbor_id,
-           row_number() OVER (
-             PARTITION BY c.query_id
-             ORDER BY list_dot_product(qv.vv, nv.vv)
-                      / (sqrt(list_dot_product(qv.vv, qv.vv))
-                         * sqrt(list_dot_product(nv.vv, nv.vv))) DESC,
-                      c.neighbor_id) AS rank
-    FROM cand c
-    JOIN v qv ON qv.vec_id = c.query_id
-    JOIN v nv ON nv.vec_id = c.neighbor_id)
-  WHERE rank <= 5
-)
-{_RECALL_TAIL}
-""",
-)
+@register("ann_ivf_recall", f"WITH {_ANN_CTE},\n{_ivf_approx(3, 0)}\n{_RECALL}")
 def q_ann_ivf_recall(spark, sf_dir):
     """recall@5 of IVF-flat (explicit id-range centroid slice, n_probe=3)
     vs exact brute-force cosine — the oracle recomputes cell assignment,
     probing, within-cell ranking, exact top-k, and the hit join."""
-    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = embs.filter(F.col("vec_id") < 10)
-    cents = embs.filter((F.col("vec_id") >= 200) & (F.col("vec_id") < 208))
+    embs, q, seed = _ann_inputs(spark, sf_dir)
     exact = SIM.cosine_topk(embs, q, k=5)
-    approx = SIM.ivf_topk(
-        embs, q, k=5, n_cells=8, n_probe=3, centroids=cents
-    )
+    approx = SIM.ivf_topk(embs, q, k=5, n_cells=8, n_probe=3, centroids=seed)
     return SIM.recall_vs_exact(approx, exact, k=5)
 
 
 @register(
     "semdedup",
-    """
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-cents AS (SELECT vec_id AS cell_id, e AS cv
-          FROM v WHERE vec_id >= 200 AND vec_id < 208),
-assign AS (
-  SELECT vec_id, e, cell_id FROM (
-    SELECT v.vec_id, v.e, c.cell_id,
-           row_number() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_dot_product(v.e, c.cv)
-                      / (sqrt(list_dot_product(v.e, v.e))
-                         * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-                      c.cell_id) AS rn
-    FROM v CROSS JOIN cents c)
-  WHERE rn = 1),
+    f"""
+WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+cents AS ({_SEED_SQL}),
+assign AS ({SIM.nearest_cells_sql("v", "cents")}),
 drops AS (
   SELECT DISTINCT b.vec_id
   FROM assign a JOIN assign b
     ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id
-  WHERE list_dot_product(a.e, b.e)
-          / (sqrt(list_dot_product(a.e, a.e))
-             * sqrt(list_dot_product(b.e, b.e))) >= 0.4)
+  WHERE {SIM.cosine_sql("a.vv", "b.vv")} >= 0.4)
 SELECT a.vec_id, a.cell_id, (d.vec_id IS NULL) AS kept
 FROM assign a LEFT JOIN drops d ON a.vec_id = d.vec_id
 """,
@@ -1440,9 +1364,8 @@ def q_semdedup(spark, sf_dir):
     vectors); the operator default is the paper-typical 0.95. Plan:
     broadcast centroids, max_by assignment (no window sort), cell-keyed
     equi-join + codegen cosine residual, bare-id drop set."""
-    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = embs.filter((F.col("vec_id") >= 200) & (F.col("vec_id") < 208))
-    return SIM.semdedup(embs, threshold=0.4, centroids=cents)
+    embs, _, seed = _ann_inputs(spark, sf_dir)
+    return SIM.semdedup(embs, threshold=0.4, centroids=seed)
 
 
 # --------------------------------------------------------------------------
@@ -3747,16 +3670,13 @@ WITH bm25_ranked AS (
 ),
 qv AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings
        WHERE vec_id = {_RRF_QVEC}),
-cos_ranked AS (
-  SELECT vec_id AS doc_id,
-         CAST(row_number() OVER (
-           ORDER BY list_dot_product(q.v, CAST(e.embedding AS DOUBLE[]))
-             / (sqrt(list_dot_product(q.v, q.v))
-                * sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                        CAST(e.embedding AS DOUBLE[])))) DESC,
-           vec_id) AS INTEGER) AS rank
+cos_p AS (
+  SELECT {_RRF_QVEC} AS query_id, q.v AS qv, e.vec_id AS neighbor_id,
+         CAST(e.embedding AS DOUBLE[]) AS nv
   FROM embeddings e CROSS JOIN qv q WHERE e.vec_id <> {_RRF_QVEC}
-  ORDER BY 2 LIMIT 50
+),
+cos_ranked AS (
+  SELECT neighbor_id AS doc_id, rank FROM ({SIM.top_k_sql("cos_p", 50)})
 ),
 contribs AS (
   SELECT doc_id, CAST(round(1000000.0 / (60 + rank)) AS BIGINT) AS c
@@ -4820,41 +4740,28 @@ def q_hash_embed(spark, sf_dir):
 
 
 # Brute-force cosine top-k over the feature-hashing embeddings, fully
-# re-derived in DuckDB: md5 bits → dense votes → integer dot products →
-# IEEE cosine (every operation correctly rounded, so the doubles are
-# bit-identical cross-engine — vote values keep all products under 2^53).
+# re-derived in DuckDB: md5 bits → dense votes → `cosine_sql` over the
+# votes as doubles (integer-valued: every product and partial sum stays
+# under 2^53 and is exact, the rest is correctly rounded, so the doubles
+# are bit-identical cross-engine).
 _HASH_EMBED_TOPK_ORACLE = _hash_embed_votes_cte(400) + """,
 emb AS (
   SELECT doc_id, list(vote ORDER BY b) AS v FROM bits GROUP BY doc_id
 ),
 pairs AS (
-  SELECT q.doc_id AS query_id, n.doc_id AS neighbor_id,
-         CAST(list_sum(list_transform(range(1, 65),
-                                      i -> q.v[i] * n.v[i])) AS DOUBLE)
-           / (sqrt(CAST(list_sum(list_transform(range(1, 65),
-                                 i -> q.v[i] * q.v[i])) AS DOUBLE))
-              * sqrt(CAST(list_sum(list_transform(range(1, 65),
-                                   i -> n.v[i] * n.v[i])) AS DOUBLE)))
-           AS score
+  SELECT q.doc_id AS query_id, CAST(q.v AS DOUBLE[]) AS qv,
+         n.doc_id AS neighbor_id, CAST(n.v AS DOUBLE[]) AS nv
   FROM emb q JOIN emb n ON q.doc_id % 50 = 0 AND q.doc_id != n.doc_id
-),
-ranked AS (
-  SELECT query_id, neighbor_id, round(score, 6) AS score,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY score DESC, neighbor_id) AS rank
-  FROM pairs
 )
-SELECT query_id, neighbor_id, score, rank FROM ranked WHERE rank <= 5
-"""
+SELECT query_id, neighbor_id, round(score, 6) AS score, rank
+FROM (""" + SIM.top_k_sql("pairs", 5) + ")"
 
 
 @register("hash_embed_topk", _HASH_EMBED_TOPK_ORACLE)
 def q_hash_embed_topk(spark, sf_dir):
     """The composed stack: feature-hashing embeddings feeding brute-force
     cosine top-k (similarity.cosine_topk) — model-free nearest-neighbor
-    search over raw text, END-TO-END oracled (unlike the learned-
-    embedding listings, which are rows-only with oracled recall twins):
-    DuckDB re-derives the md5 vote vectors AND replays the exact cosine
+    search over raw text, END-TO-END oracled: DuckDB re-derives the md5 vote vectors AND replays the exact cosine
     ranking. Integer dots keep every double product under 2^53, so both
     engines' IEEE arithmetic agrees bit-for-bit, ties broken by neighbor
     id. Queries = the doc_id % 50 slice, broadcast against the corpus

@@ -100,35 +100,22 @@ def salted_agg(
     return final
 
 
-def truncate_lineage(df: DataFrame, reliable: bool = False,
-                     eager: bool = False) -> DataFrame:
+def truncate_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
     """Cut the logical plan of an iterative / multiply-consumed frame.
 
-    reliable=False (default): ``localCheckpoint(eager=...)`` — blocks are
-    pinned to executors UNREPLICATED and lineage is discarded, so on a real
+    With a session checkpoint directory (``setCheckpointDir``; HDFS or an
+    object store on a cluster), ``checkpoint()`` to it: blocks survive
+    executor loss. Without one, ``localCheckpoint()``: blocks are pinned to
+    executors UNREPLICATED and lineage is discarded, so on a real
     multi-executor cluster losing one executor mid-iteration makes the job
     unrecoverable. That trade is correct single-JVM (local[*]), where
     executor loss is job loss anyway, and it is the fastest truncation.
     ``eager=False`` defers the materializing job to the first action —
-    merely *constructing* a frame never triggers computation (eager
-    localCheckpoint runs a Spark job at DataFrame-build time).
-
-    reliable=True: ``checkpoint()`` to the session's checkpoint directory
-    (HDFS/object store on a cluster — blocks survive executor loss). When no
-    checkpoint dir is configured, falls back to
-    ``persist(StorageLevel.DISK_ONLY)``: lineage is kept (lost blocks are
-    recomputed, plan depth still grows per iteration) but reused frames are
-    never re-executed from source — the durable-by-default choice when the
-    caller hasn't provisioned a checkpoint location.
+    merely *constructing* a frame never triggers computation.
     """
-    if not reliable:
-        return df.localCheckpoint(eager=eager)
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
-    from pyspark import StorageLevel
-
-    return df.persist(StorageLevel.DISK_ONLY)
+    return df.localCheckpoint(eager=eager)
 
 
 def widen_scan(df: DataFrame, parts: int | None = None) -> DataFrame:

@@ -1,16 +1,20 @@
 """Approximate-nearest-neighbor search over an embedding column.
 
-Three tiers:
 - brute-force cosine top-k (the correctness baseline): broadcast the query
   set, dot products in JVM via zip_with/aggregate in DOUBLE (bitwise-
   deterministic left-to-right sum — the DuckDB oracle reproduces it), rank
   with a per-query window;
-- LSH (random hyperplanes): signature via a broadcast plane matrix inside a
-  vectorized pandas UDF (one numpy matmul per Arrow batch), bucket join on
-  signature, verify within bucket — the 100 TB path (no cross join);
+- LSH (hyperplanes taken from the corpus itself): signature bits are signs
+  of dot products against a broadcast slice of the vectors, all Column
+  expressions, bucket join on signature, verify within bucket — the 100 TB
+  path (no cross join);
 - IVF: deterministic centroid sample, assign-to-nearest, probe top-P cells.
 
-All variants return (query_id, neighbor_id, score, rank).
+All variants return (query_id, neighbor_id, score, rank). Each similarity
+unit (cosine, the top-k ranking, nearest-cell assignment, the LSH
+candidates) sits beside its DuckDB twin (`cosine_sql`, `top_k_sql`,
+`nearest_cells_sql`, `lsh_candidates_sql`), which every oracle calls
+instead of spelling the unit.
 """
 
 from __future__ import annotations
@@ -20,7 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from beats_spark.scale import truncate_lineage
 
@@ -43,20 +46,38 @@ def _norm(a):
     )
 
 
+def _cosine(a, b):
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """DuckDB twin of `_cosine` over two DOUBLE[] expressions."""
+    return (f"list_dot_product({a}, {b})"
+            f" / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))")
+
+
 def _top_k(pairs: DataFrame, k: int) -> DataFrame:
     """Cosine-score (query_id, _qvec) × (neighbor_id, _vvec) candidate pairs
     and keep each query's k best, ties broken by the lower neighbor_id."""
-    scored = pairs.withColumn(
-        "score",
-        _dot(F.col("_qvec"), F.col("_vvec"))
-        / (_norm(F.col("_qvec")) * _norm(F.col("_vvec"))),
-    )
+    scored = pairs.withColumn("score", _cosine(F.col("_qvec"), F.col("_vvec")))
     w = W.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "score", "rank")
     )
+
+
+def top_k_sql(pairs: str, k: int) -> str:
+    """DuckDB twin of `_top_k`: `pairs` names a relation of (query_id, qv,
+    neighbor_id, nv), the vectors DOUBLE[]; gives (query_id, neighbor_id,
+    score, rank) with an INTEGER rank, as Spark's row_number."""
+    return f"""SELECT * FROM (
+  SELECT query_id, neighbor_id, score,
+         CAST(row_number() OVER (PARTITION BY query_id
+                                 ORDER BY score DESC, neighbor_id) AS INTEGER) AS rank
+  FROM (SELECT query_id, neighbor_id, {cosine_sql("qv", "nv")} AS score FROM {pairs}))
+WHERE rank <= {k}"""
 
 
 def cosine_topk(
@@ -155,89 +176,21 @@ def allpairs_cosine_stats(
     )
 
 
-def _planes(dim: int, n_planes: int, seed: int = 7) -> np.ndarray:
-    rng = np.random.RandomState(seed)
-    return rng.standard_normal((dim, n_planes)).astype(np.float64)
-
-
-def lsh_signatures_all(
-    df: DataFrame,
-    dim: int,
-    n_planes: int,
-    n_tables: int,
-    vec_col: str,
-    target: str = "_sigs",
-    seed_base: int = 11,
-) -> DataFrame:
-    """All n_tables hyperplane signatures in ONE Arrow pass: the per-table
-    plane matrices (seeds seed_base + t) stack into a single (dim, T·P)
-    matmul and pack into an array<long> of per-table signatures."""
-    stacked = np.concatenate(
-        [_planes(dim, n_planes, seed_base + t) for t in range(n_tables)],
-        axis=1,
-    )  # (dim, T*P)
-    weights = (1 << np.arange(n_planes, dtype=np.uint64)).astype(np.uint64)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def sig_all(s: pd.Series) -> pd.Series:
-        mat = np.stack(s.values).astype(np.float64)          # (batch, dim)
-        bits = (mat @ stacked) > 0                           # (batch, T*P)
-        packed = (
-            bits.reshape(len(mat), -1, len(weights)).astype(np.uint64)
-            @ weights
-        ).astype(np.int64)                                   # (batch, T)
-        return pd.Series(list(packed))
-
-    return df.withColumn(target, sig_all(F.col(vec_col)))
-
-
-def lsh_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    n_planes: int = 12,
-    n_tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "vec_id",
-) -> DataFrame:
-    """Bucketed ANN: `n_tables` independent plane sets; candidates = vectors
-    sharing a bucket with the query in ANY table; exact cosine + top-k on
-    candidates only. Shuffles are bucket-key joins — no cross join.
-
-    Each side is scanned ONCE: all table signatures come from a single
-    fused Arrow matmul (lsh_signatures_all) and posexplode to (table,
-    bucket) rows — the previous per-table loop re-scanned the vector
-    table and re-ran the UDF n_tables times per side (18 FileScans at
-    n_tables=8, audited r5 second session), and the projected (id, vec)
-    frames are materialized so the exact-verify joins re-read pinned
-    blocks instead of the store."""
-    from beats_spark.scale import truncate_lineage
-
-    v = truncate_lineage(vectors.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_vvec")))
-    q = truncate_lineage(queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qvec")))
-
-    # candidates travel as BARE (query_id, neighbor_id) pairs: the bucket
-    # joins and the cross-table dropDuplicates exchange never carry the
-    # embedding arrays — vectors are joined back BY ID for scoring only
-    vs = lsh_signatures_all(v, dim, n_planes, n_tables, "_vvec").select(
-        "neighbor_id", F.posexplode("_sigs").alias("_tbl", "_b"))
-    qs = lsh_signatures_all(q, dim, n_planes, n_tables, "_qvec").select(
-        "query_id", F.posexplode("_sigs").alias("_tbl", "_b"))
-    cands = (
-        vs.join(qs, ["_tbl", "_b"])
-        .select("query_id", "neighbor_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
+def _centroids(vectors: DataFrame, centroids: DataFrame | None,
+               n_cells: int, id_col: str, vec_col: str) -> DataFrame:
+    """(cell_id, _cvec): the explicit `centroids` frame (id_col + vec_col),
+    else the `n_cells` vectors with the smallest xxhash64(id) — a uniform
+    pseudo-random but fully deterministic sample. Spark plans
+    orderBy().limit(k) as TakeOrderedAndProject: each partition keeps its
+    local top-k and only n_cells rows ever reach the driver, so this holds
+    at 10^9+ vectors. The oracles pass an id-range slice, which DuckDB can
+    reproduce (it has no xxhash64)."""
+    cents = (vectors if centroids is None else centroids).select(
+        F.col(id_col).alias("cell_id"), F.col(vec_col).alias("_cvec")
     )
-    return _top_k(
-        cands.join(v, "neighbor_id")
-        .join(q, "query_id"),
-        k,
-    )
+    if centroids is None:
+        cents = cents.orderBy(F.xxhash64("cell_id"), "cell_id").limit(n_cells)
+    return cents
 
 
 def _assign_cells(v: DataFrame, cents: DataFrame, id_name: str) -> DataFrame:
@@ -251,8 +204,7 @@ def _assign_cells(v: DataFrame, cents: DataFrame, id_name: str) -> DataFrame:
     (desc score, asc cell_id) determinism."""
     a = (
         v.crossJoin(F.broadcast(cents))
-        .withColumn("_d", _dot(F.col("_vvec"), F.col("_cvec"))
-                    / (_norm(F.col("_vvec")) * _norm(F.col("_cvec"))))
+        .withColumn("_d", _cosine(F.col("_vvec"), F.col("_cvec")))
     )
     best = a.groupBy(id_name).agg(
         F.max_by(
@@ -267,7 +219,19 @@ def _assign_cells(v: DataFrame, cents: DataFrame, id_name: str) -> DataFrame:
     )
 
 
-def lsh_topk_data_planes(
+def nearest_cells_sql(vecs: str, cents: str, n: int = 1) -> str:
+    """DuckDB twin of `_assign_cells` (n=1) and of `ivf_topk`'s probe pick
+    (n=n_probe): each row of the relation `vecs` (vec_id, vv, ...) once per
+    one of its n nearest `cents` (cell_id, cv) by cosine, the lowest
+    cell_id winning ties."""
+    return f"""SELECT * EXCLUDE (cv, _rn) FROM (
+  SELECT *, row_number() OVER (PARTITION BY vec_id
+                               ORDER BY {cosine_sql("vv", "cv")} DESC, cell_id) AS _rn
+  FROM {vecs} CROSS JOIN {cents})
+WHERE _rn <= {n}"""
+
+
+def lsh_topk(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = 10,
@@ -278,19 +242,20 @@ def lsh_topk_data_planes(
     vec_col: str = "embedding",
     query_id_col: str = "vec_id",
 ) -> DataFrame:
-    """LSH top-k with DATA-VECTOR hyperplanes — the engine-reproducible
-    twin of `lsh_topk`: table t's planes are the corpus vectors with ids
-    [start + t·P, start + (t+1)·P), signature bit = sign of the dot
-    product against each plane. Everything is Column expressions (the dot
-    runs in whole-stage codegen via zip_with/aggregate — no UDF, no numpy
-    plane matrix), so a SQL oracle can recompute the identical buckets,
-    candidates, and ranking end-to-end; this powers the driver-verified
-    recall@k query (ann_lsh_recall).
+    """Bucketed ANN over `n_tables` hyperplane sets; candidates = vectors
+    sharing a bucket with the query in ANY table; exact cosine + top-k on
+    candidates only. Shuffles are bucket-key joins — no cross join.
 
-    Scale shape = lsh_topk's: planes broadcast (T·P rows); per-vector
-    signatures partial-aggregate map-side so the exchange carries bare
-    (id, table, sig) triples; candidates are bare id pairs; vectors join
-    back BY ID for scoring only."""
+    Table t's planes are the corpus vectors with ids [start + t·P,
+    start + (t+1)·P), signature bit = sign of the dot product against each
+    plane. Everything is Column expressions (the dot runs in whole-stage
+    codegen via zip_with/aggregate — no UDF, no plane matrix), so
+    `lsh_candidates_sql` recomputes the identical buckets and candidates.
+
+    Planes are broadcast (T·P rows); per-vector signatures partial-
+    aggregate map-side so the exchange carries bare (id, table, sig)
+    triples; candidates are bare id pairs; vectors join back BY ID for
+    scoring only."""
     n_total = n_planes * n_tables
     planes = vectors.where(
         (F.col(id_col) >= plane_id_start)
@@ -301,8 +266,6 @@ def lsh_topk_data_planes(
         ((F.col(id_col) - plane_id_start) % n_planes).alias("_bit"),
         F.col(vec_col).alias("_pvec"),
     )
-    from beats_spark.scale import truncate_lineage
-
     # lineage cut: each side feeds its signature aggregation AND the
     # exact-verify join-back — two reads of the embedding store without it
     v = truncate_lineage(vectors.select(
@@ -339,6 +302,29 @@ def lsh_topk_data_planes(
     )
 
 
+def lsh_candidates_sql(vecs: str, queries: str, n_planes: int, n_tables: int,
+                       plane_id_start: int = 100) -> str:
+    """DuckDB twin of `lsh_topk`'s candidate pairs: `vecs` and `queries`
+    name relations of (vec_id, vv DOUBLE[]), the planes are `vecs` rows;
+    gives the distinct (query_id, neighbor_id) pairs."""
+    end = plane_id_start + n_planes * n_tables
+
+    def sigs(side: str) -> str:
+        return f"""SELECT s.vec_id, p.tbl,
+         sum(CASE WHEN list_dot_product(s.vv, p.pv) > 0 THEN 1 << p.bit ELSE 0 END) AS sg
+  FROM {side} s CROSS JOIN _planes p GROUP BY 1, 2"""
+
+    return f"""WITH _planes AS (
+  SELECT CAST((vec_id - {plane_id_start}) // {n_planes} AS INT) AS tbl,
+         (vec_id - {plane_id_start}) % {n_planes} AS bit, vv AS pv
+  FROM {vecs} WHERE vec_id >= {plane_id_start} AND vec_id < {end}),
+_vsig AS ({sigs(vecs)}),
+_qsig AS ({sigs(queries)})
+SELECT DISTINCT q.vec_id AS query_id, s.vec_id AS neighbor_id
+FROM _vsig s JOIN _qsig q ON s.tbl = q.tbl AND s.sg = q.sg
+WHERE s.vec_id <> q.vec_id"""
+
+
 def semdedup(
     vectors: DataFrame,
     threshold: float = 0.95,
@@ -369,18 +355,7 @@ def semdedup(
     (allpairs_cosine_stats) per cell — same contract, BLAS inner loop.
     """
     v = vectors.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vvec"))
-    if centroids is not None:
-        cents = centroids.select(
-            F.col(id_col).alias("cell_id"), F.col(vec_col).alias("_cvec")
-        )
-    else:
-        cents = (
-            vectors.select(
-                F.col(id_col).alias("cell_id"), F.col(vec_col).alias("_cvec")
-            )
-            .orderBy(F.xxhash64(F.col("cell_id")).asc(), F.col("cell_id"))
-            .limit(n_cells)
-        )
+    cents = _centroids(vectors, centroids, n_cells, id_col, vec_col)
     # lineage cut: the assignment feeds the pair join twice (a and b
     # sides) plus the final kept-flag join — without it the broadcast
     # crossJoin + max_by assignment (|V|·n_cells dot products) and the
@@ -390,8 +365,6 @@ def semdedup(
     # dominates — and is kept anyway: at real corpus sizes re-running the
     # assignment and re-reading the embedding store 3× is the larger
     # term, and the within-cell cost is the same either way.
-    from beats_spark.scale import truncate_lineage
-
     va = truncate_lineage(_assign_cells(v, cents, "_id"))
     a = va.select(
         F.col("cell_id"), F.col("_id").alias("_ida"), F.col("_vvec").alias("_va")
@@ -402,11 +375,7 @@ def semdedup(
     drops = (
         a.join(b, "cell_id")
         .filter(F.col("_ida") < F.col("_idb"))
-        .filter(
-            _dot(F.col("_va"), F.col("_vb"))
-            / (_norm(F.col("_va")) * _norm(F.col("_vb")))
-            >= threshold
-        )
+        .filter(_cosine(F.col("_va"), F.col("_vb")) >= threshold)
         .select(F.col("_idb").alias("_id"))
         .distinct()
         .withColumn("_drop", F.lit(True))
@@ -451,40 +420,18 @@ def ivf_topk(
     vec_col: str = "embedding",
     query_id_col: str = "vec_id",
     kmeans_iters: int = 0,
-    reliable: bool = False,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF-flat: centroids = deterministic distributed sample (optionally
-    refined by distributed Lloyd iterations), vectors assigned to their
-    nearest cell, queries probe the `n_probe` nearest cells, exact cosine
-    within probed cells.
+    """IVF-flat: centroids = deterministic distributed sample (`_centroids`,
+    optionally refined by distributed Lloyd iterations), vectors assigned
+    to their nearest cell, queries probe the `n_probe` nearest cells, exact
+    cosine within probed cells.
 
-    Centroid pick is the `n_cells` vectors with the smallest xxhash64(id) —
-    a uniform pseudo-random but fully deterministic sample. Spark plans
-    orderBy().limit(k) as TakeOrderedAndProject: each partition keeps its
-    local top-k and only n_cells rows ever reach the driver, so this holds
-    at 10^9+ vectors (the round-1 version collected EVERY id — driver OOM
-    at scale). With kmeans_iters > 0 the seed is refined fully in Spark:
-    assign (broadcast join) → per-cell per-dimension mean (posexplode +
-    groupBy avg) → re-assemble centroids — never a driver-side vector.
-    `reliable=True` makes the per-iteration centroid truncation
-    cluster-durable (checkpoint dir / DISK_ONLY), same flag convention as
-    graph.assign_components and dedup.minhash_dedup. An explicit
-    `centroids` frame (id_col + vec_col) overrides the xxhash64 sample —
-    the ann_ivf_recall oracle passes a plain id-range slice so DuckDB can
-    reproduce the seed set (it has no xxhash64)."""
-    if centroids is not None:
-        cents = centroids.select(
-            F.col(id_col).alias("cell_id"), F.col(vec_col).alias("_cvec")
-        )
-    else:
-        cents = (
-            vectors.select(
-                F.col(id_col).alias("cell_id"), F.col(vec_col).alias("_cvec")
-            )
-            .orderBy(F.xxhash64(F.col("cell_id")).asc(), F.col("cell_id"))
-            .limit(n_cells)
-        )
+    With kmeans_iters > 0 the seed is refined fully in Spark: assign
+    (broadcast join) → per-cell per-dimension mean (posexplode + groupBy
+    avg) → re-assemble centroids — never a driver-side vector. An explicit
+    `centroids` frame (id_col + vec_col) overrides the xxhash64 sample."""
+    cents = _centroids(vectors, centroids, n_cells, id_col, vec_col)
     v = vectors.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_vvec"))
     q = queries.select(F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qvec"))
 
@@ -506,15 +453,14 @@ def ivf_topk(
         # n_cells rows: materialize so the assign/probe/broadcast consumers
         # don't each re-run the whole refinement lineage (eager=False:
         # constructing the plan triggers no job; the tiny frame pins on
-        # first use). reliable=True → cluster-durable truncation.
-        cents = truncate_lineage(cents, reliable=reliable, eager=False)
+        # first use).
+        cents = truncate_lineage(cents, eager=False)
 
     va = _assign_cells(v, cents, "neighbor_id")
 
     qa = (
         q.crossJoin(F.broadcast(cents))
-        .withColumn("_d", _dot(F.col("_qvec"), F.col("_cvec"))
-                    / (_norm(F.col("_qvec")) * _norm(F.col("_cvec"))))
+        .withColumn("_d", _cosine(F.col("_qvec"), F.col("_cvec")))
     )
     wq = W.partitionBy("query_id").orderBy(F.col("_d").desc(), F.col("cell_id"))
     qa = qa.withColumn("_rn", F.row_number().over(wq)).filter(

@@ -148,6 +148,7 @@ def read_lines(
     goldens and small corpora that want line numbers.
     """
     charset = resolve_encoding(encoding)
+    offset = None
     if charset == "UTF-8":
         r = spark.read
         if line_sep:
@@ -177,22 +178,7 @@ def read_lines(
                 F.posexplode(lines).alias("_line_no", "text"),
             )
         )
-        if dense_offsets:
-            df = base.withColumnRenamed("_line_no", "offset")
-        else:
-            df = base.withColumn(
-                "offset", F.col("_line_no").cast("long")
-            ).drop("_line_no")
-        if max_bytes is not None:
-            from beats_spark.operators.parse import add_flag
-
-            if flag_truncated:
-                df = add_flag(df, F.octet_length("text") > max_bytes,
-                              "truncated")
-            df = df.withColumn("text", F.substring("text", 1, max_bytes))
-        return df.select("source", "offset", "text", *(
-            ["flags"] if "flags" in df.columns else []
-        ))
+        offset = F.col("_line_no").cast("int" if dense_offsets else "long")
     else:
         # every other charset in the table is newline-transparent (0x0A
         # never appears inside a multi-byte sequence, and EBCDIC's 0x25
@@ -213,18 +199,16 @@ def read_lines(
             F.input_file_name().alias("source"),
             F.col("text"),
         )
-    if dense_offsets:
-        df = base.withColumn(
-            "offset",
-            F.row_number().over(
-                W.partitionBy("source").orderBy(F.monotonically_increasing_id())
-            ) - 1,
-        )
-    else:
+    if offset is None and dense_offsets:
+        offset = F.row_number().over(
+            W.partitionBy("source").orderBy(F.monotonically_increasing_id())
+        ) - 1
+    elif offset is None:
         # monotonically_increasing_id = (partition_id << 33) + row-in-
         # partition; split partitions follow block order, so this is
         # strictly increasing within every file with ZERO shuffles
-        df = base.withColumn("offset", F.monotonically_increasing_id())
+        offset = F.monotonically_increasing_id()
+    df = base.withColumn("offset", offset)
     if max_bytes is not None:
         from beats_spark.operators.parse import add_flag
 

@@ -453,8 +453,11 @@ def pii_redact_sql(text_col: str = "text") -> dict[str, str]:
 # C4-style line cleaning (Raffel et al. 2020, public corpus-cleaning rules)
 # ---------------------------------------------------------------------------
 
-# a kept line must end in terminal punctuation
-C4_TERMINAL_RE = r'[.!?"]$'
+# a kept line must end in terminal punctuation: `\z`, because Java's `$`
+# also matches before a final line terminator and RE2's does not
+C4_TERMINAL_RE = r'[.!?"]\z'
+# each line is trimmed of the shared whitespace class, as C4's `strip()`
+_WS_EDGES = rf"^{_WS}|{_WS}\z"
 
 
 def c4_clean(df: DataFrame, text_col: str = "text",
@@ -472,7 +475,7 @@ def c4_clean(df: DataFrame, text_col: str = "text",
     collect_list) shuffles the entire corpus twice; the same trade that
     made the fold win in doc_fingerprint. Map-only, no exchange."""
     trimmed = F.transform(F.split(F.col(text_col), "\n"),
-                          lambda ln: F.trim(ln))
+                          lambda ln: F.regexp_replace(ln, _WS_EDGES, ""))
     kept = F.filter(
         trimmed,
         lambda t: t.rlike(C4_TERMINAL_RE)
@@ -499,7 +502,7 @@ def c4_clean_sql(text_col: str = "text", min_words_per_line: int = 5,
     """DuckDB fragments computing the identical cleaning."""
     kept = (
         f"list_filter(list_transform(string_split({text_col}, chr(10)),"
-        f" x -> trim(x, ' ')),"
+        f" x -> regexp_replace(x, '{_WS_EDGES}', '', 'g')),"
         f" t -> regexp_matches(t, '{C4_TERMINAL_RE}')"
         f" AND len(regexp_split_to_array(t, '{_WS}')) >= {min_words_per_line}"
         f" AND NOT contains(lower(t), 'javascript'))"

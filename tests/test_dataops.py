@@ -136,7 +136,7 @@ def test_ivf_recall_vs_brute_force(spark, embs):
 
 def test_lsh_returns_ranked_candidates(spark, embs):
     q = embs.filter(F.col("vec_id") < 5)
-    out = S.lsh_topk(embs, q, dim=64, k=5, n_planes=6, n_tables=8).collect()
+    out = S.lsh_topk(embs, q, k=5, n_planes=6, n_tables=8).collect()
     assert len(out) > 0
     for r in out:
         assert r.neighbor_id != r.query_id
@@ -395,10 +395,10 @@ def test_normalize_unicode(spark):
 
 
 def test_lsh_data_planes_and_recall_row(spark, embs):
-    """The SQL-reproducible LSH twin: pure-Column signatures, ranked
+    """LSH with corpus-vector planes: pure-Column signatures, ranked
     candidates, and recall_vs_exact emits a correct single-row summary."""
     q = embs.filter(F.col("vec_id") < 5)
-    approx = S.lsh_topk_data_planes(embs, q, k=5, n_planes=3, n_tables=5)
+    approx = S.lsh_topk(embs, q, k=5, n_planes=3, n_tables=5)
     rows = approx.collect()
     assert rows and all(r.neighbor_id != r.query_id for r in rows)
     exact = S.cosine_topk(embs, q, k=5)

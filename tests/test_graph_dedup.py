@@ -8,8 +8,11 @@ pair at the threshold)."""
 
 from __future__ import annotations
 
+import contextlib
 import itertools
+import os
 import random
+import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -100,6 +103,15 @@ def test_minhash_recall_at_moderate_jaccard(spark):
     assert (1, 2) in got
 
 
+def test_minhash_null_texts_never_pair(spark):
+    # NULL text has no shingles, so it never enters banding: two NULL
+    # documents are not near-duplicates of each other
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, "hello world foo")], "doc_id long, text string"
+    )
+    assert D.minhash_lsh_pairs(df).collect() == []
+
+
 def test_minhash_dedup_cc_transitive_chain(spark):
     # a ~ b ~ c but jaccard(a, c) below threshold: single-link keep rule
     # keeps a only; CC must also collapse b and c into a's component.
@@ -155,9 +167,20 @@ def test_prefix_filter_on_documents_table(spark):
         assert r["jaccard"] >= 0.5
 
 
-def test_truncate_lineage_local_and_reliable(spark):
-    import tempfile
+@contextlib.contextmanager
+def _checkpoint_dir(spark):
+    """A session checkpoint directory for the block, unset afterwards."""
+    d = tempfile.mkdtemp(prefix="bs_ckpt_")
+    spark.sparkContext.setCheckpointDir(d)
+    try:
+        yield d
+    finally:
+        getattr(spark._jsc.sc(), "checkpointDir_$eq")(
+            spark._jvm.scala.Option.apply(None)
+        )
 
+
+def test_truncate_lineage_local_and_reliable(spark):
     from beats_spark.scale import truncate_lineage
 
     df = spark.range(100)
@@ -170,26 +193,12 @@ def test_truncate_lineage_local_and_reliable(spark):
     assert len(after) == len(before)
     assert lazy.count() == 100
 
-    # reliable with no checkpoint dir: persist(DISK_ONLY)
+    # with a checkpoint dir: true cluster-durable checkpoint
     assert spark.sparkContext.getCheckpointDir() is None
-    disk = truncate_lineage(spark.range(50), reliable=True)
-    assert disk.storageLevel.useDisk and not disk.storageLevel.useMemory
-    assert disk.count() == 50
-    disk.unpersist()
-
-    # reliable with a checkpoint dir: true cluster-durable checkpoint
-    d = tempfile.mkdtemp(prefix="bs_ckpt_")
-    spark.sparkContext.setCheckpointDir(d)
-    try:
-        ck = truncate_lineage(spark.range(25), reliable=True, eager=True)
+    with _checkpoint_dir(spark) as d:
+        ck = truncate_lineage(spark.range(25), eager=True)
         assert ck.count() == 25
-        import os
-
         assert any(os.scandir(d))  # blocks actually written to the dir
-    finally:
-        getattr(spark._jsc.sc(), "checkpointDir_$eq")(
-            spark._jvm.scala.Option.apply(None)
-        )
 
 
 def test_cc_nonconvergence_raises(spark):
@@ -205,9 +214,9 @@ def test_cc_reliable_path_matches_local(spark):
         [(0, 1), (1, 2), (5, 6), (8, 9), (9, 5)], "id_a long, id_b long"
     )
     local = sorted(map(tuple, connected_components(edges).collect()))
-    durable = sorted(
-        map(tuple, connected_components(edges, reliable=True).collect())
-    )
+    with _checkpoint_dir(spark) as d:
+        durable = sorted(map(tuple, connected_components(edges).collect()))
+        assert any(os.scandir(d))
     assert local == durable
 
 

@@ -208,7 +208,8 @@ def test_lsh_candidates_carry_no_vectors(spark):
 
     vecs = _make_vecs(spark)
     plan = _formatted_plan(
-        lsh_topk(vecs, vecs.limit(2), dim=8, k=3, n_planes=4, n_tables=2)
+        lsh_topk(vecs, vecs.limit(2), k=3, n_planes=4, n_tables=2,
+                 plane_id_start=0)
     )
     blocks = re.split(r"^(?=\(\d+\) )", plan, flags=re.M)
     dedup_exchanges = [

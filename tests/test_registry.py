@@ -50,10 +50,8 @@ def test_outside_window_only_long_green_or_rows_only():
     names = list(Q.queries())
     oracles = Q.oracle_sql()
     rows_only = [n for n in names if n not in oracles]
-    # rows-only by declared design: the two raw ANN listings (their recall
-    # twins ARE oracled) and community_id (DuckDB lacks sha1; reference
-    # vector pinned in pytest)
-    assert sorted(rows_only) == ["ann_ivf_topk", "ann_lsh_topk",
-                                 "community_id"]
-    assert names[-3:] == rows_only
-    assert len(names) == 115 and len(oracles) == 112
+    # rows-only by declared design: community_id only (DuckDB lacks sha1;
+    # reference vector pinned in pytest)
+    assert rows_only == ["community_id"]
+    assert names[-1:] == rows_only
+    assert len(names) == 115 and len(oracles) == 114

@@ -176,6 +176,19 @@ def test_charset_utf16_bom_variants(spark, tmp_path):
         assert [r.text for r in out] == lines, name
 
 
+def test_read_lines_utf16_max_bytes(spark, tmp_path):
+    # the whole-file charset path ends in the shared offset/max_bytes tail
+    f = tmp_path / "u16.log"
+    body = "short\n" + "y" * 100 + "\n"
+    f.write_bytes(b"\xff\xfe" + body.encode("utf-16-le"))
+    for dense in (False, True):
+        out = read_lines(spark, str(f), encoding="utf-16le-bom", max_bytes=10,
+                         dense_offsets=dense).collect()
+        rows = {r.offset: r for r in out}
+        assert rows[0].text == "short" and rows[0].flags == []
+        assert rows[1].text == "y" * 10 and "truncated" in rows[1].flags
+
+
 def test_charset_unknown_name_passthrough(spark, tmp_path):
     from beats_spark.sources.readers import resolve_encoding
 

@@ -5,7 +5,8 @@ are the Spark units; `tokens_sql`, `normalize_text_sql`, `word_ngrams_sql` and
 `dedup.shingles_sql` their DuckDB twins, which every oracle calls. Texts are
 drawn over whitespace that Java's `\\s`, RE2's `\\s` and Python's `split()`
 read differently, and run through both engines in one Spark job and one
-DuckDB query. A source scan keeps the raw spellings inside the twins.
+DuckDB query. A source scan keeps the raw spellings inside the twins, those
+of the similarity units (cosine, top-k, nearest cell) included.
 """
 
 from __future__ import annotations
@@ -89,20 +90,19 @@ def test_twins_match_spark_units(spark):
         for unit in ("toks", "norm", *(f"g{n}{g:d}" for n in _NS
                                        for g in (False, True))):
             assert _fold_final_sigma(s[unit]) == d[unit], (text, unit)
-        # NULL text: Spark's shingle set is [NULL], which minhash hashes to
-        # one value, so two NULL texts pair at Jaccard 1; the twin has none
-        if text is not None:
-            assert set(_fold_final_sigma(s["sh"])) == set(d["sh"]), text
+        assert set(_fold_final_sigma(s["sh"])) == set(d["sh"]), text
 
 
 def test_vertical_tab_and_null(spark):
     """\\x0B separates tokens in both engines; NULL text has NULL tokens and
-    key, and `['']` grams (none when guarded)."""
+    key, `['']` grams (none when guarded) and no shingles."""
     texts = ["a\x0bb c", None]
-    want = [(["a", "b", "c"], "a b c", ["a b", "b c"], ["a b", "b c"]),
-            (None, None, [""], [])]
+    want = [(["a", "b", "c"], "a b c", ["a b", "b c"], ["a b", "b c"],
+             ["a b c"]),
+            (None, None, [""], [], [])]
     for rows in (_spark_units(spark, texts), _duckdb_units(texts)):
-        assert [(r["toks"], r["norm"], r["g20"], r["g21"]) for r in rows] == want
+        assert [(r["toks"], r["norm"], r["g20"], r["g21"], r["sh"])
+                for r in rows] == want
 
 
 @pytest.mark.xfail(strict=True, reason="DuckDB's lower has no final-sigma "
@@ -118,6 +118,9 @@ def test_other_whitespace_classes_match(spark):
     classes read \\x0B as whitespace in both engines."""
     texts = ["a\x0b!b 7", "x\x0by?",
              "one\x0btwo three four five.\nsix seven eight nine ten.\n"
+             "a b c d e.",
+             # CRLF: Java's `$` matches before the final `\r`, RE2's does not
+             "one two three four five.\r\nsix seven eight nine ten.\n"
              "a b c d e.",
              "see http://spam-mill.example\x0bfoo and https://ok.example/x"]
     df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
@@ -137,7 +140,8 @@ def test_other_whitespace_classes_match(spark):
         want = con.execute(
             f"SELECT {', '.join(exprs)} FROM documents ORDER BY i").fetchall()
     assert got == [tuple(w) for w in want]
-    assert got[3][5] == ["spam-mill.example", "ok.example"]
+    assert got[3][4] == 3
+    assert got[4][5] == ["spam-mill.example", "ok.example"]
 
 
 # -- the hash kernel tokenizes with `textops.tokens` --------------------------
@@ -174,12 +178,19 @@ def test_kernel_tokens_match_oracles(spark):
 
 
 # -- tooling guard: the raw spellings live in their twins only -----------------
+# (the similarity units of `similarity.py` too: cosine and the top-k and
+# nearest-cell windows)
 
 _SPELLINGS = {
     "regexp_split_to_array(trim(lower": {("textops.py", "tokens_sql")},
     "regexp_replace(lower(": {("textops.py", "normalize_text_sql")},
     "[i:i+": {("textops.py", "word_ngrams_sql")},
     ".lower().split()": set(),
+    "sqrt(list_dot_product": {("similarity.py", "cosine_sql")},
+    "/ (_norm(": {("similarity.py", "_cosine")},
+    "PARTITION BY query_id": {("similarity.py", "top_k_sql")},
+    '.desc(), F.col("neighbor_id")': {("similarity.py", "_top_k")},
+    "DESC, cell_id": {("similarity.py", "nearest_cells_sql")},
 }
 
 
@@ -202,5 +213,5 @@ def test_text_units_are_spelled_once():
                 name = min(inner, key=lambda f: f[1] - f[0])[2] if inner else None
                 if (path.name, name) not in allowed:
                     found.append(f"{path.relative_to(root)}:{lineno}: {spelling}")
-    assert not found, "text unit spelled outside its twin:\n" + "\n".join(found)
+    assert not found, "unit spelled outside its twin:\n" + "\n".join(found)
 
