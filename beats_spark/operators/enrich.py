@@ -435,12 +435,10 @@ def add_network_direction(
 ) -> DataFrame:
     """Classify src/dst vs internal networks
     (actions/add_network_direction.go:49-52)."""
-    from beats_spark.conditions import _network_pred, _any
+    from beats_spark.conditions import compile_condition
 
-    src_internal = _any([_network_pred(F.col(source_field), n) for n in internal_networks])
-    dst_internal = _any([_network_pred(F.col(dest_field), n) for n in internal_networks])
-    src_internal = F.coalesce(src_internal, F.lit(False))
-    dst_internal = F.coalesce(dst_internal, F.lit(False))
+    src_internal = compile_condition({"network": {source_field: internal_networks}}, df)
+    dst_internal = compile_condition({"network": {dest_field: internal_networks}}, df)
     return df.withColumn(
         target,
         F.when(src_internal & dst_internal, "internal")

@@ -37,12 +37,7 @@ from beats_spark import packing as PK
 from beats_spark import sampling as SM
 from beats_spark import similarity as SIM
 from beats_spark import textops as X
-from beats_spark.conditions import (
-    _NAMED_NETWORKS,
-    _cidr_bounds,
-    condition_sql,
-    sql_str,
-)
+from beats_spark.conditions import condition_sql, sql_str
 from beats_spark.data import lookups as L
 from beats_spark.data.transcripts import load_transcripts, oracle_cte
 from beats_spark.grok import Grok, GrokBank
@@ -747,29 +742,15 @@ def q_codec_roundtrip(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-_PRIVATE_IP4_SQL = " OR ".join(
-    f"ip4 BETWEEN {lo} AND {hi}"
-    for lo, hi in map(_cidr_bounds, _NAMED_NETWORKS["private"])
-)
-
-
 @register(
     "network_direction",
     oracle_cte()
     + f"""
 SELECT direction, count(*) AS n FROM (
   SELECT CASE
-    WHEN {_PRIVATE_IP4_SQL} THEN 'outbound'
+    WHEN {condition_sql({"network": {"ip": "private"}})} THEN 'outbound'
     ELSE 'external' END AS direction  -- dst is public
-  FROM (
-    -- the IPv4 half of the lattice's ip literals, as _ipv4_int_col
-    SELECT CASE WHEN NOT contains(ip, ':') THEN
-             CAST(split_part(ip,'.',1) AS BIGINT)*16777216
-             + CAST(split_part(ip,'.',2) AS BIGINT)*65536
-             + CAST(split_part(ip,'.',3) AS BIGINT)*256
-             + CAST(split_part(ip,'.',4) AS BIGINT) END AS ip4
-    FROM (SELECT {convert_sql(_TOK0_SQL, "ip")} AS ip FROM transcripts)
-  )
+  FROM (SELECT {_TOK0_SQL} AS ip FROM transcripts)
 )
 GROUP BY direction
 """,

@@ -18,7 +18,7 @@ tracking replaces all of this (see beats_spark.streaming).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -113,6 +113,22 @@ def resolve_encoding(name: str) -> str:
     verbatim (the reference's htmlindex fallback, encoding.go:118-127 —
     the JVM raises at scan time if the charset truly doesn't exist)."""
     return ENCODINGS.get(name.strip().lower(), name)
+
+
+def _utf8_prefix(text: Column, max_bytes: int) -> Column:
+    """The longest prefix of `text` within `max_bytes` UTF-8 bytes, cut at
+    the last whole character."""
+    b = F.encode(text, "UTF-8")
+
+    def cont(pos: int) -> Column:  # a continuation byte, 0b10xxxxxx
+        return F.substring(b, pos, 1).between(F.lit(b"\x80"), F.lit(b"\xbf"))
+
+    # a character straddling the cut is dropped back to its lead byte,
+    # at most three bytes before the first one past the cut
+    m = max_bytes
+    keep = (F.when(~cont(m + 1), m).when(~cont(m), m - 1)
+            .when(~cont(m - 1), m - 2).otherwise(m - 3))
+    return F.decode(F.substring(b, F.lit(1), keep), "UTF-8")
 
 
 def read_lines(
@@ -212,9 +228,11 @@ def read_lines(
     if max_bytes is not None:
         from beats_spark.operators.parse import add_flag
 
+        too_long = F.octet_length("text") > max_bytes
         if flag_truncated:
-            df = add_flag(df, F.octet_length("text") > max_bytes, "truncated")
-        df = df.withColumn("text", F.substring("text", 1, max_bytes))
+            df = add_flag(df, too_long, "truncated")
+        df = df.withColumn("text", F.when(too_long, _utf8_prefix(F.col("text"), max_bytes))
+                           .otherwise(F.col("text")))
     return df.select("source", "offset", "text", *(
         ["flags"] if "flags" in df.columns else []
     ))

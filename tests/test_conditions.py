@@ -5,7 +5,8 @@ build rows → compile condition → assert match set. Missing field ⇒ FALSE."
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from beats_spark.conditions import ConditionError, compile_condition, condition_sql
 
@@ -109,29 +110,107 @@ def test_not_of_missing_field_is_true(df):
     assert ids(df, {"not": {"equals": {"nope": "x"}}}) == [1, 2, 3, 4]
 
 
-def test_sql_renderer_matches_spark(df, spark):
-    """The DuckDB SQL rendering has identical semantics on the same rows."""
+# one frame for the differential check: NULLs, an array column with a NULL
+# element, numbers that only one engine's own cast reads, IPv6, an octet
+# above 255, and every named network
+_ROWS = [
+    (1, "user", "hello world", 200, "12", "10.1.2.3", ["a", "b"], True),
+    (2, "assistant", "ERROR: boom", 500, "abc", "127.0.0.1", ["b", None], False),
+    (3, "tool", "took=42ms", 301, "7.5", "8.8.8.8", None, None),
+    (4, "system", None, 404, None, "not-an-ip", ["c", "ab"], True),
+    (5, "user", "", None, "1.5d", "fe80::1", [], False),
+    (6, None, "naïve ü", 0, "0x1p3", "10.0.999.1", ["é"], None),
+    (7, "tool", 'level=ERROR " 500 ', -3, "1_000", "192.168.0.1", ["a"], True),
+    (8, "assistant", "x", 1, " 4 ", "::ffff:10.0.0.1", None, False),
+    (9, "user", "hello", 2, "1e3", None, ["ab"], True),
+    (10, "system", "z", 3, "-2", "169.254.3.4", ["x"], False),
+    (11, "user", "w", 4, "inf", "224.0.0.9", None, None),
+    (12, "user", "v", 5, "1f", "0.0.0.0", None, None),
+    (13, "tool", "u", 6, "NaN", "172.16.5.4", None, True),
+    (14, "tool", "t", 7, "", "300.1.1.1", ["ba"], False),
+]
+_SCHEMA = ("id int, role string, text string, code int, num string, ip string,"
+           " tags array<string>, flag boolean")
+_MISSING = "nope"
+_STRS = st.sampled_from(["a", "b", "ab", "o", "ERROR", "", "é", "level=", "user"])
+_EQUALS = {
+    "role": st.sampled_from(["user", "tool", "x"]),
+    "code": st.sampled_from([0, 200, 500, -3]),
+    "flag": st.booleans(),
+    "num": st.sampled_from(["12", "abc"]),
+    _MISSING: _STRS,
+}
+_NETWORKS = st.sampled_from([
+    "private", "loopback", "public", "multicast", "link_local_unicast",
+    "unspecified", "8.8.0.0/16", "10.0.0.1", "192.168.0.0/24", "172.16.0.0/12",
+])
+
+
+def _fields(draw, names, value):
+    keys = draw(st.lists(st.sampled_from(names), min_size=1, max_size=2, unique=True))
+    return {k: draw(value(k)) for k in keys}
+
+
+def _any_of(values):
+    return st.one_of(values, st.lists(values, min_size=1, max_size=3))
+
+
+@st.composite
+def _condition(draw, depth=0):
+    kind = draw(st.sampled_from(
+        ["equals", "contains", "regexp", "range", "has_fields", "network"]
+        + (["and", "or", "not"] if depth < 3 else [])))
+    if kind == "equals":
+        return {kind: _fields(draw, list(_EQUALS), _EQUALS.get)}
+    if kind == "contains":
+        return {kind: _fields(draw, ["text", "role", "tags", _MISSING],
+                              lambda _: _any_of(_STRS))}
+    if kind == "regexp":
+        pats = st.sampled_from(["^hello", r"took=\d+ms", "o", "ERROR|boom", "",
+                                '(level=ERROR|" 500 )'])
+        return {kind: _fields(draw, ["text", "role", _MISSING], lambda _: pats)}
+    if kind == "range":
+        bound = st.one_of(st.integers(-5, 600), st.sampled_from([0.5, 4.0, 1e3]))
+        ops = st.dictionaries(st.sampled_from(["gte", "gt", "lte", "lt"]), bound,
+                              min_size=1, max_size=2)
+        body = _fields(draw, ["code", "num", "text", _MISSING], lambda _: ops)
+        if draw(st.booleans()):  # the flattened shape
+            body = {f"{f}.{op}": v for f, o in body.items() for op, v in o.items()}
+        return {kind: body}
+    if kind == "has_fields":
+        return {kind: draw(st.lists(st.sampled_from(["text", "code", "tags", _MISSING]),
+                                    min_size=1, max_size=3))}
+    if kind == "network":
+        return {kind: _fields(draw, ["ip", _MISSING], lambda _: _any_of(_NETWORKS))}
+    if kind == "not":
+        return {kind: draw(_condition(depth + 1))}
+    return {kind: draw(st.lists(_condition(depth + 1), min_size=1, max_size=3))}
+
+
+@pytest.fixture(scope="module")
+def twin_frames(spark):
     import duckdb
 
-    pdf = df.toPandas()
     con = duckdb.connect()
-    con.register("t", pdf)
-    fields = set(pdf.columns)
-    cases = [
-        {"equals": {"role": "user", "code": 200}},
-        {"contains": {"text": ["hello", "took"]}},
-        {"regexp": {"text": r"took=\d+ms"}},
-        {"range": {"code.gte": 300, "code.lt": 500}},
-        {"has_fields": ["text", "tool"]},
-        {"or": [{"equals": {"role": "user"}}, {"not": {"range": {"code.lt": 500}}}]},
-        {"equals": {"nope": "x"}},
-    ]
-    for cond in cases:
-        spark_ids = ids(df, cond)
-        duck_ids = sorted(
-            r[0]
-            for r in con.execute(
-                f"SELECT id FROM t WHERE {condition_sql(cond, fields)}"
-            ).fetchall()
-        )
-        assert spark_ids == duck_ids, cond
+    con.execute("CREATE TABLE t (id INTEGER, role VARCHAR, text VARCHAR, code INTEGER,"
+                " num VARCHAR, ip VARCHAR, tags VARCHAR[], flag BOOLEAN)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?, ?, ?, ?, ?)", _ROWS)
+    yield spark.createDataFrame(_ROWS, _SCHEMA).cache(), con
+    con.close()
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.lists(_condition(), min_size=1, max_size=6))
+def test_sql_renderer_matches_spark(twin_frames, cfgs):
+    """Every kind renders in DuckDB with the Spark semantics, over the
+    schema the Spark side resolves against."""
+    df, con = twin_frames
+    spark_rows = df.select(
+        "id", *[compile_condition(c, df).alias(f"c{i}") for i, c in enumerate(cfgs)]
+    ).collect()
+    for i, cfg in enumerate(cfgs):
+        spark_ids = sorted(r.id for r in spark_rows if r[f"c{i}"])
+        sql = condition_sql(cfg, df.schema)
+        duck_ids = [r[0] for r in con.execute(
+            f"SELECT id FROM t WHERE {sql} ORDER BY id").fetchall()]
+        assert spark_ids == duck_ids, (cfg, sql)

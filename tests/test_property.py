@@ -159,8 +159,8 @@ def test_condition_compiler_matches_python(spark, trees):
                                                     t[1] is not None, t[1] or 0))
         ]
         assert got == want, cfg
-        # the DuckDB twin, with `missing` absent from the known fields
-        sql = condition_sql(cfg, set(_FIELDS))
+        # the DuckDB twin, with `missing` absent from the schema
+        sql = condition_sql(cfg, df.schema)
         twin = [m for (m,) in con.execute(
             f"SELECT {sql} FROM t ORDER BY a NULLS FIRST, b NULLS FIRST"
         ).fetchall()]

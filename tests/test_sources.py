@@ -54,6 +54,12 @@ def test_read_lines_max_bytes(spark, tmp_path):
     rows = {r.offset: r for r in out}
     assert rows[0].text == "short" and rows[0].flags == []
     assert rows[1].text == "y" * 10 and "truncated" in rows[1].flags
+    # the cap counts UTF-8 bytes and cuts at the last whole character
+    f2 = tmp_path / "e.log"
+    _write(f2, ["é" * 10])
+    for max_bytes, want in ((10, "é" * 5), (9, "é" * 4)):
+        (row,) = read_lines(spark, str(f2), max_bytes=max_bytes).collect()
+        assert row.text == want and "truncated" in row.flags
 
 
 def test_read_ndjson(spark, tmp_path):

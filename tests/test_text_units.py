@@ -179,7 +179,7 @@ def test_kernel_tokens_match_oracles(spark):
 
 # -- tooling guard: the raw spellings live in their twins only -----------------
 # (the similarity units of `similarity.py` too: cosine and the top-k and
-# nearest-cell windows)
+# nearest-cell windows; and the IPv4 unit of `conditions.py`)
 
 _SPELLINGS = {
     "regexp_split_to_array(trim(lower": {("textops.py", "tokens_sql")},
@@ -191,6 +191,10 @@ _SPELLINGS = {
     "PARTITION BY query_id": {("similarity.py", "top_k_sql")},
     '.desc(), F.col("neighbor_id")': {("similarity.py", "_top_k")},
     "DESC, cell_id": {("similarity.py", "nearest_cells_sql")},
+    "16777216": {("conditions.py", "_ipv4_int_col"), ("conditions.py", "_ipv4_int_sql")},
+    # the IPv4 unit, its twin, and its row of the condition leaf table
+    "_network_pred": {("conditions.py", "_network_pred"), ("conditions.py", "_network_sql"),
+                      ("conditions.py", None)},
 }
 
 
