@@ -38,20 +38,18 @@ def asof_join(
     events: DataFrame,
     states: DataFrame,
     on: list[str] | str,
-    events_ts: str = "ts",
-    states_ts: str = "ts",
     values: list[str] | None = None,
     tolerance: Column | None = None,
 ) -> DataFrame:
     """Left as-of join: every `events` row gains the `values` columns from
     the latest `states` row with the same `on` key and
-    ``states_ts <= events_ts`` (null when no prior state exists).
+    ``states.ts <= events.ts`` (null when no prior state exists).
 
     `values` defaults to every `states` column that is neither a key nor
     its timestamp; value names must not collide with `events` columns.
     `tolerance` (optional, a Column interval/seconds expression) nulls the
     carried values when the matched state is older than
-    ``events_ts - tolerance`` — pandas merge_asof semantics.
+    ``events.ts - tolerance`` — pandas merge_asof semantics.
 
     Ties: states sort before events at equal timestamps (>= convention).
     The window orders only on (ts, tag), so if `states` holds SEVERAL rows
@@ -62,7 +60,7 @@ def asof_join(
     keys = [on] if isinstance(on, str) else list(on)
     if values is None:
         values = [
-            c for c in states.columns if c not in (*keys, states_ts)
+            c for c in states.columns if c not in (*keys, "ts")
         ]
     collide = set(values) & set(events.columns)
     if collide:
@@ -72,14 +70,14 @@ def asof_join(
 
     s = states.select(
         *keys,
-        F.col(states_ts).alias("_asof_ts"),
-        F.col(states_ts).alias("_asof_state_ts"),
+        F.col("ts").alias("_asof_ts"),
+        F.col("ts").alias("_asof_state_ts"),
         *values,
         F.lit(0).alias(_TAG),
     )
     e = events.select(
         "*",
-        F.col(events_ts).alias("_asof_ts"),
+        F.col("ts").alias("_asof_ts"),
         F.lit(None).cast(s.schema["_asof_state_ts"].dataType)
         .alias("_asof_state_ts"),
         *[

@@ -61,8 +61,6 @@ def checkpointed_fan_out(
     routed: DataFrame,
     base: str,
     job_id: str,
-    target: str = SINK_COL,
-    file_format: str = "parquet",
     fail_after: int | None = None,
 ) -> dict[str, Any]:
     """Write each sink as its own committed dataset, updating the manifest
@@ -97,24 +95,24 @@ def checkpointed_fan_out(
         # same recursive-delete call via the Hadoop FileSystem API.)
         if os.path.isdir(base):
             for d in os.listdir(base):
-                if d.startswith(f"{target}="):
+                if d.startswith(f"{SINK_COL}="):
                     shutil.rmtree(os.path.join(base, d), ignore_errors=True)
         manifest = {"job_id": job_id, "sinks": {}, "started_at": time.time()}
         _write_manifest(base, manifest)
 
     committed = sorted(manifest["sinks"])
     pending = (
-        routed.filter(~F.col(target).isin(committed)) if committed else routed
+        routed.filter(~F.col(SINK_COL).isin(committed)) if committed else routed
     )
 
     staging = os.path.join(base, f"_staging_{job_id}")
     shutil.rmtree(staging, ignore_errors=True)  # stale staging from a crash
     # THE single write job: partitionBy splits one writer per sink value
-    fan_out(pending, staging, target=target, file_format=file_format)
+    fan_out(pending, staging)
 
     from urllib.parse import unquote
 
-    prefix = f"{target}="
+    prefix = f"{SINK_COL}="
     staged = sorted(
         (unquote(d[len(prefix):]), d)
         for d in os.listdir(staging)
@@ -125,7 +123,7 @@ def checkpointed_fan_out(
         dst = os.path.join(base, dirname)
         shutil.rmtree(dst, ignore_errors=True)  # partial from a crash
         os.replace(os.path.join(staging, dirname), dst)
-        rows = spark.read.format(file_format).load(dst).count()
+        rows = spark.read.format("parquet").load(dst).count()
         manifest["sinks"][sink] = {"rows": rows, "committed_at": time.time()}
         _write_manifest(base, manifest)
         done += 1
@@ -137,12 +135,12 @@ def checkpointed_fan_out(
     return manifest
 
 
-def verify_manifest(spark, base: str, target: str = SINK_COL) -> dict[str, bool]:
+def verify_manifest(spark, base: str) -> dict[str, bool]:
     """Re-count each committed sink directory against the manifest — the
     'registrar metrics' check (states current == persisted)."""
     manifest = read_manifest(base)
     out = {}
     for sink, entry in manifest["sinks"].items():
-        n = spark.read.parquet(os.path.join(base, f"{target}={sink}")).count()
+        n = spark.read.parquet(os.path.join(base, f"{SINK_COL}={sink}")).count()
         out[sink] = n == entry["rows"]
     return out

@@ -45,8 +45,8 @@ class CompileError(ValueError):
     pass
 
 
-def _pairs(cfg: dict, key: str = "fields") -> list[tuple[str, str]]:
-    return [(d["from"], d["to"]) for d in cfg[key]]
+def _pairs(cfg: dict) -> list[tuple[str, str]]:
+    return [(d["from"], d["to"]) for d in cfg["fields"]]
 
 
 # name -> (builder(cfg) -> Transform, supports_when)

@@ -12,7 +12,8 @@ Grammar (config dict keys):
                 only — reference: equals.go:27-108)
     contains:   {field: substr | [substr]}   substring, any-of for lists
                 (matcher.go:39-95); array fields match on any element
-    regexp:     {field: pattern}             RE2-style substring match
+    regexp:     {field: pattern}             RE2-style substring match;
+                both read a non-string scalar field as FALSE
     range:      {field.gte: v, field.lt: v}  or {field: {gte: v, ...}}
                 numeric compare (range.go:27-130); a value that is no
                 number is FALSE
@@ -126,23 +127,39 @@ def _equals_sql(field: str, ftype: T.DataType, value: Any) -> str:
     return f"{field} = {sql_str(value) if isinstance(value, str) else value}"
 
 
+def _unmatchable(ftype: T.DataType) -> bool:
+    """A scalar the schema types as no string: Beats' matcher reads only
+    strings (libbeat/conditions/matcher.go), so `contains` and `regexp`
+    read it as FALSE (Spark would cast it to a string and match)."""
+    return ftype is not _ASSUMED and not isinstance(
+        ftype, (T.StringType, T.ArrayType))
+
+
 def _contains(field: str, ftype: T.DataType, value: str) -> Column:
+    if _unmatchable(ftype):
+        return F.lit(False)
     if isinstance(ftype, T.ArrayType):
         return F.exists(F.col(field), lambda x: x.contains(F.lit(value)))
     return F.col(field).contains(F.lit(value))
 
 
 def _contains_sql(field: str, ftype: T.DataType, value: str) -> str:
+    if _unmatchable(ftype):
+        return "FALSE"
     if isinstance(ftype, T.ArrayType):
         return f"len(list_filter({field}, x -> contains(x, {sql_str(value)}))) > 0"
     return f"contains({field}, {sql_str(value)})"
 
 
 def _regexp(field: str, ftype: T.DataType, pattern: str) -> Column:
+    if _unmatchable(ftype):
+        return F.lit(False)
     return F.col(field).rlike(pattern)
 
 
 def _regexp_sql(field: str, ftype: T.DataType, pattern: str) -> str:
+    if _unmatchable(ftype):
+        return "FALSE"
     return f"regexp_matches({field}, {sql_str(pattern)})"
 
 

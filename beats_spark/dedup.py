@@ -39,18 +39,18 @@ from .scale import truncate_lineage
 from .textops import normalize_text, tokens, tokens_sql, word_ngrams, word_ngrams_sql
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Keep the lowest-id representative per normalized-text hash.
 
     One shuffle keyed on the 256-bit hash; Spark's hash aggregate does
     map-side partials so duplicate-heavy data shrinks before the exchange.
     """
-    h = F.sha2(normalize_text(F.col(text_col)), 256)
+    h = F.sha2(normalize_text(F.col("text")), 256)
     return (
         df.withColumn("_dedup_key", h)
         .groupBy("_dedup_key")
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count("*").alias("dup_count"),
         )
     )
@@ -220,21 +220,17 @@ def minhash_lsh_pairs(
     )
 
 
-def minhash_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", **kw
-) -> DataFrame:
+def minhash_dedup(df: DataFrame, **kw) -> DataFrame:
     """Docs to DROP: connected to a lower-id near-duplicate. (Single-link
     union is approximated by 'keep a doc iff it has no lower-id neighbor' —
     one extra join instead of an iterative connected-components pass; for
     true transitivity use `minhash_dedup_cc`.)"""
-    pairs = minhash_lsh_pairs(df, text_col, id_col, **kw)
-    drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(drop, id_col, "left_anti")
+    pairs = minhash_lsh_pairs(df, **kw)
+    drop = pairs.select(F.col("id_b").alias("doc_id")).distinct()
+    return df.join(drop, "doc_id", "left_anti")
 
 
-def minhash_dedup_cc(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", **kw
-) -> DataFrame:
+def minhash_dedup_cc(df: DataFrame, **kw) -> DataFrame:
     """True transitive dedup: keep exactly one doc (the min id) per
     connected component of the near-dup graph. Chains a~b~c where
     jaccard(a,c) < threshold still collapse to one survivor — the
@@ -245,18 +241,16 @@ def minhash_dedup_cc(
     id, no driver-side graph state)."""
     from beats_spark.graph import connected_components
 
-    pairs = minhash_lsh_pairs(df, text_col, id_col, **kw)
+    pairs = minhash_lsh_pairs(df, **kw)
     comp = connected_components(pairs)
     drop = comp.where(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
+        F.col("node").alias("doc_id")
     )
-    return df.join(drop, id_col, "left_anti")
+    return df.join(drop, "doc_id", "left_anti")
 
 
 def prefix_filter_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.5,
 ) -> DataFrame:
     """EXACT token-set Jaccard similarity join via prefix filtering
@@ -276,8 +270,8 @@ def prefix_filter_jaccard_pairs(
     equi-join on prefix token, one dedup. No cross join, no driver state.
     """
     base = df.select(
-        F.col(id_col).alias("_id"),
-        F.array_distinct(tokens(F.col(text_col))).alias("_g"),
+        F.col("doc_id").alias("_id"),
+        F.array_distinct(tokens(F.col("text"))).alias("_g"),
     )
     return _prefix_filter_pairs(base, threshold)
 
@@ -418,24 +412,19 @@ def simhash_series(toks: pd.Series) -> pd.Series:
     return pd.Series(packed.astype(np.int64), index=toks.index)
 
 
-def simhash(df: DataFrame, text_col: str = "text", target: str = "simhash") -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     @F.pandas_udf(T.LongType())
     def _udf(s: pd.Series) -> pd.Series:
         return simhash_series(s)
 
-    return df.withColumn(target, _udf(tokens(F.col(text_col))))
+    return df.withColumn("simhash", _udf(tokens(F.col("text"))))
 
 
-def simhash_near_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_near_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by simhash: block on 4 × 16-bit chunks (any pair within
     Hamming ≤ 3 of a 64-bit signature shares at least one exact 16-bit chunk
     — pigeonhole), verify Hamming exactly via bit_count(xor)."""
-    sh = simhash(df, text_col).select(F.col(id_col).alias("_id"), "simhash")
+    sh = simhash(df).select(F.col("doc_id").alias("_id"), "simhash")
     chunks = sh.select(
         "_id",
         "simhash",
@@ -472,16 +461,10 @@ def simhash_near_pairs(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     threshold: float = 0.5,
-    num_hashes: int = 16,
-    bands: int = 8,
-    max_bucket: int = 1000,
     exact: bool = False,
 ) -> DataFrame:
-    """Word-n-gram Jaccard pairs (id_a < id_b, jaccard ≥ threshold), exact
+    """Word-trigram Jaccard pairs (id_a < id_b, jaccard ≥ threshold), exact
     verify in both modes; `exact` selects the candidate generator:
 
     - exact=False (default, the scale path): MinHash-band equi-join on
@@ -501,9 +484,9 @@ def ngram_jaccard_pairs(
     explode + K codegen'd min() aggregate shape (higher-order array lambdas
     are interpreted per element — the measured-slow path)."""
     base = (
-        df.select(F.col(id_col).alias("_id"),
-                  tokens(F.col(text_col)).alias("_toks"))
-        .withColumn("_g", F.array_distinct(word_ngrams(F.col("_toks"), n)))
+        df.select(F.col("doc_id").alias("_id"),
+                  tokens(F.col("text")).alias("_toks"))
+        .withColumn("_g", F.array_distinct(word_ngrams(F.col("_toks"), 3)))
         .drop("_toks")
     )
     # gram arrays feed candidate generation AND both verify joins; cut the
@@ -520,10 +503,14 @@ def ngram_jaccard_pairs(
             F.expr(f"transform(_g, s -> pmod(xxhash64(s), {_MERSENNE_31}))")
         ).alias("_h"),
     )
-    cand = _band_candidates(hashed, num_hashes, bands, max_bucket)
+    cand = _band_candidates(hashed, 16, 8, 1000)
     return _jaccard_verify(cand, base, threshold).select(
         "id_a", "id_b", "jaccard"
     )
+
+
+# Word n-gram width of benchmark decontamination (the GPT-3/PaLM 13-gram).
+_DECONTAM_N = 13
 
 
 def decontaminate(
@@ -531,9 +518,7 @@ def decontaminate(
     probe: DataFrame,
     text_col: str = "text",
     probe_text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 13,
-    target: str = "contaminated",
+    n: int = _DECONTAM_N,
 ) -> DataFrame:
     """Benchmark decontamination: flag every training document that shares
     at least one word n-gram (default 13, the GPT-3/PaLM convention) with
@@ -556,7 +541,7 @@ def decontaminate(
     def _hashed(frame: DataFrame, col: str, with_id: bool) -> DataFrame:
         keep = ["_id"] if with_id else []
         toks = frame.where(F.col(col).isNotNull()).select(
-            *([F.col(id_col).alias("_id")] if with_id else []),
+            *([F.col("doc_id").alias("_id")] if with_id else []),
             tokens(F.col(col)).alias("_toks"),
         )
         grams = F.array_distinct(word_ngrams(F.col("_toks"), n))
@@ -570,11 +555,11 @@ def decontaminate(
         doc_h.join(F.broadcast(probe_h), "_h", "left_semi")
         .select("_id")
         .distinct()
-        .withColumn(target, F.lit(True))
-        .withColumnRenamed("_id", id_col)
+        .withColumn("contaminated", F.lit(True))
+        .withColumnRenamed("_id", "doc_id")
     )
-    return df.join(hits, id_col, "left").withColumn(
-        target, F.coalesce(F.col(target), F.lit(False))
+    return df.join(hits, "doc_id", "left").withColumn(
+        "contaminated", F.coalesce(F.col("contaminated"), F.lit(False))
     )
 
 
@@ -597,7 +582,10 @@ def sentences_expr(text_col: str) -> Column:
 
 
 def _first_occurrence_dedup(
-    df: DataFrame, id_col: str, k: int, units: Column, units_col: str,
+    df: DataFrame,
+    k: int,
+    units: Column,
+    units_col: str,
     count_col: str,
 ) -> DataFrame:
     """The windowed first-occurrence dedup behind span_dedup (sentence
@@ -621,7 +609,7 @@ def _first_occurrence_dedup(
     ).otherwise(F.array().cast("array<bigint>"))
 
     occ = base.select(
-        F.col(id_col).alias("_id"), F.posexplode(win_hashes).alias("_pos0", "_h")
+        F.col("doc_id").alias("_id"), F.posexplode(win_hashes).alias("_pos0", "_h")
     ).select("_id", (F.col("_pos0") + 1).alias("_pos"), "_h")
 
     per_hash = occ.groupBy("_h").agg(
@@ -648,7 +636,7 @@ def _first_occurrence_dedup(
     )
 
     out = base.join(
-        removed.withColumnRenamed("_id", id_col), id_col, "left"
+        removed.withColumnRenamed("_id", "doc_id"), "doc_id", "left"
     )
     kept = F.filter(
         F.col(units_col),
@@ -663,15 +651,14 @@ def _first_occurrence_dedup(
     )
 
 
-def span_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    span_sents: int = 3,
-) -> DataFrame:
+# Sentences per span in span-level dedup.
+_SPAN_SENTS = 3
+
+
+def span_dedup(df: DataFrame) -> DataFrame:
     """C4 three-sentence-span global dedup (Raffel et al. 2020 §2.2: "we
     discarded all but one of any three-sentence span occurring more than
-    once in the data set"). For every `span_sents`-sentence window that
+    once in the data set"). For every three-sentence window that
     occurs more than once corpus-wide, only the first occurrence (min
     (doc_id, span_idx)) keeps its sentences; every other occurrence has its
     covered sentences removed. Emits ``n_sentences``, ``n_removed`` and
@@ -698,13 +685,12 @@ def span_dedup(
     one as a hash mismatch.
     """
     return _first_occurrence_dedup(
-        df, id_col, span_sents, sentences_expr(text_col), "_sents", "n_sentences"
+        df, _SPAN_SENTS, sentences_expr("text"), "_sents", "n_sentences"
     )
 
 
-def _first_occurrence_dedup_oracle(table: str, text_col: str, id_col: str,
-                                   k: int, units: str, count_col: str,
-                                   where: str = "TRUE") -> str:
+def _first_occurrence_dedup_oracle(table: str, k: int, units: str,
+                                   count_col: str) -> str:
     """DuckDB twin of _first_occurrence_dedup over the unit list SQL
     `units`, deduping on window STRINGS (no hashing) — an independent
     algorithm: window row_number for first-occurrence instead of
@@ -712,8 +698,8 @@ def _first_occurrence_dedup_oracle(table: str, text_col: str, id_col: str,
     win = " || chr(31) || ".join(f"units[i+{off}]" for off in range(k))
     return f"""
 WITH base AS (
-  SELECT {id_col} AS _id, {units} AS units
-  FROM {table} WHERE {text_col} IS NOT NULL AND ({where})
+  SELECT doc_id AS _id, {units} AS units
+  FROM {table} WHERE text IS NOT NULL
 ),
 occ AS (
   SELECT _id, i AS pos, {win} AS win
@@ -735,7 +721,7 @@ joined AS (
   SELECT b._id, b.units, coalesce(r.ridx, []) AS ridx
   FROM base b LEFT JOIN removed r USING (_id)
 )
-SELECT _id AS {id_col}, len(units) AS {count_col},
+SELECT _id AS doc_id, len(units) AS {count_col},
        len(ridx) AS n_removed,
        coalesce(array_to_string(
          list_filter(list_transform(range(1, len(units) + 1),
@@ -746,24 +732,17 @@ FROM joined
 """
 
 
-def span_dedup_oracle(table: str = "documents", text_col: str = "text",
-                      id_col: str = "doc_id", span_sents: int = 3,
-                      where: str = "TRUE") -> str:
+def span_dedup_oracle(table: str = "documents") -> str:
     """DuckDB twin of span_dedup, deduping on span STRINGS (no hashing)."""
     sents = (
-        f"list_filter(list_transform(regexp_extract_all({text_col},"
+        f"list_filter(list_transform(regexp_extract_all(text,"
         f" '{SENTENCE_RE}'), s -> trim(s)), s -> s != '')"
     )
-    return _first_occurrence_dedup_oracle(table, text_col, id_col, span_sents,
-                                          sents, "n_sentences", where)
+    return _first_occurrence_dedup_oracle(table, _SPAN_SENTS,
+                                          sents, "n_sentences")
 
 
-def exact_substr_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 50,
-) -> DataFrame:
+def exact_substr_dedup(df: DataFrame, window: int) -> DataFrame:
     """ExactSubstr dedup at token granularity (Lee et al. 2021,
     "Deduplicating Training Data Makes Language Models Better" §4.1: remove
     every duplicated substring of >= N tokens, keeping one occurrence).
@@ -788,18 +767,15 @@ def exact_substr_dedup(
     would surface one as a hash mismatch.
     """
     return _first_occurrence_dedup(
-        df, id_col, window, tokens(F.col(text_col)), "_toks", "n_tokens"
+        df, window, tokens(F.col("text")), "_toks", "n_tokens"
     )
 
 
-def exact_substr_dedup_oracle(table: str = "documents",
-                              text_col: str = "text",
-                              id_col: str = "doc_id",
-                              window: int = 50) -> str:
+def exact_substr_dedup_oracle(table: str, window: int) -> str:
     """DuckDB twin of exact_substr_dedup, deduping on token-window STRINGS
     (no hashing)."""
-    return _first_occurrence_dedup_oracle(table, text_col, id_col, window,
-                                          tokens_sql(text_col), "n_tokens")
+    return _first_occurrence_dedup_oracle(table, window,
+                                          tokens_sql("text"), "n_tokens")
 
 
 # -- Bloom-filter decontamination ----------------------------------------------
@@ -868,21 +844,21 @@ def bloom_build(
     return bitmap
 
 
+# Bloom filter size (bits) and hash count of the decontamination probe.
+_BLOOM_M_BITS = 1 << 16
+_BLOOM_K_HASHES = 4
+
+
 def bloom_decontaminate(
     df: DataFrame,
     probe: DataFrame,
-    text_col: str = "text",
-    probe_text_col: str = "text",
-    n: int = 13,
-    m_bits: int = 1 << 16,
-    k_hashes: int = 4,
-    target: str = "contaminated",
+    n: int = _DECONTAM_N,
 ) -> DataFrame:
     """Bloom-filter twin of `decontaminate`: flags every training document
     one of whose word n-grams tests positive against the probe corpus's
     Bloom bitmap. Over-flags (never under-flags) relative to the exact
-    semi-join, deterministically — size m_bits for the probe's distinct
-    gram count to keep the false-positive rate acceptable
+    semi-join, deterministically — `_BLOOM_M_BITS` is sized for the probe's
+    distinct gram count to keep the false-positive rate acceptable
     (k=4, m/n_grams=16 → ~0.2%).
 
     Scale shape: the bitmap rides to executors as a one-row broadcast
@@ -894,62 +870,55 @@ def bloom_decontaminate(
     mandate); rule follows Brown et al. 2020 app. C with the Bloom
     compression used by large-corpus dedup tooling (e.g. Dolma).
     """
-    bitmap = bloom_build(probe, probe_text_col, n, m_bits, k_hashes)
+    bitmap = bloom_build(probe, "text", n, _BLOOM_M_BITS, _BLOOM_K_HASHES)
     spark = df.sparkSession
     bm = spark.createDataFrame([(bitmap,)], "_bloom array<bigint>")
     checks = " AND ".join(
         f"(shiftright(element_at(_bloom, CAST({p} div {_BLOOM_WORD} AS INT) + 1),"
         f" CAST({p} % {_BLOOM_WORD} AS INT)) & 1) = 1"
-        for p in bloom_positions_exprs("g", m_bits, k_hashes)
+        for p in bloom_positions_exprs("g", _BLOOM_M_BITS, _BLOOM_K_HASHES)
     )
     hit = F.expr(f"exists(_grams, g -> {checks})")
     out = (
         df.withColumn(
             "_toks",
-            F.when(F.col(text_col).isNotNull(), tokens(F.col(text_col))),
+            F.when(F.col("text").isNotNull(), tokens(F.col("text"))),
         )
         .withColumn("_grams",
                     F.when(F.col("_toks").isNotNull(),
                            F.array_distinct(word_ngrams(F.col("_toks"), n))))
         .join(F.broadcast(bm))
-        .withColumn(target, F.coalesce(hit, F.lit(False)))
+        .withColumn("contaminated", F.coalesce(hit, F.lit(False)))
         .drop("_toks", "_grams", "_bloom")
     )
     return out
 
 
-def bloom_decontaminate_sql(
-    table: str = "documents",
-    probe_where: str = "doc_id % 7 = 0",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 13,
-    m_bits: int = 1 << 16,
-    k_hashes: int = 4,
-) -> str:
+def bloom_decontaminate_sql(table: str = "documents") -> str:
     """DuckDB twin: rebuilds the identical bitmap (same md5 double-hash
     positions, same 32-bit words) and re-tests every document, false
     positives included."""
     h1 = "('0x' || substr(md5(g), 1, 8))::BIGINT"
     h2 = "('0x' || substr(md5(g), 9, 8))::BIGINT"
     poss = ", ".join(
-        f"(({h1} + {i} * {h2}) % {m_bits}) AS p{i}" for i in range(k_hashes)
+        f"(({h1} + {i} * {h2}) % {_BLOOM_M_BITS}) AS p{i}"
+        for i in range(_BLOOM_K_HASHES)
     )
-    unp = ", ".join(f"p{i}" for i in range(k_hashes))
+    unp = ", ".join(f"p{i}" for i in range(_BLOOM_K_HASHES))
     return f"""
 WITH toks AS (
-  SELECT {id_col} AS _id, {tokens_sql(text_col)} AS t
-  FROM {table} WHERE {text_col} IS NOT NULL
+  SELECT doc_id AS _id, {tokens_sql('text')} AS t
+  FROM {table} WHERE text IS NOT NULL
 ),
 grams AS (
-  SELECT _id, unnest(list_distinct({word_ngrams_sql("t", n)})) AS g
+  SELECT _id, unnest(list_distinct({word_ngrams_sql("t", _DECONTAM_N, guarded=False)})) AS g
   FROM toks
 ),
 probe_pos AS (
   SELECT unnest([{unp}]) AS pos
   FROM (SELECT {poss} FROM (SELECT DISTINCT g FROM grams
-                            WHERE _id IN (SELECT {id_col} FROM {table}
-                                          WHERE {probe_where})) s) q
+                            WHERE _id IN (SELECT doc_id FROM {table}
+                                          WHERE doc_id % 7 = 0)) s) q
 ),
 bloom AS (
   SELECT pos // {_BLOOM_WORD} AS w,
@@ -972,16 +941,18 @@ flags AS (
   FROM toks t LEFT JOIN (SELECT _id, bool_or(hit) AS hit
                          FROM gram_hit GROUP BY 1) h USING (_id)
 )
-SELECT _id AS {id_col}, contaminated FROM flags
+SELECT _id AS doc_id, contaminated FROM flags
 """.strip()
+
+
+# Word n-gram width of the containment join, shared by its oracle.
+_CONTAINMENT_N = 3
 
 
 def containment_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.8,
-    ngram_n: int = 3,
+    ngram_n: int = _CONTAINMENT_N,
 ) -> DataFrame:
     """EXACT directed containment join over word n-gram sets: every
     ordered pair (a, b) with |grams(a) ∩ grams(b)| / |grams(a)| >=
@@ -1017,8 +988,8 @@ def containment_pairs(
     # oracle
     grams = word_ngrams(F.col("_toks"), ngram_n, guarded=True)
     base = truncate_lineage(
-        df.where(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_toks"))
+        df.where(F.col("text").isNotNull())
+        .select(F.col("doc_id").alias("_id"), tokens(F.col("text")).alias("_toks"))
         .select("_id", F.array_distinct(grams).alias("_g"))
         .where(F.size("_g") > 0)
     )
@@ -1053,23 +1024,17 @@ def containment_pairs(
     )
 
 
-def containment_pairs_sql(
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-    ngram_n: int = 3,
-) -> str:
+def containment_pairs_sql(table: str, threshold: float) -> str:
     """DuckDB oracle: brute-force all-ordered-pairs containment — an
     INDEPENDENT algorithm (no prefix filter), so it also proves the
     filter misses nothing. Quadratic: cap the table slice."""
     return f"""
 WITH toks AS (
-  SELECT {id_col} AS _id, {tokens_sql(text_col)} AS tk
-  FROM {table} WHERE {text_col} IS NOT NULL
+  SELECT doc_id AS _id, {tokens_sql('text')} AS tk
+  FROM {table} WHERE text IS NOT NULL
 ),
 sets AS (
-  SELECT _id, list_distinct({word_ngrams_sql("tk", ngram_n, guarded=True)}) AS g
+  SELECT _id, list_distinct({word_ngrams_sql("tk", _CONTAINMENT_N, guarded=True)}) AS g
   FROM toks
 ),
 pairs AS (
@@ -1095,12 +1060,7 @@ def hash_embedding_series(toks: pd.Series, dim: int = 64) -> pd.Series:
     return pd.Series(list(_md5_votes(toks, dim)), index=toks.index)
 
 
-def hash_embedding(
-    df: DataFrame,
-    dim: int = 64,
-    text_col: str = "text",
-    target: str = "hash_emb",
-) -> DataFrame:
+def hash_embedding(df: DataFrame, dim: int = 64) -> DataFrame:
     """Attach the feature-hashing embedding as array<long>. Map-only Arrow
     kernel — the output vectors plug directly into similarity.cosine_topk /
     lsh_topk / semdedup (cast to float as needed; lsh_topk takes its planes
@@ -1115,4 +1075,4 @@ def hash_embedding(
     def _udf(s: pd.Series) -> pd.Series:
         return hash_embedding_series(s, dim)
 
-    return df.withColumn(target, _udf(tokens(F.col(text_col))))
+    return df.withColumn("hash_emb", _udf(tokens(F.col("text"))))

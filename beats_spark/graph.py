@@ -66,12 +66,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out.where(F.col("u") != F.col("v")).distinct()
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """(node, component) for every node that appears in `edges`; component =
     the minimum node id reachable from it. Nodes absent from the edge list
     are their own singleton components — the caller adds those (see
@@ -90,7 +85,7 @@ def connected_components(
     25 covers graphs of diameter ≈ 2^25.
     """
     e = truncate_lineage(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
@@ -122,19 +117,12 @@ def connected_components(
     )
 
 
-def assign_components(
-    df: DataFrame,
-    edges: DataFrame,
-    id_col: str = "doc_id",
-    src: str = "id_a",
-    dst: str = "id_b",
-    target: str = "component",
-) -> DataFrame:
+def assign_components(df: DataFrame, edges: DataFrame) -> DataFrame:
     """Attach a component id to every row of `df`: the min reachable id via
     `edges`, or the row's own id when it touches no edge (singleton)."""
-    comp = connected_components(edges, src=src, dst=dst).withColumnRenamed(
-        "node", id_col
+    comp = connected_components(edges).withColumnRenamed(
+        "node", "doc_id"
     )
-    return df.join(comp, id_col, "left").withColumn(
-        target, F.coalesce(F.col("component"), F.col(id_col))
+    return df.join(comp, "doc_id", "left").withColumn(
+        "component", F.coalesce(F.col("component"), F.col("doc_id"))
     )

@@ -52,7 +52,6 @@ def interval_join(
     hi: str = "hi",
     on: list[str] | str | None = None,
     bucket: int = 3600,
-    values: list[str] | None = None,
     closed: str = "both",
 ) -> DataFrame:
     """Inner join of point `events` to every `intervals` row covering them:
@@ -68,9 +67,8 @@ def interval_join(
       lose lookups into each key's current (null-hi) span.
 
     Timestamp/bound columns may be TimestampType (cast to epoch seconds
-    internally) or already-numeric. `values` defaults to every interval
-    column that is not a key or bound; names must not collide with event
-    columns. Each matching (event, interval) pair is emitted exactly once.
+    internally) or already-numeric. Every interval column that is not a
+    key or bound is carried; names must not collide with event columns. Each matching (event, interval) pair is emitted exactly once.
     `bucket` is the bucketization width in seconds — choose it near the
     typical interval length (too small explodes long intervals into many
     buckets, too large inflates the candidate join).
@@ -82,8 +80,7 @@ def interval_join(
     if closed not in ("both", "left"):
         raise ValueError(f"closed must be 'both' or 'left', got {closed!r}")
     keys = [] if on is None else ([on] if isinstance(on, str) else list(on))
-    if values is None:
-        values = [c for c in intervals.columns if c not in (*keys, lo, hi)]
+    values = [c for c in intervals.columns if c not in (*keys, lo, hi)]
     collide = set(values) & set(events.columns)
     if collide:
         raise ValueError(
@@ -131,8 +128,6 @@ def validity_intervals(
     states: DataFrame,
     on: list[str] | str,
     ts: str = "ts",
-    lo: str = "valid_from",
-    hi: str = "valid_to",
 ) -> DataFrame:
     """Change-log → SCD2 validity spans: each state row becomes valid from
     its own timestamp until the key's NEXT state (exclusive; null = still
@@ -144,10 +139,10 @@ def validity_intervals(
     the default inclusive interval_join would double-match points sitting
     exactly on valid_to and drop lookups into the open span.
 
-    One shuffle on the key; rows and columns pass through with `lo`/`hi`
-    appended (same type as `ts`)."""
+    One shuffle on the key; rows and columns pass through with
+    `valid_from`/`valid_to` appended (same type as `ts`)."""
     keys = [on] if isinstance(on, str) else list(on)
     w = Window.partitionBy(*keys).orderBy(F.col(ts).asc())
-    return states.withColumn(lo, F.col(ts)).withColumn(
-        hi, F.lead(ts).over(w)
+    return states.withColumn("valid_from", F.col(ts)).withColumn(
+        "valid_to", F.lead(ts).over(w)
     )

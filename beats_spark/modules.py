@@ -76,7 +76,7 @@ def _http_outcome(status: Column) -> Column:
             .when(status.isNotNull(), "failure"))
 
 
-def _plain_or_json(df: DataFrame, field: str, patterns: list[str],
+def _plain_or_json(df: DataFrame, patterns: list[str],
                    definitions: dict[str, str] | None = None,
                    schema: str | None = None):
     """The first-character branch of the dual-format pipelines: a line
@@ -85,14 +85,14 @@ def _plain_or_json(df: DataFrame, field: str, patterns: list[str],
     from_json `schema`, `js` (the decoded line, NULL on plaintext lines;
     the caller drops it). Returns the frame, the is-JSON predicate and
     `pick(json_value, plain_value=None)`, the value of the line's branch."""
-    is_json = F.col(field).startswith("{")
-    out = P.grok(df, patterns, field=field, target_prefix="parsed",
+    is_json = F.col("message").startswith("{")
+    out = P.grok(df, patterns, target_prefix="parsed",
                  flag_failures=False, pattern_definitions=definitions)
     # the unanchored grok would otherwise match inside the JSON text
     out = out.withColumn("parsed", F.when(~is_json, F.col("parsed")))
     if schema:
         out = out.withColumn(
-            "js", F.when(is_json, F.from_json(F.col(field), schema)))
+            "js", F.when(is_json, F.from_json(F.col("message"), schema)))
 
     def pick(json_value: Column, plain_value: Column | None = None) -> Column:
         on_json = F.when(is_json, json_value)
@@ -126,11 +126,9 @@ APACHE_ACCESS_PATTERNS = [
 ]
 
 
-def apache_access(df: DataFrame, field: str = "message",
-                  timezone: str | None = None) -> DataFrame:
+def apache_access(df: DataFrame, timezone: str | None = None) -> DataFrame:
     """apache/access/ingest/pipeline.yml as a DataFrame program."""
-    out = P.grok(df, APACHE_ACCESS_PATTERNS, field=field,
-                 target_prefix="parsed")
+    out = P.grok(df, APACHE_ACCESS_PATTERNS, target_prefix="parsed")
     p = F.col("parsed")
     status = p["http_response_status_code"]
     # set event.outcome by status class (pipeline.yml:39-47)
@@ -177,13 +175,11 @@ APACHE_ERROR_DEFINITIONS = {
 }
 
 
-def apache_error(df: DataFrame, field: str = "message",
-                 timezone: str | None = None) -> DataFrame:
+def apache_error(df: DataFrame, timezone: str | None = None) -> DataFrame:
     """apache/error/ingest/pipeline.yml: two-pattern bank with module-local
     pattern_definitions, second grok over message for file.path, naive
     timestamp interpreted in the event timezone."""
-    out = P.grok(df, APACHE_ERROR_PATTERNS, field=field,
-                 target_prefix="parsed",
+    out = P.grok(df, APACHE_ERROR_PATTERNS, target_prefix="parsed",
                  pattern_definitions=APACHE_ERROR_DEFINITIONS)
     p = F.col("parsed")
     out = out.withColumn(
@@ -215,11 +211,11 @@ SYSLOG_PATTERNS = [
 ]
 
 
-def system_syslog(df: DataFrame, field: str = "message") -> DataFrame:
+def system_syslog(df: DataFrame) -> DataFrame:
     """system/syslog/ingest/files.yml: grok bank + message rename. The
     timestamp has no year, so @timestamp parity is not asserted (the
     reference pipeline resolves the year ingest-side)."""
-    out = P.grok(df, SYSLOG_PATTERNS, field=field, target_prefix="parsed")
+    out = P.grok(df, SYSLOG_PATTERNS, target_prefix="parsed")
     p = F.col("parsed")
     # remove message; rename system.syslog.message → message
     out = out.withColumn("message_out", p["system_syslog_message"])
@@ -249,13 +245,11 @@ NGINX_ACCESS_DEFINITIONS = {
 }
 
 
-def nginx_access(df: DataFrame, field: str = "message",
-                 timezone: str | None = None) -> DataFrame:
+def nginx_access(df: DataFrame, timezone: str | None = None) -> DataFrame:
     """nginx/access/ingest/pipeline.yml: main grok + the nested
     `nginx.access.info` grok for method/url/version + remote-ip-list split
     (first address = source.address when the list form matched)."""
-    out = P.grok(df, NGINX_ACCESS_PATTERNS, field=field,
-                 target_prefix="parsed",
+    out = P.grok(df, NGINX_ACCESS_PATTERNS, target_prefix="parsed",
                  pattern_definitions=NGINX_ACCESS_DEFINITIONS)
     p = F.col("parsed")
     info = p["nginx_access_info"]
@@ -305,12 +299,12 @@ OSQUERY_SCHEMA = (
 )
 
 
-def osquery_result(df: DataFrame, field: str = "message") -> DataFrame:
+def osquery_result(df: DataFrame) -> DataFrame:
     """osquery/result/ingest/pipeline.json: ndjson decode → osquery.result
     (camelCase renames), @timestamp from unixTime, event.action mirror,
     file.path/type + host identity pulled from the dynamic columns map.
     Everything is from_json + Column expressions — fully JVM, no UDF."""
-    out = df.withColumn("result", F.from_json(F.col(field), OSQUERY_SCHEMA))
+    out = df.withColumn("result", F.from_json(F.col("message"), OSQUERY_SCHEMA))
     r = F.col("result")
     out = (
         out.withColumn("host_identifier", r["hostIdentifier"])
@@ -344,13 +338,13 @@ REDIS_LOG_DEFINITIONS = {
 }
 
 
-def redis_log(df: DataFrame, field: str = "message") -> DataFrame:
+def redis_log(df: DataFrame) -> DataFrame:
     """redis/log/ingest/pipeline.yml: grok (verbatim patterns incl. the
     empty-alternative timestamp branch), sigil→level and role-letter maps
     (the pipeline's painless scripts as when-chains), year-full timestamp
     parse (the yearless format is unresolvable batch-side, exactly like the
     reference leaves it to ingest)."""
-    out = P.grok(df, REDIS_LOG_PATTERNS, field=field, target_prefix="parsed",
+    out = P.grok(df, REDIS_LOG_PATTERNS, target_prefix="parsed",
                  pattern_definitions=REDIS_LOG_DEFINITIONS)
     p = F.col("parsed")
     lvl = p["log_level"]
@@ -416,8 +410,7 @@ MYSQL_ERROR_MSG_DEFINITIONS = {
 }
 
 
-def mysql_error(df: DataFrame, field: str = "message",
-                timezone: str | None = None) -> DataFrame:
+def mysql_error(df: DataFrame, timezone: str | None = None) -> DataFrame:
     """mysql/error/ingest/pipeline.yml: two-stage grok (datetime/level/message
     split, then message classification), conditional dates — the LOCAL
     datetime is interpreted in the event timezone, the ISO8601 variant is
@@ -429,7 +422,7 @@ def mysql_error(df: DataFrame, field: str = "message",
         {"patterns": MYSQL_ERROR_MSG_PATTERNS, "target": "parsed2",
          "pattern_definitions": MYSQL_ERROR_MSG_DEFINITIONS,
          "input": ("parsed", "message")},
-    ], field=field)
+    ])
     p = F.col("parsed")
     out = out.withColumn("message_out", p["message"])
     p2 = F.col("parsed2")
@@ -512,7 +505,7 @@ POSTGRESQL_LOG_DEFINITIONS = {
 }
 
 
-def postgresql_log(df: DataFrame, field: str = "message") -> DataFrame:
+def postgresql_log(df: DataFrame) -> DataFrame:
     """postgresql/log/ingest/pipeline.yml (entry split) + pipeline-log.yml
     (the non-CSV path). event.timezone comes from the log line itself; the
     timestamp parse uses the zone-name format ('zzz'), and event.duration
@@ -523,7 +516,7 @@ def postgresql_log(df: DataFrame, field: str = "message") -> DataFrame:
         {"patterns": POSTGRESQL_LOG_PATTERNS, "target": "parsed",
          "pattern_definitions": POSTGRESQL_LOG_DEFINITIONS,
          "input": ("entry", "raw_message")},
-    ], field=field)
+    ])
     e = F.col("entry")
     out = out.withColumn("raw_message", e["raw_message"])
     p = F.col("parsed")
@@ -577,12 +570,11 @@ KAFKA_LOG_DEFINITIONS = {"KAFKATRACE": r".*"}
 _KAFKA_COMPONENT_RE = r"\[([^\]]*)\][,:.]? +((?s:.*))$"
 
 
-def kafka_log(df: DataFrame, field: str = "message",
-              timezone: str | None = None) -> DataFrame:
+def kafka_log(df: DataFrame, timezone: str | None = None) -> DataFrame:
     """kafka/log/ingest/pipeline.yml: entry grok (incl. the stack-trace
     first-line capture), component split with on_failure → 'unknown', trace
     class/message split, comma-millis timestamp in the event timezone."""
-    out = P.grok(df, KAFKA_LOG_PATTERNS, field=field, target_prefix="parsed",
+    out = P.grok(df, KAFKA_LOG_PATTERNS, target_prefix="parsed",
                  pattern_definitions=KAFKA_LOG_DEFINITIONS)
     p = F.col("parsed")
     msg = p["message"]
@@ -659,7 +651,7 @@ ELSE {v} END
 """
 
 
-def auditd_log(df: DataFrame, field: str = "message") -> DataFrame:
+def auditd_log(df: DataFrame) -> DataFrame:
     """auditd/log/ingest/pipeline.yml (grok prefix + kv split + the cleanup
     painless script as pure SQL expressions). The 2000-line autogenerated
     record-type→ECS mapping is out of scope; everything up to and including
@@ -668,7 +660,7 @@ def auditd_log(df: DataFrame, field: str = "message") -> DataFrame:
     is operators/parse.kv_entries — all JVM, no UDF past the grok stage."""
     from beats_spark.operators.parse import _dedup_entries_first_wins, kv_entries
 
-    out = P.grok(df, AUDITD_LOG_PATTERNS, field=field, target_prefix="parsed",
+    out = P.grok(df, AUDITD_LOG_PATTERNS, target_prefix="parsed",
                  pattern_definitions=AUDITD_LOG_DEFINITIONS)
     p = F.col("parsed")
     # second kv (sub_kv) overlays the first → prepend under first-dup-wins
@@ -696,7 +688,7 @@ def auditd_log(df: DataFrame, field: str = "message") -> DataFrame:
     out = out.withColumn("auditd_log_record_type", p["auditd_log_record_type"])
     out = out.withColumn("auditd_log_sequence", p["auditd_log_sequence"])
     out = out.withColumn("auditd_log_node", p["auditd_log_node"])
-    out = out.withColumn("event_original", F.col(field))
+    out = out.withColumn("event_original", F.col("message"))
     out = out.withColumn(
         "timestamp", P.parse_timestamp(p["auditd_log_epoch"], ["UNIX"])
     )
@@ -718,10 +710,10 @@ ICINGA_MAIN_DEFINITIONS = {
 }
 
 
-def icinga_main(df: DataFrame, field: str = "message") -> DataFrame:
+def icinga_main(df: DataFrame) -> DataFrame:
     """icinga/main/ingest/pipeline.yml: one grok, offset-bearing timestamp,
     warning/critical → event.type=error."""
-    out = P.grok(df, ICINGA_MAIN_PATTERNS, field=field, target_prefix="parsed",
+    out = P.grok(df, ICINGA_MAIN_PATTERNS, target_prefix="parsed",
                  pattern_definitions=ICINGA_MAIN_DEFINITIONS)
     p = F.col("parsed")
     out = P.timestamp(out, "parsed.icinga_main_timestamp",
@@ -756,11 +748,11 @@ TRAEFIK_MSG_PATTERN = (
 )
 
 
-def traefik_access(df: DataFrame, field: str = "message") -> DataFrame:
+def traefik_access(df: DataFrame) -> DataFrame:
     """traefik/access/ingest/pipeline.yml: dissect split (our dissect
     operator, verbatim pattern) → grok over the tail message → uri_parts-lite
     → HTTPDATE parse → ip/domain split → event.duration ns + ECS appends."""
-    out = P.dissect(df, TRAEFIK_DISSECT, field=field, target_prefix="dis")
+    out = P.dissect(df, TRAEFIK_DISSECT, target_prefix="dis")
     d = F.col("dis")
     out = out.withColumn("_tmsg", d["traefik_access_message"])
     out = P.grok(out, [TRAEFIK_MSG_PATTERN], field="_tmsg",
@@ -849,13 +841,13 @@ IIS_ACCESS_PATTERNS = [
 ]
 
 
-def iis_access(df: DataFrame, field: str = "message") -> DataFrame:
+def iis_access(df: DataFrame) -> DataFrame:
     """iis/access/ingest/pipeline.yml (the three W3C field layouts used by
     the goldens): grok bank → url assembly + form-urldecode of user agent →
     %zone-stripped ips → naive-UTC timestamp → duration ns + ECS appends."""
-    out = P.grok(df, IIS_ACCESS_PATTERNS, field=field, target_prefix="parsed")
+    out = P.grok(df, IIS_ACCESS_PATTERNS, target_prefix="parsed")
     p = F.col("parsed")
-    out = out.withColumn("event_original", F.col(field))
+    out = out.withColumn("event_original", F.col("message"))
     out = out.withColumn("url_path", p["_tmp_url_path"])
     out = out.withColumn("url_original", p["_tmp_url_path"])
     q = p["_tmp_url_query"]
@@ -879,7 +871,7 @@ def iis_access(df: DataFrame, field: str = "message") -> DataFrame:
     # reference's address is a 2-array, so its NOZONEIP grok fails
     # (ignore_failure) and no ip fields are set — mirror that by gating on
     # the markdown marker.
-    mk = F.col(field).rlike(r"\]\(http://")
+    mk = F.col("message").rlike(r"\]\(http://")
     dst = F.regexp_extract(p["destination_address"], r"^([^%]*)", 1)
     src = F.regexp_extract(p["source_address"], r"^([^%]*)", 1)
     out = out.withColumn(
@@ -947,12 +939,11 @@ HAPROXY_LOG_DEFINITIONS = {
 }
 
 
-def haproxy_log(df: DataFrame, field: str = "message",
-                timezone: str | None = None) -> DataFrame:
+def haproxy_log(df: DataFrame, timezone: str | None = None) -> DataFrame:
     """haproxy/log/ingest/pipeline.yml: 4-pattern bank (default/httplog/
     errorlog/tcplog layouts, verbatim), request-line grok, ip-vs-domain
     splits, captured-header splits, duration ns, ECS appends."""
-    out = P.grok(df, HAPROXY_LOG_PATTERNS, field=field, target_prefix="parsed",
+    out = P.grok(df, HAPROXY_LOG_PATTERNS, target_prefix="parsed",
                  pattern_definitions=HAPROXY_LOG_DEFINITIONS)
     p = F.col("parsed")
     out = P.timestamp(out, "parsed.haproxy_request_date",
@@ -1048,12 +1039,12 @@ PG_CSV_FIELDS = [
 _PG_QUERY_STEP = r"(parse|bind|statement|fastpath function call|execute|execute fetch from)"
 
 
-def postgresql_csv(df: DataFrame, field: str = "message") -> DataFrame:
+def postgresql_csv(df: DataFrame) -> DataFrame:
     """postgresql/log/ingest/pipeline.yml (entry split, separator == ',') +
     pipeline-csv.yml: 23-column csv decode (from_csv — quote-doubling
     escape, embedded newlines), connection_from split, duration/query-step
     message grok as regexp extracts, zone-name session/record timestamps."""
-    out = P.grok(df, POSTGRESQL_ENTRY_PATTERNS, field=field,
+    out = P.grok(df, POSTGRESQL_ENTRY_PATTERNS,
                  target_prefix="entry",
                  pattern_definitions=POSTGRESQL_ENTRY_DEFINITIONS)
     e = F.col("entry")
@@ -1167,11 +1158,11 @@ _MONGODB_JSON_SCHEMA = (
 )
 
 
-def mongodb_log(df: DataFrame, field: str = "message") -> DataFrame:
+def mongodb_log(df: DataFrame) -> DataFrame:
     """mongodb/log/ingest/pipeline.yml: branch on first char — plaintext
     3.x grok vs 4.4 structured JSON (from_json, no UDF) — then the shared
     component/severity → event.type classification."""
-    out, _, pick = _plain_or_json(df, field, MONGODB_LOG_PATTERNS,
+    out, _, pick = _plain_or_json(df, MONGODB_LOG_PATTERNS,
                                   schema=_MONGODB_JSON_SCHEMA)
     p, j = F.col("parsed"), F.col("js")
     lvl = pick(j["s"], p["log_level"])
@@ -1181,7 +1172,7 @@ def mongodb_log(df: DataFrame, field: str = "message") -> DataFrame:
     out = out.withColumn("mongodb_log_context",
                          pick(j["ctx"], p["mongodb_log_context"]))
     out = out.withColumn("mongodb_log_id", j["id"])
-    out = out.withColumn("event_original", pick(F.col(field)))
+    out = out.withColumn("event_original", pick(F.col("message")))
     out = out.withColumn("message_out", pick(j["msg"], p["message"]))
     out = out.withColumn("timestamp", pick(
         P.parse_timestamp(j["t"]["$date"], [_MS_OFFSET]),
@@ -1229,12 +1220,11 @@ _LOGSTASH_JSON_SCHEMA = (
 )
 
 
-def logstash_log(df: DataFrame, field: str = "message",
-                 timezone: str | None = None) -> DataFrame:
+def logstash_log(df: DataFrame, timezone: str | None = None) -> DataFrame:
     """logstash/log/ingest/pipeline.yml: first-char branch — plain-format
     grok bank vs log4j2 JSON (from_json; logEvent's deep dynamic keys
     beyond the declared scalars are out of scope)."""
-    out, _, pick = _plain_or_json(df, field, LOGSTASH_LOG_PATTERNS,
+    out, _, pick = _plain_or_json(df, LOGSTASH_LOG_PATTERNS,
                                   LOGSTASH_LOG_DEFINITIONS,
                                   _LOGSTASH_JSON_SCHEMA)
     p, j = F.col("parsed"), F.col("js")
@@ -1319,7 +1309,7 @@ def _map_chain(col, mapping):
     return out.otherwise(col)
 
 
-def nats_log(df: DataFrame, field: str = "message") -> DataFrame:
+def nats_log(df: DataFrame) -> DataFrame:
     """nats/log/ingest/pipeline.yml: three chained groks (frame, client
     split, protocol-message split), the level/type/direction maps as
     when-chains, micros timestamp, info+error event.type appends."""
@@ -1331,7 +1321,7 @@ def nats_log(df: DataFrame, field: str = "message") -> DataFrame:
         {"patterns": NATS_MSG_PATTERNS, "target": "p3",
          "pattern_definitions": NATS_MSG_DEFINITIONS,
          "input": ("p2", "nats_log_msg_info")},
-    ], field=field)
+    ])
     p = F.col("parsed")
     out = out.withColumn(
         "parsed",
@@ -1401,14 +1391,14 @@ SANTA_LOG_PATTERNS = [
 SANTA_LOG_DEFINITIONS = {"NOT_SEPARATOR": r"[^\|]+"}
 
 
-def santa_log(df: DataFrame, field: str = "message") -> DataFrame:
+def santa_log(df: DataFrame) -> DataFrame:
     """santa/log/ingest/pipeline.yml: EXEC/diskappear grok pair, args split
     prepended with the executable, ALLOW/DENY outcome, lowercase action,
     related.user/hash appends."""
-    out = P.grok(df, SANTA_LOG_PATTERNS, field=field, target_prefix="parsed",
+    out = P.grok(df, SANTA_LOG_PATTERNS, target_prefix="parsed",
                  pattern_definitions=SANTA_LOG_DEFINITIONS)
     p = F.col("parsed")
-    out = out.withColumn("event_original", F.col(field))
+    out = out.withColumn("event_original", F.col("message"))
     ts = F.coalesce(p["process_start"], p["timestamp"])
     parsed_ts = P.parse_timestamp(ts, [_MS_OFFSET, "2006-01-02T15:04:05Z07:00"])
     out = out.withColumn("timestamp", parsed_ts)
@@ -1467,13 +1457,12 @@ _SLOWLOG_BOOL_FIELDS = [
 ]
 
 
-def mysql_slowlog(df: DataFrame, field: str = "message") -> DataFrame:
+def mysql_slowlog(df: DataFrame) -> DataFrame:
     """mysql/slowlog/ingest/pipeline.json: one verbatim grok (every
     server/percona/mariadb metric as an optional group; duplicate
     semantics coalesce first-match-wins like the reference), Yes/No →
     boolean, duration µs→ns, UNIX timestamp, related appends."""
-    out = P.grok(df, MYSQL_SLOWLOG_PATTERNS, field=field,
-                 target_prefix="parsed",
+    out = P.grok(df, MYSQL_SLOWLOG_PATTERNS, target_prefix="parsed",
                  pattern_definitions=MYSQL_SLOWLOG_DEFINITIONS)
     p = F.col("parsed")
     for b in _SLOWLOG_BOOL_FIELDS:
@@ -1549,14 +1538,14 @@ _ES8_JSON_SCHEMA = (
 )
 
 
-def elasticsearch_server(df: DataFrame, field: str = "message",
+def elasticsearch_server(df: DataFrame,
                          timezone: str | None = None) -> DataFrame:
     """elasticsearch/server: first-char branch — 6.x plaintext grok
     (LOG_HEADER + gc variants + index-name split) vs 8.0 ECS-JSON
     (from_json over the flat dotted keys; rows whose event.dataset is not
     elasticsearch.server are dropped, exactly like the reference's drop
     processor); FATAL/ERROR → event.type=error, node name/id → host."""
-    out, is_json, pick = _plain_or_json(df, field, ES_SERVER_PT_PATTERNS,
+    out, is_json, pick = _plain_or_json(df, ES_SERVER_PT_PATTERNS,
                                         ES_SERVER_PT_DEFINITIONS,
                                         _ES8_JSON_SCHEMA)
     p, j = F.col("parsed"), F.col("js")
@@ -1640,11 +1629,11 @@ ES_GC_PATTERNS = [
 ]
 
 
-def elasticsearch_gc(df: DataFrame, field: str = "message") -> DataFrame:
+def elasticsearch_gc(df: DataFrame) -> DataFrame:
     """elasticsearch/gc/ingest/pipeline.yml: the JVM8/JVM9 header composite
     grok bank verbatim, ISO8601 offset timestamp, tags split,
     event.kind=metric."""
-    out = P.grok(df, ES_GC_PATTERNS, field=field, target_prefix="parsed",
+    out = P.grok(df, ES_GC_PATTERNS, target_prefix="parsed",
                  pattern_definitions=ES_GC_DEFINITIONS)
     p = F.col("parsed")
     tags = p["elasticsearch_gc_tags"]
@@ -1695,12 +1684,12 @@ _ES_DEP_JSON_SCHEMA = (
 )
 
 
-def elasticsearch_deprecation(df: DataFrame, field: str = "message",
+def elasticsearch_deprecation(df: DataFrame,
                               timezone: str | None = None) -> DataFrame:
     """elasticsearch/deprecation: plaintext LOG_HEADER variant (DEPRECATION
     level) vs 8.0 ECS-JSON; json rows with a foreign event.dataset are
     dropped; event.dataset normalized to elasticsearch.deprecation."""
-    out, is_json, pick = _plain_or_json(df, field, ES_DEPRECATION_PT_PATTERNS,
+    out, is_json, pick = _plain_or_json(df, ES_DEPRECATION_PT_PATTERNS,
                                         ES_DEPRECATION_PT_DEFINITIONS,
                                         _ES_DEP_JSON_SCHEMA)
     p, j = F.col("parsed"), F.col("js")
@@ -1750,12 +1739,12 @@ _KIBANA7_JSON_SCHEMA = (
 )
 
 
-def kibana_log(df: DataFrame, field: str = "message") -> DataFrame:
+def kibana_log(df: DataFrame) -> DataFrame:
     """kibana/log/ingest/pipeline-7.yml: ndjson decode + the rename chain
     (res.* → http.response.*, req.* → http.request/source/url/user_agent),
     responseTime ms→ns, red-state → event.type=error, status-class
     outcome. The 8.x ECS format (pipeline-ecs) is out of scope."""
-    out = df.withColumn("meta", F.from_json(F.col(field), _KIBANA7_JSON_SCHEMA))
+    out = df.withColumn("meta", F.from_json(F.col("message"), _KIBANA7_JSON_SCHEMA))
     m = F.col("meta")
     out = out.withColumn("timestamp", P.parse_timestamp(
         m["@timestamp"], ["2006-01-02T15:04:05Z07:00", _MS_OFFSET]))
@@ -1858,8 +1847,7 @@ _AUTH_TS_LOCAL_LAYOUTS = [
 ]
 
 
-def system_auth(df: DataFrame, field: str = "message",
-                timezone: str | None = None) -> DataFrame:
+def system_auth(df: DataFrame, timezone: str | None = None) -> DataFrame:
     """system/auth/ingest/files.yml + grok-auth-messages.yml as a DataFrame
     program: three chained grok banks (header → specific auth messages →
     PAM usernames on the unmatched remainder), the rename-cascade user
@@ -1879,7 +1867,7 @@ def system_auth(df: DataFrame, field: str = "message",
         {"patterns": AUTH_PAM_PATTERNS, "target": "_pam",
          "pattern_definitions": AUTH_PAM_DEFINITIONS,
          "input": ("parsed", "_temp_message"), "only_if_unmatched": "_msg"},
-    ], field=field)
+    ])
     p = F.col("parsed")
     out = out.withColumn("host_hostname", p["host_hostname"])
     out = out.withColumn("process_name", p["process_name"])
@@ -2055,7 +2043,7 @@ _ES_SL_TS_LAYOUTS = [_COMMA_MS + "Z07:00", _COMMA_MS + "Z0700",
                      _MS_OFFSET, _MS_OFFSET_NOCOLON]
 
 
-def elasticsearch_slowlog(df: DataFrame, field: str = "message",
+def elasticsearch_slowlog(df: DataFrame,
                           timezone: str | None = None) -> DataFrame:
     """elasticsearch/slowlog: first-char branch between the 6.x plaintext
     grok (pipeline-plaintext.yml — verbatim bracket-field bank), the 7.x
@@ -2071,8 +2059,8 @@ def elasticsearch_slowlog(df: DataFrame, field: str = "message",
     Reference: elasticsearch/slowlog/ingest/{pipeline,pipeline-plaintext,
     pipeline-json,pipeline-json-7,pipeline-json-8}.yml; goldens
     elasticsearch/slowlog/test/*-expected.json."""
-    raw = F.col(field)
-    out, is_json, pick = _plain_or_json(df, field, ES_SLOWLOG_PT_PATTERNS,
+    raw = F.col("message")
+    out, is_json, pick = _plain_or_json(df, ES_SLOWLOG_PT_PATTERNS,
                                         ES_SLOWLOG_DEFINITIONS)
     is_json8 = is_json & raw.contains("ecs.version")
     is_json7 = is_json & ~raw.contains("ecs.version")
@@ -2280,17 +2268,15 @@ NGINX_ERROR_PATTERNS = [
 NGINX_ERROR_DEFINITIONS = {"GREEDYMULTILINE": "(.|\n|\t)*"}
 
 
-def nginx_error(df: DataFrame, field: str = "message",
-                timezone: str | None = None) -> DataFrame:
+def nginx_error(df: DataFrame, timezone: str | None = None) -> DataFrame:
     """nginx/error/ingest/pipeline.yml: single grok (verbatim, incl. the
     optional *connection_id), event.original kept as the raw line, zoneless
     'yyyy/MM/dd H:m:s' date shifted by event.timezone, and the static
     event.kind/category/type appends."""
-    out = P.grok(df, NGINX_ERROR_PATTERNS, field=field,
-                 target_prefix="parsed",
+    out = P.grok(df, NGINX_ERROR_PATTERNS, target_prefix="parsed",
                  pattern_definitions=NGINX_ERROR_DEFINITIONS)
     p = F.col("parsed")
-    out = out.withColumn("event_original", F.col(field))
+    out = out.withColumn("event_original", F.col("message"))
     out = out.withColumn("message_out", p["message"])
     out = out.withColumn("log_level", p["log_level"])
     out = out.withColumn("process_pid", p["process_pid"])
@@ -2377,7 +2363,7 @@ _ES_AUDIT_JSON_LAYERS = ["rest", "transport", "ip_filter",
                          "security_config_change"]
 
 
-def elasticsearch_audit(df: DataFrame, field: str = "message",
+def elasticsearch_audit(df: DataFrame,
                         timezone: str | None = None) -> DataFrame:
     """elasticsearch/audit: first-char branch between the 6.x plaintext
     bracket-field grok (pipeline-plaintext.yml, verbatim bank) and the
@@ -2388,7 +2374,7 @@ def elasticsearch_audit(df: DataFrame, field: str = "message",
 
     Reference: elasticsearch/audit/ingest/{pipeline,pipeline-plaintext,
     pipeline-json}.yml; goldens elasticsearch/audit/test/*-expected.json."""
-    out, is_json, _ = _plain_or_json(df, field, ES_AUDIT_PT_PATTERNS,
+    out, is_json, _ = _plain_or_json(df, ES_AUDIT_PT_PATTERNS,
                                      ES_AUDIT_PT_DEFINITIONS, _ES_AUDIT_SCHEMA)
     p, j = F.col("parsed"), F.col("js")
 
@@ -2560,7 +2546,7 @@ def elasticsearch_audit(df: DataFrame, field: str = "message",
                                    _MS_OFFSET]),
     ))
 
-    out = out.withColumn("message_out", F.col(field))
+    out = out.withColumn("message_out", F.col("message"))
     out = out.withColumn("event_kind", F.lit("event"))
     out = out.withColumn("event_category", F.lit("database"))
     out = out.withColumn("event_dataset", F.lit("elasticsearch.audit"))
@@ -2588,8 +2574,7 @@ _KIBANA_AUDIT_SCHEMA = (
 )
 
 
-def kibana_audit(df: DataFrame, field: str = "message",
-                 timezone: str | None = None) -> DataFrame:
+def kibana_audit(df: DataFrame, timezone: str | None = None) -> DataFrame:
     """kibana/audit: ECS audit JSON merged to root (pipeline-json.yml's
     painless merge restated as a typed from_json flatten), event.kind set
     and user.name appended to related.user (pipeline.yml). event.category
@@ -2599,7 +2584,7 @@ def kibana_audit(df: DataFrame, field: str = "message",
 
     Reference: kibana/audit/ingest/{pipeline,pipeline-json}.yml; goldens
     kibana/audit/test/test-audit-{711,713,814,890}.log-expected.json."""
-    raw = F.col(field)
+    raw = F.col("message")
     out = df.withColumn("j", F.from_json(raw, _KIBANA_AUDIT_SCHEMA))
     j = F.col("j")
 
@@ -2685,8 +2670,7 @@ IIS_ERROR_PATTERNS = [
 ]
 
 
-def iis_error(df: DataFrame, field: str = "message",
-              timezone: str | None = None) -> DataFrame:
+def iis_error(df: DataFrame, timezone: str | None = None) -> DataFrame:
     """iis/error: two-pattern grok bank (streamid layout first), uri_parts
     over cs-uri, %zone-id stripping into source/destination.ip, conditional
     network category/connection type when both ips parsed, status-code
@@ -2698,10 +2682,10 @@ def iis_error(df: DataFrame, field: str = "message",
     (module docstring).
 
     Reference: iis/error/ingest/pipeline.yml; goldens iis/error/test/."""
-    out = P.grok(df, IIS_ERROR_PATTERNS, field=field, target_prefix="parsed",
+    out = P.grok(df, IIS_ERROR_PATTERNS, target_prefix="parsed",
                  flag_failures=False)
     p = F.col("parsed")
-    out = out.withColumn("event_original", F.col(field))
+    out = out.withColumn("event_original", F.col("message"))
     url = p["tmp_url_orig"]
     out = out.withColumn("url_original", url)
     ok = url.isNotNull() & ~url.contains("\\")
@@ -2775,8 +2759,7 @@ _LOGSTASH_SL_JSON_SCHEMA = (
 )
 
 
-def logstash_slowlog(df: DataFrame, field: str = "message",
-                     timezone: str | None = None) -> DataFrame:
+def logstash_slowlog(df: DataFrame, timezone: str | None = None) -> DataFrame:
     """logstash/slowlog: first-char branch between the plaintext bracket
     format (pipeline-plaintext.yml — verbatim grok bank incl. the ruby-hash
     :plugin_params re-grok of the message) and the JSON log4j2 layout
@@ -2788,7 +2771,7 @@ def logstash_slowlog(df: DataFrame, field: str = "message",
 
     Reference: logstash/slowlog/ingest/{pipeline,pipeline-plaintext,
     pipeline-json}.yml; goldens logstash/slowlog/test/*-expected.json."""
-    out, is_json, _ = _plain_or_json(df, field, LOGSTASH_SLOWLOG_PT_PATTERNS,
+    out, is_json, _ = _plain_or_json(df, LOGSTASH_SLOWLOG_PT_PATTERNS,
                                      LOGSTASH_SLOWLOG_DEFINITIONS,
                                      _LOGSTASH_SL_JSON_SCHEMA)
     out = P.grok(out, LOGSTASH_SLOWLOG_EVENT_PATTERNS,
@@ -2900,7 +2883,7 @@ def _split_list(col: Column) -> Column:
     return F.split(F.regexp_replace(col, '"', ""), r",?\s+")
 
 
-def nginx_ingress_controller(df: DataFrame, field: str = "message",
+def nginx_ingress_controller(df: DataFrame,
                              timezone: str | None = None) -> DataFrame:
     """nginx/ingress_controller: the access-log grok extended with upstream
     list fields (verbatim bank incl. the list pattern_definitions), the
@@ -2915,11 +2898,10 @@ def nginx_ingress_controller(df: DataFrame, field: str = "message",
 
     Reference: nginx/ingress_controller/ingest/pipeline.yml; goldens
     nginx/ingress_controller/test/test.log-expected.json."""
-    out = P.grok(df, NGINX_INGRESS_PATTERNS, field=field,
-                 target_prefix="parsed",
+    out = P.grok(df, NGINX_INGRESS_PATTERNS, target_prefix="parsed",
                  pattern_definitions=NGINX_INGRESS_DEFINITIONS)
     p = F.col("parsed")
-    out = out.withColumn("event_original", F.col(field))
+    out = out.withColumn("event_original", F.col("message"))
     pre = "nginx_ingress_controller_"
 
     # info → method/url/version (same sub-grok as nginx.access)
@@ -3065,12 +3047,11 @@ ICINGA_DEBUG_PATTERNS = [
 ]
 
 
-def icinga_startup(df: DataFrame, field: str = "message") -> DataFrame:
+def icinga_startup(df: DataFrame) -> DataFrame:
     """icinga/startup/ingest/pipeline.yml: icinga.main minus the timestamp
     bracket (startup logs carry no time), warning/critical →
     event.type=error."""
-    out = P.grok(df, ICINGA_STARTUP_PATTERNS, field=field,
-                 target_prefix="parsed",
+    out = P.grok(df, ICINGA_STARTUP_PATTERNS, target_prefix="parsed",
                  pattern_definitions={"GREEDYMULTILINE": "(.|\n)*"})
     p = F.col("parsed")
     out = out.withColumn("log_level", p["log_level"])
@@ -3084,11 +3065,10 @@ def icinga_startup(df: DataFrame, field: str = "message") -> DataFrame:
     return out
 
 
-def icinga_debug(df: DataFrame, field: str = "message") -> DataFrame:
+def icinga_debug(df: DataFrame) -> DataFrame:
     """icinga/debug/ingest/pipeline.yml: identical shape to icinga.main
     under the icinga.debug.* prefix."""
-    out = P.grok(df, ICINGA_DEBUG_PATTERNS, field=field,
-                 target_prefix="parsed",
+    out = P.grok(df, ICINGA_DEBUG_PATTERNS, target_prefix="parsed",
                  pattern_definitions=ICINGA_MAIN_DEFINITIONS)
     p = F.col("parsed")
     out = P.timestamp(out, "parsed.icinga_debug_timestamp",
@@ -3128,8 +3108,7 @@ _PENSANDO_DFW_SCHEMA = (
 )
 
 
-def pensando_dfw(df: DataFrame, field: str = "message",
-                 timezone: str | None = None) -> DataFrame:
+def pensando_dfw(df: DataFrame, timezone: str | None = None) -> DataFrame:
     """pensando/dfw: RFC-5424 header grok (verbatim), JSON payload decode,
     the port-comparison client/server classification (higher port = client;
     ICMP pins client=src, server port 0), allow/deny → event.action
@@ -3139,11 +3118,10 @@ def pensando_dfw(df: DataFrame, field: str = "message",
 
     Reference: pensando/dfw/ingest/pipeline.yml; goldens
     pensando/dfw/test/test.log-expected.json."""
-    out = P.grok(df, PENSANDO_DFW_PATTERNS, field=field,
-                 target_prefix="parsed",
+    out = P.grok(df, PENSANDO_DFW_PATTERNS, target_prefix="parsed",
                  pattern_definitions=PENSANDO_DFW_DEFINITIONS)
     p = F.col("parsed")
-    out = out.withColumn("event_original", F.col(field))
+    out = out.withColumn("event_original", F.col("message"))
     out = out.withColumn(
         "j", F.from_json(p["payload_raw"], _PENSANDO_DFW_SCHEMA))
     j = F.col("j")

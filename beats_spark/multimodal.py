@@ -4,11 +4,9 @@ with typed metadata, processed via Arrow-batched mapInPandas.
 The Spark-side plumbing — schema, partitioning, UDF signatures, batch
 shapes — is real and tested. The actual
 codec work (JPEG decode, audio resample, video frame extraction) needs
-codec libraries. `decode_media(mode="header")` (the default) parses
-dimensions straight from the container bytes with stdlib struct;
-`mode="pillow"` decodes with Pillow and raises NotImplementedError where it
-is absent; `mode="fake"` derives deterministic dims from the bytes. Swapping
-in a real codec changes no Spark plumbing.
+codec libraries. `decode_media` parses dimensions straight from the
+container bytes with stdlib struct; swapping in a real codec changes no
+Spark plumbing.
 
 (Beats has no media processing; the closest reference shapes are
 detect_mime_type — /root/reference/libbeat/processors/actions/
@@ -19,7 +17,6 @@ training-data-pipeline mandate, not Beats parity.)
 
 from __future__ import annotations
 
-import hashlib
 import struct
 import zlib
 from typing import Iterator
@@ -77,13 +74,6 @@ def detect_media_type(df: DataFrame, content_col: str = "content",
     return df.withColumn(target, out.otherwise(expr))
 
 
-def _fake_decode(buf: bytes) -> tuple[int, int, int]:
-    """Deterministic FAKE image decode: (width, height, n_channels) derived
-    from a digest of the bytes. Replace with PIL.Image.open in production."""
-    h = hashlib.sha256(buf).digest()
-    return 16 + h[0] % 240, 16 + h[1] % 240, 3 if h[2] % 4 else 1
-
-
 DECODED_SCHEMA = (
     "media_id long, kind string, byte_len int, width int, height int, "
     "channels int, ok boolean"
@@ -139,52 +129,18 @@ def parse_media_header(buf: bytes):
     return None, None, None, None, False
 
 
-def decode_media(df: DataFrame, mode: str = "header") -> DataFrame:
-    """Decode/feature-extract media via mapInPandas (Arrow batch iterator —
-    constant memory per task regardless of partition size; binary payloads
-    never materialize on the driver).
+def decode_media(df: DataFrame) -> DataFrame:
+    """Parse media headers via mapInPandas (Arrow batch iterator — constant
+    memory per task regardless of partition size; binary payloads never
+    materialize on the driver).
 
-    `mode`:
-    - "header" (default): REAL stdlib header parse — width/height/channels
-      straight from PNG/GIF/JPEG/WAV container bytes (parse_media_header),
-      no codec library needed, environment-independent and oracle-able;
-    - "pillow": full image decode via Pillow; raises
-      NotImplementedError when Pillow is absent (this container ships no
-      codecs) — the only remaining codec-gated branch;
-    - "fake": deterministic digest-derived dims (kept for
-      plumbing tests that want dims on EVERY kind);
-    - "auto": Pillow when it imports,
-      header parse otherwise.
-    Rows the decoder cannot parse come back ok=False, never a task failure.
+    Width/height/channels come straight from PNG/GIF/JPEG/WAV container
+    bytes (parse_media_header): no codec library needed, environment-
+    independent and oracle-able. Rows the parser cannot read come back
+    ok=False, never a task failure.
     """
-    if mode not in ("header", "pillow", "fake", "auto"):
-        raise ValueError(f"unknown decode mode: {mode!r}")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        eff = mode
-        Image = None
-        if eff in ("pillow", "auto"):
-            try:
-                from PIL import Image  # noqa: N813
-                eff = "pillow"
-            except ImportError:
-                if eff == "pillow":
-                    raise NotImplementedError(
-                        "full media decode needs Pillow/ffmpeg; container "
-                        "ships neither — mode='header' parses dims from "
-                        "container bytes with stdlib struct"
-                    ) from None
-                eff = "header"
-
-        def pillow_decode(buf: bytes):
-            import io
-
-            try:
-                with Image.open(io.BytesIO(buf)) as im:
-                    return im.width, im.height, len(im.getbands()), True
-            except Exception:
-                return None, None, None, False
-
         for pdf in batches:
             recs = []
             for mid, kind, buf in zip(pdf["media_id"], pdf["kind"], pdf["content"]):
@@ -192,13 +148,7 @@ def decode_media(df: DataFrame, mode: str = "header") -> DataFrame:
                     recs.append((mid, kind, 0, None, None, None, False))
                     continue
                 buf = bytes(buf)
-                if eff == "pillow":
-                    w, h, c, ok = pillow_decode(buf)
-                elif eff == "header":
-                    _, w, h, c, ok = parse_media_header(buf)
-                else:
-                    w, h, c = _fake_decode(buf)
-                    ok = True
+                _, w, h, c, ok = parse_media_header(buf)
                 recs.append((mid, kind, len(buf), w, h, c, ok))
             yield pd.DataFrame(
                 recs,

@@ -123,7 +123,7 @@ def replace_fields(df: DataFrame, specs: list[dict]) -> DataFrame:
 
 
 def truncate_fields(
-    df: DataFrame, fields: list[str], max_characters: int, flag: str = "truncated"
+    df: DataFrame, fields: list[str], max_characters: int
 ) -> DataFrame:
     """Cap string fields at max_characters and flag truncated rows
     (actions/truncate_fields.go:37-41)."""
@@ -132,7 +132,7 @@ def truncate_fields(
     was_truncated = F.lit(False)
     for f in fields:
         was_truncated = was_truncated | (F.length(F.col(f)) > max_characters)
-    out = add_flag(df, was_truncated, flag)  # flag BEFORE shortening
+    out = add_flag(df, was_truncated, "truncated")  # flag BEFORE shortening
     for f in fields:
         out = out.withColumn(f, F.substring(F.col(f), 1, max_characters))
     return out
@@ -162,7 +162,6 @@ def fingerprint(
     fields: list[str],
     target: str = "fingerprint",
     method: str = "sha256",
-    delimiter: str = "|",
 ) -> DataFrame:
     """Hash selected field values into `target`
     (fingerprint/config.go:24-28, hash.go:38-43).
@@ -171,7 +170,7 @@ def fingerprint(
     reference writes key=value pairs; we hash values of a declared field
     list — equivalent determinism, simpler expression).
     """
-    cat = F.concat_ws(delimiter, *[F.col(f).cast("string") for f in sorted(fields)])
+    cat = F.concat_ws("|", *[F.col(f).cast("string") for f in sorted(fields)])
     if method in ("sha256", "sha384", "sha512"):
         h = F.sha2(cat, int(method[3:]))
     elif method == "md5":
@@ -258,7 +257,6 @@ def dns_enrich(
     qtype: str = "reverse",
     action: str = "append",
     tag_on_failure: list[str] | None = None,
-    tags_field: str = "tags",
 ) -> DataFrame:
     """DNS processor over a resolver SNAPSHOT table — the Spark-first reading
     of libbeat/processors/dns (dns/config.go:31-41, dns/dns.go:80-160).
@@ -376,12 +374,12 @@ def dns_enrich(
         for t in failed_terms[1:]:
             any_failed = any_failed | F.col(t)
         base = (
-            F.coalesce(F.col(tags_field), F.array().cast("array<string>"))
-            if tags_field in out.columns
+            F.coalesce(F.col("tags"), F.array().cast("array<string>"))
+            if "tags" in out.columns
             else F.array().cast("array<string>")
         )
         out = out.withColumn(
-            tags_field,
+            "tags",
             F.when(
                 any_failed,
                 F.array_union(base, F.array(*[F.lit(t) for t in tag_on_failure])),
@@ -421,9 +419,9 @@ def add_constant_metadata(df: DataFrame, target: str, metadata: dict) -> DataFra
     )
 
 
-def add_locale(df: DataFrame, tz: str = "UTC", target: str = "event_timezone") -> DataFrame:
+def add_locale(df: DataFrame, tz: str = "UTC") -> DataFrame:
     """add_locale/add_locale.go:62."""
-    return df.withColumn(target, F.lit(tz))
+    return df.withColumn("event_timezone", F.lit(tz))
 
 
 def add_network_direction(

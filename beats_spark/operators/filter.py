@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from beats_spark.conditions import compile_condition
@@ -57,27 +57,27 @@ def include_fields(df: DataFrame, fields: list[str], mandatory: list[str] | None
     return df.select(*[c for c in keep if c in df.columns])
 
 
-def include_lines(df: DataFrame, patterns: list[str], field: str = "text") -> DataFrame:
+def _any_line(patterns: list[str]) -> Column:
+    pred = F.col("text").rlike(patterns[0])
+    for p in patterns[1:]:
+        pred = pred | F.col("text").rlike(p)
+    return F.coalesce(pred, F.lit(False))
+
+
+def include_lines(df: DataFrame, patterns: list[str]) -> DataFrame:
     """Keep rows whose raw line matches any regex — expressed as a Column
     predicate so Catalyst pushes it toward the scan."""
-    pred = F.col(field).rlike(patterns[0])
-    for p in patterns[1:]:
-        pred = pred | F.col(field).rlike(p)
-    return df.filter(F.coalesce(pred, F.lit(False)))
+    return df.filter(_any_line(patterns))
 
 
-def exclude_lines(df: DataFrame, patterns: list[str], field: str = "text") -> DataFrame:
-    pred = F.col(field).rlike(patterns[0])
-    for p in patterns[1:]:
-        pred = pred | F.col(field).rlike(p)
-    return df.filter(~F.coalesce(pred, F.lit(False)))
+def exclude_lines(df: DataFrame, patterns: list[str]) -> DataFrame:
+    return df.filter(~_any_line(patterns))
 
 
 def ratelimit(
     df: DataFrame,
     limit_per_window: int,
     key_fields: list[str],
-    ts_field: str = "ts",
     window: str = "1 minute",
 ) -> DataFrame:
     """Keyed rate limit: keep the first N events per (key, time-window).
@@ -90,8 +90,8 @@ def ratelimit(
     from pyspark.sql import Window as W
 
     w = W.partitionBy(
-        F.window(F.col(ts_field), window).alias("_w"), *[F.col(k) for k in key_fields]
-    ).orderBy(F.col(ts_field), *[F.col(k) for k in key_fields])
+        F.window(F.col("ts"), window).alias("_w"), *[F.col(k) for k in key_fields]
+    ).orderBy(F.col("ts"), *[F.col(k) for k in key_fields])
     return (
         df.withColumn("_rl_rn", F.row_number().over(w))
         .filter(F.col("_rl_rn") <= limit_per_window)

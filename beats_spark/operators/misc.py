@@ -63,7 +63,6 @@ def multiline_assemble(
     offset_col: str = "turn_idx",
     line_col: str = "text",
     max_lines: int = 500,
-    separator: str = "\n",
     mode: str = "pattern",
     count_lines: int | None = None,
     timeout: float | None = None,
@@ -89,7 +88,7 @@ def multiline_assemble(
     `timeout` + `ts_col`: the reference's idle-flush (multiline.timeout) —
     in batch, a gap > timeout seconds between consecutive lines breaks the
     event (streaming twins get real idle flush from session windows).
-    `skip_newline` joins lines without the separator
+    Lines join with a newline; `skip_newline` joins them with nothing
     (multiline_config.go:64).
 
     Event id = running count of starts within (file, offset-order) — a
@@ -138,13 +137,11 @@ def multiline_assemble(
         w = w0.rowsBetween(W.unboundedPreceding, 0)
         evt = F.sum(F.when(starts, 1).otherwise(0)).over(w)
         lines = df.withColumn("_evt", evt)
-    if skip_newline:
-        separator = ""
     return (
         lines.groupBy(file_col, "_evt")
         .agg(
             F.concat_ws(
-                separator, F.slice(F.sort_array(F.collect_list(
+                "" if skip_newline else "\n", F.slice(F.sort_array(F.collect_list(
                     F.struct(F.col(offset_col), F.col(line_col))
                 )), 1, max_lines).getField(line_col)
             ).alias("message"),
@@ -163,8 +160,8 @@ CRI_PATTERN = (
 )
 
 
-def container(df: DataFrame, field: str = "message", fmt: str = "auto",
-              target_prefix: str = "container") -> DataFrame:
+def container(df: DataFrame, field: str = "message",
+              fmt: str = "auto") -> DataFrame:
     """Container log parser (filebeat's `container` input parser: docker
     json-file and CRI-O formats; reference reader chain
     libbeat/reader/parser/parser.go:91-130).
@@ -182,7 +179,7 @@ def container(df: DataFrame, field: str = "message", fmt: str = "auto",
                    flag_failures=False)
     if fmt == "docker":
         return out.withColumn(
-            target_prefix,
+            "container",
             F.struct(
                 F.col("_docker.log").alias("message"),
                 F.col("_docker.stream").alias("stream"),
@@ -191,7 +188,7 @@ def container(df: DataFrame, field: str = "message", fmt: str = "auto",
         ).drop("_docker")
     if fmt == "cri":
         return out.withColumn(
-            target_prefix,
+            "container",
             F.struct(
                 F.col("_cri.message").alias("message"),
                 F.col("_cri.stream").alias("stream"),
@@ -199,7 +196,7 @@ def container(df: DataFrame, field: str = "message", fmt: str = "auto",
             ),
         ).drop("_cri")
     return out.withColumn(
-        target_prefix,
+        "container",
         F.struct(
             F.coalesce(F.col("_docker.log"), F.col("_cri.message")).alias("message"),
             F.coalesce(F.col("_docker.stream"), F.col("_cri.stream")).alias("stream"),
@@ -208,13 +205,7 @@ def container(df: DataFrame, field: str = "message", fmt: str = "auto",
     ).drop("_docker", "_cri")
 
 
-def sessionize(
-    df: DataFrame,
-    gap_seconds: int,
-    key_col: str = "conv_id",
-    ts_col: str = "ts",
-    order_col: str = "turn_idx",
-) -> DataFrame:
+def sessionize(df: DataFrame, gap_seconds: int) -> DataFrame:
     """Batch sessionization with idle-timeout semantics — packetbeat flows'
     `timeout` eviction (packetbeat/flows/worker.go:233-290) expressed as a
     gap-boundary cumsum (dialect-portable; the streaming flavor uses
@@ -223,28 +214,28 @@ def sessionize(
     A new session starts when the gap to the previous event in the key
     exceeds gap_seconds. Emits one row per (key, session) with span + count.
     """
-    w = W.partitionBy(key_col).orderBy(order_col)
-    gap = F.unix_timestamp(ts_col) - F.unix_timestamp(F.lag(ts_col).over(w))
+    w = W.partitionBy("conv_id").orderBy("turn_idx")
+    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
     starts = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
-    cum = W.partitionBy(key_col).orderBy(order_col).rowsBetween(
+    cum = W.partitionBy("conv_id").orderBy("turn_idx").rowsBetween(
         W.unboundedPreceding, 0
     )
     sess = df.withColumn("_sess", F.sum(starts).over(cum).cast("long"))
     return (
-        sess.groupBy(key_col, "_sess")
+        sess.groupBy("conv_id", "_sess")
         .agg(
             F.count("*").alias("n_events"),
-            F.min(order_col).alias("first_idx"),
-            F.max(order_col).alias("last_idx"),
-            F.date_format(F.min(ts_col), "yyyy-MM-dd'T'HH:mm:ss").alias("session_start"),
-            F.date_format(F.max(ts_col), "yyyy-MM-dd'T'HH:mm:ss").alias("session_end"),
+            F.min("turn_idx").alias("first_idx"),
+            F.max("turn_idx").alias("last_idx"),
+            F.date_format(F.min("ts"), "yyyy-MM-dd'T'HH:mm:ss").alias("session_start"),
+            F.date_format(F.max("ts"), "yyyy-MM-dd'T'HH:mm:ss").alias("session_end"),
         )
         .withColumnRenamed("_sess", "session_seq")
     )
 
 
-def decompress_gzip_field(df: DataFrame, field: str, target: str | None = None,
-                          ignore_failure: bool = True) -> DataFrame:
+def decompress_gzip_field(df: DataFrame, field: str,
+                          target: str | None = None) -> DataFrame:
     """Gunzip a binary column via a vectorized pandas UDF (zlib is the
     hot loop; the batch loop stays in Arrow)."""
 
@@ -256,17 +247,15 @@ def decompress_gzip_field(df: DataFrame, field: str, target: str | None = None,
             try:
                 return gzip.decompress(bytes(b)).decode("utf-8", "replace")
             except Exception:
-                if ignore_failure:
-                    return None
-                raise
+                return None
 
         return s.map(one)
 
     return df.withColumn(target or field, gunzip(F.col(field)))
 
 
-def compress_gzip_field(df: DataFrame, field: str, target: str | None = None,
-                        mtime: int = 0) -> DataFrame:
+def compress_gzip_field(df: DataFrame, field: str,
+                        target: str | None = None) -> DataFrame:
     """Gzip a string column (test/roundtrip twin of decompress_gzip_field —
     the reference ships only the decompressor). mtime is pinned to 0 so the
     output bytes are deterministic across runs and engines."""
@@ -275,7 +264,7 @@ def compress_gzip_field(df: DataFrame, field: str, target: str | None = None,
     def gz(s: pd.Series) -> pd.Series:
         return s.map(
             lambda t: None if t is None
-            else gzip.compress(t.encode("utf-8"), mtime=mtime)
+            else gzip.compress(t.encode("utf-8"), mtime=0)
         )
 
     return df.withColumn(target or field, gz(F.col(field)))
@@ -361,16 +350,14 @@ def vectorized_script(
     df: DataFrame,
     fn: Callable[[pd.DataFrame], pd.DataFrame],
     output_schema: str | T.StructType,
-    columns: list[str] | None = None,
 ) -> DataFrame:
     """The script-processor escape hatch (javascript.go:42-62 lets users run
     arbitrary per-event JS). Our contract keeps the BASELINE vectorization
     rule: the user function receives/returns whole pandas DataFrames per
     Arrow batch — arbitrary logic, never per-row dispatch from the engine."""
-    src = df.select(*columns) if columns else df
 
     def run(batches):
         for pdf in batches:
             yield fn(pdf)
 
-    return src.mapInPandas(run, output_schema)
+    return df.mapInPandas(run, output_schema)

@@ -109,15 +109,13 @@ def _safe(name: str) -> str:
 ERROR_COL = "error"
 
 
-def set_error(
-    df: DataFrame, cond: Column, message: str | Column, etype: str = "parse"
-) -> DataFrame:
+def set_error(df: DataFrame, cond: Column, message: str | Column) -> DataFrame:
     """Populate the `error` struct column where cond holds — the
     SetErrorWithOption shape (libbeat/beat/event.go:303-316: failures write
     {message, type} under the reserved `error` key, existing value kept for
     non-failing rows). `message` may be a Column for per-row messages."""
     msg = message if isinstance(message, Column) else F.lit(message)
-    new = F.struct(msg.alias("message"), F.lit(etype).alias("type"))
+    new = F.struct(msg.alias("message"), F.lit("parse").alias("type"))
     if ERROR_COL in df.columns:
         return df.withColumn(
             ERROR_COL, F.when(cond, new).otherwise(F.col(ERROR_COL))
@@ -149,14 +147,13 @@ def dissect(
     target_prefix: str = "dissect",
     trim_values: str = "none",
     trim_chars: str = " ",
-    flag_failures: bool = True,
 ) -> DataFrame:
     """Apply a dissect tokenizer to `field`, emitting a struct column
     `target_prefix` with the tokenizer's static schema. Failed rows get a
     null struct and the dissect_parsing_error flag."""
     d = Dissector(tokenizer, trim_values=trim_values, trim_chars=trim_chars)
     if d.dynamic:
-        return _dissect_dynamic(df, d, field, target_prefix, flag_failures)
+        return _dissect_dynamic(df, d, field, target_prefix)
 
     schema = T.StructType(
         [T.StructField(_safe(k), T.StringType(), True) for k in d.static_keys]
@@ -179,13 +176,12 @@ def dissect(
         for k in d.static_keys
     ])
     out = out.withColumn(target_prefix, F.when(~failed, struct_expr))
-    if flag_failures:
-        out = add_flag(out, failed, DISSECT_FAIL_FLAG)
-        out = set_error(out, failed, f"dissect: tokenizer did not match {field}")
+    out = add_flag(out, failed, DISSECT_FAIL_FLAG)
+    out = set_error(out, failed, f"dissect: tokenizer did not match {field}")
     return out.drop(tmp)
 
 
-def _dissect_dynamic(df, d: Dissector, field, target_prefix, flag_failures) -> DataFrame:
+def _dissect_dynamic(df, d: Dissector, field, target_prefix) -> DataFrame:
     """Pointer/indirect tokenizers have data-dependent keys → MapType output;
     typed values are rendered as Spark's string cast of `convert_col`."""
     schema = T.StructType([
@@ -215,9 +211,7 @@ def _dissect_dynamic(df, d: Dissector, field, target_prefix, flag_failures) -> D
     out = out.withColumn(
         target_prefix, F.transform_values(F.col(f"{tmp}.v"), render)
     ).drop(tmp)
-    if flag_failures:
-        out = add_flag(out, F.col(target_prefix).isNull(), DISSECT_FAIL_FLAG)
-    return out
+    return add_flag(out, F.col(target_prefix).isNull(), DISSECT_FAIL_FLAG)
 
 
 # -- grok ---------------------------------------------------------------------
@@ -357,7 +351,6 @@ def decode_json_fields(
     fields: list[str] | str,
     schema: str | T.DataType = "map<string,string>",
     target: str | None = None,
-    flag_failures: bool = False,
 ) -> DataFrame:
     """from_json on each listed string field. Default schema is the dynamic
     map<string,string> shape (≅ schemaless decode); pass a DDL string for a
@@ -368,9 +361,6 @@ def decode_json_fields(
         tgt = target if (target and len(fields) == 1) else f
         decoded = F.from_json(F.col(f), schema)
         out = out.withColumn(tgt, decoded)
-        if flag_failures:
-            out = add_flag(out, F.col(tgt).isNull() & F.col(f).isNotNull(),
-                           "json_decode_error")
     return out
 
 

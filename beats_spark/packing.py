@@ -35,7 +35,6 @@ from pyspark.sql.types import (
 def pack_sequences(
     df: DataFrame,
     capacity: int,
-    tokens_col: str = "n_tokens",
     id_col: str = "doc_id",
     bucket_chars: int = 2,
     long_doc: str = "truncate",
@@ -52,13 +51,13 @@ def pack_sequences(
     if long_doc not in ("truncate", "drop"):
         raise ValueError(f"unknown long_doc mode: {long_doc!r}")
     if long_doc == "drop":
-        df = df.where(F.col(tokens_col) <= capacity)
+        df = df.where(F.col("n_tokens") <= capacity)
 
     bucket = F.substring(
         F.md5(F.col(id_col).cast("string")), 1, bucket_chars
     )
     base = df.withColumn("bucket", bucket).withColumn(
-        "packed_tokens", F.least(F.col(tokens_col), F.lit(capacity))
+        "packed_tokens", F.least(F.col("n_tokens"), F.lit(capacity))
     )
 
     # id passes through the pandas kernel untouched — mirror its REAL type
@@ -101,19 +100,18 @@ def pack_sequences(
 def packing_oracle_sql(
     source_sql: str,
     capacity: int,
-    tokens_col: str = "n_tokens",
     id_col: str = "doc_id",
     bucket_chars: int = 2,
 ) -> str:
     """Recursive-CTE replay of the identical next-fit packing (truncate
-    mode) over `source_sql` (must yield id_col + tokens_col). An
+    mode) over `source_sql` (must yield id_col + n_tokens). An
     independent implementation of the same deterministic spec — sequential
     replay vs Spark's bucketed parallel pass."""
     return f"""
 WITH RECURSIVE docs AS (
   SELECT {id_col},
          substr(md5(CAST({id_col} AS VARCHAR)), 1, {bucket_chars}) AS bucket,
-         least({tokens_col}, {capacity}) AS packed_tokens,
+         least(n_tokens, {capacity}) AS packed_tokens,
          row_number() OVER (
            PARTITION BY substr(md5(CAST({id_col} AS VARCHAR)), 1, {bucket_chars})
            ORDER BY {id_col}) AS rn
@@ -141,8 +139,6 @@ def chunk_documents(
     df: DataFrame,
     max_tokens: int,
     overlap: int = 0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Split long documents into ≤max_tokens whitespace-token chunks with
     `overlap` tokens of context repeated between consecutive chunks — the
@@ -159,9 +155,9 @@ def chunk_documents(
     if not 0 <= overlap < max_tokens:
         raise ValueError("need 0 <= overlap < max_tokens")
     step = max_tokens - overlap
-    blank = F.trim(F.col(text_col)) == ""
+    blank = F.trim(F.col("text")) == ""
     toks = F.when(blank, F.array().cast("array<string>")).otherwise(
-        F.split(F.trim(F.col(text_col)), r"\s+")
+        F.split(F.trim(F.col("text")), r"\s+")
     )
     n = F.size(toks)
     n_chunks = F.greatest(
@@ -178,7 +174,7 @@ def chunk_documents(
         "n_doc_tokens", n
     )
     out = base.select(
-        id_col, "n_doc_tokens",
+        "doc_id", "n_doc_tokens",
         F.posexplode("_chunks").alias("chunk_idx", "chunk_text"),
     )
     return out.withColumn(
@@ -191,10 +187,7 @@ def chunk_documents(
 
 def chunk_documents_sql(
     max_tokens: int,
-    overlap: int = 0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    table: str = "documents",
+    overlap: int,
     where: str = "TRUE",
 ) -> str:
     """DuckDB twin of chunk_documents (1-based list slicing; same ceil
@@ -202,18 +195,18 @@ def chunk_documents_sql(
     step = max_tokens - overlap
     return f"""
 WITH base AS (
-  SELECT {id_col},
-         CASE WHEN trim({text_col}) = '' THEN CAST([] AS VARCHAR[])
-              ELSE regexp_split_to_array(trim({text_col}), '\\s+') END AS toks
-  FROM {table} WHERE {text_col} IS NOT NULL AND ({where})
+  SELECT doc_id,
+         CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
+              ELSE regexp_split_to_array(trim(text), '\\s+') END AS toks
+  FROM documents WHERE text IS NOT NULL AND ({where})
 ),
 sized AS (
-  SELECT {id_col}, toks, len(toks) AS n,
+  SELECT doc_id, toks, len(toks) AS n,
          greatest(CAST(ceil((len(toks) - {overlap}) / {step}.0) AS INT), 1)
            AS n_chunks
   FROM base
 )
-SELECT {id_col}, n AS n_doc_tokens,
+SELECT doc_id, n AS n_doc_tokens,
        i AS chunk_idx,
        array_to_string(toks[i * {step} + 1 : i * {step} + {max_tokens}], ' ')
          AS chunk_text,

@@ -83,21 +83,18 @@ def grok_extract_sql(expr: str, text_col: str = "text") -> dict[str, str]:
     """Compile a grok expression and render each output field as a DuckDB
     regexp_extract fragment over the expression's own compiled regex (the
     Spark pandas UDF runs it as one alternative of its bank's combined
-    regex, `GrokBank`), with a SQL CAST for a typed field (the Spark side
-    casts by `operators.parse.convert_col`). Returns {field_name:
-    sql_fragment}."""
+    regex, `GrokBank`). A typed field goes through `convert_sql`, the
+    DuckDB twin of the `convert_col` the Spark side casts with, so a
+    capture the convert lattice cannot read is NULL on both. Returns
+    {field_name: sql_fragment}."""
     g = Grok(expr)
     pat = g.pattern.pattern
     idx = g.pattern.groupindex  # gname -> capture group number
     out: dict[str, str] = {}
-    casts = {"integer": "INTEGER", "long": "BIGINT", "float": "REAL",
-             "double": "DOUBLE", "boolean": "BOOLEAN"}
     for (name, dtype), gname in zip(g.fields, g._group_names):
         frag = (f"CASE WHEN regexp_matches({text_col}, {sql_str(pat)}) "
                 f"THEN regexp_extract({text_col}, {sql_str(pat)}, {idx[gname]}) END")
-        if dtype in casts:
-            frag = f"CAST({frag} AS {casts[dtype]})"
-        out[name] = frag
+        out[name] = convert_sql(frag, dtype)
     return out
 
 
@@ -829,7 +826,7 @@ def q_dedup_exact(spark, sf_dir):
 @register(
     "token_counts",
     f"""
-SELECT doc_id, {X.token_count_sql()} AS n_tokens,
+SELECT doc_id, {X.token_count_sql('text')} AS n_tokens,
        CAST({X.bpe_token_count_sql()} AS INTEGER) AS n_bpe_tokens
 FROM documents
 """,
@@ -842,7 +839,7 @@ def q_token_counts(spark, sf_dir):
 
 
 def _quality_oracle() -> str:
-    frags = X.quality_features_sql()
+    frags = X.quality_features_sql("text")
     cols = ", ".join(f"{sql} AS {name}" for name, sql in frags.items())
     return f"SELECT doc_id, {cols} FROM documents"
 
@@ -1147,7 +1144,7 @@ def q_simhash_pairs(spark, sf_dir):
     "ngram_jaccard_pairs",
     f"""
 WITH d AS (
-  SELECT doc_id, list_distinct({X.word_ngrams_sql("toks", 3)}) AS g
+  SELECT doc_id, list_distinct({X.word_ngrams_sql("toks", 3, guarded=False)}) AS g
   FROM (SELECT doc_id, {X.tokens_sql("text")} AS toks
         FROM documents WHERE text IS NOT NULL AND doc_id < 1000)
 ),
@@ -1454,8 +1451,8 @@ def q_response_pairs(spark, sf_dir):
 
 # ORACLED (was rows-only): synthesize_media writes REAL container headers
 # (PNG IHDR / GIF descriptor / JPEG SOF0 / WAV fmt) whose dimensions and
-# channel counts are pure functions of doc_id; decode_media's default
-# header mode parses them back from the BYTES with stdlib struct. The
+# channel counts are pure functions of doc_id; decode_media parses them
+# back from the BYTES with stdlib struct. The
 # oracle recomputes the planted metadata from doc_id alone — agreement
 # proves the binary build AND the binary parse round-trip, not just
 # plumbing. (byte_len stays out: zlib body length isn't SQL-expressible.)
@@ -1493,7 +1490,7 @@ def q_media_decode(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     media = M.synthesize_media(docs)
-    decoded = M.decode_media(media)  # default: real header parse
+    decoded = M.decode_media(media)  # real header parse
     return decoded.groupBy("kind").agg(
         F.count("*").alias("n"),
         F.sum(F.when(F.col("ok"), 1).otherwise(0)).alias("n_ok"),
@@ -2161,7 +2158,7 @@ lf AS (
 grams AS (
   SELECT doc_id, ln AS total_len, g, count(*) AS c
   FROM (SELECT doc_id, len(trim(text, ' ')) AS ln,
-               unnest({X.word_ngrams_sql("toks", 2)}) AS g
+               unnest({X.word_ngrams_sql("toks", 2, guarded=False)}) AS g
         FROM (SELECT doc_id, text, {X.tokens_sql("text")} AS toks
               FROM {src}) s0) s
   GROUP BY 1, 2, 3
@@ -2254,7 +2251,7 @@ WITH toks AS (
   FROM documents WHERE text IS NOT NULL AND doc_id < 1500
 ),
 grams AS (
-  SELECT doc_id, unnest(list_distinct({X.word_ngrams_sql("t", 13)})) AS g
+  SELECT doc_id, unnest(list_distinct({X.word_ngrams_sql("t", 13, guarded=False)})) AS g
   FROM toks
 ),
 probe AS (
@@ -2759,7 +2756,7 @@ toks AS (
   FROM d WHERE f_d
 ),
 grams AS (
-  SELECT doc_id, unnest(list_distinct({X.word_ngrams_sql("t", 8)})) AS g
+  SELECT doc_id, unnest(list_distinct({X.word_ngrams_sql("t", 8, guarded=False)})) AS g
   FROM toks
 ),
 contam AS (

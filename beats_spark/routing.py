@@ -61,7 +61,7 @@ def _format_parts(fmt: str):
         yield "lit", fmt[pos:]
 
 
-def compile_format(fmt: str, ts_col: str = "ts") -> Column:
+def compile_format(fmt: str) -> Column:
     """`"idx-%{[role]}-%{+yyyy.MM.dd}"` → concat of lits, string-cast
     columns, and date_format(ts) for `%{+FORMAT}` keys
     (fmtstr/formatevents.go:35-44; timestamp keys are how Beats builds
@@ -75,7 +75,7 @@ def compile_format(fmt: str, ts_col: str = "ts") -> Column:
         if kind == "ts":
             for src, dst in _TIME_TOKENS:
                 v = v.replace(src, dst)
-            parts.append(F.date_format(F.col(ts_col), v))
+            parts.append(F.date_format(F.col("ts"), v))
         else:
             parts.append(F.lit(v) if kind == "lit" else F.col(v).cast("string"))
     if not parts:
@@ -139,13 +139,11 @@ def route(
     df: DataFrame,
     rules: list[dict],
     default: str | None = None,
-    target: str = SINK_COL,
-    drop_unrouted: bool = True,
 ) -> DataFrame:
     """Attach the sink column; optionally drop events no rule claimed."""
-    out = df.withColumn(target, compile_selector(df, rules, default))
-    if drop_unrouted and default is None:
-        out = out.filter(F.col(target).isNotNull())
+    out = df.withColumn(SINK_COL, compile_selector(df, rules, default))
+    if default is None:
+        out = out.filter(F.col(SINK_COL).isNotNull())
     return out
 
 
@@ -155,15 +153,7 @@ def drop_metadata(df: DataFrame) -> DataFrame:
     return df.drop(*[c for c in df.columns if c.startswith("_meta_")])
 
 
-def fan_out(
-    df: DataFrame,
-    base_path: str,
-    target: str = SINK_COL,
-    file_format: str = "parquet",
-    mode: str = "overwrite",
-    kafka_key: list[str] | None = None,
-    kafka_partitions: int = 0,
-) -> None:
+def fan_out(df: DataFrame, base_path: str) -> None:
     """Write every sink in ONE pass via partitionBy(_sink).
 
     This is the scale-critical choice: N separate `filter(sink==s).write`
@@ -172,26 +162,13 @@ def fan_out(
     an independent dataset (≅ per-sink Iceberg tables; swap `.format("iceberg")
     .writeTo(table)` per sink in production).
 
-    `kafka_key` + `kafka_partitions`: attach a `_partition` companion column
-    carrying the partition a Kafka sink would assign — byte-parity with the
-    reference's FNV-32a fields-hash partitioner (scale.kafka_partition;
-    libbeat/outputs/kafka/partition.go:242-277) — so a downstream Kafka
-    producer (or an audit of one) sees the same key→partition mapping
-    without a broker in the loop.
-
     `_meta_*` columns are dropped before write (`drop_metadata`).
     """
-    if kafka_key:
-        from .scale import kafka_partition
-
-        df = df.withColumn(
-            "_partition", kafka_partition(df, kafka_key, kafka_partitions)
-        )
     (
         drop_metadata(df)
-        .write.partitionBy(target)
-        .format(file_format)
-        .mode(mode)
+        .write.partitionBy(SINK_COL)
+        .format("parquet")
+        .mode("overwrite")
         .save(base_path)
     )
 
@@ -216,9 +193,7 @@ def iceberg_available(spark) -> bool:
         return False
 
 
-def fan_out_iceberg(
-    df: DataFrame, table: str, target: str = SINK_COL
-) -> None:
+def fan_out_iceberg(df: DataFrame, table: str) -> None:
     """ACID fan-out: ONE Iceberg table partitioned by the sink column,
     written in a single pass — the snapshot commit is the ack/registrar
     step (reference analogue: the ES output's commit+ack cycle,
@@ -243,6 +218,6 @@ def fan_out_iceberg(
     (
         drop_metadata(df)
         .writeTo(table)
-        .partitionedBy(F.col(target))
+        .partitionedBy(F.col(SINK_COL))
         .createOrReplace()
     )

@@ -34,14 +34,14 @@ def _hex_threshold(rate: float) -> str:
 _NULL_ID = "\x00null"  # sentinel so a null id gets ONE well-defined decision
 
 
-def _decision_hex(id_col: str, salt: str) -> Column:
+def _decision_hex(salt: str) -> Column:
     # coalesce (not concat_ws null-skipping) so Spark and DuckDB hash the
     # same string for null ids: concat_ws would silently drop the null while
     # the SQL `||` yields NULL — the engines would diverge on null-id rows.
     return F.substring(
         F.md5(
             F.concat(
-                F.coalesce(F.col(id_col).cast("string"), F.lit(_NULL_ID)),
+                F.coalesce(F.col("doc_id").cast("string"), F.lit(_NULL_ID)),
                 F.lit(":" + salt),
             )
         ),
@@ -49,40 +49,34 @@ def _decision_hex(id_col: str, salt: str) -> Column:
     )
 
 
-def _decision_hex_sql(id_col: str, salt: str) -> str:
+def _decision_hex_sql(salt: str) -> str:
     return (
-        f"substr(md5(coalesce(CAST({id_col} AS VARCHAR), chr(0) || 'null')"
+        f"substr(md5(coalesce(CAST(doc_id AS VARCHAR), chr(0) || 'null')"
         f" || ':{salt}'), 1, 8)"
     )
 
 
-def deterministic_sample(df: DataFrame, rate: float, id_col: str = "doc_id",
-                         salt: str = "", target: str = "sampled") -> DataFrame:
+def deterministic_sample(df: DataFrame, rate: float,
+                         salt: str = "") -> DataFrame:
     """Flag each row kept iff md5(id:salt) prefix falls under `rate`.
     Different salts give independent samples of the same corpus (held-out
     splits); resolution is 1/2^32."""
     if rate >= 1.0:
-        return df.withColumn(target, F.lit(True))
+        return df.withColumn("sampled", F.lit(True))
     return df.withColumn(
-        target, _decision_hex(id_col, salt) < F.lit(_hex_threshold(rate))
+        "sampled", _decision_hex(salt) < F.lit(_hex_threshold(rate))
     )
 
 
 def stratified_sample(
-    df: DataFrame,
-    rates: dict[str, float],
-    strata_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "",
-    default_rate: float = 0.0,
-    target: str = "sampled",
+    df: DataFrame, rates: dict[str, float], salt: str, default_rate: float
 ) -> DataFrame:
     """Per-stratum deterministic sampling — the training-data "mix" step:
     each stratum (source / domain / language) keeps its own rate. The rate
     table is compiled INTO the plan as a when-chain (strata counts are
     small: domains, not documents), so the op stays a map-only scan with
     no join at any corpus size."""
-    hexv = _decision_hex(id_col, salt)
+    hexv = _decision_hex(salt)
     pred = F.lit(None).cast("boolean")
     dec = None
     for stratum, rate in sorted(rates.items()):
@@ -90,23 +84,17 @@ def stratified_sample(
             F.lit(True) if rate >= 1.0
             else hexv < F.lit(_hex_threshold(rate))
         )
-        cond = F.col(strata_col) == stratum
+        cond = F.col("source") == stratum
         dec = F.when(cond, this) if dec is None else dec.when(cond, this)
     fallback = (
         F.lit(True) if default_rate >= 1.0
         else hexv < F.lit(_hex_threshold(default_rate))
     )
     pred = fallback if dec is None else dec.otherwise(fallback)
-    return df.withColumn(target, pred)
+    return df.withColumn("sampled", pred)
 
 
-def stratified_topn(
-    df: DataFrame,
-    n: int,
-    strata_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "",
-) -> DataFrame:
+def stratified_topn(df: DataFrame, n: int, salt: str = "") -> DataFrame:
     """EXACT-count per-stratum sample: keep precisely min(n, |stratum|)
     rows from each stratum — "take exactly 10k docs per source", the
     quota-based twin of rate-based stratified_sample. The pick is the n
@@ -115,7 +103,7 @@ def stratified_topn(
     GROWTH in the same sense as the rate samplers: a kept doc is only ever
     displaced by a new doc hashing below it, never reshuffled at random.
 
-    Scale: one exchange on strata_col; the window's per-partition sort is
+    Scale: one exchange on `source`; the window's per-partition sort is
     the standard per-group top-N plan (rank ≤ n lets AQE and the sort
     short-circuit spill to disk safely — no global sort, no driver state).
     Skewed strata sort within their own partitions only; for pathological
@@ -123,9 +111,9 @@ def stratified_topn(
     first, then exact-trim the small survivor set with this."""
     from pyspark.sql import Window as W
 
-    hexv = _decision_hex(id_col, salt)
-    w = W.partitionBy(strata_col).orderBy(
-        hexv.asc(), F.col(id_col).asc()
+    hexv = _decision_hex(salt)
+    w = W.partitionBy("source").orderBy(
+        hexv.asc(), F.col("doc_id").asc()
     )
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -134,33 +122,23 @@ def stratified_topn(
     )
 
 
-def stratified_topn_sql(
-    n: int,
-    table: str = "documents",
-    strata_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "",
-) -> str:
+def stratified_topn_sql(n: int, salt: str) -> str:
     """DuckDB twin selecting the identical per-stratum rows."""
-    hexv = _decision_hex_sql(id_col, salt)
+    hexv = _decision_hex_sql(salt)
     return f"""
 SELECT * EXCLUDE (_rn) FROM (
   SELECT *, row_number() OVER (
-    PARTITION BY {strata_col} ORDER BY {hexv}, {id_col}) AS _rn
-  FROM {table})
+    PARTITION BY source ORDER BY {hexv}, doc_id) AS _rn
+  FROM documents)
 WHERE _rn <= {n}
 """.strip()
 
 
 def stratified_sample_sql(
-    rates: dict[str, float],
-    strata_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "",
-    default_rate: float = 0.0,
+    rates: dict[str, float], salt: str, default_rate: float
 ) -> str:
     """DuckDB fragment computing the identical keep flag."""
-    hexv = _decision_hex_sql(id_col, salt)
+    hexv = _decision_hex_sql(salt)
 
     def rule(rate: float) -> str:
         if rate >= 1.0:
@@ -168,7 +146,7 @@ def stratified_sample_sql(
         return f"{hexv} < '{_hex_threshold(rate)}'"
 
     whens = " ".join(
-        f"WHEN {strata_col} = '{s}' THEN {rule(r)}"
+        f"WHEN source = '{s}' THEN {rule(r)}"
         for s, r in sorted(rates.items())
     )
     return f"CASE {whens} ELSE {rule(default_rate)} END"
@@ -201,12 +179,11 @@ _DSIR_BUCKETS = 4096  # 3 md5 hex chars
 _DSIR_SCALE = 1_000_000
 
 
-def _dsir_pairs(df: DataFrame, is_target: Column,
-                text_col: str, id_col: str) -> DataFrame:
+def _dsir_pairs(df: DataFrame, is_target: Column) -> DataFrame:
     """(id, is-target, bucket) hashed-bigram pairs over `textops.tokens`.
     One explode serves both the distribution aggregates and the per-doc
     weight sum."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     buckets = F.when(
         F.size(F.col("_toks")) >= 2,
         F.expr(
@@ -218,23 +195,18 @@ def _dsir_pairs(df: DataFrame, is_target: Column,
         ),
     ).otherwise(F.array().cast("array<int>"))
     return (
-        df.select(F.col(id_col).alias("_id"), is_target.alias("_t"),
+        df.select(F.col("doc_id").alias("_id"), is_target.alias("_t"),
                   toks.alias("_toks"))
         .select("_id", "_t", F.explode(buckets).alias("_b"))
     )
 
 
-def dsir_weights(
-    df: DataFrame,
-    is_target: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dsir_weights(df: DataFrame, is_target: Column) -> DataFrame:
     """Integer-exact DSIR importance log-weights (scaled ×1e6).
 
     `is_target` marks the rows whose bigram distribution defines the
     target; the WHOLE frame is the raw pool being selected from. Returns
-    (id_col, dsir_weight: bigint) for every input row — docs with fewer
+    (doc_id, dsir_weight: bigint) for every input row — docs with fewer
     than two tokens weigh 0. Laplace-smoothed (+1 per bucket), so buckets
     unseen in the target are penalties, not -inf.
     """
@@ -246,7 +218,7 @@ def dsir_weights(
     # (id, bool, int16-sized bucket) triples.
     from beats_spark.scale import truncate_lineage
 
-    pairs = truncate_lineage(_dsir_pairs(df, is_target, text_col, id_col))
+    pairs = truncate_lineage(_dsir_pairs(df, is_target))
     dist = pairs.groupBy("_b").agg(
         F.count("*").alias("_rc"),
         F.count(F.when(F.col("_t"), 1)).alias("_tc"),
@@ -271,30 +243,25 @@ def dsir_weights(
         .agg(F.sum("_lr").alias("dsir_weight"))
     )
     return (
-        df.select(F.col(id_col).alias("_id"))
+        df.select(F.col("doc_id").alias("_id"))
         .join(per_doc, "_id", "left")
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             F.coalesce("dsir_weight", F.lit(0)).alias("dsir_weight"),
         )
     )
 
 
-def dsir_weights_sql(
-    target_pred: str,
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
+def dsir_weights_sql(target_pred: str) -> str:
     """DuckDB CTE chain computing the identical integer weights, ending in
     a relation `dsir(doc_id, dsir_weight)` (compose with `WITH ... SELECT`)."""
     B = _DSIR_BUCKETS
     S = _DSIR_SCALE
     return f"""
 toks AS (
-  SELECT {id_col} AS _id, ({target_pred}) AS _t,
-         {tokens_sql(text_col)} AS t
-  FROM {table}
+  SELECT doc_id AS _id, ({target_pred}) AS _t,
+         {tokens_sql('text')} AS t
+  FROM documents
 ),
 pairs AS (
   SELECT _id, _t,
@@ -314,13 +281,13 @@ ratio AS (
   FROM dist, tot
 ),
 dsir AS (
-  SELECT t.{id_col} AS {id_col},
+  SELECT t.doc_id AS doc_id,
          coalesce(w.dsir_weight, 0) AS dsir_weight
-  FROM (SELECT {id_col} FROM {table}) t
+  FROM (SELECT doc_id FROM documents) t
   LEFT JOIN (
     SELECT p._id, CAST(sum(r._lr) AS BIGINT) AS dsir_weight
     FROM pairs p JOIN ratio r USING (_b) GROUP BY 1
-  ) w ON t.{id_col} = w._id
+  ) w ON t.doc_id = w._id
 )
 """.strip()
 
@@ -328,7 +295,6 @@ dsir AS (
 def gumbel_topk(
     weights: DataFrame,
     k: int,
-    id_col: str = "doc_id",
     salt: str = "dsir",
     temperature: float = 1.0,
 ) -> DataFrame:
@@ -339,7 +305,7 @@ def gumbel_topk(
     the noise relative to the (×1e6-scaled) weights; 0 disables it (pure
     argmax — the exact mode the correctness oracle checks)."""
     u = (
-        F.conv(_decision_hex(id_col, salt), 16, 10).cast("double")
+        F.conv(_decision_hex(salt), 16, 10).cast("double")
         + F.lit(0.5)
     ) / F.lit(float(_HEX_SPACE))
     gumbel = -F.log(-F.log(u))
@@ -350,7 +316,7 @@ def gumbel_topk(
     # merged on the driver, never a global sort
     return (
         weights.withColumn("_score", score)
-        .orderBy(F.col("_score").desc(), F.col(id_col))
+        .orderBy(F.col("_score").desc(), F.col("doc_id"))
         .limit(k)
         .drop("_score")
     )
@@ -375,11 +341,10 @@ def gumbel_topk(
 # aggregates map-side. Text never shuffles.
 
 
-def _lm_positions(df: DataFrame, is_target: Column,
-                  text_col: str, id_col: str) -> DataFrame:
+def _lm_positions(df: DataFrame, is_target: Column) -> DataFrame:
     """(id, is-target, b1: unigram-context bucket, b2: bigram bucket) per
     adjacent token position (`textops.tokens`)."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     pos = F.when(
         F.size(F.col("_toks")) >= 2,
         F.expr(
@@ -390,7 +355,7 @@ def _lm_positions(df: DataFrame, is_target: Column,
         ),
     ).otherwise(F.array().cast("array<struct<b1:int,b2:int>>"))
     return (
-        df.select(F.col(id_col).alias("_id"), is_target.alias("_t"),
+        df.select(F.col("doc_id").alias("_id"), is_target.alias("_t"),
                   toks.alias("_toks"))
         .select("_id", "_t", F.explode(pos).alias("_p"))
         .select("_id", "_t", F.col("_p.b1").alias("_b1"),
@@ -398,19 +363,14 @@ def _lm_positions(df: DataFrame, is_target: Column,
     )
 
 
-def lm_nll_scores(
-    df: DataFrame,
-    is_target: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def lm_nll_scores(df: DataFrame, is_target: Column) -> DataFrame:
     """Integer-exact hashed-bigram NLL under the target-slice LM.
 
-    Returns (id_col, nll_sum: bigint ×1e6-scaled, n_bigrams: bigint,
+    Returns (doc_id, nll_sum: bigint ×1e6-scaled, n_bigrams: bigint,
     nll_per_pos_milli: bigint) for every input row; docs with <2 tokens
     score (0, 0, 0). Lower nll_per_pos_milli = more target-like (CCNet
     'head'). All smoothing uses the 4096-bucket space."""
-    pos = _lm_positions(df, is_target, text_col, id_col)
+    pos = _lm_positions(df, is_target)
     B = float(_DSIR_BUCKETS)
     # same cut as dsir_weights: pos feeds c2, c1 and the per-doc sum
     from beats_spark.scale import truncate_lineage
@@ -439,10 +399,10 @@ def lm_nll_scores(
         )
     )
     return (
-        df.select(F.col(id_col).alias("_id"))
+        df.select(F.col("doc_id").alias("_id"))
         .join(per_doc, "_id", "left")
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             F.coalesce("nll_sum", F.lit(0)).alias("nll_sum"),
             F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
             F.when(
@@ -455,21 +415,16 @@ def lm_nll_scores(
     )
 
 
-def lm_nll_sql(
-    target_pred: str,
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
+def lm_nll_sql(target_pred: str) -> str:
     """DuckDB CTE chain computing identical integer NLL scores, ending in
     a relation `lm_nll(doc_id, nll_sum, n_bigrams, nll_per_pos_milli)`."""
     B = _DSIR_BUCKETS
     S = _DSIR_SCALE
     return f"""
 lm_toks AS (
-  SELECT {id_col} AS _id, ({target_pred}) AS _t,
-         {tokens_sql(text_col)} AS t
-  FROM {table}
+  SELECT doc_id AS _id, ({target_pred}) AS _t,
+         {tokens_sql('text')} AS t
+  FROM documents
 ),
 lm_pos AS (
   SELECT _id, _t,
@@ -492,14 +447,14 @@ lm_doc AS (
   GROUP BY 1
 ),
 lm_nll AS (
-  SELECT t.{id_col} AS {id_col},
+  SELECT t.doc_id AS doc_id,
          coalesce(d.nll_sum, 0) AS nll_sum,
          coalesce(d.n_bigrams, 0) AS n_bigrams,
          CASE WHEN coalesce(d.n_bigrams, 0) > 0
               THEN CAST(floor(d.nll_sum / (d.n_bigrams * 1000.0)) AS BIGINT)
               ELSE 0 END AS nll_per_pos_milli
-  FROM (SELECT {id_col} FROM {table}) t
-  LEFT JOIN lm_doc d ON t.{id_col} = d._id
+  FROM (SELECT doc_id FROM documents) t
+  LEFT JOIN lm_doc d ON t.doc_id = d._id
 )
 """.strip()
 
@@ -533,13 +488,10 @@ def _mix_thresholds(counts: list[tuple[str, int]], budget: int
     return out
 
 
-def temperature_mix(
-    df: DataFrame,
-    group_col: str = "lang",
-    budget: int = 1000,
-    id_col: str = "doc_id",
-    salt: str = "mix",
-) -> DataFrame:
+_MIX_SALT = "mix"
+
+
+def temperature_mix(df: DataFrame, budget: int) -> DataFrame:
     """Temperature-scaled domain mixing at α = 0.5: sampling rates are
     DERIVED from corpus counts (p_g ∝ sqrt(n_g), the exponential-smoothing
     rebalance used for multilingual/domain mixes), unlike stratified_sample
@@ -556,40 +508,34 @@ def temperature_mix(
     a broadcast join + one md5 per row, map-only. Returns the input plus
     ``mix_kept``. α = 0.5 is the oracle-exact configuration (IEEE sqrt is
     correctly rounded; general pow is not)."""
-    base = df.where(F.col(group_col).isNotNull())
+    base = df.where(F.col("lang").isNotNull())
     counts = [
         (r["_g"], r["_n"])
-        for r in base.groupBy(F.col(group_col).alias("_g"))
+        for r in base.groupBy(F.col("lang").alias("_g"))
         .agg(F.count("*").alias("_n")).collect()
     ]
     spark = df.sparkSession
     rates = spark.createDataFrame(
         _mix_thresholds(sorted(counts), budget),
-        f"{group_col} string, _n_docs long, _t_hex string, _keep_all boolean",
+        "lang string, _n_docs long, _t_hex string, _keep_all boolean",
     )
-    dec = _decision_hex(id_col, salt)
+    dec = _decision_hex(_MIX_SALT)
     return (
-        base.join(F.broadcast(rates.drop("_n_docs")), group_col)
+        base.join(F.broadcast(rates.drop("_n_docs")), "lang")
         .withColumn("mix_kept", F.col("_keep_all") | (dec < F.col("_t_hex")))
         .drop("_t_hex", "_keep_all")
     )
 
 
-def temperature_mix_sql(
-    table: str = "documents",
-    group_col: str = "lang",
-    budget: int = 1000,
-    id_col: str = "doc_id",
-    salt: str = "mix",
-) -> str:
+def temperature_mix_sql(budget: int) -> str:
     """DuckDB twin — identical integer threshold arithmetic (HUGEINT
     products, // floor division, printf hex render)."""
     return f"""
 WITH base AS (
-  SELECT * FROM {table} WHERE {group_col} IS NOT NULL
+  SELECT * FROM documents WHERE lang IS NOT NULL
 ),
 counts AS (
-  SELECT {group_col} AS g, count(*) AS n FROM base GROUP BY 1
+  SELECT lang AS g, count(*) AS n FROM base GROUP BY 1
 ),
 qs AS (
   SELECT g, n, CAST(floor({_MIX_Q} * sqrt(n)) AS BIGINT) AS q FROM counts
@@ -603,10 +549,10 @@ thresholds AS (
 dec AS (
   SELECT b.*,
          t.t >= {_MIX_HEX_SPACE} OR
-         {_decision_hex_sql(id_col, salt)} <
+         {_decision_hex_sql(_MIX_SALT)} <
            printf('%08x', CAST(least(t.t, {_MIX_HEX_SPACE - 1}) AS BIGINT))
            AS mix_kept
-  FROM base b JOIN thresholds t ON b.{group_col} = t.g
+  FROM base b JOIN thresholds t ON b.lang = t.g
 )
 SELECT * FROM dec
 """.strip()
@@ -639,12 +585,12 @@ def _split_thresholds(weights: dict[str, float]) -> list[tuple[str, str]]:
     return out
 
 
+_SPLIT_SALT = "split"
+_SPLIT_WEIGHTS = {"train": 0.9, "val": 0.05, "test": 0.05}
+
+
 def hash_split(
-    df: DataFrame,
-    weights: dict[str, float] | None = None,
-    id_col: str = "doc_id",
-    salt: str = "split",
-    target: str = "split",
+    df: DataFrame, weights: dict[str, float] = _SPLIT_WEIGHTS
 ) -> DataFrame:
     """Deterministic train/val/test assignment: each row lands in the first
     split whose cumulative md5-threshold exceeds md5(id:salt)'s 8-hex
@@ -662,8 +608,7 @@ def hash_split(
     mandate); construction mirrors the hash-bucket holdout idiom used in
     large-corpus pipelines (e.g. C4's URL-hash splits).
     """
-    weights = weights or {"train": 0.9, "val": 0.05, "test": 0.05}
-    dec = _decision_hex(id_col, salt)
+    dec = _decision_hex(_SPLIT_SALT)
     expr: Column | None = None
     for name, t_hex in reversed(_split_thresholds(weights)):
         expr = (
@@ -673,18 +618,13 @@ def hash_split(
             else F.when(F.concat(F.lit("0"), dec) < F.lit(t_hex),
                         F.lit(name)).otherwise(expr)
         )
-    return df.withColumn(target, expr)
+    return df.withColumn("split", expr)
 
 
-def hash_split_sql(
-    weights: dict[str, float] | None = None,
-    id_col: str = "doc_id",
-    salt: str = "split",
-) -> str:
+def hash_split_sql(weights: dict[str, float] = _SPLIT_WEIGHTS) -> str:
     """DuckDB twin of hash_split's CASE chain — same thresholds, same
     zero-padded 9-hex comparison."""
-    weights = weights or {"train": 0.9, "val": 0.05, "test": 0.05}
-    dec = _decision_hex_sql(id_col, salt)
+    dec = _decision_hex_sql(_SPLIT_SALT)
     ths = _split_thresholds(weights)
     if len(ths) == 1:
         # a branchless CASE is a parser error in DuckDB

@@ -20,27 +20,24 @@ from pyspark.sql import functions as F
 SALT_COL = "_salt"
 
 
-def salt(df: DataFrame, key: str, buckets: int, salt_on: str | None = None) -> DataFrame:
+def salt(df: DataFrame, key: str, buckets: int) -> DataFrame:
     """Add a deterministic salt column spreading each `key` over `buckets`.
 
-    `salt_on`: a column whose hash picks the bucket (default: a per-row
-    uniform spread via the row's natural secondary key when present). Using
-    a real column (not rand()) keeps the pipeline deterministic/replayable.
+    The bucket is a hash of the row's natural secondary key (`turn_idx`), a
+    per-row uniform spread. Using a real column (not rand()) keeps the
+    pipeline deterministic/replayable.
 
-    When neither `salt_on` nor a natural secondary key exists, the salt
-    hashes ALL columns — hashing the skew key itself would put every row of
-    the hot key in one bucket, silently defeating the salt.
+    When no secondary key exists, the salt hashes ALL columns — hashing the
+    skew key itself would put every row of the hot key in one bucket,
+    silently defeating the salt.
     """
-    if salt_on:
-        srcs = [F.col(salt_on)]
-    elif "turn_idx" in df.columns:
+    if "turn_idx" in df.columns:
         srcs = [F.col("turn_idx")]
     else:
         import warnings
 
         warnings.warn(
-            f"salt(): no salt_on and no secondary key column; hashing all "
-            f"columns — pass salt_on= for a cheaper deterministic spread "
+            f"salt(): no secondary key column; hashing all columns "
             f"(key={key!r})",
             stacklevel=2,
         )
@@ -118,7 +115,7 @@ def truncate_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
-def widen_scan(df: DataFrame, parts: int | None = None) -> DataFrame:
+def widen_scan(df: DataFrame) -> DataFrame:
     """Round-robin repartition a too-coarse source up to the core budget.
 
     A CPU-heavy map stage (vectorized grok/dissect banks, shingle+minhash
@@ -128,13 +125,11 @@ def widen_scan(df: DataFrame, parts: int | None = None) -> DataFrame:
     large the cluster is. One cheap exchange of the raw rows buys full
     parallelism for everything downstream until the first shuffle.
 
-    No-op when the source already has >= `parts` partitions — at real scale
-    (thousands of input splits) this never fires; it exists for exactly the
-    coarse-input regimes above. `parts` defaults to the session's
-    defaultParallelism (= total cores on local[N]).
+    No-op when the source already has >= defaultParallelism partitions
+    (= total cores on local[N]) — at real scale (thousands of input splits)
+    this never fires; it exists for exactly the coarse-input regimes above.
     """
-    spark = df.sparkSession
-    target = parts or spark.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

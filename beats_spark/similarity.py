@@ -113,25 +113,25 @@ def cosine_topk(
 def allpairs_cosine_stats(
     vectors: DataFrame,
     threshold: float = 0.9,
-    n_blocks: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """All-pairs cosine statistics via blocked GEMM.
 
     Expression-tree dot products cost ~7s/M pairs; one numpy matmul per
     block-pair does the same work at BLAS speed. Each vector is replicated
-    to the n_blocks block-pair groups it participates in (explode), every
-    group computes its pair stats with a single (nb_a × dim) @ (dim × nb_b)
-    product inside applyInPandas, and a final tiny agg combines the
-    B(B+1)/2 partials. Scales out: groups are independent tasks; replication
-    factor = n_blocks (choose ~sqrt(cluster parallelism)).
+    to the `n_blocks` (8) block-pair groups it participates in (explode),
+    every group computes its pair stats with a single (nb_a × dim) @
+    (dim × nb_b) product inside applyInPandas, and a final tiny agg combines
+    the B(B+1)/2 partials. Scales out: groups are independent tasks;
+    replication factor = n_blocks.
 
     Returns one row: (n_pairs, near_dups, max_cos).
     """
+    n_blocks = 8
     v = vectors.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_e")
-    ).withColumn("_blk", F.pmod(F.xxhash64(F.col("_id")), F.lit(n_blocks)).cast("int"))
+        F.col("vec_id").alias("_id"), F.col("embedding").alias("_e")
+    ).withColumn(
+        "_blk", F.pmod(F.xxhash64(F.col("_id")), F.lit(n_blocks)).cast("int")
+    )
 
     # explode each vector into every block-pair group it belongs to
     pair_keys = F.array(*[
@@ -177,8 +177,8 @@ def allpairs_cosine_stats(
 
 
 def _centroids(vectors: DataFrame, centroids: DataFrame | None,
-               n_cells: int, id_col: str, vec_col: str) -> DataFrame:
-    """(cell_id, _cvec): the explicit `centroids` frame (id_col + vec_col),
+               n_cells: int) -> DataFrame:
+    """(cell_id, _cvec): the explicit `centroids` frame (vec_id + embedding),
     else the `n_cells` vectors with the smallest xxhash64(id) — a uniform
     pseudo-random but fully deterministic sample. Spark plans
     orderBy().limit(k) as TakeOrderedAndProject: each partition keeps its
@@ -186,7 +186,7 @@ def _centroids(vectors: DataFrame, centroids: DataFrame | None,
     at 10^9+ vectors. The oracles pass an id-range slice, which DuckDB can
     reproduce (it has no xxhash64)."""
     cents = (vectors if centroids is None else centroids).select(
-        F.col(id_col).alias("cell_id"), F.col(vec_col).alias("_cvec")
+        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("_cvec")
     )
     if centroids is None:
         cents = cents.orderBy(F.xxhash64("cell_id"), "cell_id").limit(n_cells)
@@ -247,7 +247,8 @@ def lsh_topk(
     candidates only. Shuffles are bucket-key joins — no cross join.
 
     Table t's planes are the corpus vectors with ids [start + t·P,
-    start + (t+1)·P), signature bit = sign of the dot product against each
+    start + (t+1)·P); a ValueError names the range when any of them is
+    missing. Signature bit = sign of the dot product against each
     plane. Everything is Column expressions (the dot runs in whole-stage
     codegen via zip_with/aggregate — no UDF, no plane matrix), so
     `lsh_candidates_sql` recomputes the identical buckets and candidates.
@@ -266,6 +267,13 @@ def lsh_topk(
         ((F.col(id_col) - plane_id_start) % n_planes).alias("_bit"),
         F.col(vec_col).alias("_pvec"),
     )
+    found = planes.select("_tbl", "_bit").distinct().count()
+    if found < n_total:
+        raise ValueError(
+            f"lsh_topk: the planes are the vectors with ids in "
+            f"[{plane_id_start}, {plane_id_start + n_total}); only {found} of "
+            f"{n_total} are present"
+        )
     # lineage cut: each side feeds its signature aggregation AND the
     # exact-verify join-back — two reads of the embedding store without it
     v = truncate_lineage(vectors.select(
@@ -303,7 +311,7 @@ def lsh_topk(
 
 
 def lsh_candidates_sql(vecs: str, queries: str, n_planes: int, n_tables: int,
-                       plane_id_start: int = 100) -> str:
+                       plane_id_start: int) -> str:
     """DuckDB twin of `lsh_topk`'s candidate pairs: `vecs` and `queries`
     name relations of (vec_id, vv DOUBLE[]), the planes are `vecs` rows;
     gives the distinct (query_id, neighbor_id) pairs."""
@@ -328,9 +336,6 @@ WHERE s.vec_id <> q.vec_id"""
 def semdedup(
     vectors: DataFrame,
     threshold: float = 0.95,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster embeddings,
@@ -340,9 +345,9 @@ def semdedup(
     LOWER-id row in the same cell sits within `threshold` of it, so the
     survivor set is unique regardless of partitioning or join order.
 
-    Returns every input row as (id_col, cell_id, kept: boolean).
+    Returns every input row as (vec_id, cell_id, kept: boolean).
 
-    Scale shape: centroids are broadcast (n_cells rows — explicit frame or
+    Scale shape: centroids are broadcast (16 rows — explicit frame or
     the same deterministic xxhash64 sample ivf_topk uses); assignment is
     the max_by aggregate (one exchange of (id, vec, cell), no window sort);
     the pair generation is a CELL-keyed equi-join with a codegen cosine
@@ -354,8 +359,8 @@ def semdedup(
     very fat cells swap the residual join for the blocked-GEMM kernel
     (allpairs_cosine_stats) per cell — same contract, BLAS inner loop.
     """
-    v = vectors.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vvec"))
-    cents = _centroids(vectors, centroids, n_cells, id_col, vec_col)
+    v = vectors.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_vvec"))
+    cents = _centroids(vectors, centroids, 16)
     # lineage cut: the assignment feeds the pair join twice (a and b
     # sides) plus the final kept-flag join — without it the broadcast
     # crossJoin + max_by assignment (|V|·n_cells dot products) and the
@@ -383,7 +388,7 @@ def semdedup(
     return (
         va.join(drops, "_id", "left")
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("vec_id"),
             "cell_id",
             F.coalesce(~F.col("_drop"), F.lit(True)).alias("kept"),
         )
@@ -416,9 +421,6 @@ def ivf_topk(
     k: int = 10,
     n_cells: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "vec_id",
     kmeans_iters: int = 0,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
@@ -430,10 +432,10 @@ def ivf_topk(
     With kmeans_iters > 0 the seed is refined fully in Spark: assign
     (broadcast join) → per-cell per-dimension mean (posexplode + groupBy
     avg) → re-assemble centroids — never a driver-side vector. An explicit
-    `centroids` frame (id_col + vec_col) overrides the xxhash64 sample."""
-    cents = _centroids(vectors, centroids, n_cells, id_col, vec_col)
-    v = vectors.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_vvec"))
-    q = queries.select(F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qvec"))
+    `centroids` frame (vec_id + embedding) overrides the xxhash64 sample."""
+    cents = _centroids(vectors, centroids, n_cells)
+    v = vectors.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_vvec"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qvec"))
 
     for _ in range(kmeans_iters):
         assign = _assign_cells(v, cents, "neighbor_id")

@@ -19,7 +19,6 @@ tracking replaces all of this (see beats_spark.streaming).
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 # The reference's full charset table (libbeat/reader/readfile/encoding/
@@ -135,10 +134,7 @@ def read_lines(
     spark: SparkSession,
     path: str,
     encoding: str = "UTF-8",
-    line_sep: str | None = None,
     max_bytes: int | None = None,
-    flag_truncated: bool = True,
-    dense_offsets: bool = False,
 ) -> DataFrame:
     """Charset-decoded line reader with per-file offsets.
 
@@ -154,22 +150,15 @@ def read_lines(
     and a literal \\x01 byte in a log line would split it — both are
     vanishingly rare in the log formats these charsets carry.
 
-    dense_offsets=False (the default — the scale path): the cursor is
-    (partition id × 2^33 + row-within-split), shuffle-free and strictly
-    increasing within a file — the same byte-cursor semantics Beats'
-    registrar actually persists (filestream tracks byte offsets,
-    input.go:686), just not dense. dense_offsets=True gives 0-based line
-    numbers, but the row_number window coalesces EACH FILE into one task
-    (fine for log-rotation-sized files, wrong for huge ones) — opt-in for
-    goldens and small corpora that want line numbers.
+    The offset is (partition id × 2^33 + row-within-split), shuffle-free
+    and strictly increasing within a file — the same byte-cursor semantics
+    Beats' registrar actually persists (filestream tracks byte offsets,
+    input.go:686), just not dense.
     """
     charset = resolve_encoding(encoding)
     offset = None
     if charset == "UTF-8":
-        r = spark.read
-        if line_sep:
-            r = r.option("lineSep", line_sep)
-        base = r.text(path).select(
+        base = spark.read.text(path).select(
             F.input_file_name().alias("source"),
             F.col("value").alias("text"),
         )
@@ -177,11 +166,9 @@ def read_lines(
         # whole-file decode + line split: UTF-16/32 newlines are multi-byte
         # so no splittable line framing exists (one task per file — the
         # reference requires a seekable source for these codecs too)
-        import re as _re
-
         # F.decode shares the CSV reader's Spark-4 charset whitelist
         spark.conf.set("spark.sql.legacy.javaCharsets", "true")
-        sep_pat = r"\r?\n" if line_sep is None else _re.escape(line_sep)
+        sep_pat = r"\r?\n"
         decoded = F.decode(F.col("content"), charset)
         lines = F.split(
             F.regexp_replace(decoded, f"(?:{sep_pat})$", ""), sep_pat
@@ -194,7 +181,7 @@ def read_lines(
                 F.posexplode(lines).alias("_line_no", "text"),
             )
         )
-        offset = F.col("_line_no").cast("int" if dense_offsets else "long")
+        offset = F.col("_line_no").cast("long")
     else:
         # every other charset in the table is newline-transparent (0x0A
         # never appears inside a multi-byte sequence, and EBCDIC's 0x25
@@ -209,17 +196,13 @@ def read_lines(
             .option("sep", "\x01")
             .option("quote", "")
             .option("header", "false")
-            .option("lineSep", line_sep or "\n")
+            .option("lineSep", "\n")
         )
         base = r.load(path).select(
             F.input_file_name().alias("source"),
             F.col("text"),
         )
-    if offset is None and dense_offsets:
-        offset = F.row_number().over(
-            W.partitionBy("source").orderBy(F.monotonically_increasing_id())
-        ) - 1
-    elif offset is None:
+    if offset is None:
         # monotonically_increasing_id = (partition_id << 33) + row-in-
         # partition; split partitions follow block order, so this is
         # strictly increasing within every file with ZERO shuffles
@@ -229,8 +212,7 @@ def read_lines(
         from beats_spark.operators.parse import add_flag
 
         too_long = F.octet_length("text") > max_bytes
-        if flag_truncated:
-            df = add_flag(df, too_long, "truncated")
+        df = add_flag(df, too_long, "truncated")
         df = df.withColumn("text", F.when(too_long, _utf8_prefix(F.col("text"), max_bytes))
                            .otherwise(F.col("text")))
     return df.select("source", "offset", "text", *(
@@ -242,14 +224,11 @@ def read_ndjson(
     spark: SparkSession,
     path: str,
     schema: str = "map<string,string>",
-    encoding: str = "UTF-8",
     keys_under_root: bool = False,
-    dense_offsets: bool = False,
 ) -> DataFrame:
     """NDJSON reader (readjson/json_config.go shape): one JSON doc per
     line → parsed column (or top-level columns with keys_under_root)."""
-    lines = read_lines(spark, path, encoding=encoding,
-                       dense_offsets=dense_offsets)
+    lines = read_lines(spark, path)
     parsed = lines.withColumn("json", F.from_json("text", schema))
     if keys_under_root and schema != "map<string,string>":
         return parsed.select("source", "offset", "json.*")
@@ -259,18 +238,12 @@ def read_ndjson(
 def reader_chain(
     spark: SparkSession,
     path: str,
-    encoding: str = "UTF-8",
-    max_bytes: int | None = None,
     multiline: dict | None = None,
-    ndjson_schema: str | None = None,
-    include_message: list[str] | None = None,
     exclude_message: list[str] | None = None,
-    dense_offsets: bool = False,
 ) -> DataFrame:
-    """The full composed chain, mirroring parser.go ordering:
-    decode → line → limit → multiline → ndjson → include_message."""
-    df = read_lines(spark, path, encoding=encoding, max_bytes=max_bytes,
-                    dense_offsets=dense_offsets)
+    """The composed chain, in parser.go's order: line → multiline →
+    exclude_message."""
+    df = read_lines(spark, path)
     if multiline:
         from beats_spark.operators.misc import multiline_assemble
 
@@ -292,14 +265,8 @@ def reader_chain(
             F.col("first_line").alias("offset"),
             F.col("message").alias("text"),
         )
-    if ndjson_schema:
-        df = df.withColumn("json", F.from_json("text", ndjson_schema))
-    if include_message:
-        from beats_spark.operators.filter import include_lines
-
-        df = include_lines(df, include_message, field="text")
     if exclude_message:
         from beats_spark.operators.filter import exclude_lines
 
-        df = exclude_lines(df, exclude_message, field="text")
+        df = exclude_lines(df, exclude_message)
     return df

@@ -75,16 +75,16 @@ def write_sinks(
     return w.start()
 
 
-def flows_stream(
-    tdf: DataFrame,
-    window: str = "10 seconds",
-    watermark: str = "1 minute",
-) -> DataFrame:
+# Event-time lateness the flow aggregations tolerate.
+_FLOW_WATERMARK = "1 minute"
+
+
+def flows_stream(tdf: DataFrame, window: str = "10 seconds") -> DataFrame:
     """Tumbling-window per-role flow counters with late-data watermark —
     packetbeat flows' periodic report (worker.go:176-223: ticker-aligned
     report every `period`)."""
     return (
-        tdf.withWatermark("ts", watermark)
+        tdf.withWatermark("ts", _FLOW_WATERMARK)
         .groupBy(F.window("ts", window).alias("w"), "role")
         .agg(
             F.count("*").alias("n_events"),
@@ -98,16 +98,12 @@ def flows_stream(
     )
 
 
-def session_flows_stream(
-    tdf: DataFrame,
-    gap: str = "30 seconds",
-    watermark: str = "1 minute",
-) -> DataFrame:
+def session_flows_stream(tdf: DataFrame, gap: str = "30 seconds") -> DataFrame:
     """Idle-timeout flow eviction — flows' `timeout` semantics
     (worker.go:233-290: a flow is final-reported after 30s idle) as a
     session window keyed on conversation."""
     return (
-        tdf.withWatermark("ts", watermark)
+        tdf.withWatermark("ts", _FLOW_WATERMARK)
         .groupBy(F.session_window("ts", gap).alias("w"), "conv_id")
         .agg(
             F.count("*").alias("n_turns"),
@@ -122,12 +118,7 @@ def session_flows_stream(
     )
 
 
-def stream_exact_dedup(
-    tdf: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
+def stream_exact_dedup(tdf: DataFrame) -> DataFrame:
     """Streaming twin of dedup.exact_dedup: drop any event whose normalized
     content hash was already seen within the watermark horizon.
 
@@ -136,16 +127,16 @@ def stream_exact_dedup(
     unbounded input, the only shape that survives an always-on 10^12-turn
     stream (a plain dropDuplicates on a stream accumulates state forever).
     Exactly-once within the horizon; an identical turn arriving later than
-    `watermark` is treated as new — the documented horizon trade every
+    the 10-minute watermark is treated as new — the documented horizon trade every
     streaming dedup makes.
     """
     from beats_spark.dedup import normalize_text
 
     hashed = tdf.withColumn(
-        "_dedup_key", F.sha2(normalize_text(F.col(text_col)), 256)
+        "_dedup_key", F.sha2(normalize_text(F.col("text")), 256)
     )
     return (
-        hashed.withWatermark(ts_col, watermark)
+        hashed.withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark(["_dedup_key"])
         .drop("_dedup_key")
     )

@@ -24,7 +24,6 @@ def token_bucket_limit(
     key_cols: list[str],
     rate_per_sec: float,
     burst: int,
-    ts_col: str = "ts",
 ):
     """Streaming rate limit: emits only rows that acquire a token.
 
@@ -43,9 +42,9 @@ def token_bucket_limit(
             tokens, last_ts = float(burst), float("-inf")
         out = []
         for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
+            pdf = pdf.sort_values("ts")
             keep = []
-            for t in pdf[ts_col]:
+            for t in pdf["ts"]:
                 now = t.timestamp()
                 if last_ts != float("-inf") and now > last_ts:
                     tokens = min(float(burst), tokens + (now - last_ts) * rate_per_sec)

@@ -82,7 +82,7 @@ def word_ngrams(toks: Column, n: int, guarded: bool = False) -> Column:
     return grams(F.greatest(F.size(toks) - (n - 1), F.lit(1)))
 
 
-def word_ngrams_sql(toks: str, n: int, guarded: bool = False) -> str:
+def word_ngrams_sql(toks: str, n: int, guarded: bool) -> str:
     """DuckDB twin of `word_ngrams` over a token-list column name. NULL
     tokens give `['']` (or none with `guarded`), as `concat_ws` does."""
     return (
@@ -103,24 +103,23 @@ def token_count(df: DataFrame, text_col: str = "text",
     )
 
 
-def token_count_sql(text_col: str = "text") -> str:
+def token_count_sql(text_col: str) -> str:
     return (
         f"CASE WHEN trim({text_col}, ' ') = '' THEN 0 ELSE "
         f"len({tokens_sql(text_col)}) END"
     )
 
 
-def bpe_token_count(df: DataFrame, text_col: str = "text",
-                    target: str = "n_bpe_tokens") -> DataFrame:
+def bpe_token_count(df: DataFrame) -> DataFrame:
     """Count of BPE-ish pre-tokens via regexp_count (letter runs, digit
     runs, single punctuation)."""
     return df.withColumn(
-        target, F.regexp_count(F.col(text_col), F.lit(BPE_TOKEN_RE))
+        "n_bpe_tokens", F.regexp_count(F.col("text"), F.lit(BPE_TOKEN_RE))
     )
 
 
-def bpe_token_count_sql(text_col: str = "text") -> str:
-    return f"len(regexp_extract_all({text_col}, '{BPE_TOKEN_RE}'))"
+def bpe_token_count_sql() -> str:
+    return f"len(regexp_extract_all(text, '{BPE_TOKEN_RE}'))"
 
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -155,7 +154,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("quality_score", F.round(score, 6))
 
 
-def quality_features_sql(text_col: str = "text") -> dict[str, str]:
+def quality_features_sql(text_col: str) -> dict[str, str]:
     """DuckDB fragments computing the identical features."""
     toks = tokens_sql(text_col)
     n_chars = f"length({text_col})"
@@ -177,12 +176,11 @@ def quality_features_sql(text_col: str = "text") -> dict[str, str]:
     }
 
 
-def lang_id(df: DataFrame, text_col: str = "text",
-            target: str = "pred_lang") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Stopword-hit language ID: argmax of per-language distinct stopword
     hits; 'und' (undetermined) when no language scores ≥ 1. Deterministic
     tie-break: language code order."""
-    toks = F.array_distinct(tokens(F.col(text_col)))
+    toks = F.array_distinct(tokens(F.col("text")))
     scores = {
         lang: F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words])))
         for lang, words in sorted(STOPWORDS.items())
@@ -192,11 +190,11 @@ def lang_id(df: DataFrame, text_col: str = "text",
     # build reversed so earlier languages win ties via when-chain ordering
     for lang in sorted(scores, reverse=True):
         pred = F.when((scores[lang] == best) & (best >= 1), lang).otherwise(pred)
-    return df.withColumn(target, pred)
+    return df.withColumn("pred_lang", pred)
 
 
-def lang_id_sql(text_col: str = "text") -> str:
-    toks = f"list_distinct({tokens_sql(text_col)})"
+def lang_id_sql() -> str:
+    toks = f"list_distinct({tokens_sql('text')})"
     scores = {
         lang: f"len(list_intersect({toks}, [{', '.join(chr(39) + w + chr(39) for w in words)}]))"
         for lang, words in sorted(STOPWORDS.items())
@@ -209,10 +207,12 @@ def lang_id_sql(text_col: str = "text") -> str:
     return f"CASE {whens} ELSE 'und' END"
 
 
-def doc_fingerprint(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id",
-                    target: str = "doc_fp", k: int = 8) -> DataFrame:
-    """Rolling-shingle fingerprint: min sha256 over all k-char shingles of
+# Shingle width of the whole-document fingerprint, shared by its oracle.
+_DOC_FP_K = 8
+
+
+def doc_fingerprint(df: DataFrame) -> DataFrame:
+    """Rolling-shingle fingerprint: min sha256 over all 8-char shingles of
     the normalized text (the winnowing global-min special case — stable
     under small edits away from the minimizing shingle).
 
@@ -231,22 +231,22 @@ def doc_fingerprint(df: DataFrame, text_col: str = "text",
     is NULL keep a NULL fingerprint (the fold propagates null)."""
     # normalization staged as a real column: the fold lambda is interpreted
     # per element, so an inlined regexp_replace would re-run per position
-    out = df.withColumn("_fp_norm", normalize_text(F.col(text_col)))
+    out = df.withColumn("_fp_norm", normalize_text(F.col("text")))
     norm = F.col("_fp_norm")
     positions = F.sequence(
-        F.lit(1), F.greatest(F.length(norm) - (k - 1), F.lit(1))
+        F.lit(1), F.greatest(F.length(norm) - (_DOC_FP_K - 1), F.lit(1))
     )
     # "g"*64 sorts after every sha256 hex digest ([0-9a-f]{64}); positions
     # is never empty (greatest(...,1)), so the sentinel can't leak
     fold = F.aggregate(
         positions,
         F.lit("g" * 64),
-        lambda acc, i: F.least(acc, F.sha2(norm.substr(i, F.lit(k)), 256)),
+        lambda acc, i: F.least(acc, F.sha2(norm.substr(i, F.lit(_DOC_FP_K)), 256)),
     )
-    return out.withColumn(target, fold).drop("_fp_norm")
+    return out.withColumn("doc_fp", fold).drop("_fp_norm")
 
 
-def doc_fingerprint_sql(text_col: str = "text", k: int = 8) -> str:
+def doc_fingerprint_sql(text_col: str, k: int) -> str:
     """DuckDB fragment; use over a subquery that materializes _fp_norm
     (see doc_fingerprint_oracle) to avoid per-element regexp re-eval."""
     norm = "_fp_norm"
@@ -256,20 +256,14 @@ def doc_fingerprint_sql(text_col: str = "text", k: int = 8) -> str:
     )
 
 
-def doc_fingerprint_oracle(table: str = "documents", text_col: str = "text",
-                           k: int = 8) -> str:
+def doc_fingerprint_oracle() -> str:
     return (
-        f"SELECT doc_id, {doc_fingerprint_sql(text_col, k)} AS doc_fp FROM "
-        f"(SELECT doc_id, {normalize_text_sql(text_col)} AS _fp_norm FROM {table})"
+        f"SELECT doc_id, {doc_fingerprint_sql('text', _DOC_FP_K)} AS doc_fp FROM "
+        f"(SELECT doc_id, {normalize_text_sql('text')} AS _fp_norm FROM documents)"
     )
 
 
-def repetition_features(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ngram_n: int = 2,
-) -> DataFrame:
+def repetition_features(df: DataFrame) -> DataFrame:
     """Gopher-style within-document repetition signals (Rae et al. 2021,
     Gopher appendix A1.1; the same rules RefinedWeb/NeMo-Curator apply):
 
@@ -289,11 +283,11 @@ def repetition_features(
     per-doc feature frame joined back. Docs with no lines/grams get 0.0.
     """
     lines = F.filter(
-        F.transform(F.split(F.col(text_col), "\n"), lambda x: F.trim(x)),
+        F.transform(F.split(F.col("text"), "\n"), lambda x: F.trim(x)),
         lambda x: x != "",
     )
     ln = (
-        df.select(F.col(id_col).alias("_id"), F.explode(lines).alias("_ln"))
+        df.select(F.col("doc_id").alias("_id"), F.explode(lines).alias("_ln"))
         .groupBy("_id", "_ln")
         .agg(F.count("*").alias("_c"))
         .groupBy("_id")
@@ -307,12 +301,12 @@ def repetition_features(
     )
     top = (
         df.select(
-            F.col(id_col).alias("_id"),
-            F.length(F.trim(F.col(text_col))).alias("_len"),
-            tokens(F.col(text_col)).alias("_toks"),
+            F.col("doc_id").alias("_id"),
+            F.length(F.trim(F.col("text"))).alias("_len"),
+            tokens(F.col("text")).alias("_toks"),
         )
         .select("_id", "_len",
-                F.explode(word_ngrams(F.col("_toks"), ngram_n)).alias("_g"))
+                F.explode(word_ngrams(F.col("_toks"), 2)).alias("_g"))
         .groupBy("_id", "_len", "_g")
         .agg(F.count("*").alias("_c"))
         .groupBy("_id")
@@ -329,8 +323,8 @@ def repetition_features(
             ).otherwise(F.lit(0.0)).alias("top_ngram_char_frac"),
         )
     )
-    feats = ln.join(top, "_id", "full").withColumnRenamed("_id", id_col)
-    out = df.join(feats, id_col, "left")
+    feats = ln.join(top, "_id", "full").withColumnRenamed("_id", "doc_id")
+    out = df.join(feats, "doc_id", "left")
     for c in ("dup_line_frac", "dup_line_char_frac", "top_ngram_char_frac"):
         out = out.withColumn(c, F.coalesce(F.col(c), F.lit(0.0)))
     return out
@@ -352,12 +346,7 @@ GOPHER_THRESHOLDS: dict[str, float] = {
 }
 
 
-def gopher_filter(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    **overrides: float,
-) -> DataFrame:
+def gopher_filter(df: DataFrame, **overrides: float) -> DataFrame:
     """Composite Gopher-rule document filter: every signal this engine
     computes (quality_features + repetition_features), thresholded into a
     ``keep`` boolean and a ``drop_reasons`` array naming each violated
@@ -370,8 +359,7 @@ def gopher_filter(
     """
     t = {**GOPHER_THRESHOLDS, **overrides}
     out = quality_features(
-        repetition_features(df, text_col=text_col, id_col=id_col),
-        text_col,
+        repetition_features(df),
     )
     checks = [
         ("too_few_words", F.col("n_tokens") < t["min_words"]),
@@ -415,10 +403,9 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def pii_redact(df: DataFrame, text_col: str = "text",
-               target: str = "redacted") -> DataFrame:
+def pii_redact(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Redact emails / SSNs / IPv4s / phone numbers from ``text_col`` into
-    ``target`` and emit one ``n_<kind>`` count column per pattern.
+    ``redacted`` and emit one ``n_<kind>`` count column per pattern.
 
     Training-data pipelines run this before any tokenization; at 100 TB it
     must be a map-only scan, and it is: a regexp_count + regexp_replace
@@ -434,10 +421,10 @@ def pii_redact(df: DataFrame, text_col: str = "text",
     for kind, pat, token in PII_PATTERNS:
         counts.append(F.regexp_count(cur, F.lit(pat)).alias(f"n_{kind}"))
         cur = F.regexp_replace(cur, pat, token)
-    return df.select("*", *counts, cur.alias(target))
+    return df.select("*", *counts, cur.alias("redacted"))
 
 
-def pii_redact_sql(text_col: str = "text") -> dict[str, str]:
+def pii_redact_sql(text_col: str) -> dict[str, str]:
     """DuckDB fragments: {n_<kind>: expr, redacted: expr} — same staged
     order as pii_redact."""
     cur = text_col
@@ -460,12 +447,15 @@ C4_TERMINAL_RE = r'[.!?"]\z'
 _WS_EDGES = rf"^{_WS}|{_WS}\z"
 
 
-def c4_clean(df: DataFrame, text_col: str = "text",
-             min_words_per_line: int = 5,
-             min_lines: int = 3) -> DataFrame:
+# C4's line rule (words per kept line) and page rule (kept lines per page).
+_C4_MIN_WORDS = 5
+_C4_MIN_LINES = 3
+
+
+def c4_clean(df: DataFrame, text_col: str = "text") -> DataFrame:
     """C4 line/page cleaning: keep only lines that end in terminal
-    punctuation, have ≥ ``min_words_per_line`` words and don't mention
-    javascript; drop the whole page when fewer than ``min_lines`` lines
+    punctuation, have ≥ 5 words and don't mention
+    javascript; drop the whole page when fewer than 3 lines
     survive, or it contains "lorem ipsum" or a curly brace. Emits
     ``cleaned`` (kept lines re-joined), ``n_lines_kept`` and ``keep``.
 
@@ -479,7 +469,7 @@ def c4_clean(df: DataFrame, text_col: str = "text",
     kept = F.filter(
         trimmed,
         lambda t: t.rlike(C4_TERMINAL_RE)
-        & (F.size(F.split(t, _WS)) >= min_words_per_line)
+        & (F.size(F.split(t, _WS)) >= _C4_MIN_WORDS)
         & ~F.lower(t).contains("javascript"),
     )
     lorem = F.lower(F.col(text_col)).contains("lorem ipsum")
@@ -491,20 +481,19 @@ def c4_clean(df: DataFrame, text_col: str = "text",
     return out.withColumn(
         "keep",
         F.coalesce(
-            (F.col("n_lines_kept") >= min_lines) & ~lorem & ~brace,
+            (F.col("n_lines_kept") >= _C4_MIN_LINES) & ~lorem & ~brace,
             F.lit(False),
         ),
     )
 
 
-def c4_clean_sql(text_col: str = "text", min_words_per_line: int = 5,
-                 min_lines: int = 3) -> dict[str, str]:
+def c4_clean_sql(text_col: str) -> dict[str, str]:
     """DuckDB fragments computing the identical cleaning."""
     kept = (
         f"list_filter(list_transform(string_split({text_col}, chr(10)),"
         f" x -> regexp_replace(x, '{_WS_EDGES}', '', 'g')),"
         f" t -> regexp_matches(t, '{C4_TERMINAL_RE}')"
-        f" AND len(regexp_split_to_array(t, '{_WS}')) >= {min_words_per_line}"
+        f" AND len(regexp_split_to_array(t, '{_WS}')) >= {_C4_MIN_WORDS}"
         f" AND NOT contains(lower(t), 'javascript'))"
     )
     return {
@@ -512,7 +501,7 @@ def c4_clean_sql(text_col: str = "text", min_words_per_line: int = 5,
         "cleaned": f"coalesce(array_to_string({kept}, chr(10)), '')",
         "n_lines_kept": f"len({kept})",
         "keep": (
-            f"coalesce(len({kept}) >= {min_lines}"
+            f"coalesce(len({kept}) >= {_C4_MIN_LINES}"
             f" AND NOT contains(lower({text_col}), 'lorem ipsum')"
             f" AND NOT contains({text_col}, '{{'), FALSE)"
         ),
@@ -529,8 +518,14 @@ DEFAULT_URL_BLOCKLIST = [
 ]
 
 
-def url_blocklist_flag(df: DataFrame, blocklist: list[str] | None = None,
-                       text_col: str = "text") -> DataFrame:
+# One alternation over every blocklisted domain, a host's suffix.
+_URL_BLOCK_RE = (
+    r"(^|\.)(" + "|".join(d.replace(".", r"\.") for d in DEFAULT_URL_BLOCKLIST)
+    + ")$"
+)
+
+
+def url_blocklist_flag(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Flag documents containing a URL whose host is (a subdomain of) a
     blocklisted domain. Emits ``url_hosts`` (lowercased hosts of every
     http(s) URL in the text) and ``blocked_url``.
@@ -541,35 +536,31 @@ def url_blocklist_flag(df: DataFrame, blocklist: list[str] | None = None,
     broadcast, no shuffle, nothing on the driver but the pattern string.
     For blocklists too large to inline (millions of entries), compose with
     the broadcast-join shape in enrich.translate instead."""
-    domains = blocklist if blocklist is not None else DEFAULT_URL_BLOCKLIST
     hosts = F.transform(
         F.regexp_extract_all(
             F.col(text_col), F.lit(_HTTP_HOST_RE), F.lit(1)
         ),
         lambda h: F.lower(h),
     )
-    pat = r"(^|\.)(" + "|".join(d.replace(".", r"\.") for d in domains) + ")$"
     out = df.withColumn("url_hosts", hosts)
     return out.withColumn(
         "blocked_url",
-        F.coalesce(F.exists(F.col("url_hosts"), lambda h: h.rlike(pat)),
+        F.coalesce(F.exists(F.col("url_hosts"),
+                            lambda h: h.rlike(_URL_BLOCK_RE)),
                    F.lit(False)),
     )
 
 
-def url_blocklist_sql(blocklist: list[str] | None = None,
-                      text_col: str = "text") -> dict[str, str]:
-    domains = blocklist if blocklist is not None else DEFAULT_URL_BLOCKLIST
+def url_blocklist_sql() -> dict[str, str]:
     hosts = (
-        f"list_transform(regexp_extract_all({text_col},"
+        f"list_transform(regexp_extract_all(text,"
         f" '{_HTTP_HOST_RE}', 1), h -> lower(h))"
     )
-    pat = r"(^|\.)(" + "|".join(d.replace(".", r"\.") for d in domains) + ")$"
     return {
         "url_hosts": hosts,
         "blocked_url": (
             f"coalesce(len(list_filter({hosts},"
-            f" h -> regexp_matches(h, '{pat}'))) > 0, FALSE)"
+            f" h -> regexp_matches(h, '{_URL_BLOCK_RE}'))) > 0, FALSE)"
         ),
     }
 
@@ -582,9 +573,7 @@ def url_blocklist_sql(blocklist: list[str] | None = None,
 CONTROL_CHARS_RE = r"[\x00-\x08\x0b\x0c\x0e-\x1f]"
 
 
-def normalize_unicode(df: DataFrame, text_col: str = "text",
-                      form: str = "NFC",
-                      target: str = "norm_text") -> DataFrame:
+def normalize_unicode(df: DataFrame, form: str = "NFC") -> DataFrame:
     """Canonical Unicode normalization for corpus text: strip C0 control
     characters (keeping tab/newline/CR), then apply `form` (NFC default —
     combining sequences composed, so visually-identical strings hash/dedup
@@ -602,8 +591,8 @@ def normalize_unicode(df: DataFrame, text_col: str = "text",
     def _norm(s: pd.Series) -> pd.Series:
         return s.str.normalize(form)
 
-    stripped = F.regexp_replace(F.col(text_col), CONTROL_CHARS_RE, "")
-    return df.withColumn(target, _norm(stripped))
+    stripped = F.regexp_replace(F.col("text"), CONTROL_CHARS_RE, "")
+    return df.withColumn("norm_text", _norm(stripped))
 
 
 def normalize_unicode_sql(text_col: str = "text") -> str:
@@ -636,25 +625,22 @@ def normalize_unicode_sql(text_col: str = "text") -> str:
 _BM25_SCALE = 1_000_000
 
 
-def bm25_topk(
-    df: DataFrame,
-    terms: list[str],
-    k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """BM25 top-k: (id_col, bm25_score: bigint ×1e6-scaled, n_terms_hit).
+# Okapi BM25 term-frequency saturation and length normalisation.
+_BM25_K1 = 1.2
+_BM25_B = 0.75
+
+
+def bm25_topk(df: DataFrame, terms: list[str], k: int) -> DataFrame:
+    """BM25 top-k: (doc_id, bm25_score: bigint ×1e6-scaled, n_terms_hit).
 
     idf is the standard Robertson–Spärck Jones form with +1 inside the
     log (always positive): ln(1 + (N - df + 0.5)/(df + 0.5)). Ties break
     on ascending id. `terms` are matched against lowercased
     whitespace tokens (the module-wide tokenizer)."""
     terms = sorted({t.lower() for t in terms})
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     base = df.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.size(toks).alias("_dl"),
         F.filter(
             toks, lambda t: t.isin(*terms) if len(terms) > 1
@@ -690,10 +676,11 @@ def bm25_topk(
             F.round(
                 F.lit(_BM25_SCALE)
                 * F.col("_idf")
-                * (F.col("_tf") * (k1 + 1))
+                * (F.col("_tf") * (_BM25_K1 + 1))
                 / (
                     F.col("_tf")
-                    + k1 * (1 - b + b * F.col("_dl") / F.col("_avgdl"))
+                    + _BM25_K1 * (1 - _BM25_B
+                                  + _BM25_B * F.col("_dl") / F.col("_avgdl"))
                 )
             ).cast("long"),
         )
@@ -705,29 +692,21 @@ def bm25_topk(
     return (
         scored.orderBy(F.col("bm25_score").desc(), F.col("_id"))
         .limit(k)
-        .select(F.col("_id").alias(id_col), "bm25_score", "n_terms_hit")
+        .select(F.col("_id").alias("doc_id"), "bm25_score", "n_terms_hit")
     )
 
 
-def bm25_topk_sql(
-    terms: list[str],
-    k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
+def bm25_topk_sql(terms: list[str], k: int) -> str:
     """DuckDB twin computing identical integer scores."""
     terms = sorted({t.lower() for t in terms})
     tlist = ", ".join(f"'{t}'" for t in terms)
     S = _BM25_SCALE
     return f"""
 WITH base AS (
-  SELECT {id_col} AS _id,
-         len({tokens_sql(text_col)}) AS _dl,
-         list_filter({tokens_sql(text_col)}, t -> t IN ({tlist})) AS _hits
-  FROM {table}
+  SELECT doc_id AS _id,
+         len({tokens_sql('text')}) AS _dl,
+         list_filter({tokens_sql('text')}, t -> t IN ({tlist})) AS _hits
+  FROM documents
 ),
 tf AS (
   SELECT _id, _dl, u.t AS _term, count(*) AS _tf
@@ -739,15 +718,15 @@ dfreq AS (SELECT _term, count(*) AS _df FROM tf GROUP BY 1),
 contrib AS (
   SELECT tf._id,
          CAST(round({S} * ln(1 + (s._n - d._df + 0.5) / (d._df + 0.5))
-               * (tf._tf * ({k1} + 1))
-               / (tf._tf + {k1} * (1 - {b} + {b} * tf._dl / s._avgdl)))
+               * (tf._tf * ({_BM25_K1} + 1))
+               / (tf._tf + {_BM25_K1} * (1 - {_BM25_B} + {_BM25_B} * tf._dl / s._avgdl)))
               AS BIGINT) AS _c
   FROM tf JOIN dfreq d USING (_term) CROSS JOIN stats s
 )
-SELECT _id AS {id_col}, CAST(sum(_c) AS BIGINT) AS bm25_score,
+SELECT _id AS doc_id, CAST(sum(_c) AS BIGINT) AS bm25_score,
        count(*) AS n_terms_hit
 FROM contrib GROUP BY 1
-ORDER BY bm25_score DESC, {id_col} LIMIT {k}
+ORDER BY bm25_score DESC, doc_id LIMIT {k}
 """.strip()
 
 
@@ -762,23 +741,22 @@ def rrf_fuse(
     rankings: list[DataFrame],
     k0: int = 60,
     k: int = 20,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. 2009) of N rankings into one:
     fused(d) = sum over systems of 1/(k0 + rank_s(d)), here as the
     ×1e6-quantized integer round(1e6/(k0+rank)) so a cross-engine oracle is
-    an exact equality. Each input must carry (id_col, rank) with rank
+    an exact equality. Each input must carry (doc_id, rank) with rank
     1-based. Docs missing from a system contribute 0 (the standard RRF
     convention). Ties break on ascending id.
 
     Scale shape: the inputs are already top-k listings (broadcast-small);
     fusion is a unionByName of bare (id, contribution) rows, one tiny
     groupBy, and TakeOrderedAndProject — the corpus itself is never
-    touched. Returns (id_col, rrf_score, n_systems)."""
+    touched. Returns (doc_id, rrf_score, n_systems)."""
     contribs = None
     for r in rankings:
         c = r.select(
-            F.col(id_col).alias("_id"),
+            F.col("doc_id").alias("_id"),
             F.round(F.lit(float(_RRF_SCALE)) / (F.lit(k0) + F.col("rank")))
             .cast("long")
             .alias("_c"),
@@ -791,7 +769,7 @@ def rrf_fuse(
     return (
         fused.orderBy(F.col("rrf_score").desc(), F.col("_id"))
         .limit(k)
-        .select(F.col("_id").alias(id_col), "rrf_score", "n_systems")
+        .select(F.col("_id").alias("doc_id"), "rrf_score", "n_systems")
     )
 
 
@@ -812,11 +790,7 @@ def _word_symbols(word_col: Column) -> Column:
     return F.concat(chars, F.array(F.lit(_EOW)))
 
 
-def bpe_pair_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    top_k: int = 32,
-) -> DataFrame:
+def bpe_pair_stats(df: DataFrame, top_k: int) -> DataFrame:
     """The merge-selection step of BPE tokenizer training (Sennrich et al.
     2016): corpus-weighted counts of adjacent symbol pairs over the initial
     character vocabulary, top-k by (count desc, pair asc) — the pair a BPE
@@ -829,7 +803,7 @@ def bpe_pair_stats(
     magnitude smaller than the corpus — so the expensive transform touches
     |vocab| rows, not |corpus|. Returns (sym_a, sym_b, pair_count)."""
     words = df.select(
-        F.explode(tokens(F.col(text_col))).alias("_w")
+        F.explode(tokens(F.col("text"))).alias("_w")
     ).where(F.col("_w") != "")
     vocab = words.groupBy("_w").agg(F.count("*").alias("_n"))
     syms = vocab.withColumn("_syms", _word_symbols(F.col("_w")))
@@ -857,15 +831,14 @@ def bpe_pair_stats(
     )
 
 
-def bpe_pair_stats_sql(table: str = "documents", text_col: str = "text",
-                       top_k: int = 32) -> str:
+def bpe_pair_stats_sql(top_k: int) -> str:
     """DuckDB twin of bpe_pair_stats — exact integer pair counts."""
     return f"""
 WITH words AS (
   SELECT u.w AS _w
-  FROM {table},
-       unnest({tokens_sql(text_col)}) AS u(w)
-  WHERE {text_col} IS NOT NULL AND u.w <> ''
+  FROM documents,
+       unnest({tokens_sql('text')}) AS u(w)
+  WHERE text IS NOT NULL AND u.w <> ''
 ),
 vocab AS (SELECT _w, count(*) AS _n FROM words GROUP BY 1),
 syms AS (
@@ -940,7 +913,6 @@ def _safe_merge_batch(
 def bpe_learn_merges(
     df: DataFrame,
     n_merges: int = 10,
-    text_col: str = "text",
     batch_m: int = 8,
     stats: dict | None = None,
 ) -> list[tuple[str, str]]:
@@ -964,7 +936,7 @@ def bpe_learn_merges(
     loop. `stats`, when given, gets {"rounds": <collect count>} for tests
     and capacity planning."""
     words = df.select(
-        F.explode(tokens(F.col(text_col))).alias("_w")
+        F.explode(tokens(F.col("text"))).alias("_w")
     ).where(F.col("_w") != "")
     vocab = (
         words.groupBy("_w").agg(F.count("*").alias("_n"))
@@ -1036,19 +1008,17 @@ def bpe_learn_merges(
     return merges
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    w: int = 12,
-    target: str = "winnow_fps",
-) -> DataFrame:
+# Winnowing shingle width (chars) and window (hashes), shared by its oracle.
+_WINNOW_K = 8
+_WINNOW_W = 12
+
+
+def winnow_fingerprints(df: DataFrame, w: int = _WINNOW_W) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken 2003
     — the MOSS algorithm, used for code dedup in The Stack): hash every
-    k-char shingle of the normalized text, then keep the MINIMUM hash of
+    8-char shingle of the normalized text, then keep the MINIMUM hash of
     each w-hash window. Guarantee: two documents sharing any substring of
-    length >= w + k - 1 share at least one fingerprint. doc_fingerprint
+    length >= w + 7 share at least one fingerprint. doc_fingerprint
     is the degenerate w = n case (one global min).
 
     Shape: map-only — the shingle-hash array materializes ONCE per row
@@ -1058,13 +1028,13 @@ def winnow_fingerprints(
     Hashes are md5 hex (lexicographic min — '0'-'9' < 'a'-'f' ordering is
     identical across engines), the same cross-engine-reproducibility
     trade simhash made (dedup.py): a production variant would use
-    xxhash64, which DuckDB lacks. Docs shorter than w + k - 1 chars get
+    xxhash64, which DuckDB lacks. Docs shorter than w + 7 chars get
     an empty fingerprint set."""
-    out = df.withColumn("_wn_norm", normalize_text(F.col(text_col)))
-    n_hashes = F.length(F.col("_wn_norm")) - (k - 1)
+    out = df.withColumn("_wn_norm", normalize_text(F.col("text")))
+    n_hashes = F.length(F.col("_wn_norm")) - (_WINNOW_K - 1)
     hashes = F.transform(
         F.sequence(F.lit(1), F.greatest(n_hashes, F.lit(0))),
-        lambda i: F.md5(F.col("_wn_norm").substr(i, F.lit(k))),
+        lambda i: F.md5(F.col("_wn_norm").substr(i, F.lit(_WINNOW_K))),
     )
     out = out.withColumn(
         "_wn_hashes",
@@ -1081,19 +1051,22 @@ def winnow_fingerprints(
         n_windows >= 1, F.array_sort(F.array_distinct(mins))
     ).otherwise(F.array().cast("array<string>"))
     return (
-        out.withColumn(target, fps)
-        .withColumn("n_fingerprints", F.size(target))
+        out.withColumn("winnow_fps", fps)
+        .withColumn("n_fingerprints", F.size("winnow_fps"))
         .drop("_wn_norm", "_wn_hashes")
     )
 
 
+# CDC shingle width (chars) and boundary hex-zero prefix, shared by its
+# oracle.
+_CDC_K = 8
+_CDC_ZERO_PREFIX = 1
+
+
 def cdc_chunk_hashes(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    zero_prefix: int = 1,
-    target: str = "cdc_hashes",
+    k: int = _CDC_K,
+    zero_prefix: int = _CDC_ZERO_PREFIX,
 ) -> DataFrame:
     """Content-defined chunking (the LBFS / FastCDC boundary family —
     Muthitacharoen et al. 2001): cut a document AFTER every k-gram whose
@@ -1117,7 +1090,7 @@ def cdc_chunk_hashes(
     in-array (transform/filter/zip); no exchange, no join, no Python.
     """
     zeros = "0" * zero_prefix
-    out = df.withColumn("_cdc_norm", normalize_text(F.col(text_col)))
+    out = df.withColumn("_cdc_norm", normalize_text(F.col("text")))
     n = F.length("_cdc_norm")
     npos = n - (k - 1)
     cut_ends = F.filter(
@@ -1162,40 +1135,38 @@ def cdc_chunk_hashes(
         ),
     ).otherwise(F.array().cast("array<string>"))
     return (
-        out.withColumn(target, chunk_hashes)
-        .withColumn("n_chunks", F.size(target))
+        out.withColumn("cdc_hashes", chunk_hashes)
+        .withColumn("n_chunks", F.size("cdc_hashes"))
         .drop("_cdc_norm", "_cdc_ends")
     )
 
 
-def cdc_chunk_hashes_sql(table: str = "documents", text_col: str = "text",
-                         id_col: str = "doc_id", k: int = 8,
-                         zero_prefix: int = 1) -> str:
+def cdc_chunk_hashes_sql(table: str = "documents") -> str:
     """DuckDB twin of cdc_chunk_hashes: identical md5 boundary predicate,
-    identical chunk slicing. Yields ({id_col}, n_chunks, chunks_md5)
+    identical chunk slicing. Yields (doc_id, n_chunks, chunks_md5)
     where chunks_md5 digests the in-order chunk-hash list."""
-    zeros = "0" * zero_prefix
-    norm = normalize_text_sql(text_col)
+    zeros = "0" * _CDC_ZERO_PREFIX
+    norm = normalize_text_sql("text")
     return f"""
 WITH base AS (
-  SELECT {id_col} AS _id, {norm} AS norm FROM {table}
-  WHERE {text_col} IS NOT NULL
+  SELECT doc_id AS _id, {norm} AS norm FROM {table}
+  WHERE text IS NOT NULL
 ),
 cuts AS (
   SELECT _id, norm, length(norm) AS n,
-         CASE WHEN length(norm) - {k - 1} >= 1 THEN
+         CASE WHEN length(norm) - {_CDC_K - 1} >= 1 THEN
            list_filter(
-             list_transform(range(1, length(norm) - {k - 1} + 1),
-               i -> CASE WHEN substr(md5(substr(norm, CAST(i AS INTEGER), {k})),
-                                     1, {zero_prefix}) = '{zeros}'
-                    THEN i + {k - 1} END),
+             list_transform(range(1, length(norm) - {_CDC_K - 1} + 1),
+               i -> CASE WHEN substr(md5(substr(norm, CAST(i AS INTEGER), {_CDC_K})),
+                                     1, {_CDC_ZERO_PREFIX}) = '{zeros}'
+                    THEN i + {_CDC_K - 1} END),
              e -> e IS NOT NULL AND e < length(norm))
          ELSE [] END AS e0
   FROM base
 ),
 ends AS (
   SELECT _id, norm, n,
-         CASE WHEN n - {k - 1} >= 1 THEN list_append(e0, n)
+         CASE WHEN n - {_CDC_K - 1} >= 1 THEN list_append(e0, n)
               WHEN n >= 1 THEN [n]
               ELSE [] END AS e
   FROM cuts
@@ -1213,42 +1184,40 @@ chunked AS (
          ELSE [] END AS ch
   FROM ends
 )
-SELECT _id AS {id_col}, len(ch) AS n_chunks,
+SELECT _id AS doc_id, len(ch) AS n_chunks,
        md5(array_to_string(ch, ',')) AS chunks_md5
 FROM chunked
 """.strip()
 
 
-def winnow_fingerprints_sql(table: str = "documents", text_col: str = "text",
-                            id_col: str = "doc_id", k: int = 8,
-                            w: int = 12) -> str:
+def winnow_fingerprints_sql(table: str = "documents") -> str:
     """DuckDB twin: identical md5 shingle hashes, identical window minima.
-    Yields ({id_col}, n_fingerprints, fps_md5) where fps_md5 is md5 of
+    Yields (doc_id, n_fingerprints, fps_md5) where fps_md5 is md5 of
     the sorted-distinct fingerprint set joined with ','."""
-    norm = normalize_text_sql(text_col)
+    norm = normalize_text_sql("text")
     return f"""
 WITH base AS (
-  SELECT {id_col} AS _id, {norm} AS norm FROM {table}
-  WHERE {text_col} IS NOT NULL
+  SELECT doc_id AS _id, {norm} AS norm FROM {table}
+  WHERE text IS NOT NULL
 ),
 hashed AS (
   SELECT _id,
-         CASE WHEN length(norm) - {k - 1} >= 1 THEN
-           list_transform(range(1, length(norm) - {k - 1} + 1),
-                          i -> md5(substr(norm, CAST(i AS INTEGER), {k})))
+         CASE WHEN length(norm) - {_WINNOW_K - 1} >= 1 THEN
+           list_transform(range(1, length(norm) - {_WINNOW_K - 1} + 1),
+                          i -> md5(substr(norm, CAST(i AS INTEGER), {_WINNOW_K})))
          ELSE [] END AS hs
   FROM base
 ),
 winnowed AS (
   SELECT _id,
-         CASE WHEN len(hs) - {w - 1} >= 1 THEN
+         CASE WHEN len(hs) - {_WINNOW_W - 1} >= 1 THEN
            list_sort(list_distinct(
-             list_transform(range(1, len(hs) - {w - 1} + 1),
-                            j -> list_min(hs[CAST(j AS INTEGER):CAST(j + {w - 1} AS INTEGER)]))))
+             list_transform(range(1, len(hs) - {_WINNOW_W - 1} + 1),
+                            j -> list_min(hs[CAST(j AS INTEGER):CAST(j + {_WINNOW_W - 1} AS INTEGER)]))))
          ELSE [] END AS fps
   FROM hashed
 )
-SELECT _id AS {id_col}, len(fps) AS n_fingerprints,
+SELECT _id AS doc_id, len(fps) AS n_fingerprints,
        md5(array_to_string(fps, ',')) AS fps_md5
 FROM winnowed
 """.strip()
@@ -1322,11 +1291,7 @@ def canonicalize_url_sql(url_expr: str) -> str:
     )
 
 
-def ngram_counts(
-    df: DataFrame,
-    text_col: str = "text",
-    n: int = 2,
-) -> DataFrame:
+def ngram_counts(df: DataFrame, n: int) -> DataFrame:
     """Corpus-wide word n-gram counts: (gram, n_occurrences) over the
     whitespace/lower tokenization shared with `tokens()`. Documents with
     fewer than n tokens contribute nothing.
@@ -1342,8 +1307,8 @@ def ngram_counts(
     runs (vocab building, boilerplate detection, contamination triage).
     """
     return (
-        df.where(F.col(text_col).isNotNull())
-        .select(tokens(F.col(text_col)).alias("_toks"))
+        df.where(F.col("text").isNotNull())
+        .select(tokens(F.col("text")).alias("_toks"))
         .select(F.explode(word_ngrams(F.col("_toks"), n, guarded=True))
                 .alias("gram"))
         .groupBy("gram")
@@ -1351,35 +1316,25 @@ def ngram_counts(
     )
 
 
-def ngram_topk(
-    df: DataFrame,
-    text_col: str = "text",
-    n: int = 2,
-    k: int = 20,
-) -> DataFrame:
+def ngram_topk(df: DataFrame, n: int, k: int) -> DataFrame:
     """Top-k corpus n-grams by occurrence count, ties broken by gram text
     ascending. orderBy+limit compiles to TakeOrderedAndProject: bounded
     per-partition heaps merged on the driver — no global sort at any
     vocabulary size."""
     return (
-        ngram_counts(df, text_col, n)
+        ngram_counts(df, n)
         .orderBy(F.col("n_occurrences").desc(), F.col("gram").asc())
         .limit(k)
     )
 
 
-def ngram_topk_sql(
-    table: str = "documents",
-    text_col: str = "text",
-    n: int = 2,
-    k: int = 20,
-) -> str:
+def ngram_topk_sql(n: int, k: int) -> str:
     """DuckDB twin: identical tokenization, gram construction, and
     (count desc, gram asc) tie-break."""
     return f"""
 WITH toks AS (
-  SELECT {tokens_sql(text_col)} AS t
-  FROM {table} WHERE {text_col} IS NOT NULL
+  SELECT {tokens_sql('text')} AS t
+  FROM documents WHERE text IS NOT NULL
 ),
 grams AS (
   SELECT unnest({word_ngrams_sql("t", n, guarded=True)}) AS gram
@@ -1391,12 +1346,7 @@ ORDER BY n_occurrences DESC, gram ASC LIMIT {k}
 """.strip()
 
 
-def tfidf_topk(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-) -> DataFrame:
+def tfidf_topk(df: DataFrame, k: int) -> DataFrame:
     """Per-document top-k keyword extraction by tf-idf: for each document,
     the k terms with the highest tf/df ratio (term frequency over document
     frequency — idf's rank-equivalent core, chosen over log-idf because
@@ -1418,9 +1368,9 @@ def tfidf_topk(
     1988).
     """
     terms = (
-        df.where(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("_id"),
-                F.explode(tokens(F.col(text_col))).alias("term"))
+        df.where(F.col("text").isNotNull())
+        .select(F.col("doc_id").alias("_id"),
+                F.explode(tokens(F.col("text"))).alias("term"))
         .where(F.col("term") != "")
     )
     # df derives FROM the materialized tf table (one row per (doc, term),
@@ -1447,24 +1397,19 @@ def tfidf_topk(
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(F.col("_id").alias(id_col), "term", "tf", "df", "rank")
+        .select(F.col("_id").alias("doc_id"), "term", "tf", "df", "rank")
     )
 
 
-def tfidf_topk_sql(
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-) -> str:
+def tfidf_topk_sql(table: str, k: int) -> str:
     """DuckDB twin — same tokenization, same double tf/df score, same
     (score desc, term asc) row_number tie-break."""
     return f"""
 WITH terms AS (
-  SELECT {id_col} AS _id, t AS term
-  FROM (SELECT {id_col},
-               unnest({tokens_sql(text_col)}) AS t
-        FROM {table} WHERE {text_col} IS NOT NULL) s
+  SELECT doc_id AS _id, t AS term
+  FROM (SELECT doc_id,
+               unnest({tokens_sql('text')}) AS t
+        FROM {table} WHERE text IS NOT NULL) s
   WHERE t != ''
 ),
 tf AS (
@@ -1482,17 +1427,12 @@ ranked AS (
          ) AS rank
   FROM tf JOIN dfreq USING (term)
 )
-SELECT _id AS {id_col}, term, tf, df, rank
+SELECT _id AS doc_id, term, tf, df, rank
 FROM ranked WHERE rank <= {k}
 """.strip()
 
 
-def strip_boilerplate(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_docs: int = 10,
-) -> DataFrame:
+def strip_boilerplate(df: DataFrame, min_docs: int) -> DataFrame:
     """Corpus-level boilerplate removal (the RefinedWeb / Dolma cleaning
     step): any trimmed non-empty line appearing in >= min_docs DISTINCT
     documents is boilerplate — headers, footers, nav bars, cookie banners
@@ -1524,7 +1464,7 @@ def strip_boilerplate(
     mandate); rule follows Penedo et al. 2023 (RefinedWeb §3.2
     line-wise filtering) as applied corpus-wide by Dolma's dedupe pass.
     """
-    lines = F.split(F.col(text_col), "\n")
+    lines = F.split(F.col("text"), "\n")
     # lineage cut: base feeds the distinct-line explode (whose output
     # itself feeds the frequency count AND the per-doc removed-set join)
     # plus the final rebuild join — THREE corpus text scans without it,
@@ -1540,7 +1480,7 @@ def strip_boilerplate(
     )
     line_hash = "xxhash64(trim(l))"
     occ = base.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.explode(
             F.expr(
                 f"array_distinct(transform("
@@ -1557,9 +1497,9 @@ def strip_boilerplate(
         occ.join(boiler, "_h")
         .groupBy("_id")
         .agg(F.collect_set("_h").alias("_bad"))
-        .withColumnRenamed("_id", id_col)
+        .withColumnRenamed("_id", "doc_id")
     )
-    out = base.join(bad, id_col, "left")
+    out = base.join(bad, "doc_id", "left")
     kept = F.expr(
         f"filter(_lines, l -> trim(l) = '' OR _bad IS NULL"
         f" OR NOT array_contains(_bad, {line_hash}))"
@@ -1572,17 +1512,12 @@ def strip_boilerplate(
     )
 
 
-def strip_boilerplate_sql(
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_docs: int = 10,
-) -> str:
+def strip_boilerplate_sql(table: str, min_docs: int) -> str:
     """DuckDB twin on line STRINGS (independent of xxhash64): per-doc
     md5 of the cleaned text plus removal counts, all NULL for NULL text."""
     return f"""
 WITH base AS (
-  SELECT {id_col} AS _id, string_split({text_col}, chr(10)) AS ls
+  SELECT doc_id AS _id, string_split(text, chr(10)) AS ls
   FROM {table}
 ),
 occ AS (
@@ -1602,7 +1537,7 @@ rebuilt AS (
                      OR NOT list_contains(bl.bs, trim(l))) AS kept
   FROM base, bl
 )
-SELECT _id AS {id_col}, n_lines,
+SELECT _id AS doc_id, n_lines,
        n_lines - len(kept) AS n_removed,
        CASE WHEN kept IS NOT NULL
             THEN md5(coalesce(array_to_string(kept, chr(10)), '')) END AS cleaned_md5

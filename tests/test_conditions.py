@@ -163,12 +163,13 @@ def _condition(draw, depth=0):
     if kind == "equals":
         return {kind: _fields(draw, list(_EQUALS), _EQUALS.get)}
     if kind == "contains":
-        return {kind: _fields(draw, ["text", "role", "tags", _MISSING],
+        return {kind: _fields(draw, ["text", "role", "tags", "code", _MISSING],
                               lambda _: _any_of(_STRS))}
     if kind == "regexp":
         pats = st.sampled_from(["^hello", r"took=\d+ms", "o", "ERROR|boom", "",
                                 '(level=ERROR|" 500 )'])
-        return {kind: _fields(draw, ["text", "role", _MISSING], lambda _: pats)}
+        return {kind: _fields(draw, ["text", "role", "code", _MISSING],
+                              lambda _: pats)}
     if kind == "range":
         bound = st.one_of(st.integers(-5, 600), st.sampled_from([0.5, 4.0, 1e3]))
         ops = st.dictionaries(st.sampled_from(["gte", "gt", "lte", "lt"]), bound,
@@ -214,3 +215,18 @@ def test_sql_renderer_matches_spark(twin_frames, cfgs):
         duck_ids = [r[0] for r in con.execute(
             f"SELECT id FROM t WHERE {sql} ORDER BY id").fetchall()]
         assert spark_ids == duck_ids, (cfg, sql)
+
+
+def test_string_matchers_read_a_non_string_scalar_as_false(twin_frames):
+    # Beats' matcher reads strings only: `code` (int) matches nothing under
+    # contains / regexp, though Spark would cast 5 to '5' and match
+    df, con = twin_frames
+    for cfg in ({"contains": {"code": "5"}}, {"regexp": {"code": "5"}},
+                {"not": {"contains": {"code": "5"}}}):
+        spark_ids = sorted(r.id for r in df.where(compile_condition(cfg, df)).collect())
+        sql = condition_sql(cfg, df.schema)
+        duck_ids = [r[0] for r in con.execute(
+            f"SELECT id FROM t WHERE {sql} ORDER BY id").fetchall()]
+        assert spark_ids == duck_ids, cfg
+        if "not" not in cfg:
+            assert spark_ids == []

@@ -142,6 +142,13 @@ def test_lsh_returns_ranked_candidates(spark, embs):
         assert r.neighbor_id != r.query_id
 
 
+def test_lsh_incomplete_plane_slice_raises(spark, embs):
+    # ids 0-59: none in the default plane slice [100, 116)
+    few = embs.filter(F.col("vec_id") < 60)
+    with pytest.raises(ValueError, match=r"\[100, 116\); only 0 of 16"):
+        S.lsh_topk(few, few.limit(2), k=3)
+
+
 # -- textops -----------------------------------------------------------------
 
 

@@ -117,3 +117,26 @@ def test_grok_long_exact_beside_null_row(spark):
     out = P.grok(df, r"took %{NUMBER:n:long}", field="text", target_prefix="g")
     got = [(r["g"] is None, r["g"] and r["g"]["n"]) for r in out.collect()]
     assert got == [(False, 9007199254740993), (True, None), (False, None)]
+
+
+def test_grok_oracle_overflow_is_null_like_spark(spark):
+    # a `long` capture past int64: the convert lattice reads NULL; a plain
+    # DuckDB CAST would fail the whole oracle query instead
+    import duckdb
+
+    from beats_spark.pipeline import TRANSCRIPT_PATTERNS, parse_stage
+    from beats_spark.queries import grok_extract_sql
+
+    line = ('level=INFO ts=2024-01-01T00:00:00Z caller=a.go:1 msg="hi" '
+            'value=99999999999999999999 took=5ms')
+    (row,) = parse_stage(
+        spark.createDataFrame([(line,)], "text string")
+    ).select("parsed.value", "parsed.took_ms").collect()
+    assert (row["value"], row["took_ms"]) == (None, 5)
+    frags = grok_extract_sql(TRANSCRIPT_PATTERNS[0])
+    with duckdb.connect() as con:
+        got = con.execute(
+            f"SELECT {frags['value']}, {frags['took_ms']} FROM (SELECT ? AS text)",
+            [line],
+        ).fetchone()
+    assert got == (None, 5)

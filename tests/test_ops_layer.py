@@ -244,19 +244,3 @@ def test_kafka_partition_null_key_is_null_and_float_rejected(spark):
     fdf = spark.createDataFrame([(1.5,)], "f double")
     with pytest.raises(ValueError, match="unsupported key dtype"):
         kafka_partition(fdf, ["f"], 4)
-
-
-def test_fan_out_kafka_partition_column(spark, tmp_path):
-    from beats_spark.routing import fan_out
-
-    df = spark.createDataFrame(
-        [("s1", "k1"), ("s1", "k2"), ("s2", "k1")], "_sink string, k string"
-    )
-    out = str(tmp_path / "sinks")
-    fan_out(df, out, kafka_key=["k"], kafka_partitions=6)
-    written = spark.read.parquet(out)
-    assert "_partition" in written.columns
-    got = {(r["k"], r["_partition"]) for r in written.collect()}
-    want_k1 = _go_partition(b"k1", 6)
-    want_k2 = _go_partition(b"k2", 6)
-    assert got == {("k1", want_k1), ("k2", want_k2), ("k1", want_k1)}

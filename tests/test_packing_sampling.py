@@ -205,7 +205,7 @@ def test_sample_null_ids_agree_with_duckdb(spark):
     con = duckdb.connect()
     con.sql("CREATE TABLE t(doc_id BIGINT, source VARCHAR)")
     con.sql("INSERT INTO t VALUES (NULL,'a'),(1,'a'),(NULL,'b')")
-    hexv = S._decision_hex_sql("doc_id", "s7")
+    hexv = S._decision_hex_sql("s7")
     thr = S._hex_threshold(0.5)
     want = sorted(
         con.sql(f"SELECT doc_id, source, {hexv} < '{thr}' FROM t").fetchall(),

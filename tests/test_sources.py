@@ -14,21 +14,6 @@ def _write(p, lines):
         f.write("\n".join(lines) + "\n")
 
 
-def test_read_lines_dense_offsets_opt_in(spark, tmp_path):
-    # dense_offsets=True: 0-based line numbers (opt-in — coalesces each
-    # file into one task, for goldens/small corpora only)
-    d = tmp_path / "logs"
-    d.mkdir()
-    _write(d / "a.log", ["l0", "l1", "l2"])
-    _write(d / "b.log", ["m0", "m1"])
-    out = read_lines(spark, str(d), dense_offsets=True).collect()
-    by_src = {}
-    for r in out:
-        by_src.setdefault(os.path.basename(r.source), []).append((r.offset, r.text))
-    assert sorted(by_src["a.log"]) == [(0, "l0"), (1, "l1"), (2, "l2")]
-    assert sorted(by_src["b.log"]) == [(0, "m0"), (1, "m1")]
-
-
 def test_read_lines_default_is_scale_safe_cursor(spark, tmp_path):
     # the DEFAULT path must be the shuffle-free byte-cursor: no window
     # exchange in the plan, strictly increasing per-file ordering
@@ -99,12 +84,12 @@ def test_reader_chain_gzip_encoding(spark, tmp_path):
 
 
 def test_read_lines_scalable_cursor(spark, tmp_path):
-    # dense_offsets=False: shuffle-free cursor, strictly increasing per file
+    # shuffle-free cursor, strictly increasing per file
     d = tmp_path / "big"
     d.mkdir()
     _write(d / "a.log", [f"a{i}" for i in range(100)])
     _write(d / "b.log", [f"b{i}" for i in range(100)])
-    out = read_lines(spark, str(d), dense_offsets=False).collect()
+    out = read_lines(spark, str(d)).collect()
     per = {}
     for r in out:
         per.setdefault(os.path.basename(r.source), []).append((r.offset, r.text))
@@ -187,12 +172,11 @@ def test_read_lines_utf16_max_bytes(spark, tmp_path):
     f = tmp_path / "u16.log"
     body = "short\n" + "y" * 100 + "\n"
     f.write_bytes(b"\xff\xfe" + body.encode("utf-16-le"))
-    for dense in (False, True):
-        out = read_lines(spark, str(f), encoding="utf-16le-bom", max_bytes=10,
-                         dense_offsets=dense).collect()
-        rows = {r.offset: r for r in out}
-        assert rows[0].text == "short" and rows[0].flags == []
-        assert rows[1].text == "y" * 10 and "truncated" in rows[1].flags
+    out = read_lines(spark, str(f), encoding="utf-16le-bom",
+                     max_bytes=10).collect()
+    rows = {r.offset: r for r in out}
+    assert rows[0].text == "short" and rows[0].flags == []
+    assert rows[1].text == "y" * 10 and "truncated" in rows[1].flags
 
 
 def test_charset_unknown_name_passthrough(spark, tmp_path):

@@ -129,7 +129,8 @@ def test_other_whitespace_classes_match(spark):
     cols = ["n_bpe_tokens", "punct_ratio", "quality_score", "cleaned",
             "n_lines_kept", "url_hosts", "blocked_url"]
     got = [tuple(r) for r in out.orderBy("i").select(*cols).collect()]
-    qf, c4, url = X.quality_features_sql(), X.c4_clean_sql(), X.url_blocklist_sql()
+    qf, c4 = X.quality_features_sql("text"), X.c4_clean_sql("text")
+    url = X.url_blocklist_sql()
     exprs = [X.bpe_token_count_sql(), qf["punct_ratio"], qf["quality_score"],
              c4["cleaned"], c4["n_lines_kept"], url["url_hosts"],
              url["blocked_url"]]
